@@ -917,7 +917,7 @@ def containment_pairs(
 # Streaming-dedup probe bounding: per-commit BLOOM sidecars
 # ---------------------------------------------------------------------------
 #
-# The streaming ingest dedup (queries/round13.py) persists admitted
+# The streaming ingest dedup (queries/lakehouse_drills.py) persists admitted
 # fingerprints in the output lakehouse table itself.  Naively, every
 # micro-batch anti-joins against the FULL fp column — O(corpus) read
 # per batch, the r13 scale residual (VERDICT r13 #4).  The fix is

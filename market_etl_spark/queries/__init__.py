@@ -23,7 +23,6 @@ from . import trades  # noqa: F401
 from . import windows  # noqa: F401
 from . import governance  # noqa: F401
 from . import monitoring  # noqa: F401
-from . import round6_staged  # noqa: F401
 from . import round7  # noqa: F401
 from . import round8  # noqa: F401
 from . import round8b  # noqa: F401
@@ -32,17 +31,8 @@ from . import round8d  # noqa: F401
 from . import round8e  # noqa: F401
 from . import round8f  # noqa: F401
 from . import round9  # noqa: F401
-from . import round10  # noqa: F401
-from . import round11  # noqa: F401
-from . import round11b  # noqa: F401
-from . import round12  # noqa: F401
-from . import round13  # noqa: F401
-from . import round14  # noqa: F401
+from . import lakehouse_drills  # noqa: F401
+from . import stats_sketches  # noqa: F401  (last: registration order is part of the contract)
 from .registry import REGISTRY, QuerySpec, query
-
-# Round-6 activation: the r5 ledger reached 167/167 green, so the r4
-# registration freeze is lifted and the staged surface goes live (19
-# queries, each with a DuckDB oracle — judge-verified in VERDICT r5).
-round6_staged.register_staged()
 
 __all__ = ["REGISTRY", "QuerySpec", "query"]

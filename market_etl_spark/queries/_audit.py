@@ -24,6 +24,10 @@ changing any audited value:
   thread pool so their jobs overlap (guide §2.6: actions are only
   sequential because driver code calls them sequentially); Spark's
   FIFO scheduler back-fills idle executors with the next job's tasks.
+
+Two smaller helpers ride along: :func:`micros` (the drills' exact
+integer quantization of doubles) and :func:`require` (a protocol check
+that, unlike ``assert``, still runs under ``python -O``).
 """
 
 from __future__ import annotations
@@ -92,3 +96,17 @@ def concurrently(*thunks, max_workers: int | None = None):
     with ThreadPoolExecutor(max_workers=max_workers or len(thunks)) as ex:
         futs = [ex.submit(t) for t in thunks]
         return [f.result() for f in futs]
+
+
+def micros(col: F.Column) -> F.Column:
+    """A double quantized to integer millionths: sums of it are exact
+    and engine-independent, so Spark and the DuckDB oracle agree."""
+    return F.round(col * 1e6, 0).cast("long")
+
+
+def require(ok: bool, msg: object = "protocol check failed") -> None:
+    """Raise ``AssertionError(msg)`` unless ``ok``.  Drill steps that
+    must run (commits, restores) are written inside the check, so it
+    has to hold under ``python -O`` too."""
+    if not ok:
+        raise AssertionError(msg)

@@ -17,19 +17,14 @@ job), sql/athena_create_trades_tales.sql:5-34, sql/athena_repair_partitions.sql.
 from __future__ import annotations
 
 import datetime as dt
-import pathlib
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..etl import run_trades_etl
 from ..functions import count_if, round6, vwap
-from ..tables import load
+from ..tables import SCRATCH, load, sf_tag, source_fingerprint
 from .registry import query
-
-#: Scratch area for materialized fixture zones (gitignored; inside the
-#: repo so nothing outside it is touched).
-SCRATCH = pathlib.Path(__file__).resolve().parent.parent.parent / ".scratch"
 
 #: Fixed load date so runs are deterministic and oracle-checkable.
 FIXED_LOAD_DT = dt.date(2024, 2, 1)
@@ -69,21 +64,6 @@ def materialize_raw_zone(spark: SparkSession, sf_dir: str, zone_dir: str) -> Non
     )
 
 
-def _source_fingerprint(sf_dir: str, fname: str = "events.parquet") -> str:
-    """Size+mtime digest of a source parquet, so on-disk scratch
-    zones invalidate when the driver regenerates testdata between rounds
-    (observed: same path, new file — silent staleness otherwise)."""
-    import hashlib
-
-    p = pathlib.Path(sf_dir.rstrip("/")) / fname
-    try:
-        st = p.stat()
-        raw = f"{st.st_size}:{st.st_mtime_ns}"
-    except OSError:
-        raw = "missing"
-    return hashlib.sha1(raw.encode()).hexdigest()[:10]
-
-
 def ensure_trades_table(spark: SparkSession, sf_dir: str) -> str:
     """Materialize-once accessor for the generated partitioned trades
     table: runs the full ETL only if this session hasn't registered it
@@ -93,8 +73,8 @@ def ensure_trades_table(spark: SparkSession, sf_dir: str) -> str:
     since-regenerated events table)."""
     from ..catalog import register_trades_table
 
-    tag = pathlib.Path(sf_dir.rstrip("/")).name.replace(".", "_")
-    fp = _source_fingerprint(sf_dir)
+    tag = sf_tag(sf_dir)
+    fp = source_fingerprint(sf_dir)
     table = f"trades_binance_{tag}_{fp}"
     out = SCRATCH / f"processed_{tag}_{fp}"
     if spark.catalog.tableExists(table):
@@ -200,7 +180,7 @@ def q_json_source_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("ts") >= F.lit("2024-01-15").cast("timestamp"))
         & (F.col("ts") < F.lit("2024-01-16").cast("timestamp"))
     )
-    tag = pathlib.Path(sf_dir.rstrip("/")).name.replace(".", "_")
+    tag = sf_tag(sf_dir)
     zone = SCRATCH / f"json_zone_{tag}"
     # Default JSON timestampFormat truncates to milliseconds; pin a
     # microsecond format on BOTH sides or the round-trip silently loses
@@ -367,7 +347,7 @@ def q_orc_source_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     stability). The explode is a plain Generate; all aggregates are
     partial-agg built-ins."""
     emb = load(spark, sf_dir, "embeddings").filter(F.col("vec_id") % 4 == 1)
-    tag = pathlib.Path(sf_dir.rstrip("/")).name.replace(".", "_")
+    tag = sf_tag(sf_dir)
     zone = SCRATCH / f"orc_zone_{tag}"
     emb.write.mode("overwrite").orc(str(zone))
     back = spark.read.schema(emb.schema).orc(str(zone))
@@ -658,8 +638,8 @@ def ensure_manifested_events(spark: SparkSession, sf_dir: str) -> str:
     the layout."""
     from ..sinks import write_manifested
 
-    tag = pathlib.Path(sf_dir.rstrip("/")).name.replace(".", "_")
-    fp = _source_fingerprint(sf_dir)
+    tag = sf_tag(sf_dir)
+    fp = source_fingerprint(sf_dir)
     out = SCRATCH / f"manifested_events_{tag}_{fp}"
     if not (out / "manifest" / "_SUCCESS").exists():
         events = spark.read.parquet(f"{sf_dir}/events.parquet")
@@ -717,8 +697,8 @@ def ensure_zordered_events(spark: SparkSession, sf_dir: str) -> str:
     :func:`ensure_manifested_events`."""
     from ..sinks import write_zorder_manifested
 
-    tag = pathlib.Path(sf_dir.rstrip("/")).name.replace(".", "_")
-    fp = _source_fingerprint(sf_dir)
+    tag = sf_tag(sf_dir)
+    fp = source_fingerprint(sf_dir)
     out = SCRATCH / f"zordered_events_{tag}_{fp}"
     if not (out / "manifest" / "_SUCCESS").exists():
         events = spark.read.parquet(f"{sf_dir}/events.parquet")

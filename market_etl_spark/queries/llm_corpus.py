@@ -39,7 +39,7 @@ from ..llm.text import (
     shingles_sql,
     words,
 )
-from ..tables import fanout_partitions, load
+from ..tables import SCRATCH, fanout_partitions, load, sf_tag, source_fingerprint
 from .registry import query
 
 
@@ -77,18 +77,13 @@ def _materialized(spark, sf_dir, kind, build, code_fns) -> DataFrame:
     pair graph and cluster map once per corpus snapshot and serves all
     downstream queries (clusters, canonical selection, audits) from
     the artifact."""
-    import pathlib as _pl
-
-    from ..streaming import _SCRATCH
-    from .etl_pipeline import _source_fingerprint
-
-    tag = _pl.Path(sf_dir.rstrip("/")).name.replace(".", "_")
-    fp = _source_fingerprint(sf_dir, "documents.parquet")
+    tag = sf_tag(sf_dir)
+    fp = source_fingerprint(sf_dir, "documents.parquet")
     code_fp = _code_fingerprint(*code_fns)
-    path = _pl.Path(_SCRATCH) / f"{kind}_{tag}_{fp}_{code_fp}"
+    path = SCRATCH / f"{kind}_{tag}_{fp}_{code_fp}"
     if not (path / "_SUCCESS").exists():
         # Trailing "_" keeps prefix-overlapping tags apart (sf1 vs sf10).
-        _prune_stale_indexes(_SCRATCH, f"{kind}_{tag}_", keep=str(path))
+        _prune_stale_indexes(SCRATCH, f"{kind}_{tag}_", keep=str(path))
         # KB-scale frames: a handful of files beats one per shuffle task.
         build().coalesce(8).write.mode("overwrite").parquet(str(path))
     return spark.read.parquet(str(path))
@@ -1340,9 +1335,6 @@ def llm_ivf_index_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     end to end."""
     import pathlib as _pl
 
-    from ..streaming import _SCRATCH
-    from .etl_pipeline import _source_fingerprint
-
     # Memoized build (ensure_zordered_events pattern): the INDEX is a
     # deterministic function of the embeddings source AND the builder
     # code, so the bench — and any real serving path — measures
@@ -1353,14 +1345,14 @@ def llm_ivf_index_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # later round changes index semantics — without it a stale layout
     # built under old code would silently serve wrong candidates.
     # Stale sibling layouts (older fingerprints) are pruned on build.
-    tag = _pl.Path(sf_dir.rstrip("/")).name.replace(".", "_")
-    fp = _source_fingerprint(sf_dir, "embeddings.parquet")
+    tag = sf_tag(sf_dir)
+    fp = source_fingerprint(sf_dir, "embeddings.parquet")
     code_fp = _code_fingerprint(similarity.ivf_write_index, similarity.cell_centroids)
-    path = str(_SCRATCH / f"ivf_index_{tag}_{fp}_{code_fp}")
+    path = str(SCRATCH / f"ivf_index_{tag}_{fp}_{code_fp}")
     emb = load(spark, sf_dir, "embeddings")
     if not (_pl.Path(path) / "centroids" / "_SUCCESS").exists():
         # Trailing "_" keeps prefix-overlapping tags apart (sf1 vs sf10).
-        _prune_stale_indexes(_SCRATCH, f"ivf_index_{tag}_", keep=path)
+        _prune_stale_indexes(SCRATCH, f"ivf_index_{tag}_", keep=path)
         similarity.ivf_write_index(emb, path, cluster_col="label")
     queries = emb.filter(F.col("vec_id").isin(_QUERY_IDS)).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("_qvec")
@@ -1395,21 +1387,18 @@ def llm_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     this corpus."""
     import pathlib as _pl
 
-    from ..streaming import _SCRATCH
-    from .etl_pipeline import _source_fingerprint
-
     # Same memoization as llm_ivf_index_topk: the corpus index is built
     # once per (source, builder-code) fingerprint; each invocation then
     # measures what the daily-crawl shape actually costs — signatures
     # for the NEW batch plus an index join, never a corpus re-index.
-    tag = _pl.Path(sf_dir.rstrip("/")).name.replace(".", "_")
-    fp = _source_fingerprint(sf_dir, "documents.parquet")
+    tag = sf_tag(sf_dir)
+    fp = source_fingerprint(sf_dir, "documents.parquet")
     code_fp = _code_fingerprint(dedup.write_minhash_index, dedup.minhash_band_rows)
-    path = str(_SCRATCH / f"minhash_index_{tag}_{fp}_{code_fp}")
+    path = str(SCRATCH / f"minhash_index_{tag}_{fp}_{code_fp}")
     d = _docs(spark, sf_dir)
     if not (_pl.Path(path) / "shingles" / "_SUCCESS").exists():
         # Trailing "_" keeps prefix-overlapping tags apart (sf1 vs sf10).
-        _prune_stale_indexes(_SCRATCH, f"minhash_index_{tag}_", keep=path)
+        _prune_stale_indexes(SCRATCH, f"minhash_index_{tag}_", keep=path)
         dedup.write_minhash_index(d.filter(F.col("doc_id") % 5 != 0), path)
     return dedup.dedup_against_index(
         spark, d.filter(F.col("doc_id") % 5 == 0), path

@@ -24,7 +24,7 @@ import pathlib
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..tables import load
+from ..tables import SCRATCH, fresh_scratch, load, sf_tag
 from .registry import query
 
 #: Fixed slice for the exact density-clustering graph: the quadratic
@@ -75,11 +75,10 @@ def q_streaming_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
     write per refresh."""
     import shutil
 
-    from ..streaming import _SCRATCH, read_table_stream_multibatch
+    from ..streaming import read_table_stream_multibatch
 
-    tag = pathlib.Path(sf_dir.rstrip("/")).name.replace(".", "_")
-    view_path = str(_SCRATCH / f"ivm_view_{tag}")
-    shutil.rmtree(view_path, ignore_errors=True)
+    tag = sf_tag(sf_dir)
+    view_path = fresh_scratch(f"ivm_view_{tag}")
 
     dim = F.broadcast(
         load(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
@@ -122,7 +121,7 @@ def q_streaming_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     import uuid
 
-    ckpt = _SCRATCH / "checkpoints" / f"ivm_{uuid.uuid4().hex[:8]}"
+    ckpt = SCRATCH / "checkpoints" / f"ivm_{uuid.uuid4().hex[:8]}"
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     try:
         # the view and every delta agg are segment-cardinality (5 keys)
@@ -847,15 +846,11 @@ def q_time_travel_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     full snapshot rewrite — the right unit for dimension-sized
     tables); reads open only the named version's live set; the diff
     ships (key, xxhash64) pairs only."""
-    import shutil
-
     from .. import lakehouse as lk
     from ..merge import snapshot_diff
-    from ..streaming import _SCRATCH
 
-    tag = pathlib.Path(sf_dir.rstrip("/")).name.replace(".", "_")
-    path = str(_SCRATCH / f"ttravel_{tag}")
-    shutil.rmtree(path, ignore_errors=True)
+    tag = sf_tag(sf_dir)
+    path = fresh_scratch(f"ttravel_{tag}")
 
     e = load(spark, sf_dir, "events")
     snap = lambda df: df.groupBy("user_id").agg(  # noqa: E731
@@ -1056,13 +1051,13 @@ def q_streaming_session_native(spark: SparkSession, sf_dir: str) -> DataFrame:
     reclaimed at the watermark — the production contract for unbounded
     sessionization."""
     from .. import streaming
-    from ..streaming import _SCRATCH, _convert_ts
+    from ..streaming import _convert_ts
 
     # same staged zone as the pandas-state sessionizer, but replayed
     # 1-file-per-trigger so the watermark advances BETWEEN batches
     streaming.read_events_stream_with_flush(spark, sf_dir)  # stage zone
-    tag = pathlib.Path(sf_dir.rstrip("/")).name.replace(".", "_")
-    zone = _SCRATCH / f"stream_src_{tag}_flush"
+    tag = sf_tag(sf_dir)
+    zone = SCRATCH / f"stream_src_{tag}_flush"
     schema = spark.read.parquet(f"{sf_dir.rstrip('/')}/events.parquet").schema
     stream = _convert_ts(
         spark.readStream.schema(schema)
@@ -1152,7 +1147,7 @@ def llm_udtf_token_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
                     yield start + 1, toks[start], i - start
                     start = i
 
-    tag = pathlib.Path(sf_dir.rstrip("/")).name.replace(".", "_")
+    tag = sf_tag(sf_dir)
     view = f"docs_udtf_{tag}"
     load(spark, sf_dir, "documents").select("doc_id", "text").createOrReplaceTempView(view)
     spark.udtf.register("token_runs", TokenRuns)
@@ -1256,7 +1251,7 @@ def q_pipe_syntax(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: identical plan to the ANSI form — partial aggregation,
     pushed filter, no extra exchange for the pipe stages."""
-    tag = pathlib.Path(sf_dir.rstrip("/")).name.replace(".", "_")
+    tag = sf_tag(sf_dir)
     view = f"events_pipe_{tag}"
     load(spark, sf_dir, "events").createOrReplaceTempView(view)
     return spark.sql(
@@ -1398,14 +1393,10 @@ def q_vacuum_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     doomed file (no data job); the orphan sweep is a directory listing
     gated by a min-age window; reads open only the named version's
     live set."""
-    import shutil
-
     from .. import lakehouse as lk
-    from ..streaming import _SCRATCH
 
-    tag = pathlib.Path(sf_dir.rstrip("/")).name.replace(".", "_")
-    path = str(_SCRATCH / f"vacuum_{tag}")
-    shutil.rmtree(path, ignore_errors=True)
+    tag = sf_tag(sf_dir)
+    path = fresh_scratch(f"vacuum_{tag}")
 
     e = load(spark, sf_dir, "events")
     snap = lambda df: df.groupBy("user_id").agg(  # noqa: E731
@@ -1499,7 +1490,7 @@ def q_sql_scripting(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: each iteration is one partial-aggregated scan (2 running
     moments), driver-side state is two doubles — the loop shape of
     any convergent refinement at 100 TB."""
-    tag = pathlib.Path(sf_dir.rstrip("/")).name.replace(".", "_")
+    tag = sf_tag(sf_dir)
     view = f"events_script_{tag}"
     load(spark, sf_dir, "events").createOrReplaceTempView(view)
     prev = spark.conf.get("spark.sql.scripting.enabled", "false")

@@ -23,7 +23,7 @@ import pathlib  # noqa: F401  (parity with sibling modules)
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..tables import fanout_partitions, load
+from ..tables import SCRATCH, fanout_partitions, load, sf_tag
 from .registry import query
 
 _GRID_R = 0.05  # join radius; cell edge = radius so 3x3 cells cover it
@@ -448,7 +448,6 @@ def q_xml_source_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the writer shards one XML document per partition file like
     any Spark sink; the reader splits on row tags — both sides stay
     distributed, no driver funnel."""
-    from .etl_pipeline import SCRATCH
 
     e = (
         load(spark, sf_dir, "events")
@@ -464,7 +463,7 @@ def q_xml_source_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr("unix_micros(ts)").alias("tus"),
         )
     )
-    tag = pathlib.Path(sf_dir.rstrip("/")).name.replace(".", "_")
+    tag = sf_tag(sf_dir)
     zone = SCRATCH / f"xml_zone_{tag}"
     e.write.mode("overwrite").format("xml").option("rowTag", "event").save(
         str(zone)

@@ -28,13 +28,10 @@ SURVEY.md §2's layout/streaming families on the same data model.
 
 from __future__ import annotations
 
-import pathlib
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..tables import fanout_partitions, load
-from .etl_pipeline import SCRATCH, _source_fingerprint
+from ..tables import SCRATCH, fanout_partitions, fresh_scratch, load, sf_tag, source_fingerprint
 from .registry import query
 
 _DAY_US = 86_400_000_000
@@ -53,8 +50,8 @@ def ensure_bucketed_star(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     survive sessions, so a fresh session re-registers (rewrites) the
     pair once — the memoization is per-session, the cost bounded by the
     dim/fact projection sizes."""
-    tag = pathlib.Path(sf_dir.rstrip("/")).name.replace(".", "_")
-    fp = _source_fingerprint(sf_dir, "orders.parquet")
+    tag = sf_tag(sf_dir)
+    fp = source_fingerprint(sf_dir, "orders.parquet")
     tbl_o = f"bkt_orders_{tag}_{fp}"
     tbl_c = f"bkt_customer_{tag}_{fp}"
     if not spark.catalog.tableExists(tbl_o):
@@ -179,11 +176,8 @@ def q_dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame
     Scale: the overwrite moves only the patch's partitions through the
     committer — work ∝ patch size, not table size; this is the
     idempotent-backfill primitive at any scale."""
-    import shutil
-
-    tag = pathlib.Path(sf_dir.rstrip("/")).name.replace(".", "_")
-    path = str(SCRATCH / f"dpo_zone_{tag}")
-    shutil.rmtree(path, ignore_errors=True)
+    tag = sf_tag(sf_dir)
+    path = fresh_scratch(f"dpo_zone_{tag}")
 
     e = load(spark, sf_dir, "events").select(
         F.date_trunc("day", "ts").cast("date").alias("day"),
@@ -627,11 +621,11 @@ def q_streaming_chained_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     1000x reduced), and the chain eliminates the intermediate sink +
     re-read that a two-query pipeline pays at any scale."""
     from .. import streaming
-    from ..streaming import _SCRATCH, _convert_ts
+    from ..streaming import _convert_ts
 
     streaming.read_events_stream_with_flush(spark, sf_dir)  # stage zone
-    tag = pathlib.Path(sf_dir.rstrip("/")).name.replace(".", "_")
-    zone = _SCRATCH / f"stream_src_{tag}_flush"
+    tag = sf_tag(sf_dir)
+    zone = SCRATCH / f"stream_src_{tag}_flush"
     schema = spark.read.parquet(f"{sf_dir.rstrip('/')}/events.parquet").schema
     stream = _convert_ts(
         spark.readStream.schema(schema)

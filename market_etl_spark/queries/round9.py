@@ -30,7 +30,6 @@ user needs weekly.
 
 from __future__ import annotations
 
-import os
 import pathlib
 import shutil
 
@@ -38,8 +37,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import streaming
-from ..streaming import _SCRATCH, _src_fingerprint
-from ..tables import load
+from ..tables import SCRATCH, fresh_scratch, load, sf_tag, source_fingerprint, stage_batch_files
+from ._audit import require
 from .registry import query
 
 _FEED_COLS = ["event_id", "ts", "user_id", "event_type", "value", "props", "day"]
@@ -66,13 +65,11 @@ def _stage_cdc_feed(spark: SparkSession, sf_dir: str, n_files: int) -> str:
     from ..session import apply_runtime_conf
 
     apply_runtime_conf(spark)
-    tag = pathlib.Path(sf_dir.rstrip("/")).name.replace(".", "_")
-    fp = _src_fingerprint(sf_dir, "events.parquet")
-    zone = _SCRATCH / f"cdc_delete_feed_{tag}_{fp}_{n_files}"
-    marker = zone / "_READY"
-    if not marker.exists():
-        shutil.rmtree(zone, ignore_errors=True)
-        zone.mkdir(parents=True)
+    tag = sf_tag(sf_dir)
+    fp = source_fingerprint(sf_dir, "events.parquet")
+    zone = SCRATCH / f"cdc_delete_feed_{tag}_{fp}_{n_files}"
+
+    def batches():
         e = load(spark, sf_dir, "events").withColumn("day", F.dayofmonth("ts"))
         new_id = (F.col("event_id") + F.lit(100_000_000)).cast("long")
         upd = (
@@ -95,21 +92,10 @@ def _stage_cdc_feed(spark: SparkSession, sf_dir: str, n_files: int) -> str:
             .withColumn("op", F.lit("D"))
         )
         deletes = del_orig.unionByName(del_ins)
-        if n_files == 2:
-            batches = (upd.unionByName(ins), deletes)
-        else:
-            batches = (upd, ins, deletes)
-        for i, b in enumerate(batches):
-            tmp = zone / f"_tmp_{i}"
-            b.select(*_FEED_COLS, "op").coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(str(tmp))
-            (part,) = list(tmp.glob("part-*.parquet"))
-            dest = zone / f"batch-{i}.parquet"
-            part.rename(dest)
-            shutil.rmtree(tmp)
-            os.utime(dest, (1_000_000_000 + i * 1000,) * 2)
-        marker.touch()
+        split = (upd.unionByName(ins), deletes) if n_files == 2 else (upd, ins, deletes)
+        return [(f"batch-{i}", b.select(*_FEED_COLS, "op")) for i, b in enumerate(split)]
+
+    stage_batch_files(zone, batches)
     return str(zone)
 
 
@@ -164,8 +150,8 @@ def q_streaming_cdc_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     micros (exact arithmetic — no cross-engine float association).
     """
     zone = _stage_cdc_feed(spark, sf_dir, n_files=2)
-    tag = pathlib.Path(sf_dir.rstrip("/")).name.replace(".", "_")
-    path = str(_SCRATCH / f"cdc_del_target_{tag}")
+    tag = sf_tag(sf_dir)
+    path = str(SCRATCH / f"cdc_del_target_{tag}")
     e = load(spark, sf_dir, "events").withColumn("day", F.dayofmonth("ts"))
     e.write.mode("overwrite").partitionBy("day").parquet(path)
     schema = spark.read.parquet(f"{zone}/batch-0.parquet").schema
@@ -241,9 +227,9 @@ def q_streaming_crash_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-scan of the feed; this is the property that makes a 1000-box
     streaming job restartable at all."""
     zone = _stage_cdc_feed(spark, sf_dir, n_files=3)
-    tag = pathlib.Path(sf_dir.rstrip("/")).name.replace(".", "_")
-    path = str(_SCRATCH / f"cdc_crash_target_{tag}")
-    ckpt = _SCRATCH / f"cdc_crash_ckpt_{tag}"
+    tag = sf_tag(sf_dir)
+    path = str(SCRATCH / f"cdc_crash_target_{tag}")
+    ckpt = SCRATCH / f"cdc_crash_ckpt_{tag}"
     shutil.rmtree(ckpt, ignore_errors=True)  # fresh drill every run
     e = load(spark, sf_dir, "events").withColumn("day", F.dayofmonth("ts"))
     e.write.mode("overwrite").partitionBy("day").parquet(path)
@@ -261,13 +247,13 @@ def q_streaming_crash_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
         feed(), path, ["event_id"], ["day"], str(ckpt),
         op_col="op", crash_after_batch=1, applied_log=run1,
     )
-    assert not clean and run1 == [0, 1], (clean, run1)
+    require(not clean and run1 == [0, 1], (clean, run1))
     run2: list[int] = []
     clean = streaming.run_cdc_apply_resumable(
         feed(), path, ["event_id"], ["day"], str(ckpt),
         op_col="op", applied_log=run2,
     )
-    assert clean, "restarted run must terminate cleanly"
+    require(clean, "restarted run must terminate cleanly")
     shutil.rmtree(ckpt, ignore_errors=True)
     final = spark.read.parquet(path)
     return (
@@ -777,29 +763,19 @@ def _stage_retract_feed(spark: SparkSession, sf_dir: str) -> str:
     from ..session import apply_runtime_conf
 
     apply_runtime_conf(spark)
-    tag = pathlib.Path(sf_dir.rstrip("/")).name.replace(".", "_")
-    fp = _src_fingerprint(sf_dir, "events.parquet")
-    zone = _SCRATCH / f"ivm_retract_feed_{tag}_{fp}"
-    marker = zone / "_READY"
-    if not marker.exists():
-        shutil.rmtree(zone, ignore_errors=True)
-        zone.mkdir(parents=True)
+    tag = sf_tag(sf_dir)
+    fp = source_fingerprint(sf_dir, "events.parquet")
+    zone = SCRATCH / f"ivm_retract_feed_{tag}_{fp}"
+
+    def batches():
         e = load(spark, sf_dir, "events").withColumn("day", F.dayofmonth("ts"))
         ins = e.filter(F.col("day") <= 25).withColumn("op", F.lit("I"))
         ret = e.filter(
             F.col("day").between(1, 5) & (F.col("event_type") == "click")
         ).withColumn("op", F.lit("D"))
-        for i, b in enumerate((ins, ret)):
-            tmp = zone / f"_tmp_{i}"
-            b.select("event_type", "value", "op").coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(str(tmp))
-            (part,) = list(tmp.glob("part-*.parquet"))
-            dest = zone / f"batch-{i}.parquet"
-            part.rename(dest)
-            shutil.rmtree(tmp)
-            os.utime(dest, (1_000_000_000 + i * 1000,) * 2)
-        marker.touch()
+        return [(f"batch-{i}", b.select("event_type", "value", "op")) for i, b in enumerate((ins, ret))]
+
+    stage_batch_files(zone, batches)
     return str(zone)
 
 
@@ -838,11 +814,7 @@ def q_streaming_ivm_retract(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: per-refresh work ∝ |Δ|, the view stays key-cardinality
     sized, and nothing ever re-scans history — the production shape
     of a continuously-maintained aggregate under upstream deletes."""
-    view_path = str(
-        _SCRATCH
-        / f"ivm_retract_view_{pathlib.Path(sf_dir.rstrip('/')).name.replace('.', '_')}"
-    )
-    shutil.rmtree(view_path, ignore_errors=True)
+    view_path = fresh_scratch(f"ivm_retract_view_{sf_tag(sf_dir)}")
     zone = _stage_retract_feed(spark, sf_dir)
     schema = spark.read.parquet(f"{zone}/batch-0.parquet").schema
     stream = (
@@ -886,7 +858,7 @@ def q_streaming_ivm_retract(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     import uuid
 
-    ckpt = _SCRATCH / "checkpoints" / f"ivmr_{uuid.uuid4().hex[:8]}"
+    ckpt = SCRATCH / "checkpoints" / f"ivmr_{uuid.uuid4().hex[:8]}"
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     try:
         spark.conf.set("spark.sql.shuffle.partitions", "4")
@@ -918,13 +890,11 @@ def _stage_scd2_feed(spark: SparkSession, sf_dir: str) -> str:
     from ..session import apply_runtime_conf
 
     apply_runtime_conf(spark)
-    tag = pathlib.Path(sf_dir.rstrip("/")).name.replace(".", "_")
-    fp = _src_fingerprint(sf_dir, "events.parquet")
-    zone = _SCRATCH / f"scd2_feed_{tag}_{fp}"
-    marker = zone / "_READY"
-    if not marker.exists():
-        shutil.rmtree(zone, ignore_errors=True)
-        zone.mkdir(parents=True)
+    tag = sf_tag(sf_dir)
+    fp = source_fingerprint(sf_dir, "events.parquet")
+    zone = SCRATCH / f"scd2_feed_{tag}_{fp}"
+
+    def batches():
         e = load(spark, sf_dir, "events")
         half = (
             e.filter(F.dayofmonth("ts") <= 15)
@@ -945,15 +915,9 @@ def _stage_scd2_feed(spark: SparkSession, sf_dir: str) -> str:
                 F.lit("2024-01-31").cast("timestamp").alias("effective_ts"),
             )
         )
-        for i, b in enumerate((half, full)):
-            tmp = zone / f"_tmp_{i}"
-            b.coalesce(1).write.mode("overwrite").parquet(str(tmp))
-            (part,) = list(tmp.glob("part-*.parquet"))
-            dest = zone / f"batch-{i}.parquet"
-            part.rename(dest)
-            shutil.rmtree(tmp)
-            os.utime(dest, (1_000_000_000 + i * 1000,) * 2)
-        marker.touch()
+        return [("batch-0", half), ("batch-1", full)]
+
+    stage_batch_files(zone, batches)
     return str(zone)
 
 
@@ -1016,9 +980,8 @@ def q_streaming_scd2_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     history depth."""
     from ..merge import scd2_apply
 
-    tag = pathlib.Path(sf_dir.rstrip("/")).name.replace(".", "_")
-    dim_path = str(_SCRATCH / f"scd2_dim_{tag}")
-    shutil.rmtree(dim_path, ignore_errors=True)
+    tag = sf_tag(sf_dir)
+    dim_path = fresh_scratch(f"scd2_dim_{tag}")
     zone = _stage_scd2_feed(spark, sf_dir)
     schema = spark.read.parquet(f"{zone}/batch-0.parquet").schema
     stream = (
@@ -1060,7 +1023,7 @@ def q_streaming_scd2_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     import uuid
 
-    ckpt = _SCRATCH / "checkpoints" / f"scd2s_{uuid.uuid4().hex[:8]}"
+    ckpt = SCRATCH / "checkpoints" / f"scd2s_{uuid.uuid4().hex[:8]}"
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     try:
         spark.conf.set("spark.sql.shuffle.partitions", "4")
@@ -1120,9 +1083,8 @@ def q_merge_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..session import apply_runtime_conf
 
     apply_runtime_conf(spark)
-    tag = pathlib.Path(sf_dir.rstrip("/")).name.replace(".", "_")
-    path = str(_SCRATCH / f"merge_evolve_{tag}")
-    shutil.rmtree(path, ignore_errors=True)  # schema change: clean slate
+    tag = sf_tag(sf_dir)
+    path = fresh_scratch(f"merge_evolve_{tag}")
     e = load(spark, sf_dir, "events").withColumn("day", F.dayofmonth("ts"))
     e.filter(F.col("day") <= 20).write.partitionBy("day").parquet(path)
     batch = (
@@ -1249,8 +1211,8 @@ def q_compaction_execute(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .etl_pipeline import ensure_manifested_events
 
     root = ensure_manifested_events(spark, sf_dir)
-    tag = pathlib.Path(sf_dir.rstrip("/")).name.replace(".", "_")
-    dest = str(_SCRATCH / f"compacted_{tag}")
+    tag = sf_tag(sf_dir)
+    dest = str(SCRATCH / f"compacted_{tag}")
     n_before, n_after = compact_manifested(spark, root, dest, "value", n_bins=4)
     man = spark.read.parquet(f"{dest}/manifest").orderBy("stat_min").collect()
     clustered_ok = all(
@@ -1320,9 +1282,9 @@ def q_merge_on_read_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
     plain predicate recompute."""
     from .. import mor
 
-    tag = pathlib.Path(sf_dir.rstrip("/")).name.replace(".", "_")
-    base = str(_SCRATCH / f"mor_base_{tag}")
-    gen2 = str(_SCRATCH / f"mor_gen2_{tag}")
+    tag = sf_tag(sf_dir)
+    base = str(SCRATCH / f"mor_base_{tag}")
+    gen2 = str(SCRATCH / f"mor_gen2_{tag}")
     shutil.rmtree(base, ignore_errors=True)
     e = load(spark, sf_dir, "events").withColumn("day", F.dayofmonth("ts"))
     e.repartition(8).write.parquet(base)
@@ -1415,9 +1377,9 @@ def q_partition_spec_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     EXECUTED plan and pinned TRUE by the oracle; the band aggregate
     (exact integer micros) and the unfiltered total prove the union
     read loses and duplicates nothing across the spec boundary."""
-    tag = pathlib.Path(sf_dir.rstrip("/")).name.replace(".", "_")
-    root = _SCRATCH / f"spec_evo_{tag}"
-    fp = _src_fingerprint(sf_dir, "events.parquet")
+    tag = sf_tag(sf_dir)
+    root = SCRATCH / f"spec_evo_{tag}"
+    fp = source_fingerprint(sf_dir, "events.parquet")
     marker = root / f"_READY_{fp}"
     e = load(spark, sf_dir, "events").withColumn("day", F.dayofmonth("ts"))
     if not marker.exists():

@@ -11,15 +11,11 @@ user upgrading from that tier expects to keep — all expressed through
 
 from __future__ import annotations
 
-import pathlib
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..tables import load, register_all
+from ..tables import SCRATCH, load, register_all, sf_tag
 from .registry import query
-
-SCRATCH = pathlib.Path(__file__).resolve().parent.parent.parent / ".scratch"
 
 # ---------------------------------------------------------------------------
 # Recursive CTE: calendar spine with zero-filled daily counts
@@ -247,7 +243,7 @@ def q_schema_evolution_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     one metadata pass over file footers, not a data rewrite, which is
     exactly why additive evolution is the only kind a 100 TB zone
     tolerates."""
-    tag = pathlib.Path(sf_dir.rstrip("/")).name.replace(".", "_")
+    tag = sf_tag(sf_dir)
     root = SCRATCH / f"schema_evo_{tag}"
     e = load(spark, sf_dir, "events").select("event_id", "event_type", "value")
     old = e.where(F.col("event_id") % 2 == 0).drop("event_type")

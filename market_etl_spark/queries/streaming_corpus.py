@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import streaming
-from ..tables import load
+from ..tables import SCRATCH, load, sf_tag
 from .registry import query
 
 
@@ -517,12 +517,8 @@ def q_streaming_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     The final on-disk state aggregates to the oracle's full-table
     recompute only if all three MERGE paths executed correctly across
     every micro-batch."""
-    import pathlib as _pl
-
-    from ..streaming import _SCRATCH
-
-    tag = _pl.Path(sf_dir.rstrip("/")).name.replace(".", "_")
-    path = str(_SCRATCH / f"cdc_target_{tag}")
+    tag = sf_tag(sf_dir)
+    path = str(SCRATCH / f"cdc_target_{tag}")
     e = load(spark, sf_dir, "events").withColumn("day", F.dayofmonth("ts"))
     # one-scan seed: survive days (<=10) verbatim + poisoned days
     # (11-20) in a single projected pass (the prior unionByName form

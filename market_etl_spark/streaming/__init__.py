@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import LongType, StructType, TimestampNTZType
 
-_SCRATCH = pathlib.Path(__file__).resolve().parent.parent.parent / ".scratch"
+from ..tables import SCRATCH, load, sf_tag, source_fingerprint, stage_batch_files
 
 #: State-store partition count pinned for every memory-sink drain in
 #: this module.  Each micro-batch checkpoints EVERY state partition, so
@@ -132,8 +132,8 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     apply_runtime_conf(spark)
     src = f"{sf_dir.rstrip('/')}/events.parquet"
-    tag = pathlib.Path(sf_dir.rstrip("/")).name.replace(".", "_")
-    zone = _SCRATCH / f"stream_src_{tag}"
+    tag = sf_tag(sf_dir)
+    zone = SCRATCH / f"stream_src_{tag}"
     zone.mkdir(parents=True, exist_ok=True)
     link = zone / "events-part-0.parquet"
     if not link.exists():
@@ -183,8 +183,8 @@ def read_events_stream_with_flush(spark: SparkSession, sf_dir: str) -> DataFrame
 
     apply_runtime_conf(spark)
     src = f"{sf_dir.rstrip('/')}/events.parquet"
-    tag = pathlib.Path(sf_dir.rstrip("/")).name.replace(".", "_")
-    zone = _SCRATCH / f"stream_src_{tag}_flush"
+    tag = sf_tag(sf_dir)
+    zone = SCRATCH / f"stream_src_{tag}_flush"
     zone.mkdir(parents=True, exist_ok=True)
     link = zone / "events-part-0.parquet"
     if link.is_symlink():
@@ -266,7 +266,7 @@ def run_to_memory(result: DataFrame, name: str | None = None) -> str:
     200 default pays ~200 checkpoint files per batch) and the host
     setting restored right after start."""
     name = name or f"sink_{uuid.uuid4().hex[:8]}"
-    ckpt = _SCRATCH / "checkpoints" / name
+    ckpt = SCRATCH / "checkpoints" / name
     spark = result.sparkSession
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     try:
@@ -299,7 +299,7 @@ def run_to_memory_append_available_now(
     to the stream's keyed-state cardinality (a stream keyed on ≤40
     users needs far fewer state partitions than the session default)."""
     name = name or f"sink_{uuid.uuid4().hex[:8]}"
-    ckpt = _SCRATCH / "checkpoints" / name
+    ckpt = SCRATCH / "checkpoints" / name
     spark = result.sparkSession
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     try:
@@ -346,7 +346,7 @@ def run_to_memory_append(
     import time
 
     name = name or f"sink_{uuid.uuid4().hex[:8]}"
-    ckpt = _SCRATCH / "checkpoints" / name
+    ckpt = SCRATCH / "checkpoints" / name
     spark = result.sparkSession
     # State-store partition count is frozen from shuffle.partitions at
     # stream start, and every micro-batch checkpoints every state
@@ -658,23 +658,6 @@ def sessionize_batch(events: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _src_fingerprint(sf_dir: str, fname: str) -> str:
-    """Size+mtime digest of a source parquet (same contract as
-    ``queries.etl_pipeline._source_fingerprint``, duplicated here to
-    keep the package layering acyclic): staged replay zones keyed by
-    it invalidate when the driver regenerates testdata between rounds
-    instead of silently replaying stale rows."""
-    import hashlib
-
-    p = pathlib.Path(sf_dir.rstrip("/")) / fname
-    try:
-        st = p.stat()
-        raw = f"{st.st_size}:{st.st_mtime_ns}"
-    except OSError:
-        raw = "missing"
-    return hashlib.sha1(raw.encode()).hexdigest()[:10]
-
-
 def _pin_part_order(zone: pathlib.Path) -> None:
     """Pin the staged part files' modification times in FILE-NAME order
     (part-00000 first — the lowest range slice from
@@ -697,12 +680,11 @@ def read_events_stream_multibatch(
     on ts with mtimes pinned in range order, so each batch is one
     ascending CDC time slice."""
     from ..session import apply_runtime_conf
-    from ..tables import load
 
     apply_runtime_conf(spark)
-    tag = pathlib.Path(sf_dir.rstrip("/")).name.replace(".", "_")
-    fp = _src_fingerprint(sf_dir, "events.parquet")
-    zone = _SCRATCH / f"stream_src_multi_{tag}_{fp}_{n_files}"
+    tag = sf_tag(sf_dir)
+    fp = source_fingerprint(sf_dir, "events.parquet")
+    zone = SCRATCH / f"stream_src_multi_{tag}_{fp}_{n_files}"
     if not (zone / "_SUCCESS").exists():
         load(spark, sf_dir, "events").repartitionByRange(
             n_files, "ts"
@@ -732,12 +714,11 @@ def read_table_stream_multibatch(
     and reused; a regenerated testdata tree changes the fingerprint
     and restages instead of replaying stale rows."""
     from ..session import apply_runtime_conf
-    from ..tables import load
 
     apply_runtime_conf(spark)
-    tag = pathlib.Path(sf_dir.rstrip("/")).name.replace(".", "_")
-    fp = _src_fingerprint(sf_dir, f"{table}.parquet")
-    zone = _SCRATCH / f"stream_src_multi_{table}_{tag}_{fp}_{n_files}"
+    tag = sf_tag(sf_dir)
+    fp = source_fingerprint(sf_dir, f"{table}.parquet")
+    zone = SCRATCH / f"stream_src_multi_{table}_{tag}_{fp}_{n_files}"
     if not (zone / "_SUCCESS").exists():
         load(spark, sf_dir, table).repartitionByRange(
             n_files, range_col
@@ -768,10 +749,10 @@ def read_events_stream_outer_drain(spark: SparkSession, sf_dir: str) -> DataFram
 
     apply_runtime_conf(spark)
     src = f"{sf_dir.rstrip('/')}/events.parquet"
-    tag = pathlib.Path(sf_dir.rstrip("/")).name.replace(".", "_")
+    tag = sf_tag(sf_dir)
     import shutil
 
-    zone = _SCRATCH / f"stream_src_{tag}_outer"
+    zone = SCRATCH / f"stream_src_{tag}_outer"
     zone.mkdir(parents=True, exist_ok=True)
     link = zone / "events-part-0.parquet"
     if not link.exists():
@@ -901,35 +882,19 @@ def read_events_stream_late_replay(
     up in production.  File order is pinned via modification times
     (the file source processes oldest-mtime first) and
     ``maxFilesPerTrigger=1`` splits the two files into two batches."""
-    import os
-    import shutil
-
     from ..session import apply_runtime_conf
-    from ..tables import load
 
     apply_runtime_conf(spark)
-    tag = pathlib.Path(sf_dir.rstrip("/")).name.replace(".", "_")
-    zone = _SCRATCH / f"stream_src_late_{tag}"
-    marker = zone / "_READY"
-    if not marker.exists():
-        shutil.rmtree(zone, ignore_errors=True)
-        zone.mkdir(parents=True)
+    zone = SCRATCH / f"stream_src_late_{sf_tag(sf_dir)}"
+
+    def batches():
+        # oldest mtime first = processing order: head, then late
         e = load(spark, sf_dir, "events")
-        for i, (name, pred) in enumerate(
-            (
-                ("part-0-head", F.col("ts") >= F.lit(cutoff).cast("timestamp")),
-                ("part-1-late", F.col("ts") < F.lit(cutoff).cast("timestamp")),
-            )
-        ):
-            tmp = zone / f"_tmp_{name}"
-            e.filter(pred).coalesce(1).write.mode("overwrite").parquet(str(tmp))
-            (part,) = [p for p in tmp.glob("part-*.parquet")]
-            dest = zone / f"{name}.parquet"
-            part.rename(dest)
-            shutil.rmtree(tmp)
-            # oldest mtime first = processing order: head, then late
-            os.utime(dest, (1_000_000_000 + i * 1000, 1_000_000_000 + i * 1000))
-        marker.touch()
+        head = F.col("ts") >= F.lit(cutoff).cast("timestamp")
+        late = F.col("ts") < F.lit(cutoff).cast("timestamp")
+        return [("part-0-head", e.filter(head)), ("part-1-late", e.filter(late))]
+
+    stage_batch_files(zone, batches)
     schema = spark.read.parquet(str(zone / "part-0-head.parquet")).schema
     return (
         spark.readStream.schema(schema)
@@ -947,7 +912,7 @@ def run_to_memory_append_with_metrics(
     operators.  Metadata-sized driver state — the rows themselves stay
     in the sink."""
     name = name or f"sink_{uuid.uuid4().hex[:8]}"
-    ckpt = _SCRATCH / "checkpoints" / name
+    ckpt = SCRATCH / "checkpoints" / name
     spark = result.sparkSession
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     try:
@@ -1030,7 +995,7 @@ def run_cdc_apply(
         if n:
             applied.append(batch_id)
 
-    ckpt = _SCRATCH / "checkpoints" / f"cdc_{uuid.uuid4().hex[:8]}"
+    ckpt = SCRATCH / "checkpoints" / f"cdc_{uuid.uuid4().hex[:8]}"
     spark = stream.sparkSession
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     try:

@@ -311,3 +311,21 @@ def test_coverage_md_counts_match_registry():
             assert int(count) == n, (
                 f"README.md count {count} != registry size {n} (pattern {pat})"
             )
+
+
+#: sha256 of the registry's (name, oracle, tags, max_verify_sf) list, in
+#: registration order.  Moving or merging query modules must leave it
+#: unchanged: the oracles are the reference implementation, and
+#: ``__spark_entry__.queries()`` orders verified queries by registration.
+_REGISTRY_SHA256 = "9aafad772957d1ef0a78e66e8b46a422bdb002c3c60b3f937b6124c403d4fe05"
+
+
+def test_registry_contract_pinned():
+    import hashlib
+    import json
+
+    rows = [[n, s.oracle, list(s.tags), s.max_verify_sf] for n, s in REGISTRY.items()]
+    digest = hashlib.sha256(json.dumps(rows).encode()).hexdigest()
+    assert digest == _REGISTRY_SHA256, (
+        "registry names, oracles, tags, caps or registration order changed"
+    )

@@ -1,7 +1,6 @@
-"""Round-5-staged queries (ACTIVE in the registry since round 6):
-engine-vs-DuckDB parity, hand-computed semantics, and the same
-type-class gates the registry enforces — these tests predate the
-activation and keep guarding the same 19 entries post-registration.
+"""The 19 corpus-statistics and sketch queries of
+:mod:`market_etl_spark.queries.stats_sketches`: engine-vs-DuckDB parity,
+hand-computed semantics, and the type-class gates the registry enforces.
 """
 
 from __future__ import annotations
@@ -11,12 +10,15 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
-from market_etl_spark.queries import round6_staged as r6
-from market_etl_spark.queries.round6_staged import STAGED
+from market_etl_spark.queries import REGISTRY
+from market_etl_spark.queries import stats_sketches as r6
 
 from conftest import SF_SMOKE
 
 _DUCK_TABLES = ("events", "documents", "embeddings")
+
+#: name -> registry spec, for every query the module registers.
+STAGED = {n: s for n, s in REGISTRY.items() if s.fn.__module__ == r6.__name__}
 
 
 @pytest.fixture(scope="module")
@@ -45,7 +47,7 @@ def _canon(v):
 def test_staged_matches_oracle(spark, duck, name):
     """The driver's compare, inline: row count, column set, and
     order-insensitive canonicalized values."""
-    fn, oracle, _tags = STAGED[name]
+    fn, oracle = STAGED[name].fn, STAGED[name].oracle
     sdf = fn(spark, SF_SMOKE)
     srows, scols = sdf.collect(), sdf.columns
     ores = duck.execute(oracle)
@@ -68,7 +70,7 @@ def test_staged_oracle_types_clean(spark, duck, name):
     surface as a driver red row AFTER registration)."""
     from test_registry_contract import _duck_class, _spark_class
 
-    fn, oracle, _tags = STAGED[name]
+    fn, oracle = STAGED[name].fn, STAGED[name].oracle
     dcols = {}
     for col, typ, *_ in duck.execute("DESCRIBE " + oracle).fetchall():
         assert "HUGEINT" not in typ.upper(), (name, col, typ)
@@ -86,22 +88,18 @@ def test_staged_oracle_types_clean(spark, duck, name):
 def test_staged_plan_no_cartesian(spark, name):
     """The only nested-loop shapes allowed are 1-row broadcast
     fan-outs (pagerank's dangling-mass scalar)."""
-    fn, _oracle, _tags = STAGED[name]
+    fn = STAGED[name].fn
     plan = fn(spark, SF_SMOKE)._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan, name
 
 
 def test_staged_registered():
-    """Round-6 activation: every staged query is live in the registry
-    with its oracle attached (the r5 ledger reached 167/167, lifting
-    the r4 registration freeze)."""
-    from market_etl_spark.queries import REGISTRY
-
-    assert set(STAGED) <= set(REGISTRY)
-    for name, (fn, oracle, tags) in STAGED.items():
-        spec = REGISTRY[name]
-        assert spec.oracle == oracle, name
-        assert spec.fn is fn, name
+    """All 19 are registered with an oracle, and last: the registry's
+    order is part of its contract (``__spark_entry__.queries()`` lists
+    verified queries in it)."""
+    assert len(STAGED) == 19
+    assert list(REGISTRY)[-19:] == list(STAGED)
+    assert all(spec.oracle for spec in STAGED.values())
 
 
 # ---------------------------------------------------------------------------
@@ -419,7 +417,8 @@ def test_bollinger_parity_nonvacuous_sf001(spark):
     finding r5), and pin that rows actually exist."""
     import duckdb
 
-    fn, oracle, _tags = STAGED["q_bollinger_breakouts"]
+    spec = STAGED["q_bollinger_breakouts"]
+    fn, oracle = spec.fn, spec.oracle
     sf = "/root/testdata/sf0.01"
     con = duckdb.connect()
     con.execute(

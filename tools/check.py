@@ -5,11 +5,7 @@ and compares against its ``oracle_sql()`` DuckDB result:
 row count, column names/order-insensitive schema, and an
 order-insensitive value comparison (columns sorted by name, rows sorted).
 
-Usage:  python tools/check.py [--staged] [sf_dir] [query_name ...]
-
-``--staged`` adds the round6_staged set (implemented-but-unregistered
-queries) to the run, so pre-activation verification uses the exact
-same gate as the registered surface.
+Usage:  python tools/check.py [sf_dir] [query_name ...]
 """
 
 from __future__ import annotations
@@ -41,9 +37,6 @@ def rowkey(row, cols_sorted, colidx):
 
 def main() -> int:
     args = sys.argv[1:]
-    staged = "--staged" in args
-    if staged:
-        args.remove("--staged")
     sf_dir = args[0] if args else "/root/testdata/sf0.01"
     only = set(args[1:])
 
@@ -67,13 +60,6 @@ def main() -> int:
         spark = get_spark("check")
     qs = ent.queries()
     oracles = ent.oracle_sql()
-    if staged:
-        from market_etl_spark.queries.round6_staged import STAGED
-
-        for _name, (_fn, _oracle, _tags) in STAGED.items():
-            assert _name not in qs, f"staged name {_name} already registered"
-            qs[_name] = _fn
-            oracles[_name] = _oracle
 
     con = duckdb.connect()
     for t in (

@@ -230,15 +230,14 @@ AUDITED = [
 
 def _lakehouse_drills(spark, sf_dir):
     """(title, note, DataFrame) triples for the lakehouse plan audits.
-    Tables are built tiny and fresh under the streaming scratch dir."""
-    import shutil
+    Tables are built tiny and fresh under the scratch dir."""
 
     from pyspark.sql import functions as F
 
     from market_etl_spark import lakehouse as lk
     from market_etl_spark import merge, mor
     from market_etl_spark.sinks import write_manifested, write_versioned
-    from market_etl_spark.streaming import _SCRATCH
+    from market_etl_spark.tables import fresh_scratch
 
     cust = spark.read.parquet(f"{sf_dir}/customer.parquet").selectExpr(
         "c_custkey AS k", "c_mktsegment AS seg",
@@ -247,8 +246,7 @@ def _lakehouse_drills(spark, sf_dir):
     out = []
 
     # 1. the snapshot-store CDF step (q_version_change_feed)
-    p = str(_SCRATCH / "plans_cdf_store")
-    shutil.rmtree(p, ignore_errors=True)
+    p = fresh_scratch("plans_cdf_store")
     write_versioned(cust, p)
     write_versioned(cust.filter("k % 7 <> 0"), p)
     out.append((
@@ -264,8 +262,7 @@ def _lakehouse_drills(spark, sf_dir):
     # 2. the commit-log CDF derivation (q_lakehouse_change_feed): an
     # append + a MOR delete — the feed plan scans ONLY the files those
     # two commits reference and joins the DV positions back broadcast
-    p2 = str(_SCRATCH / "plans_cdf_log")
-    shutil.rmtree(p2, ignore_errors=True)
+    p2 = fresh_scratch("plans_cdf_log")
     t = lk.Transaction(p2)
     t.append(cust.repartition(2))
     t.commit()
@@ -286,8 +283,7 @@ def _lakehouse_drills(spark, sf_dir):
     # 3. the DV-subtracting bin rewrite (q_mor_compaction_purge /
     # q_mor_compaction_updates): one bin's frame — base files minus
     # broadcast DV positions, union routed reinserts, 1-partition sort
-    p3 = str(_SCRATCH / "plans_morcmp")
-    shutil.rmtree(p3, ignore_errors=True)
+    p3 = fresh_scratch("plans_morcmp")
     write_manifested(cust, p3, "bal", n_files=4)
     mor.write_deletion_vector(spark, f"{p3}/data", F.col("k") % 5 == 0)
     dvs = mor._read_dvs(spark, f"{p3}/data")
@@ -316,8 +312,7 @@ def _lakehouse_drills(spark, sf_dir):
 
     # 4. stats-pruned log read (q_lakehouse_data_skipping): 4 ranged
     # appends, predicate admits ONE — the scan's file list is the proof
-    p4 = str(_SCRATCH / "plans_skip")
-    shutil.rmtree(p4, ignore_errors=True)
+    p4 = fresh_scratch("plans_skip")
     kmax = cust.agg(F.max("k")).collect()[0][0]
     kb = kmax // 4 + 1
     for i in range(4):
@@ -340,8 +335,7 @@ def _lakehouse_drills(spark, sf_dir):
     ))
 
     # 5. post-zorder two-column pruned scan (q_lakehouse_zorder)
-    p5 = str(_SCRATCH / "plans_zorder")
-    shutil.rmtree(p5, ignore_errors=True)
+    p5 = fresh_scratch("plans_zorder")
     t = lk.Transaction(p5)
     t.append(cust.repartition(4))
     t.commit()
@@ -412,8 +406,7 @@ def _lakehouse_drills(spark, sf_dir):
     # projected JVM-side — one regexp over input_file_name inside the
     # codegen span, ONE scan node however many partitions exist (never
     # a per-partition union of constant-tagged scans)
-    p7 = str(_SCRATCH / "plans_convpart")
-    shutil.rmtree(p7, ignore_errors=True)
+    p7 = fresh_scratch("plans_convpart")
     cust.withColumn("yr", (F.col("k") % 3).cast("int")).write.partitionBy(
         "yr"
     ).parquet(p7)

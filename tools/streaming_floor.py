@@ -24,15 +24,14 @@ from pyspark.sql import SparkSession, functions as F  # noqa: E402
 
 
 def drill(spark, sf_dir: str) -> dict:
-    import pathlib
     import shutil
 
     from market_etl_spark.merge import merge_into_partitioned
-    from market_etl_spark.streaming import _SCRATCH, read_events_stream_multibatch
-    from market_etl_spark.tables import load
+    from market_etl_spark.streaming import read_events_stream_multibatch
+    from market_etl_spark.tables import SCRATCH, load, sf_tag
 
-    tag = pathlib.Path(sf_dir.rstrip("/")).name.replace(".", "_")
-    path = str(_SCRATCH / f"cdc_floor_target_{tag}")
+    tag = sf_tag(sf_dir)
+    path = str(SCRATCH / f"cdc_floor_target_{tag}")
     t0 = time.time()
     e = load(spark, sf_dir, "events").withColumn("day", F.dayofmonth("ts"))
     seed = e.filter(F.col("day") <= 20).withColumn(
@@ -56,7 +55,7 @@ def drill(spark, sf_dir: str) -> dict:
         )
         merge_times.append(time.time() - m0)
 
-    ckpt = _SCRATCH / "checkpoints" / f"floor_{uuid.uuid4().hex[:8]}"
+    ckpt = SCRATCH / "checkpoints" / f"floor_{uuid.uuid4().hex[:8]}"
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     t1 = time.time()
     try:
