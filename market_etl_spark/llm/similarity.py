@@ -854,67 +854,85 @@ def pq_train_encode(
     Returns ``(codes, codebook)``: codes = (id, j, code) rows — the
     compressed index, m·log2(kc) bits per vector (64 bits here vs
     2048 for the raw floats, a 32× memory cut); codebook = the
-    m·kc·dsub model, a Python list of (j, c, subvec) kept driver-side
+    m·kc·dsub model as a (j, c, cvec) frame over driver-side rows,
     like every other model state in this engine (k-means centroids,
     GD weights).
 
-    All m subspaces train in ONE plan per round: the subspace index
-    ``j`` rides as a key column, so the assignment is a single
-    broadcast fold pass and the mean update one partial-agg shuffle
-    keyed (j, c, dim) — never m separate jobs."""
+    All m subspaces train in ONE grouped-map pass: the subspace index
+    ``j`` is the group key (one shuffle), each group runs every Lloyd
+    round in numpy, and the m·kc model is collected once.  Each round
+    visits members in id order, folds distances left to right, sends
+    argmin ties to the lowest centroid id, drops a centroid left
+    without members (the survivors keep their ids) and moves each
+    centroid to its members' mean, so codes are reproducible bit for
+    bit.
+    Encoding is a narrow pandas UDF over the final codebook inside
+    the plan that reads the codes — no shuffle, no further driver
+    round-trip."""
+    import numpy as np
+
     spark = emb.sparkSession
     sub_expr = F.expr(_subvector_expr(m, dsub, vec_col))
-    subs = emb.select(
-        id_col, F.posexplode(sub_expr).alias("j", "sub")
-    )
-    seeds = (
-        emb.orderBy(id_col)
-        .limit(kc)
-        .select(id_col, F.posexplode(sub_expr).alias("j", "cvec"))
-    )
-    from pyspark.sql import Window
 
-    codebook = seeds.select(
-        "j",
-        (F.row_number().over(Window.partitionBy("j").orderBy(id_col)) - 1)
-        .alias("c"),
-        "cvec",
-    )
-    d2 = F.expr(
-        "aggregate(zip_with(sub, cvec, (x, y) -> power(x - y, 2)), "
-        "cast(0.0 as double), (acc, v) -> acc + v)"
-    )
+    # nested, not module-level: the UDFs below ship it by value, so
+    # Python workers need not import this package
+    def sqdist(subs, cents):
+        """(n, k) squared L2 distances, summed left to right over the
+        dims like the SQL ``aggregate(zip_with(...))`` fold in
+        :func:`_adc_lookup_table`, so argmin ties resolve alike."""
+        d2 = np.zeros((len(subs), len(cents)))
+        for t in range(subs.shape[1]):
+            d2 = d2 + (subs[:, t, None] - cents[None, :, t]) ** 2
+        return d2
 
-    def assign(cb):
-        return (
-            subs.join(F.broadcast(cb), "j")
-            .select(id_col, "j", F.struct(d2.alias("d2"), "c").alias("_m"))
-            .groupBy(id_col, "j")
-            .agg(F.min("_m").alias("m"))
-            .select(id_col, "j", F.col("m.c").alias("code"))
+    def lloyd(pdf: pd.DataFrame) -> pd.DataFrame:
+        pdf = pdf.sort_values(id_col)  # group row order is not guaranteed
+        subs = np.stack(pdf["sub"].to_numpy())
+        ids = np.arange(min(kc, len(subs)))
+        cents = subs[:kc]
+        for _ in range(rounds):
+            code = sqdist(subs, cents).argmin(axis=1)  # first min: lowest id
+            live = np.unique(code)
+            cents = np.stack([subs[code == c].mean(axis=0) for c in live])
+            ids = ids[live]
+        return pd.DataFrame(
+            {"j": pdf["j"].iloc[0], "c": ids, "cvec": list(cents)}
         )
 
-    for _ in range(rounds):
-        assigned = assign(codebook)
-        means = (
-            subs.join(assigned, [id_col, "j"])
-            .select("j", "code", F.posexplode("sub").alias("dim", "x"))
-            .groupBy("j", "code", "dim")
-            .agg(F.avg("x").alias("cval"))
-            .groupBy("j", "code")
-            .agg(
-                F.expr(
-                    "transform(array_sort(collect_list(struct(dim, cval))),"
-                    " s -> s.cval)"
-                ).alias("cvec")
-            )
+    model = sorted(
+        emb.select(id_col, F.posexplode(sub_expr).alias("j", "sub"))
+        .groupBy("j")
+        .applyInPandas(lloyd, "j int, c int, cvec array<double>")
+        .collect(),  # m·kc rows — model state, not data
+        key=lambda r: (r.j, r.c),
+    )
+    codebook = spark.createDataFrame(
+        [(r.j, r.c, r.cvec) for r in model], "j int, c int, cvec array<double>"
+    )
+    book = [  # per subspace: (centroid ids, centroids), ids ascending
+        (
+            np.array([r.c for r in model if r.j == j]),
+            np.array([r.cvec for r in model if r.j == j]),
         )
-        rows = means.collect()  # m·kc rows — model state, not data
-        codebook = spark.createDataFrame(
-            [(r.j, r.code, r.cvec) for r in rows],
-            f"j int, c int, cvec array<double>",
+        for j in range(m)
+    ]
+
+    @pandas_udf("array<int>")
+    def encode(vecs: pd.Series) -> pd.Series:
+        if len(vecs) == 0:
+            return pd.Series([], dtype=object)
+        subs = np.array([np.stack(v) for v in vecs])  # (n, m, dsub)
+        code = np.stack(
+            [ids[sqdist(subs[:, j], cents).argmin(axis=1)]
+             for j, (ids, cents) in enumerate(book)],
+            axis=1,
         )
-    return assign(codebook), codebook
+        return pd.Series(list(code.astype(np.int32)))
+
+    codes = emb.select(
+        id_col, F.posexplode(encode(sub_expr)).alias("j", "code")
+    )
+    return codes, codebook
 
 
 def pq_topk(
@@ -1007,7 +1025,8 @@ def ivfpq_topk(
         .agg(F.sum("_dq").alias("_adc"))
         # materialize once: the scored-count telemetry AND the top-k
         # window both read this frame, and its lineage re-runs the
-        # whole PQ assignment otherwise (measured 2x at sf1).  Size is
+        # codes ⋈ cells ⋈ route joins otherwise (without the pin the
+        # op runs 42 jobs instead of 36 at sf0.01).  Size is
         # candidate-bounded: |queries| x nprobe/n_cells x |corpus| rows
         # of three columns.
         .localCheckpoint()

@@ -32,9 +32,11 @@ that, unlike ``assert``, still runs under ``python -O``).
 
 from __future__ import annotations
 
+import warnings
 from concurrent.futures import ThreadPoolExecutor
 from functools import reduce
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -90,11 +92,18 @@ def concurrently(*thunks, max_workers: int | None = None):
     """Run independent argless callables on a thread pool and return
     their results in order.  Only for thunks whose Spark work is
     independent (no shared temp-view/table mutation, no session-conf
-    flips inside the thunk)."""
+    flips inside the thunk).  Each thunk runs with the caller's local
+    properties (job group, scheduler pool), so its jobs are billed to
+    the caller's group."""
     if not thunks:  # ThreadPoolExecutor rejects max_workers=0 (ADVICE r14)
         return []
+    with warnings.catch_warnings():
+        # the warning is about session tags (SparkSession.addTag), which
+        # the engine does not set; the local properties are still copied
+        warnings.filterwarnings("ignore", "Spark session is not provided")
+        targets = [inheritable_thread_target(t) for t in thunks]
     with ThreadPoolExecutor(max_workers=max_workers or len(thunks)) as ex:
-        futs = [ex.submit(t) for t in thunks]
+        futs = [ex.submit(t) for t in targets]
         return [f.result() for f in futs]
 
 

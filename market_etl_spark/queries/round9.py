@@ -431,8 +431,8 @@ def llm_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..llm import similarity
 
     emb = load(spark, sf_dir, "embeddings")
-    # the whole audit is eager (the PQ trainer already runs Lloyd
-    # rounds with driver-side codebook collects), so pin the shuffle
+    # the whole audit is eager (the PQ trainer already collects its
+    # codebook from a grouped-map job), so pin the shuffle
     # width for the duration — in a vanilla 200-partition session the
     # many tiny window/agg stages otherwise dominate wall-clock
     prev = spark.conf.get("spark.sql.shuffle.partitions")

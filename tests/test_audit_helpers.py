@@ -100,6 +100,21 @@ def test_digest_equal_count_even_multiplicity_not_conflated(spark):
     ]
 
 
+def test_concurrently_threads_carry_the_job_group(spark):
+    # the audit passes' jobs must be billed to the caller's job group;
+    # a plain pool thread starts with no local properties
+    sc = spark.sparkContext
+    sc.setJobGroup("g", "concurrently job-group inheritance")
+    try:
+        got = concurrently(
+            lambda: sc.getLocalProperty("spark.jobGroup.id"),
+            lambda: sc.getLocalProperty("spark.jobGroup.id"),
+        )
+    finally:
+        sc._jsc.clearJobGroup()
+    assert got == ["g", "g"]
+
+
 def test_concurrently_empty_is_noop(spark):
     # ADVICE r14: ThreadPoolExecutor(max_workers=0) raises; zero
     # thunks must return [] instead

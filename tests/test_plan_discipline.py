@@ -60,7 +60,7 @@ _SKIP = {
     "q_bucketed_join_no_shuffle",  # writes+registers the bucketed tables
     "q_dynamic_partition_overwrite",  # rewrites the day-partitioned zone
     "q_aqe_skew_join",  # executes the join eagerly under scaled AQE conf
-    "llm_ivfpq_topk",  # eager audit: PQ Lloyd rounds + recall collects
+    "llm_ivfpq_topk",  # eager audit: PQ codebook collect + recall collects
     "q_runtime_bloom_filter_join",  # executes eagerly under scaled conf
     "q_compaction_execute",  # rewrites the compacted layout generation
     "q_merge_schema_evolution",  # seeds + merges the evolving target eagerly
