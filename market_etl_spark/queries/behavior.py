@@ -581,7 +581,6 @@ def q_time_to_convert(spark: SparkSession, sf_dir: str) -> DataFrame:
     interpolation median, the q_value_quartiles parity convention).
     State per partition is one scalar; the scan reads two event types
     and nothing else reaches the shuffle."""
-    from pyspark.sql import Window
 
     e = load(spark, sf_dir, "events").filter(
         F.col("event_type").isin("click", "purchase")
@@ -649,7 +648,6 @@ def q_activity_islands(spark: SparkSession, sf_dir: str) -> DataFrame:
     one window, one aggregate; no self-join, no recursion, state
     bounded by active days. The streak/churn-gap primitive every
     engagement report needs."""
-    from pyspark.sql import Window
 
     days = (
         load(spark, sf_dir, "events")

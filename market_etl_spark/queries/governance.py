@@ -35,6 +35,9 @@ each registered with a DuckDB oracle like every other entry:
 No reference counterpart (the reference's surface is the trades
 corpus, README.md:27-36); these extend SURVEY.md §2.12's curation
 pillar the way a production corpus team would.
+
+The privacy audits sit here too: k-anonymity over quasi-identifiers
+and differentially private noisy counts.
 """
 
 from __future__ import annotations
@@ -866,3 +869,143 @@ def llm_embedding_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("j")
     )
+
+
+# ---------------------------------------------------------------------------
+# 16. k-anonymity / l-diversity audit
+# ---------------------------------------------------------------------------
+@query(
+    "q_k_anonymity_audit",
+    oracle="""
+    WITH rows_q AS (
+        SELECT user_id // 10 AS user_band,
+               event_type,
+               CAST(date_trunc('day', ts) AS TIMESTAMP) AS day,
+               CAST(FLOOR(value) AS BIGINT) AS sensitive
+        FROM events
+    ), classes AS (
+        SELECT user_band, event_type, day,
+               CAST(COUNT(*) AS BIGINT) AS k,
+               CAST(COUNT(DISTINCT sensitive) AS BIGINT) AS l
+        FROM rows_q GROUP BY user_band, event_type, day
+    )
+    SELECT CAST(COUNT(*) AS BIGINT) AS n_classes,
+           CAST(SUM(CASE WHEN k < 5 THEN 1 ELSE 0 END) AS BIGINT)
+               AS n_violating_classes,
+           CAST(SUM(CASE WHEN k < 5 THEN k ELSE 0 END) AS BIGINT)
+               AS n_rows_at_risk,
+           ROUND(SUM(CASE WHEN k < 5 THEN CAST(k AS DOUBLE) ELSE 0 END)
+                 / SUM(k), 6) AS pct_rows_at_risk,
+           CAST(SUM(CASE WHEN l < 2 THEN 1 ELSE 0 END) AS BIGINT)
+               AS n_low_diversity_classes,
+           CAST(MIN(k) AS BIGINT) AS min_k
+    FROM classes
+    """,
+    tags=("governance", "privacy", "k-anonymity", "extension"),
+)
+def q_k_anonymity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """k-anonymity / l-diversity audit — the privacy gate run before a
+    dataset release: with quasi-identifiers (user band, event type,
+    day), every equivalence class smaller than k = 5 is re-
+    identifiable, and every class whose sensitive attribute (value
+    bucket) takes a single value leaks it even at k ≥ 5 (that's what
+    l-diversity adds).  Reports class counts, rows at risk, the
+    at-risk fraction, low-diversity classes, and the dataset's actual
+    min-k.
+
+    Determinism: classes and k/l are exact integer counts over integer
+    bucketings.  Scale: ONE groupBy over the quasi-identifier tuple
+    with partial aggregation (count-distinct of the sensitive bucket
+    inside the same shuffle); the audit fold runs on the class-
+    cardinality frame."""
+    rows_q = load(spark, sf_dir, "events").select(
+        (F.col("user_id") / 10).cast("long").alias("user_band"),
+        "event_type",
+        F.date_trunc("day", F.col("ts")).alias("day"),
+        F.floor("value").cast("long").alias("sensitive"),
+    )
+    classes = rows_q.groupBy("user_band", "event_type", "day").agg(
+        F.count(F.lit(1)).cast("long").alias("k"),
+        F.countDistinct("sensitive").cast("long").alias("l"),
+    )
+    return classes.agg(
+        F.count(F.lit(1)).cast("long").alias("n_classes"),
+        F.sum(F.when(F.col("k") < 5, 1).otherwise(0))
+        .cast("long")
+        .alias("n_violating_classes"),
+        F.sum(F.when(F.col("k") < 5, F.col("k")).otherwise(0))
+        .cast("long")
+        .alias("n_rows_at_risk"),
+        F.round(
+            F.sum(
+                F.when(F.col("k") < 5, F.col("k").cast("double")).otherwise(0.0)
+            )
+            / F.sum("k"),
+            6,
+        ).alias("pct_rows_at_risk"),
+        F.sum(F.when(F.col("l") < 2, 1).otherwise(0))
+        .cast("long")
+        .alias("n_low_diversity_classes"),
+        F.min("k").cast("long").alias("min_k"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# 17. Differentially-private noisy counts (deterministic Laplace)
+# ---------------------------------------------------------------------------
+@query(
+    "q_dp_noisy_counts",
+    oracle="""
+    WITH counts AS (
+        SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n
+        FROM events GROUP BY event_type
+    ), noised AS (
+        SELECT event_type, n,
+               (CAST(('0x' || substring(md5('dp|' || event_type), 1, 8))
+                     AS BIGINT) + 1.0) / 4294967297.0 AS u
+        FROM counts
+    )
+    SELECT event_type,
+           ROUND(n + (CASE WHEN u < 0.5 THEN 1.0 ELSE -1.0 END)
+                     * LN(1.0 - 2.0 * ABS(u - 0.5)), 6) AS noisy_count,
+           CAST(1.0 AS DOUBLE) AS epsilon
+    FROM noised ORDER BY event_type
+    """,
+    tags=("governance", "privacy", "differential-privacy", "extension"),
+)
+def q_dp_noisy_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Differentially-private count release (ε = 1, sensitivity 1):
+    each per-type count gets Laplace(1/ε) noise via the inverse CDF —
+    ``−b·sgn(u−½)·ln(1−2|u−½|)`` — with ``u`` an md5-derived uniform
+    keyed on the released cell, so the mechanism is DETERMINISTIC and
+    auditable across engines/runs (a seeded release, the shape DP
+    deployments use for reproducible pipelines; the privacy argument
+    is about the mechanism's distribution, which the hash uniform
+    realizes).
+
+    Scale: the noise attaches AFTER the partial-aggregated counts —
+    per released cell, not per row; map-side cost is the count
+    itself."""
+    counts = (
+        load(spark, sf_dir, "events")
+        .groupBy("event_type")
+        .agg(F.count(F.lit(1)).cast("long").alias("n"))
+    )
+    u = (
+        F.conv(
+            F.substring(F.md5(F.concat(F.lit("dp|"), F.col("event_type"))), 1, 8),
+            16,
+            10,
+        )
+        .cast("long")
+        .cast("double")
+        + 1.0
+    ) / 4294967297.0
+    noise = F.when(u < 0.5, 1.0).otherwise(-1.0) * F.log(
+        1.0 - 2.0 * F.abs(u - 0.5)
+    )
+    return counts.select(
+        "event_type",
+        F.round(F.col("n") + noise, 6).alias("noisy_count"),
+        F.lit(1.0).cast("double").alias("epsilon"),
+    ).orderBy("event_type")

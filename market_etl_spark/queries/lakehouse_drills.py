@@ -23,8 +23,11 @@ tables.  What the drills cover:
 The reference pipeline writes append-only loose parquet with no table
 format; every drill here is an engine extension over its data model.
 Drills leave their scratch tables in place, because the returned frames
-read them lazily.  Registration follows the order of this file, and
-``__spark_entry__.queries()`` lists verified queries in that order.
+read them lazily.
+
+Three more drills close the file: time travel and VACUUM retention on
+the commit log, and merge-on-read deletes with position deletion
+vectors over plain parquet (:mod:`..mor`).
 """
 
 from __future__ import annotations
@@ -32,7 +35,7 @@ from __future__ import annotations
 import pathlib
 import shutil
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .. import lakehouse as lk
@@ -550,7 +553,6 @@ def q_mor_compaction_purge(spark: SparkSession, sf_dir: str) -> DataFrame:
     # violation probe are union-tagged and reduced by one grouped
     # aggregate — each branch's (n, vm) is value-identical to the
     # former sequential collects.
-    from pyspark.sql import Window
 
     band, scanned, total_files = read_stats_pruned(
         spark, dest, "value", 20.0, 50.0
@@ -5342,4 +5344,295 @@ def q_lakehouse_merge_evolution(
         .withColumn("schema_widened", F.lit(bool(schema_widened)))
         .withColumn("nulls_aligned", F.lit(bool(nulls_aligned)))
         .orderBy(F.col("region").asc_nulls_first())
+    )
+
+
+@query(
+    "q_time_travel_read",
+    oracle="""
+    WITH s1 AS (
+        SELECT user_id, COUNT(*) AS n,
+               SUM(CAST(FLOOR(value * 1e6) AS BIGINT)) AS v
+        FROM events WHERE day(ts) <= 15 GROUP BY user_id
+    ), s2 AS (
+        SELECT user_id, COUNT(*) AS n,
+               SUM(CAST(FLOOR(value * 1e6) AS BIGINT)) AS v
+        FROM events GROUP BY user_id
+    ), d AS (
+        SELECT s1.user_id AS u1, s2.user_id AS u2,
+               s1.n AS n1, s1.v AS v1, s2.n AS n2, s2.v AS v2
+        FROM s1 FULL JOIN s2 ON s1.user_id = s2.user_id
+    )
+    SELECT CAST((SELECT COUNT(*) FROM s1) AS BIGINT) AS v1_users,
+           CAST((SELECT COUNT(*) FROM s2) AS BIGINT) AS v2_users,
+           CAST(SUM(CASE WHEN u1 IS NULL THEN 1 ELSE 0 END) AS BIGINT)
+               AS n_added,
+           CAST(SUM(CASE WHEN u1 IS NOT NULL AND u2 IS NOT NULL
+                          AND (n1 <> n2 OR v1 <> v2)
+                         THEN 1 ELSE 0 END) AS BIGINT) AS n_changed,
+           CAST(SUM(CASE WHEN u2 IS NULL THEN 1 ELSE 0 END) AS BIGINT)
+               AS n_removed,
+           CAST((SELECT SUM(n) FROM s1) AS BIGINT) AS v1_events,
+           CAST((SELECT SUM(n) FROM s2) AS BIGINT) AS v2_events
+    FROM d
+    """,
+    tags=("datalayout", "time-travel", "versioning", "extension"),
+)
+def q_time_travel_read(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TIME-TRAVEL on the COMMIT LOG (round-8 query, storage migrated
+    to the log in round 12 — VERDICT r11 item 5: the log subsumes the
+    round-8 snapshot store, so one table abstraction remains): a
+    per-user activity snapshot is PUBLISHED twice — v1 from the first
+    half-month of events, v2 from the full table, each version one
+    whole-table ``replace_where([])`` commit (INSERT OVERWRITE: the
+    snapshot-per-version write pattern expressed in log commits) —
+    then both versions are read back with ``VERSION AS OF``
+    (:func:`..lakehouse.read_table`) and diffed with the engine's CDC
+    operator (:func:`..merge.snapshot_diff`).  The output folds the
+    two reads and the diff into one audit row the oracle recomputes
+    from raw events alone, so a hash match proves the log stores,
+    isolates, and replays historical states exactly.
+
+    Scale: a version commit shares no files with its predecessor (a
+    full snapshot rewrite — the right unit for dimension-sized
+    tables); reads open only the named version's live set; the diff
+    ships (key, xxhash64) pairs only."""
+    from ..merge import snapshot_diff
+
+    tag = sf_tag(sf_dir)
+    path = fresh_scratch(f"ttravel_{tag}")
+
+    e = load(spark, sf_dir, "events")
+    snap = lambda df: df.groupBy("user_id").agg(  # noqa: E731
+        F.count(F.lit(1)).cast("long").alias("n_events"),
+        F.sum(F.floor(F.col("value") * 1e6).cast("long"))
+        .cast("long")
+        .alias("value_micros"),
+    )
+
+    def publish(df) -> int:
+        t = lk.Transaction(path)
+        t.replace_where(spark, [], df)  # whole-table INSERT OVERWRITE
+        return t.commit()
+
+    v1 = publish(snap(e.filter(F.dayofmonth("ts") <= 15)))
+    v2 = publish(snap(e))
+
+    s1 = lk.read_table(spark, path, version=v1)
+    s2 = lk.read_table(spark, path, version=v2)
+    diff = snapshot_diff(s1, s2, ["user_id"]).groupBy().pivot(
+        "change_type", ["added", "changed", "removed"]
+    ).count()
+    stats1 = s1.agg(
+        F.count(F.lit(1)).cast("long").alias("v1_users"),
+        F.sum("n_events").cast("long").alias("v1_events"),
+    )
+    stats2 = s2.agg(
+        F.count(F.lit(1)).cast("long").alias("v2_users"),
+        F.sum("n_events").cast("long").alias("v2_events"),
+    )
+    return (
+        stats1.crossJoin(F.broadcast(stats2))
+        .crossJoin(F.broadcast(diff))
+        .select(
+            "v1_users",
+            "v2_users",
+            F.coalesce(F.col("added"), F.lit(0)).cast("long").alias("n_added"),
+            F.coalesce(F.col("changed"), F.lit(0)).cast("long").alias("n_changed"),
+            F.coalesce(F.col("removed"), F.lit(0)).cast("long").alias("n_removed"),
+            "v1_events",
+            "v2_events",
+        )
+    )
+
+
+@query(
+    "q_vacuum_retention",
+    oracle="""
+    SELECT CAST(3 AS BIGINT) AS versions_before,
+           CAST(2 AS BIGINT) AS versions_after,
+           CAST(1 AS BIGINT) AS n_removed,
+           CAST(1 AS BIGINT) AS orphans_removed,
+           TRUE AS removed_unreadable,
+           CAST(COUNT(DISTINCT CASE WHEN day(ts) <= 20 THEN user_id END)
+                AS BIGINT) AS oldest_kept_users,
+           CAST(COUNT(DISTINCT user_id) AS BIGINT) AS latest_users,
+           CAST(COUNT(*) AS BIGINT) AS latest_events
+    FROM events
+    """,
+    tags=("datalayout", "time-travel", "vacuum", "extension"),
+)
+def q_vacuum_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """RETENTION + ORPHAN SWEEP on the COMMIT LOG (round-8 query,
+    storage migrated to the log in round 12 — VERDICT r11 item 5; the
+    lifecycle half of ``q_time_travel_read``'s versioning): three
+    snapshot versions are published (users active through day 10 /
+    day 20 / all — whole-table ``replace_where([])`` commits), a torn
+    write is staged (a ``.stage-*`` dir with no commit referencing it
+    — exactly what a crash between staging and commit leaves), then
+    :func:`..lakehouse.expire_versions` retains versions ≥ 2 and
+    :func:`..lakehouse.vacuum_orphans` sweeps the debris.  The audit
+    row folds the protocol outcomes (version counts before/after, the
+    expired count, the orphan sweep, and that time travel below the
+    retention boundary now raises) with data facts the oracle
+    recomputes from raw events — user counts of the oldest RETAINED
+    version (day ≤ 20) and the latest.  Expired versions never show
+    up as orphans: expiry deletes exactly the files only they
+    referenced, so vacuum's only orphan here is the staged dir.
+
+    Scale: expiry is O(log) driver-side metadata + one unlink per
+    doomed file (no data job); the orphan sweep is a directory listing
+    gated by a min-age window; reads open only the named version's
+    live set."""
+
+    tag = sf_tag(sf_dir)
+    path = fresh_scratch(f"vacuum_{tag}")
+
+    e = load(spark, sf_dir, "events")
+    snap = lambda df: df.groupBy("user_id").agg(  # noqa: E731
+        F.count(F.lit(1)).cast("long").alias("n_events")
+    )
+
+    def publish(df) -> int:
+        t = lk.Transaction(path)
+        t.replace_where(spark, [], df)
+        return t.commit()
+
+    publish(snap(e.filter(F.dayofmonth("ts") <= 10)))
+    v2 = publish(snap(e.filter(F.dayofmonth("ts") <= 20)))
+    v3 = publish(snap(e))
+    versions_before = lk.latest_commit(path)
+    # torn write: files staged, the commit never landed
+    snap(e.filter(F.dayofmonth("ts") <= 5)).coalesce(1).write.mode(
+        "overwrite"
+    ).parquet(f"{path}/.stage-crashed")
+    res = lk.expire_versions(path, keep_from=v2)
+    n_removed = res["expired_through"]  # versions 1..expired_through
+    # single-writer engine posture: immediate orphan sweep is safe and
+    # opted into explicitly (the default is the 300 s age window)
+    orphans_removed = lk.vacuum_orphans(path, min_age_sec=0.0)
+    try:
+        lk.read_table(spark, path, version=1)
+        removed_unreadable = False
+    except ValueError:
+        removed_unreadable = True
+
+    oldest = lk.read_table(spark, path, version=v2).agg(
+        F.count(F.lit(1)).cast("long").alias("oldest_kept_users")
+    )
+    latest = lk.read_table(spark, path, version=v3).agg(
+        F.count(F.lit(1)).cast("long").alias("latest_users"),
+        F.sum("n_events").cast("long").alias("latest_events"),
+    )
+    return oldest.crossJoin(F.broadcast(latest)).select(
+        F.lit(versions_before).cast("long").alias("versions_before"),
+        F.lit(versions_before - n_removed).cast("long").alias(
+            "versions_after"
+        ),
+        F.lit(n_removed).cast("long").alias("n_removed"),
+        F.lit(orphans_removed).cast("long").alias("orphans_removed"),
+        F.lit(removed_unreadable).alias("removed_unreadable"),
+        "oldest_kept_users",
+        "latest_users",
+        "latest_events",
+    )
+
+
+@query(
+    "q_merge_on_read_deletes",
+    oracle="""
+    SELECT event_type,
+           COUNT(*) AS n_events,
+           CAST(SUM(CAST(ROUND(value * 1e6, 0) AS BIGINT)) AS BIGINT)
+               AS value_micros,
+           TRUE AS dv_exact,
+           TRUE AS purge_matches
+    FROM events
+    WHERE NOT (day(ts) BETWEEN 1 AND 5 AND event_type = 'click')
+      AND NOT (value >= 400)
+    GROUP BY event_type
+    ORDER BY event_type
+    """,
+    tags=("merge-on-read", "deletion-vectors", "lakehouse", "extension"),
+)
+def q_merge_on_read_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """MERGE-ON-READ deletes via position-based DELETION VECTORS — the
+    modern lakehouse delete model (Delta DVs / Iceberg v2 position
+    deletes) next to the engine's copy-on-write paths
+    (``q_tombstone_forget``, ``q_streaming_cdc_delete``): two DELETE
+    WHERE batches (day 1–5 clicks, then value ≥ 400 — the sets
+    OVERLAP, exercising the already-deleted exclusion) each append a
+    tiny (file_path, row_index) sidecar without touching a data file;
+    the logical table subtracts the accumulated vectors with one
+    broadcast anti join; a PURGE rewrite folds them into a fresh
+    generation (:mod:`..mor`).
+
+    In-query audits the oracle pins TRUE: ``dv_exact`` — the sidecars
+    hold exactly one position per distinct deleted row (overlap not
+    double-counted, nothing missed); ``purge_matches`` — the purged
+    generation is row-for-row the logical view (count + exact micros).
+    The returned per-type aggregates read from the PURGED generation,
+    so the whole DV → read → purge chain must agree with the oracle's
+    plain predicate recompute."""
+    from .. import mor
+
+    tag = sf_tag(sf_dir)
+    base = str(SCRATCH / f"mor_base_{tag}")
+    gen2 = str(SCRATCH / f"mor_gen2_{tag}")
+    shutil.rmtree(base, ignore_errors=True)
+    e = load(spark, sf_dir, "events").withColumn("day", F.dayofmonth("ts"))
+    e.repartition(8).write.parquet(base)
+
+    p1 = (F.col("day").between(1, 5)) & (F.col("event_type") == "click")
+    p2 = F.col("value") >= 400
+    n1 = mor.write_deletion_vector(spark, base, p1)
+    n2 = mor.write_deletion_vector(spark, base, p2)
+
+    # the two PRE-purge audits share one union-tagged job (guide §7.3 — per-action driver planning cost):
+    # the expected-deletes count over the immutable base files and the
+    # logical (DV-subtracted) baseline; the post-purge summary is a
+    # separate action by necessity (it reads gen2, which exists only
+    # after purge_deletes).  Per-branch values identical to the former
+    # three sequential jobs.
+    logical = mor.read_with_deletes(spark, base)
+    vm = F.round(F.col("value") * 1e6, 0).cast("long")
+    rows = (
+        spark.read.parquet(base)
+        .filter(p1 | p2)
+        .select(F.lit(0).alias("s"), vm.alias("m"))
+        .unionByName(logical.select(F.lit(1).alias("s"), vm.alias("m")))
+        .groupBy("s")
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum("m").cast("long").alias("vm"),
+        )
+        .collect()
+    )
+    g = {r.s: (r.n, r.vm) for r in rows}
+    dv_exact = (n1 + n2) == g.get(0, (0, None))[0]
+    before = g.get(1, (0, None))
+    n_purged = mor.purge_deletes(spark, base, gen2)
+    after = (
+        spark.read.parquet(gen2)
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum(vm).cast("long").alias("vm"),
+        )
+        .collect()[0]
+    )
+    purge_matches = (
+        before[0] == after.n == n_purged and before[1] == after.vm
+    )
+    return (
+        spark.read.parquet(gen2)
+        .groupBy("event_type")
+        .agg(
+            F.count(F.lit(1)).alias("n_events"),
+            F.sum(F.round(F.col("value") * 1e6, 0).cast("long"))
+            .cast("long")
+            .alias("value_micros"),
+        )
+        .withColumn("dv_exact", F.lit(bool(dv_exact)))
+        .withColumn("purge_matches", F.lit(bool(purge_matches)))
+        .orderBy("event_type")
     )

@@ -14,6 +14,9 @@ live feed, complementing the threshold z-score alerting already in
   hour-of-day seasonal-mean forecast (trailing 7 same-hour days):
   the backtest loop behind "is our volume forecast still calibrated".
 
+SLO burn-rate alerting and foreign-key integrity audits complete the
+set.
+
 No reference counterpart; extends SURVEY.md §2.13's governance layer
 on the events feed.
 """
@@ -755,3 +758,193 @@ def q_holt_winters_smoothing(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("day")
     )
+
+
+# ---------------------------------------------------------------------------
+# 18. Multi-window SLO burn rate
+# ---------------------------------------------------------------------------
+@query(
+    "q_slo_burn_rate",
+    oracle="""
+    WITH hourly AS (
+        SELECT CAST(date_trunc('hour', ts) AS TIMESTAMP) AS hour,
+               CAST(COUNT(*) AS BIGINT) AS n_total,
+               CAST(SUM(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END)
+                    AS BIGINT) AS n_err
+        FROM events GROUP BY hour
+    ), windowed AS (
+        SELECT hour, n_total, n_err,
+               SUM(n_err) OVER (ORDER BY hour
+                   ROWS BETWEEN 5 PRECEDING AND CURRENT ROW) AS err_6h,
+               SUM(n_total) OVER (ORDER BY hour
+                   ROWS BETWEEN 5 PRECEDING AND CURRENT ROW) AS tot_6h
+        FROM hourly
+    )
+    SELECT hour,
+           ROUND(CAST(n_err AS DOUBLE) / n_total / 0.2, 6) AS burn_1h,
+           ROUND(CAST(err_6h AS DOUBLE) / tot_6h / 0.2, 6) AS burn_6h,
+           (CAST(n_err AS DOUBLE) / n_total / 0.2 > 1.0
+            AND CAST(err_6h AS DOUBLE) / tot_6h / 0.2 > 1.0) AS page_alert
+    FROM windowed
+    ORDER BY hour
+    """,
+    tags=("monitoring", "slo", "sre", "extension"),
+)
+def q_slo_burn_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Multi-window SLO burn rate — the SRE alerting arithmetic (the
+    Google SRE-workbook pattern): with a 20% error-budget SLO, the
+    burn rate is observed-error-rate / budget over a short (1 h) AND a
+    long (trailing 6 h) window, and the page fires only when BOTH
+    exceed 1× — the short window gives fast detection, the long one
+    suppresses blips.
+
+    Determinism: hourly error/total counts are exact integers; both
+    burn ratios are single double divisions, 6-dp rounded; the AND of
+    two >1.0 comparisons is far from representational noise at this
+    budget.
+
+    Scale: the hourly rollup is the one corpus-sized pass
+    (partial-agg); burn windows run on the ~720-row hour frame per
+    month — this is exactly how a 100 TB event firehose serves SLO
+    dashboards, never scanning raw events per evaluation."""
+
+    hourly = (
+        load(spark, sf_dir, "events")
+        .groupBy(F.date_trunc("hour", F.col("ts")).alias("hour"))
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_total"),
+            F.sum(F.when(F.col("event_type") == "error", 1).otherwise(0))
+            .cast("long")
+            .alias("n_err"),
+        )
+    )
+    w6 = Window.orderBy("hour").rowsBetween(-5, 0)
+    windowed = hourly.select(
+        "hour",
+        "n_total",
+        "n_err",
+        F.sum("n_err").over(w6).alias("err_6h"),
+        F.sum("n_total").over(w6).alias("tot_6h"),
+    )
+    burn1 = F.col("n_err").cast("double") / F.col("n_total") / 0.2
+    burn6 = F.col("err_6h").cast("double") / F.col("tot_6h") / 0.2
+    return windowed.select(
+        "hour",
+        F.round(burn1, 6).alias("burn_1h"),
+        F.round(burn6, 6).alias("burn_6h"),
+        ((burn1 > 1.0) & (burn6 > 1.0)).alias("page_alert"),
+    ).orderBy("hour")
+
+
+@query(
+    "q_fk_integrity_audit",
+    oracle="""
+    SELECT 'customer->nation' AS fk_edge,
+           CAST((SELECT COUNT(*) FROM customer) AS BIGINT) AS n_child,
+           CAST((SELECT COUNT(*) FROM customer c
+                 WHERE NOT EXISTS (SELECT 1 FROM nation n
+                                   WHERE n.n_nationkey = c.c_nationkey))
+                AS BIGINT) AS n_orphans,
+           CAST((SELECT COUNT(DISTINCT c_nationkey) FROM customer)
+                AS BIGINT) AS n_parents_hit,
+           CAST((SELECT MAX(cnt) FROM (SELECT COUNT(*) AS cnt
+                 FROM customer GROUP BY c_nationkey)) AS BIGINT)
+               AS max_fanout
+    UNION ALL
+    SELECT 'lineitem->orders',
+           CAST((SELECT COUNT(*) FROM lineitem) AS BIGINT),
+           CAST((SELECT COUNT(*) FROM lineitem l
+                 WHERE NOT EXISTS (SELECT 1 FROM orders o
+                                   WHERE o.o_orderkey = l.l_orderkey))
+                AS BIGINT),
+           CAST((SELECT COUNT(DISTINCT l_orderkey) FROM lineitem)
+                AS BIGINT),
+           CAST((SELECT MAX(cnt) FROM (SELECT COUNT(*) AS cnt
+                 FROM lineitem GROUP BY l_orderkey)) AS BIGINT)
+    UNION ALL
+    SELECT 'lineitem->part',
+           CAST((SELECT COUNT(*) FROM lineitem) AS BIGINT),
+           CAST((SELECT COUNT(*) FROM lineitem l
+                 WHERE NOT EXISTS (SELECT 1 FROM part p
+                                   WHERE p.p_partkey = l.l_partkey))
+                AS BIGINT),
+           CAST((SELECT COUNT(DISTINCT l_partkey) FROM lineitem)
+                AS BIGINT),
+           CAST((SELECT MAX(cnt) FROM (SELECT COUNT(*) AS cnt
+                 FROM lineitem GROUP BY l_partkey)) AS BIGINT)
+    UNION ALL
+    SELECT 'orders->customer',
+           CAST((SELECT COUNT(*) FROM orders) AS BIGINT),
+           CAST((SELECT COUNT(*) FROM orders o
+                 WHERE NOT EXISTS (SELECT 1 FROM customer c
+                                   WHERE c.c_custkey = o.o_custkey))
+                AS BIGINT),
+           CAST((SELECT COUNT(DISTINCT o_custkey) FROM orders) AS BIGINT),
+           CAST((SELECT MAX(cnt) FROM (SELECT COUNT(*) AS cnt
+                 FROM orders GROUP BY o_custkey)) AS BIGINT)
+    UNION ALL
+    SELECT 'supplier->nation',
+           CAST((SELECT COUNT(*) FROM supplier) AS BIGINT),
+           CAST((SELECT COUNT(*) FROM supplier s
+                 WHERE NOT EXISTS (SELECT 1 FROM nation n
+                                   WHERE n.n_nationkey = s.s_nationkey))
+                AS BIGINT),
+           CAST((SELECT COUNT(DISTINCT s_nationkey) FROM supplier)
+                AS BIGINT),
+           CAST((SELECT MAX(cnt) FROM (SELECT COUNT(*) AS cnt
+                 FROM supplier GROUP BY s_nationkey)) AS BIGINT)
+    ORDER BY fk_edge
+    """,
+    tags=("quality", "referential-integrity", "extension"),
+)
+def q_fk_integrity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """REFERENTIAL-INTEGRITY audit over the TPC-H-lite star (round-8 —
+    the relationship half of the DQ surface: the expectations suite
+    checks columns, this checks EDGES): for five FK relationships,
+    the child row count, the orphan count (children whose parent key
+    does not exist — LEFT ANTI against the parent's key set), the
+    number of distinct parents actually referenced, and the maximum
+    fan-out.  Orphans are expected to be zero; the audit PROVES it
+    per edge rather than assuming it, and the fan-out column is the
+    join-explosion early warning a planner wants before running the
+    star join.
+
+    Scale: each edge is one anti-join on the FK (parent side reduced
+    to its key column — broadcastable for dims) plus one key-grouped
+    count; edges are independent and union at the end."""
+    edges = [
+        ("customer->nation", "customer", "c_nationkey", "nation", "n_nationkey"),
+        ("lineitem->orders", "lineitem", "l_orderkey", "orders", "o_orderkey"),
+        ("lineitem->part", "lineitem", "l_partkey", "part", "p_partkey"),
+        ("orders->customer", "orders", "o_custkey", "customer", "c_custkey"),
+        ("supplier->nation", "supplier", "s_nationkey", "nation", "n_nationkey"),
+    ]
+    out = None
+    for name, child, fk, parent, pk in edges:
+        cdf = load(spark, sf_dir, child).select(F.col(fk).alias("fk"))
+        pdf = load(spark, sf_dir, parent).select(F.col(pk).alias("pk")).distinct()
+        orphans = cdf.join(
+            F.broadcast(pdf) if parent in ("nation", "part", "customer") else pdf,
+            cdf["fk"] == pdf["pk"],
+            "left_anti",
+        ).agg(F.count(F.lit(1)).cast("long").alias("n_orphans"))
+        fan = cdf.groupBy("fk").agg(F.count(F.lit(1)).alias("cnt"))
+        stats = cdf.agg(
+            F.count(F.lit(1)).cast("long").alias("n_child")
+        ).crossJoin(
+            F.broadcast(
+                fan.agg(
+                    F.count(F.lit(1)).cast("long").alias("n_parents_hit"),
+                    F.max("cnt").cast("long").alias("max_fanout"),
+                )
+            )
+        )
+        row = stats.crossJoin(F.broadcast(orphans)).select(
+            F.lit(name).alias("fk_edge"),
+            "n_child",
+            "n_orphans",
+            "n_parents_hit",
+            "max_fanout",
+        )
+        out = row if out is None else out.unionByName(row)
+    return out.orderBy("fk_edge")

@@ -12,6 +12,7 @@ columns by name before hashing.
 
 from __future__ import annotations
 
+from collections import Counter
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
@@ -57,3 +58,25 @@ def query(
         return fn
 
     return deco
+
+
+def pin_order(names: list[str]) -> None:
+    """Re-sort :data:`REGISTRY` in place into ``names`` order.
+
+    Registration order is part of the public contract (the driver and the
+    bench iterate the registry), so it is pinned by an explicit list rather
+    than by module import order.  Raises, naming every offender, when the
+    registered set and ``names`` differ."""
+    listed = set(names)
+    missing = [n for n in names if n not in REGISTRY]
+    extra = [n for n in REGISTRY if n not in listed]
+    dup = sorted(n for n, k in Counter(names).items() if k > 1)
+    if missing or extra or dup:
+        raise ValueError(
+            "registration order list differs from the registered queries: "
+            f"listed but not registered {missing}, registered but not listed "
+            f"{extra}, listed twice {dup}"
+        )
+    specs = dict(REGISTRY)
+    REGISTRY.clear()
+    REGISTRY.update((n, specs[n]) for n in names)

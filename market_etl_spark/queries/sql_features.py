@@ -1,7 +1,8 @@
 """Modern-SQL engine features, each as a registered oracle-checked
 query: recursive CTEs, the VARIANT semi-structured type, correlated
 scalar subqueries (Catalyst decorrelation), percent_rank/cume_dist
-windows, and schema-evolution parquet reads.
+windows, schema-evolution parquet reads, pipe syntax, SQL scripting
+and SQL UDFs.
 
 The reference exposes its query surface as Athena SQL
 (sql/athena_sample_queries.sql); these are the engine capabilities a
@@ -324,4 +325,179 @@ def q_array_higher_order(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.sum("rng"), 6).alias("sum_range"),
         )
         .orderBy("label")
+    )
+
+
+@query(
+    "q_pipe_syntax",
+    oracle="""
+    SELECT event_type, CAST(ts AS DATE) AS d,
+           CAST(COUNT(*) AS BIGINT) AS n_events,
+           ROUND(SUM(value), 6) AS total_value,
+           CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_users
+    FROM events
+    WHERE value > 0
+    GROUP BY event_type, CAST(ts AS DATE)
+    HAVING COUNT(*) >= 5
+    ORDER BY event_type, d
+    """,
+    tags=("sql-surface", "pipe-syntax", "extension"),
+)
+def q_pipe_syntax(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Spark 4 SQL PIPE syntax (round-8 — the ``|>`` operator
+    chain added in Spark 4.0): the daily event rollup expressed as
+    ``FROM … |> WHERE … |> EXTEND … |> AGGREGATE … GROUP BY …
+    |> WHERE … |> ORDER BY``, with the post-aggregate ``|> WHERE``
+    standing in for HAVING.  The oracle is the classic ANSI rendering
+    of the same query, so the hash match pins that the pipe chain
+    lowers to exactly the relational plan the keyword form produces —
+    pipe syntax is surface, Catalyst sees one Aggregate + Filter.
+
+    Scale: identical plan to the ANSI form — partial aggregation,
+    pushed filter, no extra exchange for the pipe stages."""
+    tag = sf_tag(sf_dir)
+    view = f"events_pipe_{tag}"
+    load(spark, sf_dir, "events").createOrReplaceTempView(view)
+    return spark.sql(
+        f"""
+        FROM {view}
+        |> WHERE value > 0
+        |> EXTEND CAST(ts AS DATE) AS d
+        |> AGGREGATE CAST(COUNT(*) AS BIGINT) AS n_events,
+                     ROUND(SUM(value), 6) AS total_value,
+                     CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_users
+           GROUP BY event_type, d
+        |> WHERE n_events >= 5
+        |> ORDER BY event_type, d
+        """
+    )
+
+
+@query(
+    "q_sql_scripting",
+    oracle="""
+    WITH i1 AS (
+        SELECT ROUND(AVG(value) - 2 * STDDEV_SAMP(value), 6) AS lo,
+               ROUND(AVG(value) + 2 * STDDEV_SAMP(value), 6) AS hi
+        FROM events
+    ), i2 AS (
+        SELECT ROUND(AVG(e.value) - 2 * STDDEV_SAMP(e.value), 6) AS lo,
+               ROUND(AVG(e.value) + 2 * STDDEV_SAMP(e.value), 6) AS hi
+        FROM events e, i1 WHERE e.value BETWEEN i1.lo AND i1.hi
+    ), i3 AS (
+        SELECT ROUND(AVG(e.value) - 2 * STDDEV_SAMP(e.value), 6) AS lo,
+               ROUND(AVG(e.value) + 2 * STDDEV_SAMP(e.value), 6) AS hi
+        FROM events e, i2 WHERE e.value BETWEEN i2.lo AND i2.hi
+    ), k AS (
+        SELECT CAST(COUNT(*) AS BIGINT) AS n_kept,
+               ROUND(AVG(e.value), 6) AS clipped_mean
+        FROM events e, i3 WHERE e.value BETWEEN i3.lo AND i3.hi
+    )
+    SELECT CAST(3 AS BIGINT) AS n_iter, i3.lo, i3.hi, k.n_kept,
+           k.clipped_mean
+    FROM i3, k
+    """,
+    tags=("sql-surface", "scripting", "robust-stats", "extension"),
+)
+def q_sql_scripting(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Spark 4 SQL SCRIPTING (round-8 — ``BEGIN…END`` procedural
+    blocks with DECLARE / multi-variable SET / WHILE, the second new
+    Spark 4 SQL surface next to pipe syntax): iterative 2-sigma
+    clipping of the value column — three WHILE passes each tighten
+    [lo, hi] to mean ± 2·stddev of the rows inside the previous
+    bounds, the textbook robust-mean loop that plain SQL cannot
+    express without unrolling.  The oracle IS that unrolling (three
+    chained CTEs), so the hash match pins the script's loop-carried
+    variable semantics to the relational fixpoint.  Bounds are
+    rounded to 6 dp at every iteration boundary on BOTH sides, so
+    each pass filters on bit-identical thresholds.
+
+    Scale: each iteration is one partial-aggregated scan (2 running
+    moments), driver-side state is two doubles — the loop shape of
+    any convergent refinement at 100 TB."""
+    tag = sf_tag(sf_dir)
+    view = f"events_script_{tag}"
+    load(spark, sf_dir, "events").createOrReplaceTempView(view)
+    prev = spark.conf.get("spark.sql.scripting.enabled", "false")
+    spark.conf.set("spark.sql.scripting.enabled", "true")
+    try:
+        return spark.sql(
+        f"""
+        BEGIN
+          DECLARE lo DOUBLE DEFAULT -1e308;
+          DECLARE hi DOUBLE DEFAULT 1e308;
+          DECLARE it INT DEFAULT 0;
+          WHILE it < 3 DO
+            SET (lo, hi) = (
+              SELECT ROUND(AVG(value) - 2 * STDDEV_SAMP(value), 6),
+                     ROUND(AVG(value) + 2 * STDDEV_SAMP(value), 6)
+              FROM {view} WHERE value BETWEEN lo AND hi);
+            SET it = it + 1;
+          END WHILE;
+          SELECT CAST(it AS BIGINT) AS n_iter, lo, hi,
+                 (SELECT CAST(COUNT(*) AS BIGINT) FROM {view}
+                  WHERE value BETWEEN lo AND hi) AS n_kept,
+                 (SELECT ROUND(AVG(value), 6) FROM {view}
+                  WHERE value BETWEEN lo AND hi) AS clipped_mean;
+        END
+        """
+        )
+    finally:
+        spark.conf.set("spark.sql.scripting.enabled", prev)
+
+
+@query(
+    "q_sql_udf",
+    oracle="""
+    WITH hm(half, d_lo, d_hi) AS (VALUES (1, 1, 15), (2, 16, 31))
+    SELECT half,
+           CASE WHEN value >= 200 THEN 'high'
+                WHEN value >= 50 THEN 'mid' ELSE 'low' END AS bucket,
+           COUNT(*) AS n_events,
+           CAST(SUM(CAST(ROUND(value * 1e6, 0) AS BIGINT)) AS BIGINT)
+               AS value_micros
+    FROM events JOIN hm ON day(ts) BETWEEN d_lo AND d_hi
+    GROUP BY 1, 2
+    ORDER BY half, bucket
+    """,
+    tags=("sql-surface", "sql-udf", "tvf", "extension"),
+)
+def q_sql_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Spark 4 SQL-DEFINED FUNCTIONS (SPARK-46057) — the last
+    SQL-surface feature next to ``q_pipe_syntax`` and
+    ``q_sql_scripting``: a scalar ``CREATE FUNCTION … RETURN <expr>``
+    (a value-tier bucketer) and a TABLE-VALUED ``RETURNS TABLE``
+    function (a half-month calendar) declared in SQL and used in one
+    query.
+
+    The point for scale: SQL UDFs are MACRO-INLINED by the analyzer —
+    the bucket CASE lands inside the scan's codegen stage and the TVF
+    becomes a 2-row LocalRelation joined like any dimension, so unlike
+    a Python UDF there is no serialization boundary and Catalyst
+    optimizes straight through (the oracle IS the inlined form, which
+    is exactly what the plan executes)."""
+
+    register_all(spark, sf_dir)
+    spark.sql(
+        "CREATE OR REPLACE TEMPORARY FUNCTION value_bucket(v DOUBLE) "
+        "RETURNS STRING RETURN CASE WHEN v >= 200 THEN 'high' "
+        "WHEN v >= 50 THEN 'mid' ELSE 'low' END"
+    )
+    spark.sql(
+        "CREATE OR REPLACE TEMPORARY FUNCTION half_months() "
+        "RETURNS TABLE(half INT, d_lo INT, d_hi INT) "
+        "RETURN SELECT * FROM VALUES (1, 1, 15), (2, 16, 31)"
+    )
+    return spark.sql(
+        """
+        SELECT half,
+               value_bucket(value) AS bucket,
+               COUNT(*) AS n_events,
+               CAST(SUM(CAST(ROUND(value * 1e6, 0) AS BIGINT)) AS BIGINT)
+                   AS value_micros
+        FROM events JOIN half_months()
+          ON dayofmonth(ts) BETWEEN d_lo AND d_hi
+        GROUP BY half, value_bucket(value)
+        ORDER BY half, bucket
+        """
     )

@@ -31,7 +31,7 @@ _MINUTE_SERIES_SQL = """
 """
 
 
-def _minute_series(spark: SparkSession, sf_dir: str) -> DataFrame:
+def minute_series(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load(spark, sf_dir, "events").withColumn(
         "qty", ((F.col("event_id") % 7) + 1).cast("double")
     )
@@ -66,7 +66,7 @@ def q_window_lag_returns(spark: SparkSession, sf_dir: str) -> DataFrame:
     (event_type, minute-ordered) window — the delta computation the
     reference's correlation query (Q6) stops short of."""
     w = Window.partitionBy("event_type").orderBy("minute")
-    ms = _minute_series(spark, sf_dir)
+    ms = minute_series(spark, sf_dir)
     prev = F.lag("vwap_value").over(w)
     return ms.select(
         "event_type",
@@ -132,7 +132,7 @@ def q_window_rolling_vwap(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("minute")
         .rowsBetween(-4, Window.currentRow)
     )
-    ms = _minute_series(spark, sf_dir)
+    ms = minute_series(spark, sf_dir)
     v6 = F.round(F.col("vwap_value") * 1000000).cast("long")
     voll = F.col("vol").cast("long")
     framed = ms.select(
@@ -427,7 +427,7 @@ def q_window_open_close_range(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("minute")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    ms = _minute_series(spark, sf_dir)
+    ms = minute_series(spark, sf_dir)
     return ms.select(
         "event_type",
         "minute",

@@ -947,6 +947,38 @@ def run_to_memory_append_with_metrics(
     }
 
 
+def _drain_foreach_batch(
+    stream: DataFrame,
+    fn,
+    shuffle_partitions: int,
+    checkpoint: str | None = None,
+) -> None:
+    """Drain ``stream`` through ``foreachBatch(fn)`` with
+    ``trigger(availableNow)`` and wait for it to finish.
+
+    ``spark.sql.shuffle.partitions`` is set to ``shuffle_partitions``
+    while the query starts and runs (the query's session copies it at
+    start) and restored afterwards.  Without ``checkpoint`` the drain
+    uses a single-use uuid-named checkpoint and discards it; a
+    caller-pinned checkpoint survives the call."""
+    ckpt = checkpoint or SCRATCH / "checkpoints" / f"fb_{uuid.uuid4().hex[:8]}"
+    spark = stream.sparkSession
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        (
+            stream.writeStream.foreachBatch(fn)
+            .option("checkpointLocation", str(ckpt))
+            .trigger(availableNow=True)
+            .start()
+            .awaitTermination()
+        )
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+        if checkpoint is None:
+            _discard_checkpoint(ckpt)
+
+
 def run_cdc_apply(
     stream: DataFrame,
     path: str,
@@ -995,21 +1027,7 @@ def run_cdc_apply(
         if n:
             applied.append(batch_id)
 
-    ckpt = SCRATCH / "checkpoints" / f"cdc_{uuid.uuid4().hex[:8]}"
-    spark = stream.sparkSession
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        q = (
-            stream.writeStream.foreachBatch(apply)
-            .option("checkpointLocation", str(ckpt))
-            .trigger(availableNow=True)
-            .start()
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    q.awaitTermination()
-    _discard_checkpoint(ckpt)
+    _drain_foreach_batch(stream, apply, shuffle_partitions=8)
     return len(applied)
 
 
@@ -1059,22 +1077,10 @@ def run_cdc_apply_resumable(
                 f"injected crash after batch {batch_id} side effect"
             )
 
-    spark = stream.sparkSession
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-        q = (
-            stream.writeStream.foreachBatch(apply)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
     from pyspark.errors import StreamingQueryException
 
     try:
-        q.awaitTermination()
+        _drain_foreach_batch(stream, apply, shuffle_partitions=8, checkpoint=checkpoint)
     except StreamingQueryException:
         if crash_after_batch is None:
             raise  # a real failure, not the injected one

@@ -10,7 +10,7 @@ from __future__ import annotations
 
 import re
 
-from market_etl_spark.queries.round9 import run_skewed_join_drill
+from market_etl_spark.queries.relational_ext import run_skewed_join_drill
 
 SF = "/root/testdata/sf0.001"
 

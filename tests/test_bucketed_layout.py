@@ -9,7 +9,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from conftest import SF_SMOKE
-from market_etl_spark.queries.round8f import _N_BUCKETS, ensure_bucketed_star
+from market_etl_spark.queries.etl_pipeline import _N_BUCKETS, ensure_bucketed_star
 
 
 def _join_plan(spark):

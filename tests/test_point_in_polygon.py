@@ -4,7 +4,7 @@ re-entry — pinned against hand-computed truth (VERDICT r8 item 5)."""
 
 from __future__ import annotations
 
-from market_etl_spark.queries.round9 import _POLY_EDGES, pip_join
+from market_etl_spark.queries.relational_ext import _POLY_EDGES, pip_join
 
 # the rectilinear L (poly 2): (500,500)(900,500)(900,700)(700,700)
 #                             (700,900)(500,900)
@@ -84,7 +84,7 @@ def test_matches_brute_force_shapely_free(spark):
                     n += 1
         return n % 2 == 1
 
-    from market_etl_spark.queries.round9 import _POLYGONS
+    from market_etl_spark.queries.relational_ext import _POLYGONS
 
     pts = [
         (i * 21 + j, i * 50, j * 50) for i in range(21) for j in range(21)

@@ -13,13 +13,14 @@ import shutil
 from pyspark.sql import functions as F
 
 from conftest import SF_SMOKE
-from market_etl_spark.queries.round8f import (
+from market_etl_spark.queries.llm_corpus import _WIN_W
+from market_etl_spark.queries.stats_sketches import (
+    _ACK_A,
+    _ACK_B,
     _KF_ROWS,
     _KF_TMAX,
-    _WIN_W,
     _kalman_weights,
 )
-from market_etl_spark.queries.round8e import _ACK_A, _ACK_B
 
 
 def _acklam(p: float) -> float:
@@ -68,7 +69,7 @@ def test_winnowing_selects_at_least_one_per_window(spark):
     """The winnowing guarantee: every window of _WIN_W consecutive
     k-grams contributes a selected fingerprint position inside it, so
     any match of length >= w + k - 1 shares a fingerprint."""
-    from market_etl_spark.queries.round8f import llm_winnowing_fingerprint  # noqa: F401
+    from market_etl_spark.queries.llm_corpus import llm_winnowing_fingerprint  # noqa: F401
     from market_etl_spark.tables import load
     from pyspark.sql import Window
 

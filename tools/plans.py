@@ -473,7 +473,7 @@ def main() -> None:
     # EAGERLY and return a LocalTableScan audit row, so the
     # interesting plan is the drill helper's EXECUTED adaptive plan,
     # not the registered frame's. Captured post-execution.
-    from market_etl_spark.queries.round9 import (
+    from market_etl_spark.queries.relational_ext import (
         run_bloom_filter_drill,
         run_skewed_join_drill,
     )
