@@ -1,6 +1,6 @@
 """Shared audit helpers for the protocol drills.
 
-Event-log attribution (tools/joblog.py, guide §1/§7) shows drill
+Per-query job attribution (tools/measure.py, guide §1/§7) shows drill
 wall-clock is dominated by the NUMBER of Spark actions — each pays
 analyze/optimize/AQE planning plus job-scheduling fixed cost, with a
 driver-side gap between jobs that often exceeds the jobs themselves —

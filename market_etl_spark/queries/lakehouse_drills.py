@@ -3024,7 +3024,7 @@ def q_lakehouse_datasource_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     # action (same per-side (count, bit_xor(xxhash64(k, seg, m)))
     # multiset digest as the former six .agg().collect() jobs — the
     # drill's wall was dominated by per-action planning fixed cost,
-    # not data; tools/joblog.py: 33 jobs, 6.1 s driver gap)
+    # not data; the event-log census then: 33 jobs, 6.1 s driver gap)
     from ._audit import digest_pairs_equal, hashed
 
     def h(df):

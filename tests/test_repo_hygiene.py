@@ -6,12 +6,15 @@
 - Every id in ``tests/slow_manifest.txt`` names a collected test: a
   renamed test would otherwise drop out of the slow tier silently and
   run in the default one, whose time limit it was moved out of.
+- No tool names a fixed checkout path: run from a second checkout, it
+  would import, check or measure the first one instead.
 """
 
 from __future__ import annotations
 
 import ast
 import pathlib
+import re
 import subprocess
 import sys
 
@@ -41,3 +44,13 @@ def test_slow_manifest_ids_are_collected():
     manifest = (_REPO / "tests" / "slow_manifest.txt").read_text().split()
     missing = [nodeid for nodeid in manifest if nodeid not in collected]
     assert not missing, missing
+
+
+def test_tools_name_no_fixed_checkout_path():
+    fixed = re.compile(r"""sys\.path\.insert\(0, ["']/|^cd /""", re.M)
+    found = [
+        str(path.relative_to(_REPO))
+        for path in sorted((_REPO / "tools").iterdir())
+        if path.is_file() and (str(_REPO) in path.read_text() or fixed.search(path.read_text()))
+    ]
+    assert not found, found

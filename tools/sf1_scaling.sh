@@ -16,11 +16,11 @@ q_lakehouse_datasource_stream q_lakehouse_checkpoint_planning \
 q_lakehouse_convert_partitioned q_lakehouse_parquet_checkpoint \
 llm_stream_ingest_dedup q_lakehouse_sql_ddl q_lakehouse_change_feed \
 q_lakehouse_sql_dml q_bootstrap_ci_poisson"
-cd /root/repo
+cd "$(dirname "$0")/.."
 for i in 1 2; do
   for c in 32 8; do
     echo "=== alternation $i cores $c $(date -u +%H:%M:%S)"
-    SPARK_GRAFT_CPUS=$c python tools/ab_bench.py --sf .scratch/sf1 \
+    SPARK_GRAFT_CPUS=$c python tools/measure.py --sf .scratch/sf1 \
         --passes 2 $NAMES 2>/dev/null | tail -1 \
         > bench_history/sf1_c${c}_$i.json
   done
