@@ -129,19 +129,6 @@ atomic create-if-absent rename, so the slot claim needs a
 putIfAbsent LogStore / commit coordinator (the known Delta-on-S3
 deployment constraint); the protocol above it is unchanged.
 
-Relation to :func:`sinks.write_versioned` (the other "table with
-versions" in this package): the versioned SNAPSHOT store is the
-single-writer, whole-snapshot-per-version layer — each version is a
-complete immutable copy, cheap to reason about, right for
-dimension-sized tables and CDC stores where a full rewrite per
-version is the natural unit.  THIS module is the delta-log layer:
-versions are action diffs, files are shared across versions, and
-concurrent writers serialize optimistically — right for fact-sized
-tables where rewriting the table per version is unthinkable.  Both
-expose time travel, change feeds (:func:`merge.read_changes` over
-snapshots; :func:`read_changes` here over the log) and vacuum; a
-user picks by write pattern, not by feature.
-
 Reference parity note: the reference pipeline (jobs/*/*.py) is
 append-only with no concurrent-writer story; this is the extension
 VERDICT r9 ranked as the top residual real-user gap.
@@ -1173,7 +1160,7 @@ def read_changes(
 ) -> DataFrame:
     """CHANGE DATA FEED derived from the COMMIT LOG itself — Delta's
     ``readChangeFeed`` over the transactional table (VERDICT r10 item
-    1; the snapshot-store sibling is :func:`merge.read_changes`): for
+    1; the keyed snapshot-diff sibling is :func:`merge.read_changes`): for
     every commit v in (``v_from``, ``v_to``] emit full-row change
     records tagged ``_change_type`` ∈ {``insert``, ``delete``,
     ``update_preimage``, ``update_postimage``} and
@@ -3615,12 +3602,10 @@ class Transaction:
         tail outgrows the configured interval (Delta checkpoints every
         10 commits) — OPT-IN per table: engages only after a first
         explicit ``write_parquet_checkpoint`` bootstrap, so plain
-        tables never pay a metadata job per commit.  With an active
-        session the advance runs as one Spark job; WITHOUT one (the
-        registered format's writer commit hook executes in Spark's
-        session-less planning process) it runs the pyarrow twin —
-        columnar base, delta-sized tail, same atomic layout — under
-        the default interval (no conf is readable there).  A failed
+        tables never pay a metadata job per commit.  The advance needs
+        no session (the registered format's writer commit hook runs in
+        Spark's session-less planning process); without a session the
+        interval is the default (no conf is readable there).  A failed
         advance only WARNS: the commit already landed, and the
         checkpoint is derived state any later advance rebuilds."""
         from . import lakehouse_checkpoint as _ckpt
@@ -3639,10 +3624,7 @@ class Transaction:
                     )
                 )
             if interval > 0 and v - v0 >= interval:
-                if spark is not None:
-                    _ckpt.advance_parquet_checkpoint(spark, self.path, v)
-                else:
-                    _ckpt.advance_parquet_checkpoint_arrow(self.path, v)
+                _ckpt.advance_parquet_checkpoint(self.path, v)
         except Exception as e:  # derived plane: never fail the commit
             import warnings
 
@@ -4099,10 +4081,9 @@ def vacuum_orphans(
     dirs — crash debris (a writer that staged but never committed).
     Files a later commit REMOVED are still referenced (time travel to
     the older version reads them) and are retained here; expiring old
-    versions is a retention policy, not an orphan sweep.  Same
-    age-gate contract as :func:`sinks.vacuum_versions`: a LIVE
-    writer's staged-but-uncommitted files look identical to debris,
-    so only files older than ``min_age_sec`` go (pass 0 only under a
+    versions is a retention policy, not an orphan sweep.  Age gate: a
+    LIVE writer's staged-but-uncommitted files look identical to
+    debris, so only files older than ``min_age_sec`` go (pass 0 only under a
     known-single-writer window).  ``dry_run`` counts what WOULD go
     without touching anything (Delta's ``VACUUM ... DRY RUN``).
     Returns files removed (or would-be-removed)."""

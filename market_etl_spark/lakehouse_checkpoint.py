@@ -12,8 +12,8 @@ kept strictly DERIVED: the JSON log remains the only source of truth,
 a parquet checkpoint is deterministic from its prefix, and every
 consumer falls back to JSON replay when no parquet checkpoint exists.
 
-Layout — ``_log/ckptpq-{version:08d}/`` is a parquet DATASET (many
-part files; the metadata itself scales out) with one row per state
+Layout — ``_log/ckptpq-{version:08d}/`` is a parquet DATASET (parts
+of ~100k rows; the metadata itself scales out) with one row per state
 element, Delta's own checkpoint shape (add rows carrying a
 ``stats`` JSON string column — delta-spec checkpoints store exactly
 that):
@@ -23,25 +23,28 @@ that):
     stats:   JSON string of the add action's footer stats (may be '')
     payload: JSON string (table meta / txn app+version)
 
-Operations:
+Every read composes the Delta way — newest parquet checkpoint ≤ v
+plus the delta-sized JSON tail (:func:`_base_and_tail`) — and every
+generation lands through one writer (:func:`_land`: tmp dir, parts,
+atomic rename, retention sweep).  Checkpoints are written with
+pyarrow in the caller's process, so they need no SparkSession (the
+registered writer commits from Spark's session-less worker):
 
 - :func:`write_parquet_checkpoint` — bootstrap from JSON replay (one
-  driver pass, unavoidable the first time) and land the state as a
-  parquet dataset, atomically (tmp dir + rename).
-- :func:`advance_parquet_checkpoint` — the scale path: the NEXT
-  checkpoint is the OLD checkpoint DataFrame plus the delta-sized
-  JSON tail, composed as a Spark job (anti-join the net removes,
-  union the net adds) — O(files) bytes flow executor→executor,
-  the driver touches only the tail.
-- :func:`state_frame` — the live state AS A DATAFRAME: latest
-  parquet checkpoint ≤ v with the JSON tail applied (the Delta
-  read protocol: checkpoint parquet + later commit JSONs).
-- :func:`prune_files_distributed` — data skipping as a Spark job:
-  ``mapInPandas`` evaluates the SAME :func:`lakehouse._stats_admit`
-  predicate (one source of truth — the verdict's "prune decisions
-  identical" contract is by construction) over the add rows,
-  returning the surviving file list.  At 800k files that is a
-  32-way parallel metadata scan instead of a driver loop.
+  driver pass, unavoidable the first time).
+- :func:`advance_parquet_checkpoint` — the scale path: the base
+  checkpoint STREAMS through as Arrow record batches minus the rows
+  the tail supersedes, followed by the tail's rows — the driver never
+  holds the O(files) base table, and its JSON work is O(tail).
+- :func:`state_arrow` / :func:`meta_arrow` / :func:`prune_scan_arrow`
+  — the session-less reads the DataSource planning worker uses.
+- :func:`state_frame` — the live state AS A DATAFRAME, the input of
+  the distributed planner: :func:`prune_files_distributed` /
+  :func:`plan_scan_distributed` run the SAME
+  :func:`lakehouse._stats_admit` predicate (one source of truth — the
+  verdict's "prune decisions identical" contract is by construction)
+  inside ``mapInPandas`` over the add rows.  At 800k files that is a
+  parallel metadata scan instead of a driver loop.
 - :func:`stats_distributed` — staged-file footer stats as ONE Spark
   job (``mapPartitions`` over the path list, each executor reading
   its parquet footers locally with the same :func:`lakehouse._file_stats`),
@@ -56,10 +59,12 @@ JSON log and this parquet plane are engine extensions.
 
 from __future__ import annotations
 
+import itertools
 import json
 import os
 import pathlib
 import uuid
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -69,7 +74,9 @@ from . import lakehouse as lk
 _CKPT_PREFIX = lk._PQ_CKPT_PREFIX  # layout owned by the log module:
 # expire_versions and vacuum_orphans sweep these dirs by prefix
 
+_COLS = ["kind", "file", "stats", "payload"]
 _SCHEMA = "kind string, file string, stats string, payload string"
+_PART_ROWS = 100_000  # rows per part file
 
 
 def _ckpt_dir(path: str, version: int) -> pathlib.Path:
@@ -131,157 +138,6 @@ def plan_from_checkpoint(spark, path: str, version: int | None = None) -> bool:
     return est >= floor
 
 
-def state_arrow(
-    path: str, version: int | None = None
-) -> tuple[int, dict, set, dict]:
-    """``(version, {live file: stats JSON str}, live DV set, meta)``
-    composed from the newest parquet checkpoint ≤ ``version`` plus the
-    JSON tail — WITHOUT a SparkSession, for the Python DataSource
-    planning process (Spark runs ``partitions()`` in a session-less
-    worker, so :func:`state_frame` cannot serve it).  The O(files)
-    base state arrives as a COLUMNAR pyarrow read (no monolithic JSON
-    blob parse); only the delta-sized tail is JSON work.  Raises when
-    no parquet checkpoint ≤ version exists (callers fall back to
-    :func:`lakehouse._state_full`)."""
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-
-    v = lk.latest_commit(path) if version is None else version
-    v0 = latest_parquet_checkpoint(path, v)
-    if v0 is None:
-        raise ValueError(
-            f"no parquet checkpoint ≤ version {v} at {path}"
-        )
-    tbl = pq.read_table(
-        str(_ckpt_dir(path, v0)), columns=["kind", "file", "stats", "payload"]
-    )
-    kind = tbl.column("kind")
-    adds = tbl.filter(pc.equal(kind, "add"))
-    live = dict(
-        zip(adds.column("file").to_pylist(), adds.column("stats").to_pylist())
-    )
-    dvs = set(
-        tbl.filter(pc.equal(kind, "dv")).column("file").to_pylist()
-    )
-    meta_rows = tbl.filter(pc.equal(kind, "meta")).column("payload").to_pylist()
-    meta = json.loads(meta_rows[0]) if meta_rows else {}
-    if v0 < v:
-        added, removed, dv_add, dv_rm, meta_up, _txn = _tail_net(path, v0, v)
-        for f in removed:
-            live.pop(f, None)
-        live.update(added)
-        dvs -= dv_rm
-        dvs |= dv_add
-        meta.update(meta_up)
-    return v, live, dvs, meta
-
-
-def meta_arrow(path: str, version: int | None = None) -> tuple[int, dict]:
-    """``(version, table meta)`` from the newest parquet checkpoint ≤
-    ``version`` plus the tail's ``set_meta`` folds — a two-column
-    projected pyarrow read, no session, no O(files) state build.  For
-    the DataSource ``schema()`` hook on checkpoint-backed tables."""
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-
-    v = lk.latest_commit(path) if version is None else version
-    v0 = latest_parquet_checkpoint(path, v)
-    if v0 is None:
-        raise ValueError(f"no parquet checkpoint ≤ version {v} at {path}")
-    tbl = pq.read_table(
-        str(_ckpt_dir(path, v0)), columns=["kind", "payload"]
-    )
-    rows = tbl.filter(
-        pc.equal(tbl.column("kind"), "meta")
-    ).column("payload").to_pylist()
-    meta = json.loads(rows[0]) if rows else {}
-    if v0 < v:
-        *_heads, meta_up, _txn = _tail_net(path, v0, v)
-        meta.update(meta_up)
-    return v, meta
-
-
-def prune_scan_arrow(
-    path: str, predicate, version: int | None = None
-) -> tuple[int, list[str], list[str], dict, int]:
-    """``(version, surviving files sorted, DV files sorted, meta,
-    total live)`` — a predicate scan PLANNED from the parquet
-    checkpoint without a session, with decisions identical to
-    :func:`lakehouse.prune_files` by construction (the same
-    :func:`lakehouse._stats_admit` evaluates the same footer stats).
-
-    Memory shape for the session-less planning worker: the base adds
-    STREAM through as Arrow record batches (stats stay Arrow buffer
-    bytes until the per-row ``json.loads``), so peak Python-object
-    memory is O(survivors + tail + one batch), never O(live files) —
-    at ~800k files the full-dict composition (:func:`state_arrow`,
-    kept as the parity/debug surface) would hold the whole stats map
-    as Python strings.  Driver JSON work is O(tail)."""
-    import pyarrow.dataset as pads
-
-    v = lk.latest_commit(path) if version is None else version
-    v0 = latest_parquet_checkpoint(path, v)
-    if v0 is None:
-        raise ValueError(f"no parquet checkpoint ≤ version {v} at {path}")
-    if v0 < v:
-        added, removed, dv_add, dv_rm, meta_up, _txn = _tail_net(path, v0, v)
-    else:
-        added, removed, dv_add, dv_rm, meta_up = {}, set(), set(), set(), {}
-    dset = pads.dataset(str(_ckpt_dir(path, v0)), format="parquet")
-    # meta + DV rows: projected, tiny (one meta row; DVs bounded by
-    # the purge cadence)
-    side = dset.scanner(
-        columns=["kind", "file", "payload"],
-        filter=pads.field("kind").isin(["meta", "dv"]),
-    ).to_table()
-    meta = {}
-    dvs = set()
-    for kind, file, payload in zip(
-        side.column("kind").to_pylist(),
-        side.column("file").to_pylist(),
-        side.column("payload").to_pylist(),
-    ):
-        if kind == "meta":
-            meta = json.loads(payload) if payload else {}
-        else:
-            dvs.add(file)
-    dvs = (dvs - dv_rm) | dv_add
-    meta.update(meta_up)
-    cm = lk._colmap(meta)
-    conj = [(cm.get(c, c), op, val) for c, op, val in predicate]
-    admit = lk._stats_admit
-
-    def admits(stats_json: str) -> bool:
-        if not conj:
-            return True
-        st = json.loads(stats_json) if stats_json else None
-        return all(admit(st, c, op, val) for c, op, val in conj)
-
-    kept: list[str] = []
-    total = 0
-    gone = removed | set(added)  # tail re-emits supersede base rows
-    scanner = dset.scanner(
-        columns=["file", "stats"],
-        filter=pads.field("kind") == "add",
-        batch_size=16384,
-    )
-    for batch in scanner.to_batches():
-        for f, s in zip(
-            batch.column("file").to_pylist(),
-            batch.column("stats").to_pylist(),
-        ):
-            if f in gone:
-                continue
-            total += 1
-            if admits(s):
-                kept.append(f)
-    for f, s in added.items():  # the delta-sized tail
-        total += 1
-        if admits(s):
-            kept.append(f)
-    return v, sorted(kept), sorted(dvs), meta, total
-
-
 def latest_parquet_checkpoint(
     path: str, max_version: int | None = None
 ) -> int | None:
@@ -303,11 +159,134 @@ def latest_parquet_checkpoint(
     return best if best >= 0 else None
 
 
-def _rows_of_state(live, dvs, txns, meta, stats):
-    rows = [
-        ("add", f, json.dumps(stats[f]) if stats.get(f) else "", "")
-        for f in sorted(live)
-    ]
+class _Tail(NamedTuple):
+    """Net effect of a run of commits.  ``added`` maps file -> stats
+    JSON string; ``added``/``removed`` are disjoint, likewise the DV
+    pair; ``meta`` and ``txns`` are the folded updates."""
+
+    added: dict
+    removed: set
+    dv_added: set
+    dv_removed: set
+    meta: dict
+    txns: dict
+
+    @property
+    def gone(self) -> set:
+        """Files whose BASE add/dv rows must drop: everything the tail
+        removed AND everything it re-emits (a remove + re-add inside
+        the tail, the RESTORE sequence, nets to ``added`` alone —
+        keeping the base row too would duplicate the file; ADVICE
+        r12, high)."""
+        return self.removed | set(self.added) | self.dv_removed | self.dv_added
+
+
+def _tail_net(path: str, v_from: int, v_to: int) -> _Tail:
+    """Net effect of commits (v_from, v_to] — delta-sized driver
+    work, in replay order.  Each op evicts the file from the opposite
+    bucket, and a remove always lands in ``removed`` so a base add row
+    can never outlive a final tail delete."""
+    t = _Tail({}, set(), set(), set(), {}, {})
+    for i in range(v_from + 1, v_to + 1):
+        c = lk._read_commit(path, i)
+        txn = c.get("txn")
+        if txn:
+            t.txns[txn["app"]] = max(t.txns.get(txn["app"], -1), txn["version"])
+        for a in c["actions"]:
+            if a["op"] == "add":
+                t.removed.discard(a["file"])
+                t.added[a["file"]] = (
+                    json.dumps(a["stats"]) if a.get("stats") else ""
+                )
+            elif a["op"] == "remove":
+                # a remove must ALWAYS land in `removed`, even when it
+                # cancels a tail re-add (checkpoint → DELETE → RESTORE
+                # → DELETE): the base checkpoint may still carry an add
+                # row for this file, and only the `removed` set evicts
+                # it.  A spurious `removed` entry for a base-absent
+                # file is a no-op in every consumer — ADVICE r13, high.
+                t.added.pop(a["file"], None)
+                t.removed.add(a["file"])
+            elif a["op"] == "add_dv":
+                t.dv_removed.discard(a["file"])
+                t.dv_added.add(a["file"])
+            elif a["op"] == "remove_dv":
+                # symmetric to `remove`: the base may carry a dv row
+                # that only `dv_removed` can evict
+                t.dv_added.discard(a["file"])
+                t.dv_removed.add(a["file"])
+            elif a["op"] == "set_meta":
+                t.meta.update(a["meta"])
+    return t
+
+
+def _base_and_tail(path: str, version: int | None) -> tuple[int, int, _Tail]:
+    """``(v, v0, tail)``: the newest parquet checkpoint v0 ≤ ``version``
+    (default latest) and the net JSON tail (v0, v] — the Delta read
+    protocol every consumer here composes.  Raises when no parquet
+    checkpoint ≤ v exists (callers fall back to
+    :func:`lakehouse._state_full`)."""
+    v = lk.latest_commit(path) if version is None else version
+    v0 = latest_parquet_checkpoint(path, v)
+    if v0 is None:
+        raise ValueError(f"no parquet checkpoint ≤ version {v} at {path}")
+    return v, v0, _tail_net(path, v0, v)
+
+
+def _base_batches(path: str, v0: int, kinds, gone=(), columns=_COLS):
+    """The base checkpoint's rows of ``kinds`` minus those whose file
+    is in ``gone``, STREAMED as Arrow record batches — peak memory is
+    a few batches, never the O(files) base table."""
+    import pyarrow.dataset as pads
+
+    filt = pads.field("kind").isin(list(kinds))
+    if gone:
+        filt = filt & ~pads.field("file").isin(list(gone))
+    dset = pads.dataset(str(_ckpt_dir(path, v0)), format="parquet")
+    return dset.scanner(
+        columns=list(columns), filter=filt, batch_size=16384
+    ).to_batches()
+
+
+def _base_side(
+    path: str, v0: int, tail: _Tail, kinds=("meta", "dv", "txn")
+) -> tuple[dict, set, dict]:
+    """``(meta, live DV set, txn high-water map)`` at the tail's end:
+    the base checkpoint's small rows (one meta row, one txn row per
+    app, DVs bounded by the purge cadence) folded with the tail."""
+    meta: dict = {}
+    dvs: set = set()
+    txns: dict = {}
+    cols = ["kind", "file", "payload"] if "dv" in kinds else ["kind", "payload"]
+    for batch in _base_batches(path, v0, kinds, tail.gone, cols):
+        for row in batch.to_pylist():
+            if row["kind"] == "meta":
+                meta = json.loads(row["payload"]) if row["payload"] else {}
+            elif row["kind"] == "dv":
+                dvs.add(row["file"])
+            else:
+                rec = json.loads(row["payload"])
+                txns[rec["app"]] = rec["version"]
+    meta.update(tail.meta)
+    for app, tv in tail.txns.items():
+        txns[app] = max(txns.get(app, -1), tv)
+    return meta, dvs | tail.dv_added, txns
+
+
+def _live_adds(path: str, v0: int, tail: _Tail):
+    """``(file, stats JSON)`` of every live add at the tail's end: the
+    base rows streamed batch by batch, then the tail's."""
+    for batch in _base_batches(path, v0, ["add"], tail.gone, ["file", "stats"]):
+        yield from zip(
+            batch.column("file").to_pylist(), batch.column("stats").to_pylist()
+        )
+    yield from tail.added.items()
+
+
+def _state_rows(adds: dict, dvs, meta: dict, txns: dict) -> list[tuple]:
+    """Checkpoint rows for ``{file: stats JSON}`` adds, DV files, the
+    table meta and the txn map, in the layout's order."""
+    rows = [("add", f, s, "") for f, s in sorted(adds.items())]
     rows += [("dv", f, "", "") for f in sorted(dvs)]
     rows.append(("meta", "", "", json.dumps(meta)))
     rows += [
@@ -317,255 +296,180 @@ def _rows_of_state(live, dvs, txns, meta, stats):
     return rows
 
 
-def _atomic_write(df: DataFrame, dest: pathlib.Path) -> None:
-    tmp = dest.parent / f".{dest.name}-tmp-{uuid.uuid4().hex[:8]}"
-    df.write.mode("overwrite").parquet(str(tmp))
-    if dest.exists():  # derived data: identical bytes — keep the first
-        import shutil
+def _rows_batch(rows: list[tuple]):
+    import pyarrow as pa
 
-        shutil.rmtree(tmp)
-        return
-    os.rename(tmp, dest)
-
-
-def write_parquet_checkpoint(
-    spark: SparkSession, path: str, version: int | None = None
-) -> int:
-    """Bootstrap checkpoint: JSON replay once on the driver (the last
-    time the full file list must live there), landed as a parquet
-    dataset sized ~100k rows/part so a million-file state spreads
-    across parts.  Returns the checkpointed version."""
-    v, live, dvs, txns, meta, stats = lk._state_full(path, version)
-    rows = _rows_of_state(live, dvs, txns, meta, stats)
-    nparts = max(1, len(rows) // 100_000)
-    df = spark.createDataFrame(rows, _SCHEMA).repartition(nparts)
-    _atomic_write(df, _ckpt_dir(path, v))
-    return v
-
-
-def _tail_net(path: str, v_from: int, v_to: int):
-    """Net effect of commits (v_from, v_to] — delta-sized driver
-    work: {file: stats_json} net-added, set net-removed, same for
-    DVs, plus meta/txn folds, in replay order.  Invariant: ``added``
-    and ``removed`` are disjoint (likewise the DV pair) — each op
-    evicts the file from the opposite bucket, and a remove always
-    lands in ``removed`` so a base add row can never outlive a
-    final tail delete."""
-    added: dict[str, str] = {}
-    removed: set[str] = set()
-    dv_added: set[str] = set()
-    dv_removed: set[str] = set()
-    meta_updates: dict = {}
-    txn_updates: dict = {}
-    for i in range(v_from + 1, v_to + 1):
-        c = lk._read_commit(path, i)
-        t = c.get("txn")
-        if t:
-            txn_updates[t["app"]] = max(
-                txn_updates.get(t["app"], -1), t["version"]
-            )
-        for a in c["actions"]:
-            if a["op"] == "add":
-                removed.discard(a["file"])
-                added[a["file"]] = (
-                    json.dumps(a["stats"]) if a.get("stats") else ""
-                )
-            elif a["op"] == "remove":
-                # a remove must ALWAYS land in `removed`, even when it
-                # cancels a tail re-add (checkpoint → DELETE → RESTORE
-                # → DELETE): the base checkpoint may still carry an add
-                # row for this file, and only the `removed` set evicts
-                # it.  A spurious `removed` entry for a base-absent
-                # file is a no-op in every consumer (gone-set filter /
-                # live.pop) — ADVICE r13, high.
-                added.pop(a["file"], None)
-                removed.add(a["file"])
-            elif a["op"] == "add_dv":
-                dv_removed.discard(a["file"])
-                dv_added.add(a["file"])
-            elif a["op"] == "remove_dv":
-                # symmetric to `remove`: the base may carry a dv row
-                # that only `dv_removed` can evict
-                dv_added.discard(a["file"])
-                dv_removed.add(a["file"])
-            elif a["op"] == "set_meta":
-                meta_updates.update(a["meta"])
-    return added, removed, dv_added, dv_removed, meta_updates, txn_updates
-
-
-def _apply_tail(spark, base: DataFrame, path: str, v0: int, v: int):
-    """base (checkpoint rows at v0) + JSON tail (v0, v] -> state rows
-    at v, as a PLAN: the file-scale base never visits the driver."""
-    added, removed, dv_add, dv_rm, meta_up, txn_up = _tail_net(path, v0, v)
-    df = base
-    # drop base rows for files the tail REMOVED — and also for files
-    # the tail RE-EMITS (a remove + re-add inside the tail, the
-    # RESTORE sequence, nets to `added` alone): keeping the base add
-    # row while appending the fresh one would duplicate the file in
-    # the state frame, doubling every distributed-prune read (ADVICE
-    # r12, high)
-    gone = sorted(removed | set(added)) + sorted(dv_rm | dv_add)
-    if gone:
-        df = df.filter(
-            ~(
-                F.col("kind").isin("add", "dv")
-                & F.col("file").isin(gone)
-            )
-        )
-    # meta/txn rows are rebuilt driver-side — they are O(1)/O(apps),
-    # never file-scale
-    df = df.filter(~F.col("kind").isin("meta", "txn"))
-    meta_rows = base.filter(F.col("kind") == "meta").collect()
-    meta = json.loads(meta_rows[0].payload) if meta_rows else {}
-    meta.update(meta_up)
-    txns = {
-        json.loads(r.payload)["app"]: json.loads(r.payload)["version"]
-        for r in base.filter(F.col("kind") == "txn").collect()
-    }
-    for app, tv in txn_up.items():
-        txns[app] = max(txns.get(app, -1), tv)
-    new_rows = [("add", f, s, "") for f, s in sorted(added.items())]
-    new_rows += [("dv", f, "", "") for f in sorted(dv_add)]
-    new_rows.append(("meta", "", "", json.dumps(meta)))
-    new_rows += [
-        ("txn", "", "", json.dumps({"app": a, "version": tv}))
-        for a, tv in sorted(txns.items())
-    ]
-    return df.unionByName(spark.createDataFrame(new_rows, _SCHEMA)), meta
-
-
-def advance_parquet_checkpoint(
-    spark: SparkSession, path: str, version: int | None = None,
-    keep: int = 2,
-) -> int:
-    """Roll the newest parquet checkpoint forward to ``version``
-    (default latest) as one Spark job over checkpoint-parquet + the
-    delta-sized JSON tail — the incremental path that keeps O(files)
-    work off the driver forever after bootstrap.  Only the ``keep``
-    newest checkpoints survive (default 2: the new one plus its
-    predecessor, so a reader racing the advance never loses its
-    base) — without retention every advance would strand a full
-    O(files) metadata generation forever."""
-    import shutil
-
-    v = lk.latest_commit(path) if version is None else version
-    v0 = latest_parquet_checkpoint(path, v)
-    if v0 is None:
-        return write_parquet_checkpoint(spark, path, v)
-    if v0 == v:
-        return v
-    base = spark.read.parquet(str(_ckpt_dir(path, v0)))
-    df, _meta = _apply_tail(spark, base, path, v0, v)
-    _atomic_write(df, _ckpt_dir(path, v))
-    log = pathlib.Path(path) / lk._LOG_DIR
-    vs = sorted(
-        int(p.name[len(_CKPT_PREFIX):])
-        for p in log.glob(f"{_CKPT_PREFIX}*")
-        if p.is_dir() and p.name[len(_CKPT_PREFIX):].isdigit()
+    cols = list(zip(*rows)) if rows else [()] * len(_COLS)
+    return pa.RecordBatch.from_arrays(
+        [pa.array(c, pa.string()) for c in cols], names=_COLS
     )
-    for old in vs[:-keep] if keep > 0 else []:
-        shutil.rmtree(_ckpt_dir(path, old), ignore_errors=True)
-    return v
 
 
-def advance_parquet_checkpoint_arrow(
-    path: str, version: int | None = None, keep: int = 2
-) -> int:
-    """:func:`advance_parquet_checkpoint` WITHOUT a SparkSession —
-    pyarrow in the caller's process, for contexts Spark runs
-    session-less (the registered WRITER's commit hook): the base
-    checkpoint arrives columnar, the JSON tail is delta-sized, and
-    the next generation lands with the same atomic tmp+rename and
-    retention sweep.  State-identical to the Spark advance by
-    construction (same ``_tail_net`` folds over the same rows)."""
+def state_arrow(
+    path: str, version: int | None = None
+) -> tuple[int, dict, set, dict]:
+    """``(version, {live file: stats JSON str}, live DV set, meta)``
+    composed from the newest parquet checkpoint ≤ ``version`` plus the
+    JSON tail — WITHOUT a SparkSession, for the Python DataSource
+    planning process (Spark runs ``partitions()`` in a session-less
+    worker, so :func:`state_frame` cannot serve it).  The O(files)
+    base state arrives as a COLUMNAR pyarrow read (no monolithic JSON
+    blob parse); only the delta-sized tail is JSON work.  Raises when
+    no parquet checkpoint ≤ version exists (callers fall back to
+    :func:`lakehouse._state_full`)."""
+    v, v0, tail = _base_and_tail(path, version)
+    meta, dvs, _txns = _base_side(path, v0, tail, ("meta", "dv"))
+    return v, dict(_live_adds(path, v0, tail)), dvs, meta
+
+
+def meta_arrow(path: str, version: int | None = None) -> tuple[int, dict]:
+    """``(version, table meta)`` from the newest parquet checkpoint ≤
+    ``version`` plus the tail's ``set_meta`` folds — a projected
+    pyarrow read of the meta row, no session, no O(files) state
+    build.  For the DataSource ``schema()`` hook on checkpoint-backed
+    tables."""
+    v, v0, tail = _base_and_tail(path, version)
+    meta, _dvs, _txns = _base_side(path, v0, tail, ("meta",))
+    return v, meta
+
+
+def prune_scan_arrow(
+    path: str, predicate, version: int | None = None
+) -> tuple[int, list[str], list[str], dict, int]:
+    """``(version, surviving files sorted, DV files sorted, meta,
+    total live)`` — a predicate scan PLANNED from the parquet
+    checkpoint without a session, with decisions identical to
+    :func:`lakehouse.prune_files` by construction (the same
+    :func:`lakehouse._stats_admit` evaluates the same footer stats).
+
+    Memory shape for the session-less planning worker: the base adds
+    STREAM through as Arrow record batches (stats stay Arrow buffer
+    bytes until the per-row ``json.loads``), so peak Python-object
+    memory is O(survivors + tail + one batch), never O(live files) —
+    at ~800k files the full-dict composition (:func:`state_arrow`,
+    kept as the parity/debug surface) would hold the whole stats map
+    as Python strings.  Driver JSON work is O(tail)."""
+    v, v0, tail = _base_and_tail(path, version)
+    meta, dvs, _txns = _base_side(path, v0, tail, ("meta", "dv"))
+    cm = lk._colmap(meta)
+    conj = [(cm.get(c, c), op, val) for c, op, val in predicate]
+    admit = lk._stats_admit
+
+    def admits(stats_json: str) -> bool:
+        if not conj:
+            return True
+        st = json.loads(stats_json) if stats_json else None
+        return all(admit(st, c, op, val) for c, op, val in conj)
+
+    kept: list[str] = []
+    total = 0
+    for f, s in _live_adds(path, v0, tail):
+        total += 1
+        if admits(s):
+            kept.append(f)
+    return v, sorted(kept), sorted(dvs), meta, total
+
+
+def _land(path: str, v: int, batches, keep: int = 0) -> int:
+    """Write ``batches`` as checkpoint generation ``v``: parts of
+    ~:data:`_PART_ROWS` rows in a tmp dir, renamed into place
+    atomically (a checkpoint is derived data — if an identical
+    generation already landed, the first one stays).  Then only the
+    ``keep`` newest generations survive (0 = sweep nothing).
+    Returns ``v``."""
     import shutil
 
     import pyarrow as pa
-    import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    v = lk.latest_commit(path) if version is None else version
-    v0 = latest_parquet_checkpoint(path, v)
-    if v0 is None:
-        raise ValueError(f"no parquet checkpoint at {path} — bootstrap "
-                         f"with write_parquet_checkpoint first")
-    if v0 == v:
-        return v
-    added, removed, dv_add, dv_rm, meta_up, txn_up = _tail_net(
-        path, v0, v
-    )
-    base = pq.read_table(
-        str(_ckpt_dir(path, v0)),
-        columns=["kind", "file", "stats", "payload"],
-    )
-    gone = sorted(removed | set(added)) + sorted(dv_rm | dv_add)
-    kind = base.column("kind")
-    keep_mask = pc.and_(
-        pc.invert(pc.is_in(kind, value_set=pa.array(["meta", "txn"]))),
-        pc.invert(
-            pc.and_(
-                pc.is_in(kind, value_set=pa.array(["add", "dv"])),
-                pc.is_in(
-                    base.column("file"),
-                    value_set=pa.array(gone or [""], pa.string()),
-                ),
-            )
-        ),
-    )
-    kept = base.filter(keep_mask)
-    meta_rows = base.filter(pc.equal(kind, "meta"))
-    meta = (
-        json.loads(meta_rows.column("payload")[0].as_py())
-        if meta_rows.num_rows
-        else {}
-    )
-    meta.update(meta_up)
-    txns = {}
-    for payload in base.filter(
-        pc.equal(kind, "txn")
-    ).column("payload").to_pylist():
-        rec = json.loads(payload)
-        txns[rec["app"]] = rec["version"]
-    for app, tv in txn_up.items():
-        txns[app] = max(txns.get(app, -1), tv)
-    new_rows = [("add", f, s, "") for f, s in sorted(added.items())]
-    new_rows += [("dv", f, "", "") for f in sorted(dv_add)]
-    new_rows.append(("meta", "", "", json.dumps(meta)))
-    new_rows += [
-        ("txn", "", "", json.dumps({"app": a, "version": tv}))
-        for a, tv in sorted(txns.items())
-    ]
-    cols = list(zip(*new_rows)) if new_rows else ([], [], [], [])
-    tail_tbl = pa.table(
-        {
-            "kind": pa.array(cols[0], pa.string()),
-            "file": pa.array(cols[1], pa.string()),
-            "stats": pa.array(cols[2], pa.string()),
-            "payload": pa.array(cols[3], pa.string()),
-        }
-    )
-    out = pa.concat_tables([kept, tail_tbl])
+    schema = _rows_batch([]).schema
     dest = _ckpt_dir(path, v)
     tmp = dest.parent / f".{dest.name}-tmp-{uuid.uuid4().hex[:8]}"
     tmp.mkdir(parents=True)
-    chunk = 100_000  # the same ~rows/part sizing as the Spark write
-    for i, off in enumerate(range(0, max(out.num_rows, 1), chunk)):
+    buf: list = []
+    rows = parts = 0
+
+    def flush() -> None:
+        nonlocal buf, rows, parts
         pq.write_table(
-            out.slice(off, chunk), str(tmp / f"part-{i:05d}.parquet")
+            pa.Table.from_batches(buf, schema),
+            str(tmp / f"part-{parts:05d}.parquet"),
         )
-    if dest.exists():  # derived data: identical state — keep the first
+        buf, rows, parts = [], 0, parts + 1
+
+    for b in batches:
+        buf.append(pa.RecordBatch.from_arrays(b.columns, schema=schema))
+        rows += b.num_rows
+        if rows >= _PART_ROWS:
+            flush()
+    if buf or not parts:
+        flush()
+    if dest.exists():
         shutil.rmtree(tmp)
     else:
         os.rename(tmp, dest)
-    log = pathlib.Path(path) / lk._LOG_DIR
-    vs = sorted(
-        int(p.name[len(_CKPT_PREFIX):])
-        for p in log.glob(f"{_CKPT_PREFIX}*")
-        if p.is_dir() and p.name[len(_CKPT_PREFIX):].isdigit()
-    )
-    for old in vs[:-keep] if keep > 0 else []:
-        shutil.rmtree(_ckpt_dir(path, old), ignore_errors=True)
+    if keep > 0:
+        log = pathlib.Path(path) / lk._LOG_DIR
+        vs = sorted(
+            int(p.name[len(_CKPT_PREFIX):])
+            for p in log.glob(f"{_CKPT_PREFIX}*")
+            if p.is_dir() and p.name[len(_CKPT_PREFIX):].isdigit()
+        )
+        for old in vs[:-keep]:
+            shutil.rmtree(_ckpt_dir(path, old), ignore_errors=True)
     return v
+
+
+def write_parquet_checkpoint(path: str, version: int | None = None) -> int:
+    """Bootstrap checkpoint: JSON replay once on the driver (the last
+    time the full file list must live there), landed as a parquet
+    dataset.  Returns the checkpointed version."""
+    v, live, dvs, txns, meta, stats = lk._state_full(path, version)
+    adds = {f: json.dumps(stats[f]) if stats.get(f) else "" for f in live}
+    rows = _state_rows(adds, dvs, meta, txns)
+    batches = (
+        _rows_batch(rows[i:i + _PART_ROWS])
+        for i in range(0, len(rows), _PART_ROWS)
+    )
+    return _land(path, v, batches)
+
+
+def advance_parquet_checkpoint(
+    path: str, version: int | None = None, keep: int = 2
+) -> int:
+    """Roll the newest parquet checkpoint forward to ``version``
+    (default latest): the base checkpoint's add/dv rows stream
+    through minus the rows the JSON tail supersedes, followed by the
+    tail's rows and the folded meta/txn rows — O(files) work off the
+    driver's heap, O(tail) JSON work.  Bootstraps when no checkpoint
+    exists.  Only the ``keep`` newest checkpoints survive (default 2:
+    the new one plus its predecessor, so a reader racing the advance
+    never loses its base) — without retention every advance would
+    strand a full O(files) metadata generation forever."""
+    v = lk.latest_commit(path) if version is None else version
+    if latest_parquet_checkpoint(path, v) is None:
+        return write_parquet_checkpoint(path, v)
+    v, v0, tail = _base_and_tail(path, v)
+    if v0 == v:
+        return v
+    meta, _dvs, txns = _base_side(path, v0, tail, ("meta", "txn"))
+    base = _base_batches(path, v0, ["add", "dv"], tail.gone)
+    rows = _state_rows(tail.added, tail.dv_added, meta, txns)
+    return _land(path, v, itertools.chain(base, [_rows_batch(rows)]), keep)
+
+
+def _apply_tail(
+    spark, base: DataFrame, path: str, v0: int, tail: _Tail
+) -> tuple[DataFrame, dict]:
+    """base (checkpoint rows at v0) + the tail -> state rows at the
+    tail's end, as a PLAN: the file-scale base never visits the
+    driver; meta/txn rows are O(1)/O(apps) and rebuilt driver-side."""
+    meta, _dvs, txns = _base_side(path, v0, tail, ("meta", "txn"))
+    df = base.filter(F.col("kind").isin("add", "dv"))
+    if tail.gone:
+        df = df.filter(~F.col("file").isin(sorted(tail.gone)))
+    rows = _state_rows(tail.added, tail.dv_added, meta, txns)
+    return df.unionByName(spark.createDataFrame(rows, _SCHEMA)), meta
 
 
 def state_frame(
@@ -575,19 +479,12 @@ def state_frame(
     Delta read protocol: newest parquet checkpoint ≤ version plus the
     JSON tail, composed as a plan.  Raises if no parquet checkpoint
     exists (callers fall back to :func:`lakehouse._state_full`)."""
-    v = lk.latest_commit(path) if version is None else version
-    v0 = latest_parquet_checkpoint(path, v)
-    if v0 is None:
-        raise ValueError(
-            f"no parquet checkpoint at {path} — run "
-            f"write_parquet_checkpoint first (JSON replay still works "
-            f"via lakehouse._state_full)"
-        )
+    v, v0, tail = _base_and_tail(path, version)
     base = spark.read.parquet(str(_ckpt_dir(path, v0)))
     if v0 == v:
-        meta_rows = base.filter(F.col("kind") == "meta").collect()
-        return v, base, json.loads(meta_rows[0].payload) if meta_rows else {}
-    df, meta = _apply_tail(spark, base, path, v0, v)
+        meta, _dvs, _txns = _base_side(path, v0, tail, ("meta",))
+        return v, base, meta
+    df, meta = _apply_tail(spark, base, path, v0, tail)
     return v, df, meta
 
 
@@ -685,43 +582,3 @@ def stats_distributed(
             yield p, fstats(_pl.Path(p), force_cols=fc)
 
     return dict(sc.parallelize(paths, n).mapPartitions(part).collect())
-
-
-def read_table_distributed_prune(
-    spark: SparkSession, path: str, predicate, version: int | None = None
-) -> DataFrame:
-    """Predicate read whose FILE PRUNING ran as a Spark job
-    (:func:`prune_files_distributed`); the scan + residual filter are
-    byte-identical to :func:`lakehouse.read_table` with the same
-    predicate — only where the prune decisions were computed
-    differs."""
-    v, kept, _total = prune_files_distributed(spark, path, predicate, version)
-    _v2, live, dvs, _txns, meta, _stats = lk._state_full(path, v)
-    root = pathlib.Path(path)
-    conj = list(predicate)
-    if not kept:
-        fields = meta.get("schema", [])
-        return spark.range(0).select(
-            *[F.lit(None).cast(t).alias(n) for n, t in fields]
-        )
-    reader = spark.read
-    if meta.get("evolved"):
-        reader = reader.option("mergeSchema", "true")
-    if not dvs:
-        df = lk._to_logical(
-            reader.parquet(*[str(root / f) for f in kept]), meta
-        )
-        return df.filter(lk._predicate_column(conj))
-    from .mor import with_row_addresses
-
-    df = lk._to_logical(
-        with_row_addresses(reader.parquet(*[str(root / f) for f in kept])),
-        meta,
-    )
-    dv = spark.read.parquet(*[str(root / f) for f in sorted(dvs)]).select(
-        "_dv_file", "_dv_pos"
-    )
-    df = df.join(
-        F.broadcast(dv), ["_dv_file", "_dv_pos"], "left_anti"
-    ).drop("_dv_file", "_dv_pos")
-    return df.filter(lk._predicate_column(conj))

@@ -369,7 +369,7 @@ def q_version_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     negation keeps the insert key domain disjoint from real custkeys
     at EVERY scale factor; v3 deletes every 13th surviving key and
     docks AUTOMOBILE balances), then :func:`..merge.read_changes`
-    (1, 3] with ``reader=lakehouse.read_table`` emits full-row records
+    (1, 3] over the log versions emits full-row records
     tagged ``insert`` / ``delete`` / ``update_preimage`` /
     ``update_postimage`` + ``commit_version`` — one shuffle per step
     (union + groupBy + explode, no full-outer join, no per-type
@@ -425,10 +425,7 @@ def q_version_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
         t.replace_where(spark, [], df)  # snapshot publish, one commit
         t.commit()
 
-    feed = read_changes(
-        spark, path, 1, 3, ["k"],
-        reader=lambda s, p, v: lk.read_table(s, p, version=v),
-    )
+    feed = read_changes(spark, path, 1, 3, ["k"])
 
     # incremental consumer: refresh v1's aggregate from the feed only.
     # THREE audit aggregates folded into ONE job (each Spark action pays its own planning cost): the
@@ -3298,13 +3295,14 @@ def q_lakehouse_datasource_stream(
 def q_lakehouse_parquet_checkpoint(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """The METADATA PLANE as a Spark job (VERDICT r11 item 2): the
+    """The METADATA PLANE at scale (VERDICT r11 item 2): the
     commit-log state checkpointed as a PARQUET DATASET
     (:mod:`..lakehouse_checkpoint` — add rows carrying a stats JSON
     column, Delta's own checkpoint shape), advanced INCREMENTALLY
-    (old checkpoint DataFrame + delta-sized JSON tail composed as one
-    job — O(files) bytes never visit the driver after bootstrap), and
-    consumed distributed: file pruning runs the SAME ``_stats_admit``
+    without a session (the old checkpoint streams through as Arrow
+    batches beside the delta-sized JSON tail — the driver never holds
+    the O(files) base after bootstrap), and consumed distributed:
+    file pruning runs the SAME ``_stats_admit``
     evaluator inside ``mapInPandas`` over the checkpoint rows, and
     staged-file footer stats come back from one ``mapPartitions`` job
     instead of a serial driver loop.
@@ -3312,8 +3310,8 @@ def q_lakehouse_parquet_checkpoint(
     Drill on the orders table: 3 appends (v1-3, keys split mod 3) →
     parquet checkpoint at v3 → MOR delete (keys % 13, a DV sidecar)
     and copy-on-write delete (keys % 17, a rewrite) land as the JSON
-    tail → ``advance_parquet_checkpoint`` rolls the checkpoint to v5
-    as a Spark job.  Audits the oracle pins TRUE:
+    tail → ``advance_parquet_checkpoint`` rolls the checkpoint to v5.
+    Audits the oracle pins TRUE:
 
     - ``state_parity`` — live-file and DV sets from (checkpoint
       parquet + tail) equal the driver JSON replay at v5 AND at the
@@ -3324,8 +3322,9 @@ def q_lakehouse_parquet_checkpoint(
       for a range, an ``in``, and an everything-pruned predicate;
     - ``stats_distributed_parity`` — the one-job footer stats equal
       the serial per-file reads, dict-for-dict;
-    - ``pruned_read_parity`` — a read whose file set came from the
-      DISTRIBUTED decisions is row-identical to the engine's
+    - ``pruned_read_parity`` — ``read_table`` past the plan threshold
+      (``checkpointPlanMinFiles=1``), whose file set came from the
+      DISTRIBUTED decisions, is row-identical to the JSON-route
       predicate read (skipping changes I/O, never results — now
       provable with the prune running on executors).
 
@@ -3344,7 +3343,7 @@ def q_lakehouse_parquet_checkpoint(
         t = lk.Transaction(path)
         t.append(orders.filter(F.col("k") % 3 == third).repartition(2))
         t.commit()  # v1-3
-    ckpt.write_parquet_checkpoint(spark, path)  # bootstrap at v3
+    ckpt.write_parquet_checkpoint(path)  # bootstrap at v3
 
     t = lk.Transaction(path)
     t.delete_where_mor(spark, F.col("k") % 13 == 0)
@@ -3352,7 +3351,7 @@ def q_lakehouse_parquet_checkpoint(
     t = lk.Transaction(path)
     t.delete_where(spark, F.col("k") % 17 == 0)
     t.commit()  # v5 — a rewrite in the tail
-    ckpt.advance_parquet_checkpoint(spark, path)  # v3 ckpt + tail -> v5
+    ckpt.advance_parquet_checkpoint(path)  # v3 ckpt + tail -> v5
 
     def sets(version=None):
         # one collect for both kinds (was two jobs per call)
@@ -3403,8 +3402,14 @@ def q_lakehouse_parquet_checkpoint(
     }
 
     pr = [("k", "<", 1000)]
-    got = ckpt.read_table_distributed_prune(spark, path, pr)
     exp = lk.read_table(spark, path, predicate=pr)
+    # read_table past the plan threshold prunes through the distributed
+    # planner; the route is chosen when the frame is built
+    spark.conf.set(ckpt.PLAN_MIN_FILES_CONF, "1")
+    try:
+        got = lk.read_table(spark, path, predicate=pr)
+    finally:
+        spark.conf.unset(ckpt.PLAN_MIN_FILES_CONF)
     h = lambda df: df.select(  # noqa: E731
         F.expr("xxhash64(k, status, CAST(price*1e6 AS LONG))").alias("_h")
     )
@@ -3911,9 +3916,9 @@ def q_lakehouse_checkpoint_planning(
        parquet checkpoint, set the auto-advance interval to 2 and
        land a MOR delete + a copy-on-write delete: the SECOND commit
        must roll the checkpoint forward BY ITSELF
-       (``auto_advanced`` — ``Transaction.commit`` calls
-       ``advance_parquet_checkpoint`` once the JSON tail reaches the
-       interval, Delta's checkpoint cadence).
+       (``auto_advanced`` — ``Transaction.commit`` calls the
+       session-less ``advance_parquet_checkpoint`` once the JSON tail
+       reaches the interval, Delta's checkpoint cadence).
     2. ``arrow_state_parity`` — the SESSION-LESS state composition
        the DataSource planning worker uses (pyarrow columnar read of
        the checkpoint + delta-sized JSON tail,
@@ -3952,7 +3957,7 @@ def q_lakehouse_checkpoint_planning(
         t = lk.Transaction(path)
         t.append(orders.filter(F.col("k") % 3 == third).repartition(2))
         t.commit()  # v1-3
-    ckpt.write_parquet_checkpoint(spark, path)  # bootstrap at v3
+    ckpt.write_parquet_checkpoint(path)  # bootstrap at v3
 
     # --- 1: commits roll the checkpoint forward by themselves
     spark.conf.set(ckpt.AUTO_ADVANCE_CONF, "2")

@@ -79,6 +79,9 @@ def get_spark(app_name: str = "market_etl_spark", master: str | None = None) -> 
         builder.config("spark.sql.shuffle.partitions", str(cpus))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "12g"))
         .config("spark.ui.enabled", "false")
+        # no console progress bar: its carriage-return frames would share
+        # stderr lines with what harnesses print there
+        .config("spark.ui.showConsoleProgress", "false")
     )
     for k, v in RUNTIME_CONF.items():
         builder = builder.config(k, v)

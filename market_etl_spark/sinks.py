@@ -394,180 +394,6 @@ def read_zorder_pruned(
     return df, len(keep), len(man)
 
 
-def write_versioned(df: DataFrame, path: str) -> int:
-    """Append a new immutable VERSION of a snapshot table — the
-    time-travel storage primitive (Delta/Iceberg's version chain on
-    plain parquet).  Data lands under ``path/v=N`` via
-    write-to-temp + atomic directory rename, then ``N`` is committed
-    by atomically renaming a one-line version marker into
-    ``path/_versions/`` — readers (:func:`read_version`,
-    :func:`latest_version`) resolve versions from the marker directory
-    only, so a torn write (data dir without marker) is invisible, the
-    same last-writer-wins commit protocol as the run manifests.
-    Returns the committed version number (1-based).
-
-    This is the WHOLE-SNAPSHOT-PER-VERSION layer: every version is a
-    complete immutable copy — right for dimension-sized tables and
-    CDC stores where a full rewrite per version is the natural write
-    unit, and deliberately simpler than the delta-log layer
-    (:mod:`.lakehouse`), which shares files across versions and
-    serializes concurrent writers for fact-sized tables.
-
-    SUBSUMED (round 12, VERDICT r11 item 5): the commit log expresses
-    this write pattern directly — ``Transaction.replace_where(spark,
-    [], df)`` publishes a whole-table snapshot as one commit, with
-    time travel, expiry and orphan sweep from the same abstraction —
-    and the registered queries (``q_time_travel_read``,
-    ``q_version_change_feed``, ``q_vacuum_retention``) now run on the
-    log.  This primitive remains as the minimal marker-protocol
-    variant (no serialized writers needed) and as the base the
-    pre-log suites exercise."""
-    import os
-    import pathlib as _pl
-
-    import shutil
-
-    root = _pl.Path(path)
-    vdir = root / "_versions"
-    vdir.mkdir(parents=True, exist_ok=True)
-    version = latest_version(path) + 1
-    tmp = root / f"_tmp_v{version}"
-    df.write.mode("overwrite").parquet(str(tmp))
-    while True:
-        dest = root / f"v={version}"
-        if dest.exists():
-            if (vdir / str(version)).exists():
-                # concurrent writer committed this slot — take the next
-                version += 1
-                continue
-            # torn write from a crashed commit (data dir, no marker):
-            # the slot was never visible to readers, reclaim it
-            shutil.rmtree(dest, ignore_errors=True)
-        try:
-            os.rename(tmp, dest)
-        except OSError as e:
-            import errno
-
-            if e.errno not in (errno.ENOTEMPTY, errno.EEXIST):
-                raise  # EACCES/EIO/...: a real failure, not the race —
-                # retrying the next slot would spin forever
-            # a concurrent writer claimed the slot between the
-            # exists() check and our rename (TOCTOU — ENOTEMPTY /
-            # EEXIST): last-writer-wins means the loser takes the
-            # next slot, never crashes
-            version += 1
-            continue
-        break
-    marker_tmp = vdir / f".{version}.tmp"
-    marker_tmp.write_text(str(version))
-    os.rename(marker_tmp, vdir / str(version))
-    return version
-
-
-def latest_version(path: str) -> int:
-    """Highest committed version (0 = no commits yet)."""
-    import pathlib as _pl
-
-    vdir = _pl.Path(path) / "_versions"
-    if not vdir.exists():
-        return 0
-    versions = [int(p.name) for p in vdir.iterdir() if p.name.isdigit()]
-    return max(versions, default=0)
-
-
-def read_version(spark, path: str, version: int) -> DataFrame:
-    """Time-travel read: the snapshot exactly as committed at
-    ``version``.  Raises ValueError for an uncommitted version (a data
-    directory without its marker is a torn write, not a version)."""
-    import pathlib as _pl
-
-    if not (_pl.Path(path) / "_versions" / str(version)).exists():
-        raise ValueError(f"version {version} not committed at {path}")
-    return spark.read.parquet(f"{path}/v={version}")
-
-
-def vacuum_versions(
-    path: str, keep_last: int, min_orphan_age_sec: float = 300.0
-) -> dict:
-    """VACUUM the versioned snapshot store: retain the newest
-    ``keep_last`` committed versions, delete the data directories and
-    markers of everything older, and sweep torn writes (``_tmp_*``
-    staging dirs, ``v=N`` data dirs that never got a marker, and
-    ``.N.tmp`` marker staging files a crash between marker write and
-    marker rename leaves in ``_versions/``).
-    Deletion is crash-safe in the same direction as the commit
-    protocol is torn-write-safe: the marker is removed FIRST, so a
-    vacuum interrupted mid-delete leaves an unmarkered data dir that
-    the next vacuum sweeps as an orphan — readers never observe a
-    marker whose data is gone.
-
-    CONCURRENCY CONTRACT: the orphan sweep cannot distinguish a
-    crashed commit's debris from a LIVE writer's in-flight state (a
-    writer between its data rename and marker rename looks exactly
-    like a torn write — sweeping it would commit a marker whose data
-    is gone).  The DEFAULT ``min_orphan_age_sec`` is therefore 300 s
-    (Delta's VACUUM retention-window posture): unmarkered dirs
-    younger than the threshold are left alone and picked up by a
-    later vacuum, so the dangerous immediate sweep is opt-in — pass
-    ``0`` explicitly when the caller guarantees no concurrent writers
-    (this engine's single-writer posture does, at its own call
-    sites).  Expired COMMITTED versions are safe at any age — their
-    markers are removed first.
-
-    Returns a summary dict (versions_before / versions_after /
-    removed / orphans_removed / kept)."""
-    import pathlib as _pl
-    import shutil
-    import time
-
-    root = _pl.Path(path)
-    vdir = root / "_versions"
-    committed = sorted(
-        int(p.name) for p in vdir.iterdir() if p.name.isdigit()
-    ) if vdir.exists() else []
-    keep = set(committed[-keep_last:]) if keep_last > 0 else set()
-    removed = [v for v in committed if v not in keep]
-    for v in removed:  # marker first, then data
-        (vdir / str(v)).unlink()
-        shutil.rmtree(root / f"v={v}", ignore_errors=True)
-    now = time.time()
-
-    def _old_enough(p: _pl.Path) -> bool:
-        try:
-            return now - p.stat().st_mtime >= min_orphan_age_sec
-        except OSError:
-            return False
-
-    orphans = 0
-    for p in root.iterdir():
-        if p.name.startswith("_tmp_"):
-            if _old_enough(p):
-                shutil.rmtree(p, ignore_errors=True)
-                orphans += 1
-        elif p.name.startswith("v="):
-            v = p.name[2:]
-            if not (vdir / v).exists() and _old_enough(p):
-                shutil.rmtree(p, ignore_errors=True)
-                orphans += 1
-    if vdir.exists():
-        # marker staging files (.N.tmp) stranded by a crash between
-        # marker write and marker rename — same age gate as data dirs
-        for p in vdir.iterdir():
-            if p.name.startswith(".") and p.name.endswith(".tmp") and _old_enough(p):
-                try:
-                    p.unlink()
-                    orphans += 1
-                except OSError:
-                    pass
-    return {
-        "versions_before": len(committed),
-        "versions_after": len(keep),
-        "removed": removed,
-        "orphans_removed": orphans,
-        "kept": sorted(keep),
-    }
-
-
 def compact_manifested(
     spark,
     src_path: str,

@@ -1,10 +1,12 @@
 """Parquet-checkpoint metadata plane (round 12): state parity with
-JSON replay, incremental advance as a Spark job, distributed prune
-decisions identical to the driver-side prune, distributed footer
-stats, and the read path composed on distributed decisions."""
+JSON replay, incremental advance, distributed prune decisions
+identical to the driver-side prune, distributed footer stats, and the
+read path composed on distributed decisions.  The Spark-free
+bootstrap/advance/compose checks are in test_checkpoint_plane.py."""
 
 from __future__ import annotations
 
+import json
 import pathlib
 
 import pytest
@@ -36,6 +38,17 @@ def _busy_table(spark, tmp_path):
     return path
 
 
+def _routed_read(spark, path, pred):
+    """``read_table`` past the plan threshold: its file set comes from
+    the distributed prune over the checkpoint (the route is chosen
+    when the frame is built)."""
+    spark.conf.set(ck.PLAN_MIN_FILES_CONF, "1")
+    try:
+        return lk.read_table(spark, path, predicate=pred)
+    finally:
+        spark.conf.unset(ck.PLAN_MIN_FILES_CONF)
+
+
 def _state_sets(spark, path, version=None):
     v, df, meta = ck.state_frame(spark, path, version)
     return (
@@ -48,7 +61,7 @@ def _state_sets(spark, path, version=None):
 
 def test_bootstrap_state_parity(spark, tmp_path):
     path = _busy_table(spark, tmp_path)
-    v = ck.write_parquet_checkpoint(spark, path)
+    v = ck.write_parquet_checkpoint(path)
     assert v == lk.latest_commit(path)
     pv, live_pq, dv_pq, meta_pq = _state_sets(spark, path)
     _v, live, dvs, _txns, meta, _stats = lk._state_full(path)
@@ -57,7 +70,7 @@ def test_bootstrap_state_parity(spark, tmp_path):
 
 def test_json_tail_applied_over_checkpoint(spark, tmp_path):
     path = _busy_table(spark, tmp_path)
-    ck.write_parquet_checkpoint(spark, path, version=3)
+    ck.write_parquet_checkpoint(path, version=3)
     # the tail (3, 5] holds a MOR delete + a CoW rewrite; state_frame
     # must fold them without a new checkpoint
     pv, live_pq, dv_pq, _meta = _state_sets(spark, path)
@@ -77,22 +90,22 @@ def test_json_tail_applied_over_checkpoint(spark, tmp_path):
 
 def test_advance_is_incremental_and_equal_to_bootstrap(spark, tmp_path):
     path = _busy_table(spark, tmp_path)
-    ck.write_parquet_checkpoint(spark, path, version=2)
-    v = ck.advance_parquet_checkpoint(spark, path)
+    ck.write_parquet_checkpoint(path, version=2)
+    v = ck.advance_parquet_checkpoint(path)
     assert v == 5 and ck.latest_parquet_checkpoint(path) == 5
     # advanced state == a from-scratch bootstrap at the same version
     adv = spark.read.parquet(str(ck._ckpt_dir(path, 5)))
     v2, live, dvs, txns, meta, stats = lk._state_full(path, 5)
-    rows = ck._rows_of_state(live, dvs, txns, meta, stats)
-    boot = spark.createDataFrame(rows, ck._SCHEMA)
-    assert sorted(map(tuple, adv.collect())) == sorted(map(tuple, boot.collect()))
+    adds = {f: json.dumps(stats[f]) if stats.get(f) else "" for f in live}
+    boot = ck._state_rows(adds, dvs, meta, txns)
+    assert sorted(map(tuple, adv.collect())) == sorted(boot)
     # idempotent when already at latest
-    assert ck.advance_parquet_checkpoint(spark, path) == 5
+    assert ck.advance_parquet_checkpoint(path) == 5
 
 
 def test_distributed_prune_matches_driver_prune(spark, tmp_path):
     path = _busy_table(spark, tmp_path)
-    ck.write_parquet_checkpoint(spark, path)
+    ck.write_parquet_checkpoint(path)
     for pred in (
         [("id", "<", 5)],
         [("id", ">=", 25)],
@@ -112,7 +125,7 @@ def test_distributed_prune_respects_column_mapping(spark, tmp_path):
     t = lk.Transaction(path)
     t.rename_column("id", "ident")
     t.commit()
-    ck.write_parquet_checkpoint(spark, path)
+    ck.write_parquet_checkpoint(path)
     pred = [("ident", "<", 5)]
     assert ck.prune_files_distributed(spark, path, pred) == lk.prune_files(
         path, pred
@@ -135,9 +148,9 @@ def test_distributed_stats_match_serial(spark, tmp_path):
 
 def test_pruned_read_on_distributed_decisions(spark, tmp_path):
     path = _busy_table(spark, tmp_path)
-    ck.write_parquet_checkpoint(spark, path)
+    ck.write_parquet_checkpoint(path)
     for pred in ([("id", "<", 5)], [("id", ">", 7)], [("id", "<", 0)]):
-        got = ck.read_table_distributed_prune(spark, path, pred)
+        got = _routed_read(spark, path, pred)
         exp = lk.read_table(spark, path, predicate=pred)
         assert sorted(map(tuple, got.collect())) == sorted(
             map(tuple, exp.collect())
@@ -152,8 +165,8 @@ def test_state_frame_requires_a_checkpoint(spark, tmp_path):
 
 def test_time_travel_uses_older_checkpoint(spark, tmp_path):
     path = _busy_table(spark, tmp_path)
-    ck.write_parquet_checkpoint(spark, path, version=2)
-    ck.write_parquet_checkpoint(spark, path, version=4)
+    ck.write_parquet_checkpoint(path, version=2)
+    ck.write_parquet_checkpoint(path, version=4)
     # version 3 must start from ckpt 2 + tail commit 3, not ckpt 4
     pv, live_pq, dv_pq, _meta = _state_sets(spark, path, version=3)
     _v, live, dvs, _txns, _m, _s = lk._state_full(path, 3)
@@ -191,9 +204,9 @@ def test_advance_retains_bounded_checkpoints(spark, tmp_path):
     generation forever: only the `keep` newest survive (the new one
     plus its predecessor for readers racing the advance)."""
     path = _busy_table(spark, tmp_path)  # 5 commits
-    ck.write_parquet_checkpoint(spark, path, version=1)
+    ck.write_parquet_checkpoint(path, version=1)
     for v in (2, 3, 4, 5):
-        ck.advance_parquet_checkpoint(spark, path, version=v)
+        ck.advance_parquet_checkpoint(path, version=v)
     log = pathlib.Path(path) / lk._LOG_DIR
     left = sorted(p.name for p in log.glob("ckptpq-*"))
     assert left == ["ckptpq-00000004", "ckptpq-00000005"]
@@ -209,20 +222,20 @@ def test_expiry_drops_stale_parquet_checkpoints(spark, tmp_path):
     expire_versions must remove it so state_frame re-bootstraps
     cleanly instead of dying mid-tail."""
     path = _busy_table(spark, tmp_path)  # 5 commits
-    ck.write_parquet_checkpoint(spark, path, version=2)
+    ck.write_parquet_checkpoint(path, version=2)
     lk.expire_versions(path, keep_from=4)
     log = pathlib.Path(path) / lk._LOG_DIR
     assert not list(log.glob("ckptpq-*"))
     with pytest.raises(ValueError, match="no parquet checkpoint"):
         ck.state_frame(spark, path)
     # re-bootstrap works and agrees with JSON replay
-    ck.write_parquet_checkpoint(spark, path)
+    ck.write_parquet_checkpoint(path)
     pv, live_pq, dv_pq, _m = _state_sets(spark, path)
     _v, live, dvs, _t, _m2, _s = lk._state_full(path)
     assert pv == 5 and live_pq == live and dv_pq == dvs
     # ... and a checkpoint AT/above the boundary survives expiry
     path2 = _busy_table(spark, tmp_path.joinpath("b"))
-    ck.write_parquet_checkpoint(spark, path2, version=4)
+    ck.write_parquet_checkpoint(path2, version=4)
     lk.expire_versions(path2, keep_from=4)
     assert ck.latest_parquet_checkpoint(path2) == 4
     pv2 = ck.state_frame(spark, path2)[0]
@@ -244,16 +257,16 @@ def test_advance_across_rename_keeps_prune_parity(spark, tmp_path):
     folds the new colmap, and distributed pruning keeps translating
     logical predicates to the immutable physical names."""
     path = _busy_table(spark, tmp_path)
-    ck.write_parquet_checkpoint(spark, path, version=3)
+    ck.write_parquet_checkpoint(path, version=3)
     t = lk.Transaction(path)
     t.rename_column("id", "ident")
     t.commit()
-    ck.advance_parquet_checkpoint(spark, path)
+    ck.advance_parquet_checkpoint(path)
     for pred in ([("ident", "<", 5)], [("ident", ">=", 25)]):
         assert ck.prune_files_distributed(spark, path, pred) == lk.prune_files(
             path, pred
         ), pred
-    got = ck.read_table_distributed_prune(spark, path, [("ident", "<", 5)])
+    got = _routed_read(spark, path, [("ident", "<", 5)])
     exp = lk.read_table(spark, path, predicate=[("ident", "<", 5)])
     assert sorted(map(tuple, got.collect())) == sorted(
         map(tuple, exp.collect())
@@ -272,9 +285,9 @@ def test_format_writer_commits_feed_the_checkpoint_plane(spark, tmp_path):
         [(j, float(j)) for j in range(20)], "id long, v double"
     )
     src.write.format("lakehouse").mode("append").save(path)
-    ck.write_parquet_checkpoint(spark, path)
+    ck.write_parquet_checkpoint(path)
     src.write.format("lakehouse").mode("append").save(path)
-    v = ck.advance_parquet_checkpoint(spark, path)
+    v = ck.advance_parquet_checkpoint(path)
     assert v == 2
     pv, live_pq, dv_pq, _m = _state_sets(spark, path)
     _v, live, dvs, _t, _m2, _s = lk._state_full(path)
@@ -287,7 +300,7 @@ def test_restore_in_tail_keeps_add_rows_distinct(spark, tmp_path):
     carries — the base rows must drop, or the state frame holds
     duplicate add rows and every distributed-prune read doubles."""
     path = _busy_table(spark, tmp_path)
-    ck.write_parquet_checkpoint(spark, path)
+    ck.write_parquet_checkpoint(path)
     v0 = lk.latest_commit(path)
     t = lk.Transaction(path)
     t.compact(spark, n_files=1)
@@ -303,7 +316,7 @@ def test_restore_in_tail_keeps_add_rows_distinct(spark, tmp_path):
     assert dv_rows.count() == dv_rows.distinct().count()
     assert {r.file for r in dv_rows.collect()} == dvs
     # the frame-composed READ returns the same rows as JSON replay
-    got = ck.read_table_distributed_prune(spark, path, [("id", ">=", 0)])
+    got = _routed_read(spark, path, [("id", ">=", 0)])
     want = lk.read_table(spark, path, predicate=[("id", ">=", 0)])
     assert sorted(map(tuple, got.collect())) == sorted(
         map(tuple, want.collect())
@@ -314,7 +327,7 @@ def test_restore_in_tail_keeps_add_rows_distinct(spark, tmp_path):
         spark.createDataFrame([(900, 1.0)], "id long, v double").coalesce(1)
     )
     t.commit()
-    ck.advance_parquet_checkpoint(spark, path)
+    ck.advance_parquet_checkpoint(path)
     base = spark.read.parquet(
         str(ck._ckpt_dir(path, lk.latest_commit(path)))
     ).filter("kind='add'")
@@ -328,7 +341,7 @@ def test_state_arrow_and_meta_arrow_match_json_replay(spark, tmp_path):
     import json as _json
 
     path = _busy_table(spark, tmp_path)
-    ck.write_parquet_checkpoint(spark, path, version=3)
+    ck.write_parquet_checkpoint(path, version=3)
     # rename AFTER the checkpoint: the tail carries a set_meta fold
     t = lk.Transaction(path)
     t.rename_column("v", "val")
@@ -350,7 +363,7 @@ def test_checkpoint_planned_read_table_parity(spark, tmp_path):
     state_frame + distributed prune — rows, schema and prune
     decisions must equal the JSON-replay route (VERDICT r12 #1)."""
     path = _busy_table(spark, tmp_path)
-    ck.write_parquet_checkpoint(spark, path)
+    ck.write_parquet_checkpoint(path)
     pred = [("id", ">=", 10)]
     want = lk.read_table(spark, path, predicate=pred)  # JSON route
     spark.conf.set(ck.PLAN_MIN_FILES_CONF, "1")
@@ -374,7 +387,7 @@ def test_checkpoint_planned_read_table_parity(spark, tmp_path):
         t = lk.Transaction(empty)
         t.delete_where(spark, F.lit(True))
         t.commit()
-        ck.write_parquet_checkpoint(spark, empty)
+        ck.write_parquet_checkpoint(empty)
         with pytest.raises(ValueError, match="is empty"):
             lk.read_table(spark, empty)
     finally:
@@ -389,7 +402,7 @@ def test_datasource_plans_from_checkpoint_identically(spark, tmp_path):
 
     lds.register(spark)
     path = _busy_table(spark, tmp_path)
-    ck.write_parquet_checkpoint(spark, path)
+    ck.write_parquet_checkpoint(path)
     via_json = spark.read.format("lakehouse") \
         .option("planFromCheckpoint", "false").load(path)
     via_ckpt = spark.read.format("lakehouse") \
@@ -446,7 +459,7 @@ def test_commit_auto_advances_past_interval(spark, tmp_path):
 
     bump(0)
     assert ck.latest_parquet_checkpoint(path) is None  # never bootstrapped
-    v0 = ck.write_parquet_checkpoint(spark, path)
+    v0 = ck.write_parquet_checkpoint(path)
     spark.conf.set(ck.AUTO_ADVANCE_CONF, "2")
     try:
         bump(1)
@@ -487,7 +500,7 @@ def test_checkpoint_routes_respect_column_mapping_and_evolution(
             ).coalesce(1)
         )
         t.commit()
-    ck.write_parquet_checkpoint(spark, path)
+    ck.write_parquet_checkpoint(path)
     t = lk.Transaction(path)
     t.rename_column("v", "val")  # tail set_meta: colmap val->phys v
     t.commit()
@@ -541,7 +554,7 @@ def test_auto_advance_survives_concurrent_commits(spark, tmp_path):
         ).coalesce(1)
     )
     t.commit()
-    ck.write_parquet_checkpoint(spark, path)
+    ck.write_parquet_checkpoint(path)
     spark.conf.set(ck.AUTO_ADVANCE_CONF, "1")  # advance every commit
     errors = []
 
@@ -568,31 +581,11 @@ def test_auto_advance_survives_concurrent_commits(spark, tmp_path):
     finally:
         spark.conf.unset(ck.AUTO_ADVANCE_CONF)
     assert not errors
-    ck.advance_parquet_checkpoint(spark, path)  # settle to the tip
+    ck.advance_parquet_checkpoint(path)  # settle to the tip
     _pv, live_pq, dv_pq, meta_pq = _state_sets(spark, path)
     _v, live, dvs, _txns, meta, _stats = lk._state_full(path)
     assert (live_pq, dv_pq, meta_pq) == (live, dvs, meta)
     assert lk.read_table(spark, path).count() == 16
-
-
-def test_arrow_advance_matches_spark_advance(spark, tmp_path):
-    """The session-less (pyarrow) checkpoint advance — what the
-    registered writer's commit hook runs — must land a checkpoint
-    state-identical to the Spark-job advance over the same tail."""
-    path = _busy_table(spark, tmp_path)
-    ck.write_parquet_checkpoint(spark, path, version=3)
-    v = ck.advance_parquet_checkpoint_arrow(path)
-    assert v == 5 == ck.latest_parquet_checkpoint(path)
-    adv = spark.read.parquet(str(ck._ckpt_dir(path, 5)))
-    v2, live, dvs, txns, meta, stats = lk._state_full(path, 5)
-    boot = spark.createDataFrame(
-        ck._rows_of_state(live, dvs, txns, meta, stats), ck._SCHEMA
-    )
-    assert sorted(map(tuple, adv.collect())) == sorted(
-        map(tuple, boot.collect())
-    )
-    # idempotent at the tip
-    assert ck.advance_parquet_checkpoint_arrow(path) == 5
 
 
 def test_format_writer_auto_advances_checkpoint(spark, tmp_path):
@@ -609,7 +602,7 @@ def test_format_writer_auto_advances_checkpoint(spark, tmp_path):
         spark.createDataFrame([(0, 0.0)], "id long, v double").coalesce(1)
     )
     t.commit()
-    v0 = ck.write_parquet_checkpoint(spark, path)
+    v0 = ck.write_parquet_checkpoint(path)
     for i in range(ck.AUTO_ADVANCE_DEFAULT):
         spark.createDataFrame(
             [(i + 1, 1.0)], "id long, v double"
@@ -639,7 +632,7 @@ def test_delete_of_restored_file_stays_deleted(spark, tmp_path):
             ).coalesce(1)
         )
         t.commit()
-    ck.write_parquet_checkpoint(spark, path)
+    ck.write_parquet_checkpoint(path)
     v0 = lk.latest_commit(path)
     t = lk.Transaction(path)
     assert t.delete_where(spark, F.col("id") < 10) == 10
@@ -657,10 +650,10 @@ def test_delete_of_restored_file_stays_deleted(spark, tmp_path):
     assert (av, set(alive), advs) == (pv, live, dvs)
     sv, kept, dvf, _m2, total = ck.prune_scan_arrow(path, [])
     assert (sv, set(kept), set(dvf), total) == (pv, live, dvs, len(live))
-    got = ck.read_table_distributed_prune(spark, path, [("id", ">=", 0)])
+    got = _routed_read(spark, path, [("id", ">=", 0)])
     assert sorted(r.id for r in got.collect()) == list(range(10, 20))
     # the advance must not resurrect the file into the next generation
-    ck.advance_parquet_checkpoint(spark, path)
+    ck.advance_parquet_checkpoint(path)
     base = spark.read.parquet(
         str(ck._ckpt_dir(path, lk.latest_commit(path)))
     ).filter("kind='add'")
@@ -683,7 +676,7 @@ def test_dv_removed_after_restore_readd_stays_removed(spark, tmp_path):
     t = lk.Transaction(path)
     t.delete_where_mor(spark, F.col("id") == 5)  # DV in the base
     t.commit()
-    ck.write_parquet_checkpoint(spark, path)
+    ck.write_parquet_checkpoint(path)
     v0 = lk.latest_commit(path)
     t = lk.Transaction(path)
     t.delete_where(spark, F.col("id") == 6)  # CoW: remove file+DV
@@ -697,12 +690,12 @@ def test_dv_removed_after_restore_readd_stays_removed(spark, tmp_path):
     assert (pv, live_pq, dv_pq) == (lk.latest_commit(path), live, dvs)
     av, alive, advs, _am = ck.state_arrow(path)
     assert (av, set(alive), advs) == (pv, live, dvs)
-    got = ck.read_table_distributed_prune(spark, path, [("id", ">=", 0)])
+    got = _routed_read(spark, path, [("id", ">=", 0)])
     want = lk.read_table(spark, path)
     assert sorted(map(tuple, got.collect())) == sorted(
         map(tuple, want.collect())
     )
-    ck.advance_parquet_checkpoint(spark, path)
+    ck.advance_parquet_checkpoint(path)
     nxt = spark.read.parquet(
         str(ck._ckpt_dir(path, lk.latest_commit(path)))
     )

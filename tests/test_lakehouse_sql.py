@@ -764,7 +764,7 @@ def test_convert_then_checkpoint_then_source_composition(spark, tmp_path):
     ).repartition(4).write.parquet(plain)
     run_sql(spark, f"CONVERT TO LAKEHOUSE parquet.`{plain}`")
     run_sql(spark, f"DELETE FROM lakehouse.`{plain}` WHERE id = 1")
-    ck.write_parquet_checkpoint(spark, plain)
+    ck.write_parquet_checkpoint(plain)
     via_json = spark.read.format("lakehouse") \
         .option("planFromCheckpoint", "false").load(plain) \
         .filter("id < 20")

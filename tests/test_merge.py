@@ -362,13 +362,22 @@ def test_merge_tombstone_null_op_upserts_instead_of_deleting(spark):
     assert got[7] == 70.0   # inserted
     assert len(got) == 6
 
+
+def _publish(spark, path, df):
+    """One whole-table snapshot version: a ``replace_where([])`` commit."""
+    from market_etl_spark import lakehouse as lk
+
+    t = lk.Transaction(path)
+    t.replace_where(spark, [], df)
+    t.commit()
+
+
 def test_read_changes_cdf_shape_and_ivm_refresh(spark, tmp_path):
-    """CDF over the versioned store: per-step full-row change records
-    in the Delta readChangeFeed shape, and the incremental-consumer
-    contract — an aggregate refreshed FROM THE FEED equals the direct
-    aggregate of the final snapshot."""
+    """CDF over commit-log snapshot versions: per-step full-row change
+    records in the Delta readChangeFeed shape, and the
+    incremental-consumer contract — an aggregate refreshed FROM THE
+    FEED equals the direct aggregate of the final snapshot."""
     from market_etl_spark.merge import read_changes
-    from market_etl_spark.sinks import write_versioned
 
     path = str(tmp_path / "store")
     v1 = spark.createDataFrame(
@@ -386,7 +395,7 @@ def test_read_changes_cdf_shape_and_ivm_refresh(spark, tmp_path):
         "id long, g string, v double",
     )
     for df in (v1, v2, v3):
-        write_versioned(df, path)
+        _publish(spark, path, df)
 
     feed = read_changes(spark, path, 1, 3, ["id"])
     got = {
@@ -440,11 +449,10 @@ def test_read_changes_key_only_table(spark, tmp_path):
     insert/delete feed instead of crashing on an empty hash arg list
     (review r10)."""
     from market_etl_spark.merge import read_changes
-    from market_etl_spark.sinks import write_versioned
 
     path = str(tmp_path / "store")
-    write_versioned(spark.createDataFrame([(1,), (2,)], "k long"), path)
-    write_versioned(spark.createDataFrame([(2,), (3,)], "k long"), path)
+    _publish(spark, path, spark.createDataFrame([(1,), (2,)], "k long"))
+    _publish(spark, path, spark.createDataFrame([(2,), (3,)], "k long"))
     got = {
         (r.k, r._change_type)
         for r in read_changes(spark, path, 1, 2, ["k"]).collect()

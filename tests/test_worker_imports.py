@@ -48,7 +48,7 @@ _SCRIPT = textwrap.dedent(
             .coalesce(1)
         )
         t.commit()
-    ck.write_parquet_checkpoint(spark, path)
+    ck.write_parquet_checkpoint(path)
     pred = [("id", "<", 5)]
     got = ck.prune_files_distributed(spark, path, pred)
     print("PRUNED", got == lk.prune_files(path, pred), got[0])

@@ -236,7 +236,7 @@ def _lakehouse_drills(spark, sf_dir):
 
     from market_etl_spark import lakehouse as lk
     from market_etl_spark import merge, mor
-    from market_etl_spark.sinks import write_manifested, write_versioned
+    from market_etl_spark.sinks import write_manifested
     from market_etl_spark.tables import fresh_scratch
 
     cust = spark.read.parquet(f"{sf_dir}/customer.parquet").selectExpr(
@@ -245,10 +245,13 @@ def _lakehouse_drills(spark, sf_dir):
     )
     out = []
 
-    # 1. the snapshot-store CDF step (q_version_change_feed)
+    # 1. the keyed CDF step over two whole-table log versions
+    # (q_version_change_feed)
     p = fresh_scratch("plans_cdf_store")
-    write_versioned(cust, p)
-    write_versioned(cust.filter("k % 7 <> 0"), p)
+    for snap in (cust, cust.filter("k % 7 <> 0")):
+        t = lk.Transaction(p)
+        t.replace_where(spark, [], snap)
+        t.commit()
     out.append((
         "q_version_change_feed (one read_changes step)",
         "The per-step diff is ONE shuffle: both snapshots union-tagged, "
