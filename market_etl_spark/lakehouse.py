@@ -403,8 +403,8 @@ def expire_versions(path: str, keep_from: int) -> dict:
             continue
     # parquet checkpoints below the boundary reference deleted files
     # AND their replay tail's commit JSONs are gone — leaving one
-    # behind would poison lakehouse_checkpoint.state_frame with a
-    # FileNotFoundError mid-tail instead of a clean re-bootstrap error
+    # behind would send checkpoint-composed reads (plan_scan,
+    # state_arrow) into a FileNotFoundError mid-tail
     for p in log.glob(f"{_PQ_CKPT_PREFIX}*"):
         try:
             if p.is_dir() and int(p.name[len(_PQ_CKPT_PREFIX):]) < keep_from:
@@ -1094,41 +1094,15 @@ def read_table(
     conj = list(predicate) if predicate is not None else []
     from . import lakehouse_checkpoint as _ckpt  # lazy: circular import
 
-    if _ckpt.plan_from_checkpoint(spark, path, version):
-        # checkpoint-composed planning (round 13, VERDICT r12 #1):
-        # past the file-count threshold the state composes as a PLAN
-        # over checkpoint-parquet + the delta-sized JSON tail, and the
-        # per-file _stats_admit evaluation fans out over executors —
-        # the driver never parses the O(files) JSON blob or loops the
-        # live set.  Decisions are identical by construction (same
-        # evaluator, same stats); test_checkpoint_planned_read pins
-        # scan-list equality against the JSON-replay route.
-        v, scan, dv_list, meta, empty = _ckpt.plan_scan_distributed(
-            spark, path, conj, version
-        )
-        dvs = set(dv_list)
-        if empty:
-            raise ValueError(f"table at {path} is empty at version {v}")
-    else:
-        v, live, dvs, _txns, meta, stats = _state_full(path, version)
-        if v == 0:
-            raise ValueError(f"no commits at {path}")
-        if not live:
-            raise ValueError(f"table at {path} is empty at version {v}")
-        # stats are keyed by PHYSICAL column names (footer-derived):
-        # translate the logical predicate columns before consulting
-        # them; the residual filter below runs on the logical frame
-        # untranslated
-        cm = _colmap(meta)
-        conj_phys = [(cm.get(c, c), op, val) for c, op, val in conj]
-        scan = [
-            f
-            for f in sorted(live)
-            if all(
-                _stats_admit(stats.get(f), c, op, val)
-                for c, op, val in conj_phys
-            )
-        ]
+    # one planner: the newest parquet checkpoint plus the JSON tail, or
+    # JSON replay; footer stats are keyed by PHYSICAL column names and
+    # plan_scan translates the logical predicate columns itself (the
+    # residual filter below runs on the logical frame untranslated)
+    v, scan, dvs, meta, total = _ckpt.plan_scan(path, conj, version)
+    if v == 0:
+        raise ValueError(f"no commits at {path}")
+    if not total:
+        raise ValueError(f"table at {path} is empty at version {v}")
     root = pathlib.Path(path)
     if not scan:
         # every file pruned: a correct empty frame of the committed

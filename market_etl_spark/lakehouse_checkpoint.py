@@ -1,22 +1,16 @@
-"""Distributed metadata plane: the log state as a PARQUET checkpoint.
+"""The log state as a PARQUET checkpoint, and the one scan planner.
 
-VERDICT r11 item 2: the commit log's JSON checkpoint
-(:func:`lakehouse.write_checkpoint`) is replayed driver-side — the
-right STRUCTURE (replay is checkpoint-bounded, never O(table
-lifetime)) but the wrong MEDIUM at a million files: a 100 TB table at
-128 MB/file carries ~800k live add actions, and a driver that parses
-them all from one JSON blob — then loops ``_stats_admit`` per file —
-becomes the planning bottleneck Delta solved by checkpointing the log
-AS PARQUET and pruning it distributed.  This module is that answer,
-kept strictly DERIVED: the JSON log remains the only source of truth,
-a parquet checkpoint is deterministic from its prefix, and every
-consumer falls back to JSON replay when no parquet checkpoint exists.
+A 100 TB table at 128 MB/file carries ~800k live add actions; a
+driver that replays them from the JSON log, then loops
+``_stats_admit`` per file, becomes the planning bottleneck Delta
+solved by checkpointing the log AS PARQUET.  The checkpoint is
+strictly DERIVED: the JSON log stays the only source of truth, and
+every consumer falls back to JSON replay when no checkpoint exists
+or its parts cannot be read.
 
 Layout — ``_log/ckptpq-{version:08d}/`` is a parquet DATASET (parts
-of ~100k rows; the metadata itself scales out) with one row per state
-element, Delta's own checkpoint shape (add rows carrying a
-``stats`` JSON string column — delta-spec checkpoints store exactly
-that):
+of ~100k rows), one row per state element in Delta's checkpoint
+shape (add rows carry the footer stats as a JSON string):
 
     kind:    'add' | 'dv' | 'meta' | 'txn'
     file:    table-relative path ('' for meta/txn rows)
@@ -24,37 +18,22 @@ that):
     payload: JSON string (table meta / txn app+version)
 
 Every read composes the Delta way — newest parquet checkpoint ≤ v
-plus the delta-sized JSON tail (:func:`_base_and_tail`) — and every
-generation lands through one writer (:func:`_land`: tmp dir, parts,
-atomic rename, retention sweep).  Checkpoints are written with
-pyarrow in the caller's process, so they need no SparkSession (the
-registered writer commits from Spark's session-less worker):
-
-- :func:`write_parquet_checkpoint` — bootstrap from JSON replay (one
-  driver pass, unavoidable the first time).
-- :func:`advance_parquet_checkpoint` — the scale path: the base
-  checkpoint STREAMS through as Arrow record batches minus the rows
-  the tail supersedes, followed by the tail's rows — the driver never
-  holds the O(files) base table, and its JSON work is O(tail).
-- :func:`state_arrow` / :func:`meta_arrow` / :func:`prune_scan_arrow`
-  — the session-less reads the DataSource planning worker uses.
-- :func:`state_frame` — the live state AS A DATAFRAME, the input of
-  the distributed planner: :func:`prune_files_distributed` /
-  :func:`plan_scan_distributed` run the SAME
-  :func:`lakehouse._stats_admit` predicate (one source of truth — the
-  verdict's "prune decisions identical" contract is by construction)
-  inside ``mapInPandas`` over the add rows.  At 800k files that is a
-  parallel metadata scan instead of a driver loop.
-- :func:`stats_distributed` — staged-file footer stats as ONE Spark
-  job (``mapPartitions`` over the path list, each executor reading
-  its parquet footers locally with the same :func:`lakehouse._file_stats`),
-  for full-table rewrites that stage thousands of files — the r11
-  verdict's "stats off the driver" item.
+plus the JSON tail (:func:`_base_and_tail`) — and every generation
+lands through :func:`_land`.  :func:`write_parquet_checkpoint`
+bootstraps from JSON replay; :func:`advance_parquet_checkpoint`
+streams the base through as Arrow batches minus what the tail
+supersedes.  :func:`plan_scan` is THE scan planner behind
+``read_table`` and the DataSource reader: :func:`prune_scan_arrow`
+decides each streamed batch with ``pyarrow.compute`` over stats
+parsed at read time (what it cannot decide exactly goes to
+:func:`lakehouse._stats_admit` row by row), else JSON replay.  Only
+:func:`stats_distributed` (staged-file footer stats as ONE Spark
+job) needs a SparkSession.
 
 Reference anchor: the reference's metadata plane is the Glue catalog
-+ MSCK (sql/athena_create_trades_tales.sql, sql/
-athena_repair_partitions.sql; re-crawled, not transactional); both the
-JSON log and this parquet plane are engine extensions.
++ MSCK (sql/athena_repair_partitions.sql; re-crawled, not
+transactional); both the JSON log and this parquet plane are engine
+extensions.
 """
 
 from __future__ import annotations
@@ -66,8 +45,7 @@ import pathlib
 import uuid
 from typing import NamedTuple
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import SparkSession
 
 from . import lakehouse as lk
 
@@ -75,21 +53,12 @@ _CKPT_PREFIX = lk._PQ_CKPT_PREFIX  # layout owned by the log module:
 # expire_versions and vacuum_orphans sweep these dirs by prefix
 
 _COLS = ["kind", "file", "stats", "payload"]
-_SCHEMA = "kind string, file string, stats string, payload string"
 _PART_ROWS = 100_000  # rows per part file
 
 
 def _ckpt_dir(path: str, version: int) -> pathlib.Path:
     return pathlib.Path(path) / lk._LOG_DIR / f"{_CKPT_PREFIX}{version:08d}"
 
-
-#: Live-file count above which planning consults the parquet
-#: checkpoint instead of JSON replay (round 13, VERDICT r12 #1).
-#: Below it the JSON path is cheaper (no Spark job / dataset-read
-#: overhead); above it the monolithic JSON parse is the driver
-#: bottleneck the checkpoint plane removes.  Runtime-settable.
-PLAN_MIN_FILES_CONF = "spark.market_etl.lakehouse.checkpointPlanMinFiles"
-PLAN_MIN_FILES_DEFAULT = 8192
 
 #: Commits between automatic checkpoint advances (Delta checkpoints
 #: its JSON log every 10 commits).  ``0`` disables auto-advance.
@@ -99,43 +68,14 @@ AUTO_ADVANCE_CONF = "spark.market_etl.lakehouse.checkpointInterval"
 AUTO_ADVANCE_DEFAULT = 10
 
 
-def checkpoint_row_estimate(
-    path: str, max_version: int | None = None
-) -> int | None:
-    """State-row count of the newest parquet checkpoint ≤
-    ``max_version`` from its part-file FOOTERS (KB-sized metadata
-    reads) — an O(1)-per-part upper bound on live files, cheap enough
-    to gate every plan.  None when no checkpoint exists."""
-    import pyarrow.parquet as pq
-
-    v0 = latest_parquet_checkpoint(path, max_version)
-    if v0 is None:
-        return None
-    total = 0
-    for part in _ckpt_dir(path, v0).glob("*.parquet"):
-        try:
-            total += pq.ParquetFile(str(part)).metadata.num_rows
-        except Exception:
-            return None  # unreadable checkpoint: fall back to JSON
-    return total
-
-
-def plan_from_checkpoint(spark, path: str, version: int | None = None) -> bool:
-    """True when planning should consult the parquet checkpoint: one
-    exists at or below ``version`` and its state-row estimate clears
-    :data:`PLAN_MIN_FILES_CONF`.  ``spark`` may be None (the Python
-    DataSource planning process has no session) — the default
-    threshold applies there."""
-    est = checkpoint_row_estimate(path, version)
-    if est is None:
-        return False
-    floor = PLAN_MIN_FILES_DEFAULT
-    if spark is not None:
-        try:
-            floor = int(spark.conf.get(PLAN_MIN_FILES_CONF, str(floor)))
-        except (TypeError, ValueError):
-            pass
-    return est >= floor
+def _generations(path: str) -> list[int]:
+    """Versions of the parquet checkpoints present, ascending."""
+    log = pathlib.Path(path) / lk._LOG_DIR
+    return sorted(
+        int(p.name[len(_CKPT_PREFIX):])
+        for p in log.glob(f"{_CKPT_PREFIX}*")
+        if p.is_dir() and p.name[len(_CKPT_PREFIX):].isdigit()
+    )
 
 
 def latest_parquet_checkpoint(
@@ -143,20 +83,10 @@ def latest_parquet_checkpoint(
 ) -> int | None:
     """Newest parquet checkpoint version ≤ ``max_version`` (None =
     any), or None."""
-    log = pathlib.Path(path) / lk._LOG_DIR
-    if not log.exists():
-        return None
-    best = -1
-    for p in log.glob(f"{_CKPT_PREFIX}*"):
-        if not p.is_dir():
-            continue
-        try:
-            v = int(p.name[len(_CKPT_PREFIX):])
-        except ValueError:
-            continue
-        if max_version is None or v <= max_version:
-            best = max(best, v)
-    return best if best >= 0 else None
+    return max(
+        (v for v in _generations(path) if max_version is None or v <= max_version),
+        default=None,
+    )
 
 
 class _Tail(NamedTuple):
@@ -173,11 +103,9 @@ class _Tail(NamedTuple):
 
     @property
     def gone(self) -> set:
-        """Files whose BASE add/dv rows must drop: everything the tail
-        removed AND everything it re-emits (a remove + re-add inside
-        the tail, the RESTORE sequence, nets to ``added`` alone —
-        keeping the base row too would duplicate the file; ADVICE
-        r12, high)."""
+        """Files whose BASE add/dv rows must drop: all the tail removed
+        or re-emits (a RESTORE's remove + re-add nets to ``added``; the
+        base row would duplicate the file, ADVICE r12)."""
         return self.removed | set(self.added) | self.dv_removed | self.dv_added
 
 
@@ -199,20 +127,16 @@ def _tail_net(path: str, v_from: int, v_to: int) -> _Tail:
                     json.dumps(a["stats"]) if a.get("stats") else ""
                 )
             elif a["op"] == "remove":
-                # a remove must ALWAYS land in `removed`, even when it
-                # cancels a tail re-add (checkpoint → DELETE → RESTORE
-                # → DELETE): the base checkpoint may still carry an add
-                # row for this file, and only the `removed` set evicts
-                # it.  A spurious `removed` entry for a base-absent
-                # file is a no-op in every consumer — ADVICE r13, high.
+                # ALWAYS lands in `removed`, even cancelling a tail
+                # re-add: only `removed` evicts a base add row (ADVICE
+                # r13); for a base-absent file it is a no-op
                 t.added.pop(a["file"], None)
                 t.removed.add(a["file"])
             elif a["op"] == "add_dv":
                 t.dv_removed.discard(a["file"])
                 t.dv_added.add(a["file"])
             elif a["op"] == "remove_dv":
-                # symmetric to `remove`: the base may carry a dv row
-                # that only `dv_removed` can evict
+                # as `remove`: only `dv_removed` evicts a base dv row
                 t.dv_added.discard(a["file"])
                 t.dv_removed.add(a["file"])
             elif a["op"] == "set_meta":
@@ -233,19 +157,30 @@ def _base_and_tail(path: str, version: int | None) -> tuple[int, int, _Tail]:
     return v, v0, _tail_net(path, v0, v)
 
 
+class _Unreadable(Exception):
+    """A checkpoint part could not be opened or scanned (truncated or
+    foreign bytes); planning falls back to JSON replay."""
+
+
 def _base_batches(path: str, v0: int, kinds, gone=(), columns=_COLS):
     """The base checkpoint's rows of ``kinds`` minus those whose file
     is in ``gone``, STREAMED as Arrow record batches — peak memory is
-    a few batches, never the O(files) base table."""
+    a few batches, never the O(files) base table.  Open and scan
+    errors surface as :class:`_Unreadable`; errors in the consumer's
+    own work on a batch do not pass through here."""
+    import pyarrow as pa
     import pyarrow.dataset as pads
 
     filt = pads.field("kind").isin(list(kinds))
     if gone:
         filt = filt & ~pads.field("file").isin(list(gone))
-    dset = pads.dataset(str(_ckpt_dir(path, v0)), format="parquet")
-    return dset.scanner(
-        columns=list(columns), filter=filt, batch_size=16384
-    ).to_batches()
+    try:
+        dset = pads.dataset(str(_ckpt_dir(path, v0)), format="parquet")
+        yield from dset.scanner(
+            columns=list(columns), filter=filt, batch_size=16384
+        ).to_batches()
+    except (OSError, pa.ArrowException) as e:
+        raise _Unreadable(f"checkpoint {v0} at {path}: {e}") from e
 
 
 def _base_side(
@@ -274,13 +209,15 @@ def _base_side(
 
 
 def _live_adds(path: str, v0: int, tail: _Tail):
-    """``(file, stats JSON)`` of every live add at the tail's end: the
-    base rows streamed batch by batch, then the tail's."""
-    for batch in _base_batches(path, v0, ["add"], tail.gone, ["file", "stats"]):
-        yield from zip(
-            batch.column("file").to_pylist(), batch.column("stats").to_pylist()
-        )
-    yield from tail.added.items()
+    """Every live add at the tail's end as Arrow ``(file, stats JSON)``
+    record batches: the base rows streamed, then the tail's."""
+    import pyarrow as pa
+
+    yield from _base_batches(path, v0, ["add"], tail.gone, ["file", "stats"])
+    yield pa.record_batch(
+        [pa.array(list(c), pa.string()) for c in (tail.added, tail.added.values())],
+        names=["file", "stats"],
+    )
 
 
 def _state_rows(adds: dict, dvs, meta: dict, txns: dict) -> list[tuple]:
@@ -310,73 +247,243 @@ def state_arrow(
 ) -> tuple[int, dict, set, dict]:
     """``(version, {live file: stats JSON str}, live DV set, meta)``
     composed from the newest parquet checkpoint ≤ ``version`` plus the
-    JSON tail — WITHOUT a SparkSession, for the Python DataSource
-    planning process (Spark runs ``partitions()`` in a session-less
-    worker, so :func:`state_frame` cannot serve it).  The O(files)
-    base state arrives as a COLUMNAR pyarrow read (no monolithic JSON
-    blob parse); only the delta-sized tail is JSON work.  Raises when
-    no parquet checkpoint ≤ version exists (callers fall back to
-    :func:`lakehouse._state_full`)."""
+    JSON tail: a COLUMNAR read of the O(files) base, JSON work only
+    for the tail.  Raises when no parquet checkpoint ≤ version exists
+    (callers fall back to :func:`lakehouse._state_full`)."""
     v, v0, tail = _base_and_tail(path, version)
     meta, dvs, _txns = _base_side(path, v0, tail, ("meta", "dv"))
-    return v, dict(_live_adds(path, v0, tail)), dvs, meta
+    adds: dict = {}
+    for b in _live_adds(path, v0, tail):
+        adds.update(zip(b.column("file").to_pylist(), b.column("stats").to_pylist()))
+    return v, adds, dvs, meta
 
 
 def meta_arrow(path: str, version: int | None = None) -> tuple[int, dict]:
     """``(version, table meta)`` from the newest parquet checkpoint ≤
     ``version`` plus the tail's ``set_meta`` folds — a projected
     pyarrow read of the meta row, no session, no O(files) state
-    build.  For the DataSource ``schema()`` hook on checkpoint-backed
-    tables."""
+    build."""
     v, v0, tail = _base_and_tail(path, version)
     meta, _dvs, _txns = _base_side(path, v0, tail, ("meta",))
     return v, meta
 
 
+#: committed column type -> Arrow type of its stats in the vectorised
+#: prune; other types (dates and timestamps, which _align_temporal may
+#: promote, booleans, decimals) are decided row by row
+_STAT_TYPES = {
+    **dict.fromkeys(("tinyint", "smallint", "int", "bigint"), "int64"),
+    **dict.fromkeys(("float", "double"), "float64"),
+    "string": "string",
+}
+#: every ISO date/datetime string _align_temporal tests starts so
+_ISO_LIKE = r"^.{4}-.{2}-.{2}"
+
+
+def _vector_plan(meta: dict, conj) -> list | None:
+    """``[(physical column, stat type, op, key scalars)]`` for the
+    physical-name ``conj``, or None when a conjunct needs the
+    row-by-row rule.  Keys are None where _stats_admit admits whatever
+    the bounds (no skipping key, or a TypeError against them)."""
+    import datetime
+
+    import pyarrow as pa
+
+    cm = lk._colmap(meta)
+    types = {cm.get(n, n): _STAT_TYPES.get(str(t).lower())
+             for n, t in meta.get("schema", [])}
+    plan = []
+    for c, op, val in conj:
+        vals = val if op == "in" else [val]
+        if (types.get(c) is None or op not in ("=", "<", "<=", ">", ">=", "in")
+                or not isinstance(vals, (list, tuple, set, frozenset))):
+            return None
+        t, keys = pa.type_for_alias(types[c]), []
+        for x in vals:
+            k = lk._json_stat(x)
+            if isinstance(x, datetime.date) or (
+                t == pa.int64() and isinstance(k, float) and not k.is_integer()
+            ):
+                return None
+            if k is None or (t == pa.string()) != isinstance(k, str):
+                keys = None
+                break
+            try:  # refuses inexact conversions and lone surrogates
+                keys.append(pa.scalar(k, t))
+            except (ValueError, TypeError, OverflowError):
+                return None
+        plan.append((c, t, op, keys))
+    return plan
+
+
+def _decide(tbl, c: str, t, op: str, keys):
+    """``(admit, unsure)`` numpy masks of one conjunct over parsed stats,
+    by _stats_admit's rules in its order.  ``unsure`` marks compared
+    rows the masks may get wrong: float bounds from 2**53 (an integer
+    stat parsed as a double may round) and ISO-shaped strings
+    (_align_temporal may call them ambiguous)."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    def mask(x):
+        return pc.fill_null(x, False).to_numpy(zero_copy_only=False)
+
+    rows, col = tbl.column("rows"), pc.struct_field(tbl.column("cols"), c)
+    lo, hi = pc.struct_field(col, "min"), pc.struct_field(col, "max")
+    zero = mask(pc.equal(rows, 0))
+    absent = ~mask(pc.is_valid(col))
+    all_null = mask(pc.equal(pc.struct_field(col, "nulls"), rows))
+    unbounded = ~mask(pc.and_(pc.is_valid(lo), pc.is_valid(hi)))
+    hit, unsure = np.ones(len(rows), bool), np.zeros(len(rows), bool)
+    if keys is not None and op in ("=", "in"):
+        hit[:] = False
+        for k in keys:
+            hit |= mask(pc.and_(pc.less_equal(lo, k), pc.greater_equal(hi, k)))
+    elif keys is not None:
+        fn, side = {"<": (pc.less, lo), "<=": (pc.less_equal, lo),
+                    ">": (pc.greater, hi), ">=": (pc.greater_equal, hi)}[op]
+        hit = mask(fn(side, keys[0]))
+    if keys is not None and t != pa.int64():
+        for b in (lo, hi):
+            unsure |= mask(
+                pc.greater_equal(pc.abs(b), 2.0**53) if t == pa.float64()
+                else pc.match_substring_regex(b, _ISO_LIKE)
+            )
+    compared = ~zero & ~absent & ~all_null & ~unbounded
+    return ~zero & (absent | (~all_null & (unbounded | hit))), unsure & compared
+
+
+def _stats_pruner(meta: dict, predicate):
+    """``keep(stats)`` -> numpy mask of _stats_admit's decisions under
+    the LOGICAL ``predicate`` for an Arrow array of stats JSON strings.
+    Under a :func:`_vector_plan`, a batch parses only ``rows`` and the
+    predicate columns' bounds, typed from the committed schema, for
+    :func:`_decide`; unsure rows, unparsable batches and unplanned
+    predicates run _stats_admit per row."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.json as pj
+
+    cm = lk._colmap(meta)
+    conj = [(cm.get(c, c), op, val) for c, op, val in predicate]
+    if not conj:
+        return lambda stats: np.ones(len(stats), bool)
+
+    def by_row(stats):
+        sts = [json.loads(s) if s else None for s in stats.to_pylist()]
+        return np.array([all(lk._stats_admit(st, *c) for c in conj) for st in sts], bool)
+
+    plan = _vector_plan(meta, conj)
+    if plan is None:
+        return by_row
+    bounds = [(c, pa.struct([("min", t), ("max", t), ("nulls", pa.int64())]))
+              for c, t in dict(p[:2] for p in plan).items()]
+    parse = pj.ParseOptions(
+        explicit_schema=pa.schema([("rows", pa.int64()), ("cols", pa.struct(bounds))]),
+        unexpected_field_behavior="ignore",
+    )
+
+    def keep(stats):
+        # one JSON line per file; '' (no stats) reads as {}, which admits
+        lines = pc.if_else(pc.equal(stats, ""), "{}", stats)
+        one = pa.ListArray.from_arrays(pa.array([0, len(lines)], pa.int32()), lines)
+        blob = pc.binary_join(one, "\n")[0].as_buffer()
+        try:
+            tbl = pj.read_json(pa.BufferReader(blob), parse_options=parse)
+        except pa.ArrowInvalid:
+            tbl = None
+        if tbl is None or tbl.num_rows != len(stats):  # rows must align
+            return by_row(stats)
+        out, unsure = np.ones(len(stats), bool), np.zeros(len(stats), bool)
+        for c, t, op, keys in plan:
+            admit, u = _decide(tbl, c, t, op, keys)
+            out &= admit
+            unsure |= u
+        idx = np.flatnonzero(unsure)
+        out[idx] = by_row(stats.take(pa.array(idx, pa.int64())))
+        return out
+
+    return keep
+
+
 def prune_scan_arrow(
     path: str, predicate, version: int | None = None
 ) -> tuple[int, list[str], list[str], dict, int]:
-    """``(version, surviving files sorted, DV files sorted, meta,
-    total live)`` — a predicate scan PLANNED from the parquet
-    checkpoint without a session, with decisions identical to
-    :func:`lakehouse.prune_files` by construction (the same
-    :func:`lakehouse._stats_admit` evaluates the same footer stats).
+    """:func:`plan_scan` from the newest parquet checkpoint ≤
+    ``version`` plus the JSON tail.  Adds stream through as Arrow
+    batches, each decided whole by :func:`_stats_pruner`: peak memory
+    is O(survivors + tail + one batch), JSON work O(tail).  Raises
+    when no checkpoint ≤ version exists."""
+    import pyarrow as pa
 
-    Memory shape for the session-less planning worker: the base adds
-    STREAM through as Arrow record batches (stats stay Arrow buffer
-    bytes until the per-row ``json.loads``), so peak Python-object
-    memory is O(survivors + tail + one batch), never O(live files) —
-    at ~800k files the full-dict composition (:func:`state_arrow`,
-    kept as the parity/debug surface) would hold the whole stats map
-    as Python strings.  Driver JSON work is O(tail)."""
     v, v0, tail = _base_and_tail(path, version)
     meta, dvs, _txns = _base_side(path, v0, tail, ("meta", "dv"))
-    cm = lk._colmap(meta)
-    conj = [(cm.get(c, c), op, val) for c, op, val in predicate]
-    admit = lk._stats_admit
-
-    def admits(stats_json: str) -> bool:
-        if not conj:
-            return True
-        st = json.loads(stats_json) if stats_json else None
-        return all(admit(st, c, op, val) for c, op, val in conj)
-
+    keep = _stats_pruner(meta, predicate)
     kept: list[str] = []
     total = 0
-    for f, s in _live_adds(path, v0, tail):
-        total += 1
-        if admits(s):
-            kept.append(f)
+    for b in _live_adds(path, v0, tail):
+        total += b.num_rows
+        kept += b.column("file").filter(pa.array(keep(b.column("stats")))).to_pylist()
     return v, sorted(kept), sorted(dvs), meta, total
+
+
+def _checkpointed(read, path: str, version: int | None, *args):
+    """``(v, read(path, *args, v))`` when a parquet checkpoint ≤ v
+    exists and its parts read, else ``(v, None)``: the caller replays
+    the log.  Only :class:`_Unreadable` falls back; any other error
+    (a defect in the decision code) propagates."""
+    v = lk.latest_commit(path) if version is None else version
+    if latest_parquet_checkpoint(path, v) is not None:
+        try:
+            return v, read(path, *args, v)
+        except _Unreadable:
+            pass
+    return v, None
+
+
+def plan_scan(
+    path: str, predicate, version: int | None = None, replay=None
+) -> tuple[int, list[str], list[str], dict, int]:
+    """THE scan planner behind ``read_table`` and the DataSource reader:
+    ``(version, surviving files sorted, DV files sorted, meta, total
+    live files)`` for LOGICAL ``(column, op, value)`` conjuncts (see
+    :func:`lakehouse.prune_files`) at ``version`` (default latest),
+    from the newest readable parquet checkpoint ≤ version plus the
+    JSON tail, else from JSON replay — or from ``replay``, the one
+    :func:`table_state` already took.  Driver-side, session-less."""
+    if replay is None:
+        v, planned = _checkpointed(prune_scan_arrow, path, version, predicate)
+        if planned is not None:
+            return planned
+        replay = lk._state_full(path, v)
+    v, live, dvs, _txns, meta, stats = replay
+    cm = lk._colmap(meta)
+    conj = [(cm.get(c, c), op, val) for c, op, val in predicate]
+    kept = [f for f in sorted(live)
+            if all(lk._stats_admit(stats.get(f), *cj) for cj in conj)]
+    return v, kept, sorted(dvs), meta, len(live)
+
+
+def table_state(
+    path: str, version: int | None = None
+) -> tuple[int, dict, tuple | None]:
+    """``(version, table meta, replay)``, resolved as :func:`plan_scan`
+    does; ``replay`` is the JSON replay taken when no checkpoint
+    serves (else None), for a :func:`plan_scan` at this version."""
+    v, read = _checkpointed(meta_arrow, path, version)
+    if read is not None:
+        return (*read, None)
+    replay = lk._state_full(path, v)
+    return replay[0], replay[4], replay
 
 
 def _land(path: str, v: int, batches, keep: int = 0) -> int:
     """Write ``batches`` as checkpoint generation ``v``: parts of
-    ~:data:`_PART_ROWS` rows in a tmp dir, renamed into place
-    atomically (a checkpoint is derived data — if an identical
-    generation already landed, the first one stays).  Then only the
-    ``keep`` newest generations survive (0 = sweep nothing).
-    Returns ``v``."""
+    ~:data:`_PART_ROWS` rows in a tmp dir renamed into place (if the
+    generation already landed, the first one stays), then sweep all
+    but the ``keep`` newest generations (0 = none).  Returns ``v``."""
     import shutil
 
     import pyarrow as pa
@@ -409,13 +516,7 @@ def _land(path: str, v: int, batches, keep: int = 0) -> int:
     else:
         os.rename(tmp, dest)
     if keep > 0:
-        log = pathlib.Path(path) / lk._LOG_DIR
-        vs = sorted(
-            int(p.name[len(_CKPT_PREFIX):])
-            for p in log.glob(f"{_CKPT_PREFIX}*")
-            if p.is_dir() and p.name[len(_CKPT_PREFIX):].isdigit()
-        )
-        for old in vs[:-keep]:
+        for old in _generations(path)[:-keep]:
             shutil.rmtree(_ckpt_dir(path, old), ignore_errors=True)
     return v
 
@@ -438,14 +539,12 @@ def advance_parquet_checkpoint(
     path: str, version: int | None = None, keep: int = 2
 ) -> int:
     """Roll the newest parquet checkpoint forward to ``version``
-    (default latest): the base checkpoint's add/dv rows stream
-    through minus the rows the JSON tail supersedes, followed by the
-    tail's rows and the folded meta/txn rows — O(files) work off the
-    driver's heap, O(tail) JSON work.  Bootstraps when no checkpoint
-    exists.  Only the ``keep`` newest checkpoints survive (default 2:
-    the new one plus its predecessor, so a reader racing the advance
-    never loses its base) — without retention every advance would
-    strand a full O(files) metadata generation forever."""
+    (default latest): the base's add/dv rows stream through minus what
+    the JSON tail supersedes, then the tail's and the folded meta/txn
+    rows — O(tail) JSON work, the O(files) base never on the heap.
+    Bootstraps when no checkpoint exists.  Only the ``keep`` newest
+    generations survive (default 2: the new one plus its predecessor,
+    so a reader racing the advance never loses its base)."""
     v = lk.latest_commit(path) if version is None else version
     if latest_parquet_checkpoint(path, v) is None:
         return write_parquet_checkpoint(path, v)
@@ -458,115 +557,13 @@ def advance_parquet_checkpoint(
     return _land(path, v, itertools.chain(base, [_rows_batch(rows)]), keep)
 
 
-def _apply_tail(
-    spark, base: DataFrame, path: str, v0: int, tail: _Tail
-) -> tuple[DataFrame, dict]:
-    """base (checkpoint rows at v0) + the tail -> state rows at the
-    tail's end, as a PLAN: the file-scale base never visits the
-    driver; meta/txn rows are O(1)/O(apps) and rebuilt driver-side."""
-    meta, _dvs, txns = _base_side(path, v0, tail, ("meta", "txn"))
-    df = base.filter(F.col("kind").isin("add", "dv"))
-    if tail.gone:
-        df = df.filter(~F.col("file").isin(sorted(tail.gone)))
-    rows = _state_rows(tail.added, tail.dv_added, meta, txns)
-    return df.unionByName(spark.createDataFrame(rows, _SCHEMA)), meta
-
-
-def state_frame(
-    spark: SparkSession, path: str, version: int | None = None
-) -> tuple[int, DataFrame, dict]:
-    """``(version, state rows as a DataFrame, table meta)`` — the
-    Delta read protocol: newest parquet checkpoint ≤ version plus the
-    JSON tail, composed as a plan.  Raises if no parquet checkpoint
-    exists (callers fall back to :func:`lakehouse._state_full`)."""
-    v, v0, tail = _base_and_tail(path, version)
-    base = spark.read.parquet(str(_ckpt_dir(path, v0)))
-    if v0 == v:
-        meta, _dvs, _txns = _base_side(path, v0, tail, ("meta",))
-        return v, base, meta
-    df, meta = _apply_tail(spark, base, path, v0, tail)
-    return v, df, meta
-
-
-def _pruned_adds(df: DataFrame, meta: dict, predicate) -> DataFrame:
-    """The state frame's surviving add rows under ``predicate`` as a
-    one-column plan — ``mapInPandas`` ships the SAME
-    :func:`lakehouse._stats_admit` evaluator, so prune decisions are
-    identical to the driver loop by construction."""
-    import pandas as pd
-
-    cm = lk._colmap(meta)
-    conj = [(cm.get(c, c), op, val) for c, op, val in predicate]
-    adds = df.filter(F.col("kind") == "add").select("file", "stats")
-    admit = lk._stats_admit
-
-    def prune(batches):
-        for pdf in batches:
-            keep = [
-                all(
-                    admit(json.loads(s) if s else None, c, op, val)
-                    for c, op, val in conj
-                )
-                for s in pdf["stats"]
-            ]
-            yield pd.DataFrame({"file": pdf["file"][keep]})
-
-    return adds.mapInPandas(prune, "file string")
-
-
-def prune_files_distributed(
-    spark: SparkSession, path: str, predicate, version: int | None = None
-) -> tuple[int, list[str], int]:
-    """:func:`lakehouse.prune_files` as a SPARK JOB — identical
-    contract, identical decisions (it runs the same
-    :func:`lakehouse._stats_admit` inside ``mapInPandas``), but the
-    per-file evaluation fans out over executors instead of looping on
-    the driver.  The returned survivor list is bounded by predicate
-    selectivity — the thing a planner needs anyway."""
-    v, df, meta = state_frame(spark, path, version)
-    kept_df = _pruned_adds(df, meta, predicate)
-    kept = sorted(r.file for r in kept_df.collect())
-    total = df.filter(F.col("kind") == "add").count()
-    return v, kept, total
-
-
-def plan_scan_distributed(
-    spark: SparkSession, path: str, predicate, version: int | None = None
-) -> tuple[int, list[str], list[str], dict, bool]:
-    """Everything :func:`lakehouse.read_table` needs to build its
-    scan — ``(version, surviving files sorted, DV files sorted, meta,
-    table_empty)`` — planned from the parquet checkpoint as Spark
-    jobs: the state composes as a plan (:func:`state_frame`, driver
-    work O(tail)) and the per-file prune fans out
-    (:func:`_pruned_adds`).  The survivor list returning to the
-    driver is bounded by predicate selectivity; the DV list by the
-    purge cadence.  ``table_empty`` distinguishes "no live files at
-    all" from "every file pruned" (read_table raises on the former,
-    returns a typed empty frame on the latter) — evaluated only when
-    no file survived, so the common case pays one metadata pass."""
-    v, df, meta = state_frame(spark, path, version)
-    kept = sorted(
-        r.file for r in _pruned_adds(df, meta, predicate).collect()
-    )
-    dvs = sorted(
-        r.file
-        for r in df.filter(F.col("kind") == "dv").select("file").collect()
-    )
-    empty = (
-        not kept and df.filter(F.col("kind") == "add").isEmpty()
-    )
-    return v, kept, dvs, meta, empty
-
-
 def stats_distributed(
     spark: SparkSession, paths, force_cols=()
 ) -> dict[str, dict | None]:
-    """Footer stats for ``paths`` as ONE Spark job: the path list is
-    parallelized, each executor reads its files' parquet FOOTERS
-    (KB-sized) with the same :func:`lakehouse._file_stats`, and only
-    the stats dicts return to the driver — a full-table rewrite
-    staging thousands of files pays one job, not thousands of serial
-    driver-side footer reads (VERDICT r11)."""
+    """Footer stats for ``paths`` as ONE Spark job: each executor reads
+    its files' parquet FOOTERS with the same :func:`lakehouse._file_stats`
+    and only the stats dicts return — a rewrite staging thousands of
+    files pays one job, not thousands of serial driver reads."""
     import pathlib as _pl
 
     paths = [str(p) for p in paths]

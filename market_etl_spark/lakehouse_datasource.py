@@ -130,6 +130,7 @@ from pyspark.sql.datasource import (
 )
 
 from . import lakehouse as lk
+from . import lakehouse_checkpoint as _ckpt
 
 #: Spark evaluates Python-source filter pushdown only when this conf
 #: is on — without it ``pushFilters`` is never called and every
@@ -166,32 +167,6 @@ def _options_path(options) -> str:
 
         p = unquote(urlparse(p).path)
     return p
-
-
-def _use_checkpoint_plan(options, path: str, version: int | None) -> bool:
-    """Whether this read plans from the parquet checkpoint.  Option
-    ``planFromCheckpoint``: ``auto`` (default — a checkpoint ≤ version
-    exists AND its row estimate clears the
-    ``checkpointPlanMinFiles`` option / module default), ``true``
-    (force — loud error when no checkpoint exists), ``false``."""
-    from . import lakehouse_checkpoint as _ckpt
-
-    mode = str(options.get("planFromCheckpoint", "auto")).lower()
-    if mode == "true":
-        return True
-    if mode == "false":
-        return False
-    if mode != "auto":
-        raise ValueError(
-            f"planFromCheckpoint must be auto|true|false, got {mode!r}"
-        )
-    est = _ckpt.checkpoint_row_estimate(path, version)
-    if est is None:
-        return False
-    floor = int(
-        options.get("checkpointPlanMinFiles", _ckpt.PLAN_MIN_FILES_DEFAULT)
-    )
-    return est >= floor
 
 
 def _resolve_version(options) -> int | None:
@@ -245,6 +220,20 @@ def _align_to_schema(tbl, fields, colmap, arrow_schema, pvals=None):
         else:
             arrays.append(pa.nulls(n, field.type))
     return pa.table(arrays, schema=arrow_schema)
+
+
+def _dv_files_by_base(root: pathlib.Path, dv_files) -> dict[str, list]:
+    """{target file basename -> sidecars naming it}, one column-projected
+    read per sidecar: each task then reads ONLY the sidecars that can
+    name it (per-file-scoped deletes, the Iceberg v2 plan shape)."""
+    import pyarrow.parquet as pq
+
+    by_base: dict[str, list] = {}
+    for dv in dv_files:
+        t = pq.read_table(str(root / dv), columns=["_dv_file"])
+        for base in set(t.column("_dv_file").to_pylist()):
+            by_base.setdefault(base, []).append(dv)
+    return by_base
 
 
 def _dv_positions_by_file(root: pathlib.Path, dv_files) -> dict[str, set]:
@@ -310,29 +299,21 @@ class _FileSlice(InputPartition):
 
 
 class _LakehouseBatchReader(DataSourceReader):
+    """Batch scan of one snapshot.  ``__init__`` resolves the version
+    and committed schema (:func:`..lakehouse_checkpoint.table_state`);
+    ``partitions()`` — which Spark runs in a SESSION-LESS planning
+    worker, so planning takes no Spark job — prunes through the one
+    planner, :func:`..lakehouse_checkpoint.plan_scan`, under the
+    pushed filters, and fans out one task per surviving file.  On a
+    table without a parquet checkpoint the JSON replay ``__init__``
+    took is handed to the planner, so the log is replayed once."""
+
     def __init__(self, options, schema):
         self.path = _options_path(options)
         self.root = pathlib.Path(self.path)
-        v = _resolve_version(options)
-        self._ckpt_route = _use_checkpoint_plan(options, self.path, v)
-        if self._ckpt_route:
-            # checkpoint-composed planning (round 13, VERDICT r12 #1):
-            # the Python DataSource planning hooks run in Spark's
-            # SESSION-LESS worker process (no py4j — a Spark job is
-            # impossible here), so the checkpoint is consumed via
-            # pyarrow.  __init__ reads only the META row
-            # (two-column projected read); the live set is STREAMED
-            # through the prune inside partitions()
-            # (prune_scan_arrow: Arrow-batch iteration, peak memory
-            # O(survivors + tail), never the monolithic JSON blob or
-            # an O(files) Python dict).  Decisions are identical by
-            # construction (same _stats_admit).
-            from . import lakehouse_checkpoint as _ckpt
-
-            v, meta = _ckpt.meta_arrow(self.path, v)
-            live, dvs, stats = set(), set(), {}
-        else:
-            v, live, dvs, _txns, meta, stats = lk._state_full(self.path, v)
+        v, meta, self._replay = _ckpt.table_state(
+            self.path, _resolve_version(options)
+        )
         if v == 0:
             raise ValueError(f"no commits at {self.path}")
         self.version = v
@@ -340,21 +321,13 @@ class _LakehouseBatchReader(DataSourceReader):
         self.colmap = lk._colmap(meta)
         self.pcols = list(meta.get("pcols") or [])
         self.arrow_schema = _arrow_schema(schema)
-        self._live = sorted(live)
-        self._dvs = sorted(dvs)
-        self._stats = stats
         self._conj: list = []
         self._planned = False
 
-    def _stat_of(self, f: str):
-        """Footer stats for live file ``f`` — dict/None on the JSON
-        route, a lazily-parsed JSON string on the checkpoint route."""
-        s = self._stats.get(f)
-        if isinstance(s, str):
-            import json
-
-            return json.loads(s) if s else None
-        return s
+    def __getstate__(self):
+        # Spark pickles the reader for the executors' read() before it
+        # calls partitions(): the O(files) replay stays on the driver
+        return {**self.__dict__, "_replay": None}
 
     def pushFilters(self, filters):
         """Record every stats-answerable conjunct for partition
@@ -370,59 +343,28 @@ class _LakehouseBatchReader(DataSourceReader):
 
     def partitions(self):
         if self._planned:
-            # the file-scale maps were dropped after the first call to
-            # keep the pickled reader small — a silent second plan
-            # would return ZERO partitions (empty result, no error);
-            # fail loudly instead (ADVICE r12)
+            # Spark plans a Python-source scan once per load(); a second
+            # plan on one reader is a caller bug — fail loudly (ADVICE r12)
             raise RuntimeError(
                 "lakehouse batch reader planned twice — Spark plans a "
                 "Python-source scan once per load(); call load(path) "
                 "again for a new logical query"
             )
         self._planned = True
-        if self._ckpt_route:
-            # streamed Arrow-batch prune over the checkpoint (logical
-            # predicate names: prune_scan_arrow translates through the
-            # column mapping itself)
-            from . import lakehouse_checkpoint as _ckpt
-
-            _v, scan, dv_list, _meta, _total = _ckpt.prune_scan_arrow(
-                self.path, list(self._conj), self.version
-            )
-            self._dvs = dv_list
-        else:
-            cm = self.colmap
-            conj = [(cm.get(c, c), op, v) for c, op, v in self._conj]
-            scan = [
-                f
-                for f in self._live
-                if all(
-                    lk._stats_admit(self._stat_of(f), c, op, v)
-                    for c, op, v in conj
-                )
-            ]
-        # sidecar -> targeted basenames, one column-projected read per
-        # sidecar: each task then reads ONLY the sidecars that can
-        # name it (per-file-scoped deletes, the Iceberg v2 plan shape)
-        import pyarrow.parquet as pq
-
-        by_base: dict[str, list] = {}
-        for dv in self._dvs:
-            t = pq.read_table(str(self.root / dv), columns=["_dv_file"])
-            for base in set(t.column("_dv_file").to_pylist()):
-                by_base.setdefault(base, []).append(dv)
-        parts = [
+        # logical predicate names: plan_scan translates through the
+        # column mapping itself
+        _v, scan, dvs, _meta, _total = _ckpt.plan_scan(
+            self.path, list(self._conj), self.version, self._replay
+        )
+        self._replay = None
+        by_base = _dv_files_by_base(self.root, dvs)
+        return [
             _FileSlice(
                 file=f,
                 dv_files=tuple(by_base.get(pathlib.PurePosixPath(f).name, ())),
             )
             for f in scan
         ]
-        # partitions() runs once on the driver; drop the file-scale
-        # maps so the pickled reader shipped to executors stays small
-        self._stats = {}
-        self._live = []
-        return parts
 
     def read(self, partition: _FileSlice):
         if partition is None:  # every file pruned: Spark still runs
@@ -1075,13 +1017,7 @@ class LakehouseDataSource(DataSource):
 
     def schema(self) -> str:
         path = _options_path(self.options)
-        v = _resolve_version(self.options)
-        if _use_checkpoint_plan(self.options, path, v):
-            from . import lakehouse_checkpoint as _ckpt
-
-            _v, meta = _ckpt.meta_arrow(path, v)
-        else:
-            _v, _live, _dvs, _txns, meta, _stats = lk._state_full(path, v)
+        _v, meta, _replay = _ckpt.table_state(path, _resolve_version(self.options))
         ddl = _ddl_of(meta)
         if str(self.options.get("readChangeFeed", "")).lower() == "true":
             ddl += ", `_change_type` string, `_commit_version` int"

@@ -3301,11 +3301,11 @@ def q_lakehouse_parquet_checkpoint(
     column, Delta's own checkpoint shape), advanced INCREMENTALLY
     without a session (the old checkpoint streams through as Arrow
     batches beside the delta-sized JSON tail — the driver never holds
-    the O(files) base after bootstrap), and consumed distributed:
-    file pruning runs the SAME ``_stats_admit``
-    evaluator inside ``mapInPandas`` over the checkpoint rows, and
-    staged-file footer stats come back from one ``mapPartitions`` job
-    instead of a serial driver loop.
+    the O(files) base after bootstrap); the one scan planner
+    (``plan_scan``) prunes its add rows in streamed Arrow batches,
+    vectorised, with ``_stats_admit``'s decisions, and staged-file
+    footer stats come back from one ``mapPartitions`` job instead of
+    a serial driver loop.
 
     Drill on the orders table: 3 appends (v1-3, keys split mod 3) →
     parquet checkpoint at v3 → MOR delete (keys % 13, a DV sidecar)
@@ -3313,20 +3313,21 @@ def q_lakehouse_parquet_checkpoint(
     tail → ``advance_parquet_checkpoint`` rolls the checkpoint to v5.
     Audits the oracle pins TRUE:
 
-    - ``state_parity`` — live-file and DV sets from (checkpoint
-      parquet + tail) equal the driver JSON replay at v5 AND at the
-      time-traveled v4 (an older state must compose from the v3
-      checkpoint + a shorter tail);
-    - ``prune_parity`` — distributed prune decisions are IDENTICAL
-      (version, survivors, total) to :func:`..lakehouse.prune_files`
-      for a range, an ``in``, and an everything-pruned predicate;
+    - ``state_parity`` — live-file and DV sets planned from
+      (checkpoint parquet + tail) equal the driver JSON replay at v5
+      AND at the time-traveled v4 (an older state must compose from
+      the v3 checkpoint + a shorter tail);
+    - ``prune_parity`` — checkpoint-planned prune decisions are
+      IDENTICAL (version, survivors, total) to
+      :func:`..lakehouse.prune_files` (JSON replay) for a range, an
+      ``in``, and an everything-pruned predicate;
     - ``stats_distributed_parity`` — the one-job footer stats equal
       the serial per-file reads, dict-for-dict;
-    - ``pruned_read_parity`` — ``read_table`` past the plan threshold
-      (``checkpointPlanMinFiles=1``), whose file set came from the
-      DISTRIBUTED decisions, is row-identical to the JSON-route
-      predicate read (skipping changes I/O, never results — now
-      provable with the prune running on executors).
+    - ``pruned_read_parity`` — ``read_table``'s predicate read,
+      planned from the checkpoint, is row-identical to a read taken
+      before the checkpoint existed (JSON replay) with the tail's two
+      deletes and the predicate applied relationally (skipping
+      changes I/O, never results).
 
     The RESULT is the final table's status aggregate — value-hashed
     against the oracle's relational recompute, so the checkpoint
@@ -3343,6 +3344,7 @@ def q_lakehouse_parquet_checkpoint(
         t = lk.Transaction(path)
         t.append(orders.filter(F.col("k") % 3 == third).repartition(2))
         t.commit()  # v1-3
+    before = lk.read_table(spark, path)  # JSON replay: no checkpoint yet
     ckpt.write_parquet_checkpoint(path)  # bootstrap at v3
 
     t = lk.Transaction(path)
@@ -3354,18 +3356,8 @@ def q_lakehouse_parquet_checkpoint(
     ckpt.advance_parquet_checkpoint(path)  # v3 ckpt + tail -> v5
 
     def sets(version=None):
-        # one collect for both kinds (was two jobs per call)
-        v, df, _meta = ckpt.state_frame(spark, path, version)
-        rows = (
-            df.filter(F.col("kind").isin("add", "dv"))
-            .select("kind", "file")
-            .collect()
-        )
-        return (
-            v,
-            {r.file for r in rows if r.kind == "add"},
-            {r.file for r in rows if r.kind == "dv"},
-        )
+        v, kept, dvs, _meta, _total = ckpt.prune_scan_arrow(path, [], version)
+        return v, set(kept), set(dvs)
 
     def json_sets(version=None):
         v, live, dvs, _t, _m, _s = lk._state_full(path, version)
@@ -3378,21 +3370,12 @@ def q_lakehouse_parquet_checkpoint(
         [("k", "in", (1, 7, 32))],
         [("k", "<", 0)],
     )
-    # the three distributed prunes are independent mapInPandas jobs —
-    # overlap them from driver threads instead of paying
-    # three sequential job latencies; the driver-side replays compare
-    # after, unchanged
-    from ._audit import concurrently, digest_pairs_equal
 
-    distributed = concurrently(
-        *[
-            (lambda p=p: ckpt.prune_files_distributed(spark, path, p))
-            for p in preds
-        ]
-    )
-    prune_parity = all(
-        got == lk.prune_files(path, p) for got, p in zip(distributed, preds)
-    )
+    def planned(p):
+        v, kept, _dvs, _meta, total = ckpt.prune_scan_arrow(path, p)
+        return v, kept, total
+
+    prune_parity = all(planned(p) == lk.prune_files(path, p) for p in preds)
 
     root = pathlib.Path(path)
     _v, live, _dvs, _t, _m, _s = lk._state_full(path)
@@ -3402,17 +3385,15 @@ def q_lakehouse_parquet_checkpoint(
     }
 
     pr = [("k", "<", 1000)]
-    exp = lk.read_table(spark, path, predicate=pr)
-    # read_table past the plan threshold prunes through the distributed
-    # planner; the route is chosen when the frame is built
-    spark.conf.set(ckpt.PLAN_MIN_FILES_CONF, "1")
-    try:
-        got = lk.read_table(spark, path, predicate=pr)
-    finally:
-        spark.conf.unset(ckpt.PLAN_MIN_FILES_CONF)
+    got = lk.read_table(spark, path, predicate=pr)
+    exp = before.filter(
+        (F.col("k") % 13 != 0) & (F.col("k") % 17 != 0) & (F.col("k") < 1000)
+    )
     h = lambda df: df.select(  # noqa: E731
         F.expr("xxhash64(k, status, CAST(price*1e6 AS LONG))").alias("_h")
     )
+    from ._audit import digest_pairs_equal
+
     [read_parity] = digest_pairs_equal([(h(got), h(exp))])
 
     return (
@@ -3905,12 +3886,11 @@ def q_lakehouse_checkpoint_planning(
 ) -> DataFrame:
     """Planning composed WITH the parquet checkpoint (VERDICT r12 #1).
 
-    Round 12 built two planes that did not touch: the registered
-    source/``read_table`` planned every scan from driver-side JSON
-    replay (O(live files) blob parse + admit loop), while the parquet
-    checkpoint plane — built to remove exactly that bottleneck — was
-    consumed only by its own drill.  This drill proves the
-    composition:
+    Every scan — ``read_table`` and the registered source alike — plans
+    through one driver-side planner
+    (:func:`..lakehouse_checkpoint.plan_scan`): the newest parquet
+    checkpoint plus the JSON tail when one exists, JSON replay
+    otherwise.  This drill proves the composition:
 
     1. Seed the orders table (3 appends, 2 files each), bootstrap a
        parquet checkpoint, set the auto-advance interval to 2 and
@@ -3920,31 +3900,32 @@ def q_lakehouse_checkpoint_planning(
        session-less ``advance_parquet_checkpoint`` once the JSON tail
        reaches the interval, Delta's checkpoint cadence).
     2. ``arrow_state_parity`` — the SESSION-LESS state composition
-       the DataSource planning worker uses (pyarrow columnar read of
-       the checkpoint + delta-sized JSON tail,
-       :func:`..lakehouse_checkpoint.state_arrow`) equals the JSON
-       replay: live set, DV set, meta, and every per-file stats dict.
+       (pyarrow columnar read of the checkpoint + delta-sized JSON
+       tail, :func:`..lakehouse_checkpoint.state_arrow`) equals the
+       JSON replay: live set, DV set, meta, and every per-file stats
+       dict.
     3. ``source_plan_parity`` — the registered source's PARTITION
-       LIST under a pushed filter is identical file-for-file between
-       ``planFromCheckpoint=true`` and the JSON route, and equals
-       ``prune_files`` — plan decisions identical, only where they
-       were computed differs.
-    4. ``routed_read_parity`` — ``read_table`` past the plan
-       threshold (``checkpointPlanMinFiles=1``) routes through
-       ``state_frame`` + distributed ``mapInPandas`` prune and
-       returns a digest identical to the JSON route, predicate and
-       filterless both.
+       LIST under a pushed filter, planned from the checkpoint, equals
+       ``prune_files`` file-for-file, each file carrying the DV
+       sidecars that JSON replay's DV set targets at it.
+    4. ``routed_read_parity`` — ``read_table``, planned from the
+       checkpoint, returns a digest identical to a read taken before
+       the checkpoint existed (JSON replay) with the two deletes
+       applied relationally, predicate and filterless both.
 
-    Scale shape: past the threshold the driver parses only the JSON
-    tail; the O(files) base state arrives as parquet (columnar in the
-    session-less planner, a Spark job in ``read_table``), and admit
-    decisions fan out with the data (SCALE.md round-13 row).
+    Scale shape: the driver parses only the JSON tail; the O(files)
+    base state arrives as parquet batches decided with
+    ``pyarrow.compute`` (SCALE.md round-13 row).
 
     Cites: sql/athena_repair_partitions.sql (the reference's whole
     metadata plane is MSCK re-crawl; checkpointed planning is the
     engine extension)."""
     from .. import lakehouse_checkpoint as ckpt
-    from ..lakehouse_datasource import _LakehouseBatchReader, register
+    from ..lakehouse_datasource import (
+        _dv_files_by_base,
+        _LakehouseBatchReader,
+        register,
+    )
 
     register(spark)
     path = fresh_scratch(f"lakehouse_ckpt_plan_{sf_tag(sf_dir)}")
@@ -3957,6 +3938,7 @@ def q_lakehouse_checkpoint_planning(
         t = lk.Transaction(path)
         t.append(orders.filter(F.col("k") % 3 == third).repartition(2))
         t.commit()  # v1-3
+    before = lk.read_table(spark, path)  # JSON replay: no checkpoint yet
     ckpt.write_parquet_checkpoint(path)  # bootstrap at v3
 
     # --- 1: commits roll the checkpoint forward by themselves
@@ -3965,12 +3947,12 @@ def q_lakehouse_checkpoint_planning(
         t = lk.Transaction(path)
         t.delete_where_mor(spark, F.col("k") % 13 == 0)
         t.commit()  # v4: tail of 1 < interval — no advance yet
-        before = ckpt.latest_parquet_checkpoint(path)
+        before_adv = ckpt.latest_parquet_checkpoint(path)
         t = lk.Transaction(path)
         t.delete_where(spark, F.col("k") % 17 == 0)
         t.commit()  # v5: tail hits the interval — auto-advance
         auto_advanced = (
-            before == 3 and ckpt.latest_parquet_checkpoint(path) == 5
+            before_adv == 3 and ckpt.latest_parquet_checkpoint(path) == 5
         )
     finally:
         spark.conf.unset(ckpt.AUTO_ADVANCE_CONF)
@@ -3988,46 +3970,38 @@ def q_lakehouse_checkpoint_planning(
         )
     )
 
-    # --- 3: the SOURCE's partition list, checkpoint route vs JSON
+    # --- 3: the SOURCE's partition list == JSON replay's decisions
     schema = spark.read.format("lakehouse").load(path).schema
     pred = [("k", "<", 1000)]
-    planned = {}
-    for route in ("false", "true"):
-        r = _LakehouseBatchReader(
-            {"path": path, "planFromCheckpoint": route}, schema
-        )
-        r._conj = list(pred)
-        planned[route] = [(p.file, p.dv_files) for p in r.partitions()]
+    r = _LakehouseBatchReader({"path": path}, schema)
+    r._conj = list(pred)
+    from_ckpt = r._replay is None  # resolved without replaying the log
+    planned = [(p.file, p.dv_files) for p in r.partitions()]
     _pv, kept, _total = lk.prune_files(path, pred)
-    source_plan_parity = (
-        planned["true"] == planned["false"]
-        and [f for f, _dv in planned["true"]] == kept
-    )
+    by_base = _dv_files_by_base(pathlib.Path(path), sorted(jdvs))
+    source_plan_parity = from_ckpt and planned == [
+        (f, tuple(by_base.get(pathlib.PurePosixPath(f).name, ())))
+        for f in kept
+    ]
 
-    # --- 4: read_table routed through the distributed plan.  The
-    # route is chosen at DataFrame-construction time (plan_from_
-    # checkpoint reads the conf then), so both routed frames are built
-    # inside the conf window and all four digests fold into ONE
-    # comparison action (_audit helper; was four .agg().collect() jobs)
+    # --- 4: read_table planned from the checkpoint vs the pre-checkpoint
+    # read minus the deletes; all four digests fold into ONE comparison
+    # action (_audit helper)
     h = lambda df: df.select(  # noqa: E731
         F.expr(
             "xxhash64(k, status, CAST(ROUND(price*1e6,0) AS LONG))"
         ).alias("_h")
     )
-    json_pred = lk.read_table(spark, path, predicate=pred)
-    json_full = lk.read_table(spark, path)
-    spark.conf.set(ckpt.PLAN_MIN_FILES_CONF, "1")
-    try:
-        routed_pred = lk.read_table(spark, path, predicate=pred)
-        routed_full = lk.read_table(spark, path)
-    finally:
-        spark.conf.unset(ckpt.PLAN_MIN_FILES_CONF)
+    alive_rows = before.filter((F.col("k") % 13 != 0) & (F.col("k") % 17 != 0))
     from ._audit import digest_pairs_equal
 
     pred_ok, full_ok = digest_pairs_equal(
         [
-            (h(routed_pred), h(json_pred)),
-            (h(routed_full), h(json_full)),
+            (
+                h(lk.read_table(spark, path, predicate=pred)),
+                h(alive_rows.filter(F.col("k") < 1000)),
+            ),
+            (h(lk.read_table(spark, path)), h(alive_rows)),
         ]
     )
     routed_read_parity = pred_ok and full_ok

@@ -14,7 +14,8 @@ restore sequences that once resurrected files through a checkpoint:
   the DV is removed again (the base DV row must go).
 
 The checkpoint is bootstrapped, then advanced; at every version the
-session-less compositions equal JSON replay.
+session-less compositions and the scan planner equal JSON replay, also
+when a checkpoint part cannot be read.
 """
 
 from __future__ import annotations
@@ -101,10 +102,16 @@ def _assert_composes_like_replay(path: str, v: int) -> None:
         f: jstats.get(f) for f in jlive
     }, v
     assert ck.meta_arrow(path, v) == (jv, jmeta), v
+    for plan in (ck.prune_scan_arrow, ck.plan_scan):
+        _assert_plans_like_replay(path, v, plan)
+
+
+def _assert_plans_like_replay(path: str, v: int | None, plan=ck.plan_scan) -> None:
+    _jv, _live, jdvs, _txns, jmeta, _stats = lk._state_full(path, v)
     for pred in _PREDICATES:
-        sv, kept, dvs, meta, total = ck.prune_scan_arrow(path, pred, v)
+        sv, kept, dvs, meta, total = plan(path, pred, v)
         assert (sv, kept, total) == lk.prune_files(path, pred, v), (v, pred)
-        assert (set(dvs), meta) == (jdvs, jmeta), (v, pred)
+        assert (dvs, meta) == (sorted(jdvs), jmeta), (v, pred)
 
 
 def _generation_rows(path: str, v: int) -> list[tuple]:
@@ -121,6 +128,8 @@ def _replay_rows(path: str, v: int) -> list[tuple]:
 def test_bootstrap_and_advance_compose_like_json_replay(table):
     path = table
     tip = len(_COMMITS)
+    for v in range(1, tip + 1):  # no checkpoint yet: JSON replay
+        _assert_plans_like_replay(path, v)
     assert ck.write_parquet_checkpoint(path, version=3) == 3
     assert _generation_rows(path, 3) == _replay_rows(path, 3)
     for v in range(3, tip + 1):
@@ -161,8 +170,72 @@ def test_large_states_split_into_parts(table, monkeypatch):
     ck.write_parquet_checkpoint(table, version=3)
     parts = sorted(ck._ckpt_dir(table, 3).glob("*.parquet"))
     assert len(parts) == 4  # 7 rows (4 adds, a dv, meta, a txn) in 2-row batches
-    assert ck.checkpoint_row_estimate(table, 3) == 7
+    assert sum(pq.ParquetFile(str(p)).metadata.num_rows for p in parts) == 7
     ck.advance_parquet_checkpoint(table)
     assert _generation_rows(table, len(_COMMITS)) == _replay_rows(
         table, len(_COMMITS)
     )
+
+
+@pytest.mark.parametrize("damage", ["truncate", "garbage"])
+def test_unreadable_checkpoint_plans_from_json_replay(table, monkeypatch, damage):
+    """A checkpoint is derived data: when a part file is truncated or
+    is not parquet at all, planning replays the JSON log instead."""
+    monkeypatch.setattr(ck, "_PART_ROWS", 2)
+    for v in (3, len(_COMMITS)):
+        ck.write_parquet_checkpoint(table, version=v)
+        part = sorted(ck._ckpt_dir(table, v).glob("*.parquet"))[1]
+        body = part.read_bytes()
+        part.write_bytes(body[: len(body) // 2] if damage == "truncate" else b"not parquet")
+    for v in (None, 5):  # the tip, and time travel onto the v3 checkpoint
+        with pytest.raises(ck._Unreadable):  # the checkpoint route itself
+            ck.prune_scan_arrow(table, [], v)
+        _assert_plans_like_replay(table, v)
+        jv, _live, _dvs, _txns, jmeta, _stats = lk._state_full(table, v)
+        assert ck.table_state(table, v)[:2] == (jv, jmeta)
+
+
+def test_decision_errors_are_not_masked_by_the_fallback(table, monkeypatch):
+    """Only an unreadable checkpoint falls back to JSON replay: an
+    Arrow error from the decision code itself propagates."""
+    import pyarrow as pa
+
+    def broken(meta, predicate):
+        def keep(stats):
+            raise pa.ArrowNotImplementedError("no kernel")
+        return keep
+
+    ck.write_parquet_checkpoint(table)
+    monkeypatch.setattr(ck, "_stats_pruner", broken)
+    with pytest.raises(pa.ArrowNotImplementedError):
+        ck.plan_scan(table, [("id", "<", 5)])
+
+
+@pytest.mark.parametrize("checkpointed", [False, True])
+def test_batch_reader_replays_the_log_at_most_once(table, monkeypatch, checkpointed):
+    """The registered source's reader resolves meta in ``__init__`` and
+    plans in ``partitions()``: without a checkpoint both come from one
+    JSON replay, with one from none, and the replay never rides in the
+    reader Spark pickles for the executors."""
+    import pickle
+
+    from pyspark.sql.types import DoubleType, LongType, StructField, StructType
+
+    from market_etl_spark import lakehouse_datasource as lds
+
+    if checkpointed:
+        ck.write_parquet_checkpoint(table)
+    replays = []
+    full = lk._state_full
+    monkeypatch.setattr(
+        lk, "_state_full", lambda *a: replays.append(a) or full(*a)
+    )
+    schema = StructType([StructField("id", LongType()), StructField("val", DoubleType())])
+    reader = lds._LakehouseBatchReader({"path": table}, schema)
+    assert pickle.loads(pickle.dumps(reader))._replay is None
+    reader.pushFilters([])
+    reader._conj = [("id", "<", 5)]
+    files = [p.file for p in reader.partitions()]
+    assert len(replays) == (0 if checkpointed else 1)
+    monkeypatch.setattr(lk, "_state_full", full)
+    assert (reader.version, files) == lk.prune_files(table, reader._conj)[:2]

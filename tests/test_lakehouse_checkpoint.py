@@ -1,8 +1,9 @@
 """Parquet-checkpoint metadata plane (round 12): state parity with
-JSON replay, incremental advance, distributed prune decisions
-identical to the driver-side prune, distributed footer stats, and the
-read path composed on distributed decisions.  The Spark-free
-bootstrap/advance/compose checks are in test_checkpoint_plane.py."""
+JSON replay, incremental advance, checkpoint-planned prune decisions
+identical to the JSON-replay prune, distributed footer stats, and
+reads planned from the checkpoint equal to reads taken before it
+existed.  The Spark-free bootstrap/advance/compose checks are in
+test_checkpoint_plane.py."""
 
 from __future__ import annotations
 
@@ -38,32 +39,25 @@ def _busy_table(spark, tmp_path):
     return path
 
 
-def _routed_read(spark, path, pred):
-    """``read_table`` past the plan threshold: its file set comes from
-    the distributed prune over the checkpoint (the route is chosen
-    when the frame is built)."""
-    spark.conf.set(ck.PLAN_MIN_FILES_CONF, "1")
-    try:
-        return lk.read_table(spark, path, predicate=pred)
-    finally:
-        spark.conf.unset(ck.PLAN_MIN_FILES_CONF)
+def _rows(df):
+    return sorted(map(tuple, df.collect()))
 
 
-def _state_sets(spark, path, version=None):
-    v, df, meta = ck.state_frame(spark, path, version)
-    return (
-        v,
-        {r.file for r in df.filter("kind='add'").collect()},
-        {r.file for r in df.filter("kind='dv'").collect()},
-        meta,
-    )
+def _state_sets(path, version=None):
+    """``(version, live files, DV files, meta)`` as the checkpoint
+    route composes them (raises without a readable checkpoint, so a
+    bad checkpoint cannot pass as JSON replay); a duplicated add row
+    would show as a repeat."""
+    v, kept, dvs, meta, total = ck.prune_scan_arrow(path, [], version)
+    assert len(kept) == len(set(kept)) == total
+    return v, set(kept), set(dvs), meta
 
 
 def test_bootstrap_state_parity(spark, tmp_path):
     path = _busy_table(spark, tmp_path)
     v = ck.write_parquet_checkpoint(path)
     assert v == lk.latest_commit(path)
-    pv, live_pq, dv_pq, meta_pq = _state_sets(spark, path)
+    pv, live_pq, dv_pq, meta_pq = _state_sets(path)
     _v, live, dvs, _txns, meta, _stats = lk._state_full(path)
     assert (pv, live_pq, dv_pq, meta_pq) == (v, live, dvs, meta)
 
@@ -71,9 +65,9 @@ def test_bootstrap_state_parity(spark, tmp_path):
 def test_json_tail_applied_over_checkpoint(spark, tmp_path):
     path = _busy_table(spark, tmp_path)
     ck.write_parquet_checkpoint(path, version=3)
-    # the tail (3, 5] holds a MOR delete + a CoW rewrite; state_frame
+    # the tail (3, 5] holds a MOR delete + a CoW rewrite; the planner
     # must fold them without a new checkpoint
-    pv, live_pq, dv_pq, _meta = _state_sets(spark, path)
+    pv, live_pq, dv_pq, _meta = _state_sets(path)
     _v, live, dvs, _txns, _m, _s = lk._state_full(path)
     assert pv == 5 and live_pq == live and dv_pq == dvs
     # add-then-remove INSIDE the tail cancels exactly
@@ -83,7 +77,7 @@ def test_json_tail_applied_over_checkpoint(spark, tmp_path):
     t = lk.Transaction(path)
     t.delete_where(spark, F.col("id") == 77)
     t.commit()
-    pv, live_pq, dv_pq, _meta = _state_sets(spark, path)
+    pv, live_pq, dv_pq, _meta = _state_sets(path)
     _v, live, dvs, _txns, _m, _s = lk._state_full(path)
     assert pv == 7 and live_pq == live and dv_pq == dvs
 
@@ -103,7 +97,12 @@ def test_advance_is_incremental_and_equal_to_bootstrap(spark, tmp_path):
     assert ck.advance_parquet_checkpoint(path) == 5
 
 
-def test_distributed_prune_matches_driver_prune(spark, tmp_path):
+def _planned(path, pred):
+    v, kept, _dvs, _meta, total = ck.prune_scan_arrow(path, pred)
+    return v, kept, total
+
+
+def test_checkpoint_prune_matches_json_prune(spark, tmp_path):
     path = _busy_table(spark, tmp_path)
     ck.write_parquet_checkpoint(path)
     for pred in (
@@ -115,21 +114,17 @@ def test_distributed_prune_matches_driver_prune(spark, tmp_path):
         [("id", "<", 0)],
         [("nope", "=", 1)],
     ):
-        assert ck.prune_files_distributed(spark, path, pred) == lk.prune_files(
-            path, pred
-        ), pred
+        assert _planned(path, pred) == lk.prune_files(path, pred), pred
 
 
-def test_distributed_prune_respects_column_mapping(spark, tmp_path):
+def test_checkpoint_prune_respects_column_mapping(spark, tmp_path):
     path = _busy_table(spark, tmp_path)
     t = lk.Transaction(path)
     t.rename_column("id", "ident")
     t.commit()
     ck.write_parquet_checkpoint(path)
     pred = [("ident", "<", 5)]
-    assert ck.prune_files_distributed(spark, path, pred) == lk.prune_files(
-        path, pred
-    )
+    assert _planned(path, pred) == lk.prune_files(path, pred)
 
 
 def test_distributed_stats_match_serial(spark, tmp_path):
@@ -146,21 +141,14 @@ def test_distributed_stats_match_serial(spark, tmp_path):
     assert all("v" in st["cols"] for st in wide.values())
 
 
-def test_pruned_read_on_distributed_decisions(spark, tmp_path):
+def test_pruned_read_on_checkpoint_decisions(spark, tmp_path):
     path = _busy_table(spark, tmp_path)
+    preds = ([("id", "<", 5)], [("id", ">", 7)], [("id", "<", 0)])
+    # expected rows are read before the checkpoint exists (JSON replay)
+    exp = [_rows(lk.read_table(spark, path, predicate=p)) for p in preds]
     ck.write_parquet_checkpoint(path)
-    for pred in ([("id", "<", 5)], [("id", ">", 7)], [("id", "<", 0)]):
-        got = _routed_read(spark, path, pred)
-        exp = lk.read_table(spark, path, predicate=pred)
-        assert sorted(map(tuple, got.collect())) == sorted(
-            map(tuple, exp.collect())
-        ), pred
-
-
-def test_state_frame_requires_a_checkpoint(spark, tmp_path):
-    path = _busy_table(spark, tmp_path)
-    with pytest.raises(ValueError, match="no parquet checkpoint"):
-        ck.state_frame(spark, path)
+    for pred, want in zip(preds, exp):
+        assert _rows(lk.read_table(spark, path, predicate=pred)) == want, pred
 
 
 def test_time_travel_uses_older_checkpoint(spark, tmp_path):
@@ -168,7 +156,7 @@ def test_time_travel_uses_older_checkpoint(spark, tmp_path):
     ck.write_parquet_checkpoint(path, version=2)
     ck.write_parquet_checkpoint(path, version=4)
     # version 3 must start from ckpt 2 + tail commit 3, not ckpt 4
-    pv, live_pq, dv_pq, _meta = _state_sets(spark, path, version=3)
+    pv, live_pq, dv_pq, _meta = _state_sets(path, version=3)
     _v, live, dvs, _txns, _m, _s = lk._state_full(path, 3)
     assert pv == 3 and live_pq == live and dv_pq == dvs
 
@@ -211,7 +199,7 @@ def test_advance_retains_bounded_checkpoints(spark, tmp_path):
     left = sorted(p.name for p in log.glob("ckptpq-*"))
     assert left == ["ckptpq-00000004", "ckptpq-00000005"]
     # the survivor still reconstructs the exact state
-    pv, live_pq, dv_pq, _meta = _state_sets(spark, path)
+    pv, live_pq, dv_pq, _meta = _state_sets(path)
     _v, live, dvs, _t, _m, _s = lk._state_full(path)
     assert pv == 5 and live_pq == live and dv_pq == dvs
 
@@ -219,18 +207,18 @@ def test_advance_retains_bounded_checkpoints(spark, tmp_path):
 def test_expiry_drops_stale_parquet_checkpoints(spark, tmp_path):
     """A parquet checkpoint below the retention boundary references
     deleted files and its replay tail's commit JSONs are gone —
-    expire_versions must remove it so state_frame re-bootstraps
-    cleanly instead of dying mid-tail."""
+    expire_versions must remove it so checkpoint-composed reads
+    re-bootstrap cleanly instead of dying mid-tail."""
     path = _busy_table(spark, tmp_path)  # 5 commits
     ck.write_parquet_checkpoint(path, version=2)
     lk.expire_versions(path, keep_from=4)
     log = pathlib.Path(path) / lk._LOG_DIR
     assert not list(log.glob("ckptpq-*"))
     with pytest.raises(ValueError, match="no parquet checkpoint"):
-        ck.state_frame(spark, path)
+        ck.state_arrow(path)
     # re-bootstrap works and agrees with JSON replay
     ck.write_parquet_checkpoint(path)
-    pv, live_pq, dv_pq, _m = _state_sets(spark, path)
+    pv, live_pq, dv_pq, _m = _state_sets(path)
     _v, live, dvs, _t, _m2, _s = lk._state_full(path)
     assert pv == 5 and live_pq == live and dv_pq == dvs
     # ... and a checkpoint AT/above the boundary survives expiry
@@ -238,7 +226,7 @@ def test_expiry_drops_stale_parquet_checkpoints(spark, tmp_path):
     ck.write_parquet_checkpoint(path2, version=4)
     lk.expire_versions(path2, keep_from=4)
     assert ck.latest_parquet_checkpoint(path2) == 4
-    pv2 = ck.state_frame(spark, path2)[0]
+    pv2 = ck.state_arrow(path2)[0]
     assert pv2 == 5
 
 
@@ -254,23 +242,19 @@ def test_orphan_sweep_removes_crashed_advance_staging(spark, tmp_path):
 
 def test_advance_across_rename_keeps_prune_parity(spark, tmp_path):
     """A rename landing in the advance TAIL: the checkpoint's meta row
-    folds the new colmap, and distributed pruning keeps translating
+    folds the new colmap, and checkpoint-planned pruning keeps translating
     logical predicates to the immutable physical names."""
     path = _busy_table(spark, tmp_path)
+    exp = _rows(lk.read_table(spark, path, predicate=[("id", "<", 5)]))
     ck.write_parquet_checkpoint(path, version=3)
     t = lk.Transaction(path)
     t.rename_column("id", "ident")
     t.commit()
     ck.advance_parquet_checkpoint(path)
     for pred in ([("ident", "<", 5)], [("ident", ">=", 25)]):
-        assert ck.prune_files_distributed(spark, path, pred) == lk.prune_files(
-            path, pred
-        ), pred
-    got = _routed_read(spark, path, [("ident", "<", 5)])
-    exp = lk.read_table(spark, path, predicate=[("ident", "<", 5)])
-    assert sorted(map(tuple, got.collect())) == sorted(
-        map(tuple, exp.collect())
-    )
+        assert _planned(path, pred) == lk.prune_files(path, pred), pred
+    got = lk.read_table(spark, path, predicate=[("ident", "<", 5)])
+    assert _rows(got) == exp
 
 
 def test_format_writer_commits_feed_the_checkpoint_plane(spark, tmp_path):
@@ -289,7 +273,7 @@ def test_format_writer_commits_feed_the_checkpoint_plane(spark, tmp_path):
     src.write.format("lakehouse").mode("append").save(path)
     v = ck.advance_parquet_checkpoint(path)
     assert v == 2
-    pv, live_pq, dv_pq, _m = _state_sets(spark, path)
+    pv, live_pq, dv_pq, _m = _state_sets(path)
     _v, live, dvs, _t, _m2, _s = lk._state_full(path)
     assert pv == 2 and live_pq == live and dv_pq == dvs
 
@@ -298,29 +282,24 @@ def test_restore_in_tail_keeps_add_rows_distinct(spark, tmp_path):
     """ADVICE r12 (high): a checkpoint -> rewrite -> RESTORE sequence
     nets to a tail that RE-ADDS files the base checkpoint already
     carries — the base rows must drop, or the state frame holds
-    duplicate add rows and every distributed-prune read doubles."""
+    duplicate add rows and every checkpoint-planned read doubles."""
     path = _busy_table(spark, tmp_path)
+    want = _rows(lk.read_table(spark, path))  # JSON replay, pre-checkpoint
     ck.write_parquet_checkpoint(path)
     v0 = lk.latest_commit(path)
     t = lk.Transaction(path)
     t.compact(spark, n_files=1)
     t.commit()
     lk.restore_table(spark, path, v0)  # tail removes + re-adds base files
-    v, df, _meta = ck.state_frame(spark, path)
-    adds = df.filter("kind='add'").select("file")
-    assert adds.count() == adds.distinct().count()
-    # set-based parity (sets would HIDE the duplicate; counts can't)
+    _v, kept, dv_list, _meta, total = ck.prune_scan_arrow(path, [])
+    # list-based parity (sets would HIDE the duplicate; counts can't)
+    assert len(kept) == len(set(kept)) == total
     _v2, live, dvs, _t, _m, _s = lk._state_full(path)
-    assert {r.file for r in adds.collect()} == live
-    dv_rows = df.filter("kind='dv'").select("file")
-    assert dv_rows.count() == dv_rows.distinct().count()
-    assert {r.file for r in dv_rows.collect()} == dvs
-    # the frame-composed READ returns the same rows as JSON replay
-    got = _routed_read(spark, path, [("id", ">=", 0)])
-    want = lk.read_table(spark, path, predicate=[("id", ">=", 0)])
-    assert sorted(map(tuple, got.collect())) == sorted(
-        map(tuple, want.collect())
-    )
+    assert set(kept) == live
+    assert len(dv_list) == len(set(dv_list)) and set(dv_list) == dvs
+    # the checkpoint-planned READ returns the restored rows
+    got = lk.read_table(spark, path, predicate=[("id", ">=", 0)])
+    assert _rows(got) == want
     # and the duplicates must not persist into the NEXT generation
     t = lk.Transaction(path)
     t.append(
@@ -359,87 +338,62 @@ def test_state_arrow_and_meta_arrow_match_json_replay(spark, tmp_path):
 
 
 def test_checkpoint_planned_read_table_parity(spark, tmp_path):
-    """read_table past the plan threshold routes through
-    state_frame + distributed prune — rows, schema and prune
-    decisions must equal the JSON-replay route (VERDICT r12 #1)."""
+    """read_table planned from the checkpoint — rows, schema and prune
+    decisions must equal a read taken before the checkpoint existed
+    (JSON replay; VERDICT r12 #1)."""
     path = _busy_table(spark, tmp_path)
-    ck.write_parquet_checkpoint(path)
     pred = [("id", ">=", 10)]
-    want = lk.read_table(spark, path, predicate=pred)  # JSON route
-    spark.conf.set(ck.PLAN_MIN_FILES_CONF, "1")
-    try:
-        got = lk.read_table(spark, path, predicate=pred)
-        assert got.columns == want.columns
-        assert sorted(map(tuple, got.collect())) == sorted(
-            map(tuple, want.collect())
-        )
-        # filterless + time-travel parity through the same route
-        assert lk.read_table(spark, path).count() == lk.read_table(
-            spark, path, version=lk.latest_commit(path)
-        ).count()
-        # empty-table error parity is preserved on the routed path
-        empty = str(tmp_path / "empty13")
-        t = lk.Transaction(empty)
-        t.append(
-            spark.createDataFrame([(1,)], "id long").coalesce(1)
-        )
-        t.commit()
-        t = lk.Transaction(empty)
-        t.delete_where(spark, F.lit(True))
-        t.commit()
-        ck.write_parquet_checkpoint(empty)
-        with pytest.raises(ValueError, match="is empty"):
-            lk.read_table(spark, empty)
-    finally:
-        spark.conf.unset(ck.PLAN_MIN_FILES_CONF)
+    want = lk.read_table(spark, path, predicate=pred)  # JSON replay
+    want_cols, want_rows = want.columns, _rows(want)
+    ck.write_parquet_checkpoint(path)
+    got = lk.read_table(spark, path, predicate=pred)
+    assert got.columns == want_cols
+    assert _rows(got) == want_rows
+    # filterless + time-travel parity through the same route
+    assert lk.read_table(spark, path).count() == lk.read_table(
+        spark, path, version=lk.latest_commit(path)
+    ).count()
+    # empty-table error parity is preserved on the checkpoint route
+    empty = str(tmp_path / "empty13")
+    t = lk.Transaction(empty)
+    t.append(
+        spark.createDataFrame([(1,)], "id long").coalesce(1)
+    )
+    t.commit()
+    t = lk.Transaction(empty)
+    t.delete_where(spark, F.lit(True))
+    t.commit()
+    ck.write_parquet_checkpoint(empty)
+    with pytest.raises(ValueError, match="is empty"):
+        lk.read_table(spark, empty)
 
 
 def test_datasource_plans_from_checkpoint_identically(spark, tmp_path):
-    """The registered source's checkpoint route (pyarrow — the
-    planning worker has no session) must produce the same rows AND
-    the same pruned partition list as the JSON-replay route."""
+    """The registered source planned from the checkpoint (pyarrow —
+    the planning worker has no session) must produce the same rows AND
+    the same pruned partition list as before the checkpoint existed
+    (JSON replay)."""
     from market_etl_spark import lakehouse_datasource as lds
 
     lds.register(spark)
     path = _busy_table(spark, tmp_path)
-    ck.write_parquet_checkpoint(path)
-    via_json = spark.read.format("lakehouse") \
-        .option("planFromCheckpoint", "false").load(path)
-    via_ckpt = spark.read.format("lakehouse") \
-        .option("planFromCheckpoint", "true").load(path)
-    assert via_ckpt.schema == via_json.schema
-    assert sorted(map(tuple, via_ckpt.collect())) == sorted(
-        map(tuple, via_json.collect())
-    )
-    # partition-list equality, route by route, with a pushed filter
-    schema = via_json.schema
     pred = [("id", ">=", 10)]
-    planned = {}
-    for route in ("false", "true"):
-        r = lds._LakehouseBatchReader(
-            {"path": path, "planFromCheckpoint": route}, schema
-        )
+
+    def plan(schema):
+        r = lds._LakehouseBatchReader({"path": path}, schema)
         r._conj = list(pred)
-        planned[route] = [
-            (p.file, p.dv_files) for p in r.partitions()
-        ]
-    assert planned["true"] == planned["false"]
+        return [(p.file, p.dv_files) for p in r.partitions()]
+
+    via_json = spark.read.format("lakehouse").load(path)
+    schema, rows, planned = via_json.schema, _rows(via_json), plan(via_json.schema)
+    ck.write_parquet_checkpoint(path)
+    via_ckpt = spark.read.format("lakehouse").load(path)
+    assert via_ckpt.schema == schema
+    assert _rows(via_ckpt) == rows
+    # partition-list equality with a pushed filter, DV sidecars included
+    assert plan(schema) == planned
     _v, kept, _total = lk.prune_files(path, pred)
-    assert [f for f, _dv in planned["true"]] == kept
-    # auto mode: tiny table stays on the JSON route under the default
-    # floor, and flips with the per-read floor option
-    assert not lds._use_checkpoint_plan({}, path, None)
-    assert lds._use_checkpoint_plan(
-        {"checkpointPlanMinFiles": "1"}, path, None
-    )
-    # forcing the route on a checkpoint-less table fails loudly
-    bare = str(tmp_path / "bare13")
-    t = lk.Transaction(bare)
-    t.append(spark.createDataFrame([(1,)], "id long").coalesce(1))
-    t.commit()
-    with pytest.raises(Exception, match="no parquet checkpoint"):
-        spark.read.format("lakehouse") \
-            .option("planFromCheckpoint", "true").load(bare).collect()
+    assert [f for f, _dv in planned] == kept
 
 
 def test_commit_auto_advances_past_interval(spark, tmp_path):
@@ -468,7 +422,7 @@ def test_commit_auto_advances_past_interval(spark, tmp_path):
         v_adv = ck.latest_parquet_checkpoint(path)
         assert v_adv == lk.latest_commit(path)  # tail hit 2: advanced
         # advanced state equals JSON replay
-        _pv, live_pq, dv_pq, meta_pq = _state_sets(spark, path)
+        _pv, live_pq, dv_pq, meta_pq = _state_sets(path)
         _v, live, dvs, _txns, meta, _stats = lk._state_full(path)
         assert (live_pq, dv_pq, meta_pq) == (live, dvs, meta)
         spark.conf.set(ck.AUTO_ADVANCE_CONF, "0")
@@ -484,9 +438,9 @@ def test_checkpoint_routes_respect_column_mapping_and_evolution(
 ):
     """Adversarial round-13 composition: a RENAME (column mapping) and
     a schema EVOLUTION land in the JSON tail after the checkpoint —
-    both plan routes must translate LOGICAL predicate names to the
-    physical footer-stats names and align evolved columns, exactly
-    like the JSON route."""
+    read_table and the registered source, both planned from the
+    checkpoint, must translate LOGICAL predicate names to the physical
+    footer-stats names and align evolved columns."""
     from market_etl_spark import lakehouse_datasource as lds
 
     lds.register(spark)
@@ -513,30 +467,22 @@ def test_checkpoint_routes_respect_column_mapping_and_evolution(
     )
     t.commit()
     pred = [("val", ">=", 1.0)]  # LOGICAL name: needs the colmap
-    want = lk.read_table(spark, path, predicate=pred)
+    # the rows every route must return, evolved column NULL-aligned
+    want = sorted(
+        [(i * 10 + j, float(j), None) for i in range(2) for j in range(1, 10)]
+        + [(100, 1.5, 7)]
+    )
     # session-less route: prune decisions + kept set
     _v, kept, _dvs, _meta, total = ck.prune_scan_arrow(path, pred)
     _jv, jkept, jtotal = lk.prune_files(path, pred)
     assert (kept, total) == (jkept, jtotal)
-    # routed read_table parity (rows + evolved NULL alignment)
-    spark.conf.set(ck.PLAN_MIN_FILES_CONF, "1")
-    try:
-        got = lk.read_table(spark, path, predicate=pred)
-        assert got.columns == want.columns == ["id", "val", "extra"]
-        assert sorted(map(tuple, got.collect())) == sorted(
-            map(tuple, want.collect())
-        )
-    finally:
-        spark.conf.unset(ck.PLAN_MIN_FILES_CONF)
-    # registered source, checkpoint route, same logical predicate
-    df = (
-        spark.read.format("lakehouse")
-        .option("planFromCheckpoint", "true").load(path)
-        .filter("val >= 1.0")
-    )
-    assert sorted(map(tuple, df.collect())) == sorted(
-        map(tuple, want.collect())
-    )
+    # read_table planned from the checkpoint (rows + evolved alignment)
+    got = lk.read_table(spark, path, predicate=pred)
+    assert got.columns == ["id", "val", "extra"]
+    assert _rows(got) == want
+    # registered source, same logical predicate
+    df = spark.read.format("lakehouse").load(path).filter("val >= 1.0")
+    assert _rows(df) == want
 
 
 def test_auto_advance_survives_concurrent_commits(spark, tmp_path):
@@ -582,7 +528,7 @@ def test_auto_advance_survives_concurrent_commits(spark, tmp_path):
         spark.conf.unset(ck.AUTO_ADVANCE_CONF)
     assert not errors
     ck.advance_parquet_checkpoint(path)  # settle to the tip
-    _pv, live_pq, dv_pq, meta_pq = _state_sets(spark, path)
+    _pv, live_pq, dv_pq, meta_pq = _state_sets(path)
     _v, live, dvs, _txns, meta, _stats = lk._state_full(path)
     assert (live_pq, dv_pq, meta_pq) == (live, dvs, meta)
     assert lk.read_table(spark, path).count() == 16
@@ -610,7 +556,7 @@ def test_format_writer_auto_advances_checkpoint(spark, tmp_path):
     v_adv = ck.latest_parquet_checkpoint(path)
     assert v_adv is not None and v_adv > v0
     # advanced state equals JSON replay at its version
-    pv, live_pq, dv_pq, meta_pq = _state_sets(spark, path, v_adv)
+    pv, live_pq, dv_pq, meta_pq = _state_sets(path, v_adv)
     _v, live, dvs, _txns, meta, _stats = lk._state_full(path, v_adv)
     assert (live_pq, dv_pq, meta_pq) == (live, dvs, meta)
 
@@ -620,8 +566,8 @@ def test_delete_of_restored_file_stays_deleted(spark, tmp_path):
     The final remove cancels the tail's re-add in ``_tail_net``, but
     the BASE checkpoint still carries the file's add row — unless the
     remove also lands in ``removed``, the deleted file resurrects in
-    every checkpoint-composed route (state_frame / state_arrow /
-    prune_scan_arrow) and the advance persists it permanently."""
+    every checkpoint-composed read (state_arrow / plan_scan) and the
+    advance persists it permanently."""
     path = str(tmp_path / "t")
     for lo in (0, 10):
         t = lk.Transaction(path)
@@ -644,13 +590,13 @@ def test_delete_of_restored_file_stays_deleted(spark, tmp_path):
     # JSON replay is ground truth: ids 0-9 are gone
     _v, live, dvs, _t, _m, _s = lk._state_full(path)
     # every composed route must agree — file sets AND read rows
-    pv, live_pq, dv_pq, _meta = _state_sets(spark, path)
+    pv, live_pq, dv_pq, _meta = _state_sets(path)
     assert (pv, live_pq, dv_pq) == (lk.latest_commit(path), live, dvs)
     av, alive, advs, _am = ck.state_arrow(path)
     assert (av, set(alive), advs) == (pv, live, dvs)
     sv, kept, dvf, _m2, total = ck.prune_scan_arrow(path, [])
     assert (sv, set(kept), set(dvf), total) == (pv, live, dvs, len(live))
-    got = _routed_read(spark, path, [("id", ">=", 0)])
+    got = lk.read_table(spark, path, predicate=[("id", ">=", 0)])
     assert sorted(r.id for r in got.collect()) == list(range(10, 20))
     # the advance must not resurrect the file into the next generation
     ck.advance_parquet_checkpoint(path)
@@ -676,6 +622,8 @@ def test_dv_removed_after_restore_readd_stays_removed(spark, tmp_path):
     t = lk.Transaction(path)
     t.delete_where_mor(spark, F.col("id") == 5)  # DV in the base
     t.commit()
+    # the final rows: these (JSON replay, pre-checkpoint) minus id 6
+    want = [r for r in _rows(lk.read_table(spark, path)) if r[0] != 6]
     ck.write_parquet_checkpoint(path)
     v0 = lk.latest_commit(path)
     t = lk.Transaction(path)
@@ -686,15 +634,12 @@ def test_dv_removed_after_restore_readd_stays_removed(spark, tmp_path):
     t.delete_where(spark, F.col("id") == 6)  # removes the DV again
     t.commit()
     _v, live, dvs, _t2, _m, _s = lk._state_full(path)
-    pv, live_pq, dv_pq, _meta = _state_sets(spark, path)
+    pv, live_pq, dv_pq, _meta = _state_sets(path)
     assert (pv, live_pq, dv_pq) == (lk.latest_commit(path), live, dvs)
     av, alive, advs, _am = ck.state_arrow(path)
     assert (av, set(alive), advs) == (pv, live, dvs)
-    got = _routed_read(spark, path, [("id", ">=", 0)])
-    want = lk.read_table(spark, path)
-    assert sorted(map(tuple, got.collect())) == sorted(
-        map(tuple, want.collect())
-    )
+    got = lk.read_table(spark, path, predicate=[("id", ">=", 0)])
+    assert _rows(got) == want
     ck.advance_parquet_checkpoint(path)
     nxt = spark.read.parquet(
         str(ck._ckpt_dir(path, lk.latest_commit(path)))

@@ -623,9 +623,8 @@ def test_stream_sink_races_direct_append(spark, tmp_path):
 
 
 def test_batch_reader_refuses_second_plan(spark, tmp_path):
-    """ADVICE r12: partitions() drops the file-scale maps after the
-    first plan — a silent second plan would return ZERO partitions
-    (empty result, no error); it must raise instead."""
+    """ADVICE r12: Spark plans a Python-source scan once per load();
+    a second plan on one reader is a caller bug and must raise."""
     path = _table(spark, tmp_path)
     reader = lds._LakehouseBatchReader(
         {"path": path}, spark.read.format("lakehouse").load(path).schema

@@ -752,8 +752,9 @@ def test_insert_into_identity_table_stamps_engine_columns(spark, tmp_path):
 def test_convert_then_checkpoint_then_source_composition(spark, tmp_path):
     """Round-13 planes composed end to end: CONVERT a plain directory,
     bootstrap a parquet checkpoint over the converted log, and read
-    through the registered source's CHECKPOINT route with a pushed
-    filter — decisions equal the JSON route on the converted table."""
+    through the registered source, now planned from the checkpoint,
+    with a pushed filter — rows equal the read taken before the
+    checkpoint existed, decisions equal JSON replay."""
     from market_etl_spark import lakehouse_checkpoint as ck
     from market_etl_spark import lakehouse_datasource as lds
 
@@ -764,16 +765,11 @@ def test_convert_then_checkpoint_then_source_composition(spark, tmp_path):
     ).repartition(4).write.parquet(plain)
     run_sql(spark, f"CONVERT TO LAKEHOUSE parquet.`{plain}`")
     run_sql(spark, f"DELETE FROM lakehouse.`{plain}` WHERE id = 1")
+    via_json = spark.read.format("lakehouse").load(plain).filter("id < 20")
+    want = sorted(map(tuple, via_json.collect()))
     ck.write_parquet_checkpoint(plain)
-    via_json = spark.read.format("lakehouse") \
-        .option("planFromCheckpoint", "false").load(plain) \
-        .filter("id < 20")
-    via_ckpt = spark.read.format("lakehouse") \
-        .option("planFromCheckpoint", "true").load(plain) \
-        .filter("id < 20")
-    assert sorted(map(tuple, via_ckpt.collect())) == sorted(
-        map(tuple, via_json.collect())
-    )
+    via_ckpt = spark.read.format("lakehouse").load(plain).filter("id < 20")
+    assert sorted(map(tuple, via_ckpt.collect())) == want
     # prune decisions identical on converted (absolute-stat) files
     pred = [("id", "<", 20)]
     _v, kept, dvs, _m, total = ck.prune_scan_arrow(plain, pred)

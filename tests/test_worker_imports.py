@@ -1,8 +1,8 @@
 """Python workers must be able to import the engine package whatever the
 driver's working directory.
 
-Evaluators shipped into ``mapInPandas`` reference engine functions (the
-distributed prune runs :func:`lakehouse._stats_admit`), and the
+Functions shipped to executors reference engine functions (the
+distributed footer-stats job runs :func:`lakehouse._file_stats`), and the
 ``lakehouse`` DataSource plans and commits on Python workers.  Workers
 unpickle those functions by importing ``market_etl_spark``, which used to
 work only when the driver ran from the repository root.  The package puts
@@ -22,6 +22,8 @@ _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 _SCRIPT = textwrap.dedent(
     """
+    import os
+    import pathlib
     import sys
     from pyspark.sql import SparkSession
 
@@ -48,10 +50,12 @@ _SCRIPT = textwrap.dedent(
             .coalesce(1)
         )
         t.commit()
-    ck.write_parquet_checkpoint(path)
-    pred = [("id", "<", 5)]
-    got = ck.prune_files_distributed(spark, path, pred)
-    print("PRUNED", got == lk.prune_files(path, pred), got[0])
+    _v, live, _dvs = lk._state(path)
+    paths = [os.path.join(path, f) for f in sorted(live)]
+    got = ck.stats_distributed(spark, paths)
+    want = {p: lk._file_stats(pathlib.Path(p)) for p in paths}
+    print("STATS", got == want, len(got))
+    ck.write_parquet_checkpoint(path)  # the source then plans from it
     register(spark)
     spark.range(20, 25).write.format("lakehouse").mode("append").save(path)
     n = spark.read.format("lakehouse").load(path).filter("id < 5 or id >= 20").count()
@@ -63,7 +67,7 @@ _SCRIPT = textwrap.dedent(
 
 @pytest.mark.parametrize("order", ["import_first", "session_first"])
 def test_workers_import_the_engine_from_outside_the_repo(tmp_path, order):
-    script = tmp_path / "prune.py"
+    script = tmp_path / "stats.py"
     script.write_text(_SCRIPT)
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
     out = subprocess.run(
@@ -74,5 +78,5 @@ def test_workers_import_the_engine_from_outside_the_repo(tmp_path, order):
         text=True,
         timeout=600,
     )
-    assert "PRUNED True 2" in out.stdout, out.stderr[-3000:]
+    assert "STATS True 2" in out.stdout, out.stderr[-3000:]
     assert "READ 10" in out.stdout, out.stderr[-3000:]
