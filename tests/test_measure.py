@@ -77,7 +77,7 @@ def test_rows_summary_and_resume(spark, tmp_path, capsys):
     assert measure.main(argv) == 0
     rows = [json.loads(line) for line in rows_path.read_text().splitlines()]
     assert [(r["name"], r["pass"]) for r in rows] == [(n, p) for p in (1, 2) for n in names]
-    fields = ("wall_s rows jobs sql_executions task_s shuffle_bytes spill_bytes driver_gap_s "
+    fields = ("wall_s rows jobs sql_executions codegen_compiles task_s shuffle_bytes spill_bytes driver_gap_s "
               "stream_start_s stream_trigger_ms stream_batches").split()
     for r in rows:
         assert "error" not in r and all(f in r for f in fields), r

@@ -102,11 +102,19 @@ def spark_work(spark, name: str, t0: float, t1: float) -> dict:
             "shuffle_bytes": shuffle, "spill_bytes": spill, "driver_gap_s": round(t1 - t0 - busy, 3)}
 
 
+def codegen_compiles(spark) -> int:
+    """Classes the JVM has compiled from generated code (Janino), counting
+    every cache miss of Spark's generated-code cache."""
+    return spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME().getCount()
+
+
 def run_query(spark, name: str, fn, p: int, sf_dir: str, records: list[dict], prof) -> tuple[dict, object]:
     """Pass ``p``'s run of query ``name`` (``fn``) and its row: wall_s, rows
-    (or error), the :func:`spark_work` and the stream figures of ``perfbench``."""
+    (or error), the :func:`spark_work`, the classes compiled and the stream
+    figures of ``perfbench``."""
     spark.sparkContext.setJobGroup(f"q:{name}", name, False)
     row, df, n_records = {"name": name, "pass": p}, None, len(records)
+    compiled = codegen_compiles(spark)
     t0, c0 = time.time(), time.perf_counter()
     try:
         with prof:
@@ -116,6 +124,7 @@ def run_query(spark, name: str, fn, p: int, sf_dir: str, records: list[dict], pr
         row["error"] = f"{type(e).__name__}: {str(e)[:200]}"
     row["wall_s"] = round(time.perf_counter() - c0, 3)
     row.update(spark_work(spark, name, t0, time.time()))
+    row["codegen_compiles"] = codegen_compiles(spark) - compiled
     row.update({"stream_" + k.split(".")[1]: round(v, 3) for k, v in stream_metrics(records[n_records:]).items()})
     return row, df
 
