@@ -16,15 +16,32 @@ restore sequences that once resurrected files through a checkpoint:
 The checkpoint is bootstrapped, then advanced; at every version the
 session-less compositions and the scan planner equal JSON replay, also
 when a checkpoint part cannot be read.
+
+:class:`LogMachine` checks the same ground against a model: Hypothesis
+writes random commits and runs the driver-side log operations in random
+order, and at every retained version each read of the log must equal a
+plain dict of what the state is.
 """
 
 from __future__ import annotations
 
 import json
 import pathlib
+import shutil
+import tempfile
 
+import hypothesis.strategies as st
 import pyarrow.parquet as pq
 import pytest
+from hypothesis import HealthCheck, settings
+from hypothesis.stateful import (
+    RuleBasedStateMachine,
+    initialize,
+    invariant,
+    precondition,
+    rule,
+    run_state_machine_as_test,
+)
 
 from market_etl_spark import lakehouse as lk
 from market_etl_spark import lakehouse_checkpoint as ck
@@ -239,3 +256,275 @@ def test_batch_reader_replays_the_log_at_most_once(table, monkeypatch, checkpoin
     assert len(replays) == (0 if checkpointed else 1)
     monkeypatch.setattr(lk, "_state_full", full)
     assert (reader.version, files) == lk.prune_files(table, reader._conj)[:2]
+
+
+# -- the log against a model ----------------------------------------------
+
+#: what a ``set_meta`` may fold in: the schema, a rename's column map
+#: (logical ``val`` -> physical ``v``), and keys the planner ignores
+_METAS = (
+    {"schema": _SCHEMA},
+    {"colmap": {"id": "id", "val": "v"},
+     "schema": [["id", "bigint"], ["val", "double"]]},
+    {"evolved": True},
+    {"constraints": {"pos": "id >= 0"}},
+)
+
+
+def _empty_state() -> dict:
+    return {"live": {}, "dvs": set(), "meta": {}, "txns": {}, "copies": set()}
+
+
+class LogMachine(RuleBasedStateMachine):
+    """A table's commit log against a plain model.
+
+    ``states[v]`` is a dict of the live files and their stats, the DV
+    files, the table meta, the txn high-water marks and the COPY INTO
+    ledger at version ``v``; each commit is applied to a copy of the
+    previous one.  The model also tracks which checkpoint generations
+    exist and which were damaged, so it knows which reads must raise.
+    Checkpoint parts hold 3 rows, so a generation has several parts to
+    damage."""
+
+    def __init__(self):
+        super().__init__()
+        self.tmp = tempfile.mkdtemp(prefix="log-model-")
+        self.path = str(pathlib.Path(self.tmp) / "t")
+        self.log = pathlib.Path(self.path) / lk._LOG_DIR
+        self.log.mkdir(parents=True)
+        self.states: list[dict | None] = [None]  # index = version
+        self.oldest = 1  # oldest retained version
+        self.gens: set[int] = set()
+        self.damaged: set[int] = set()
+        # every path ever written, for re-adds and removes to pick from
+        self.files: dict[str, dict | None] = {}
+        self.dv_files: list[str] = []
+        self.sources: list[str] = []
+        self._part_rows = ck._PART_ROWS
+        ck._PART_ROWS = 3
+
+    def teardown(self):
+        ck._PART_ROWS = self._part_rows
+        shutil.rmtree(self.tmp, ignore_errors=True)
+
+    @property
+    def latest(self) -> int:
+        return len(self.states) - 1
+
+    # -- steps with explicit arguments (the rules draw them) --
+
+    def do_commit(self, actions: list[dict], txn: dict | None = None) -> None:
+        v = self.latest + 1
+        body = {"version": v, "ts": float(v), "actions": actions}
+        if txn:
+            body["txn"] = txn
+        (self.log / f"{v:08d}.json").write_text(json.dumps(body))
+        prev = self.states[-1] or _empty_state()
+        s = {k: type(x)(x) for k, x in prev.items()}
+        if txn:
+            s["txns"][txn["app"]] = max(s["txns"].get(txn["app"], -1), txn["version"])
+        for a in actions:
+            op, f = a["op"], a.get("file")
+            if op == "add":
+                s["live"][f] = a.get("stats")
+                self.files.setdefault(f, a.get("stats"))
+            elif op == "remove":
+                s["live"].pop(f, None)
+            elif op == "add_dv":
+                s["dvs"].add(f)
+                if f not in self.dv_files:
+                    self.dv_files.append(f)
+            elif op == "remove_dv":
+                s["dvs"].discard(f)
+            elif op == "set_meta":
+                s["meta"].update(a["meta"])
+            elif op == "copy_source":
+                s["copies"].add(f)
+                if f not in self.sources:
+                    self.sources.append(f)
+        self.states.append(s)
+
+    def _sweep(self, keep: int) -> None:
+        for g in sorted(self.gens)[:-keep]:
+            self.gens.discard(g)
+            self.damaged.discard(g)
+
+    def do_checkpoint(self, v: int) -> None:
+        assert ck.write_parquet_checkpoint(self.path, v) == v
+        self.gens.add(v)  # a generation already at v stays as it was
+
+    def do_advance(self, v: int) -> None:
+        below = [g for g in self.gens if g <= v]
+        if below and max(below) < v and max(below) in self.damaged:
+            with pytest.raises(ck._Unreadable):
+                ck.advance_parquet_checkpoint(self.path, v)
+            return
+        assert ck.advance_parquet_checkpoint(self.path, v) == v
+        if not below:  # bootstraps, sweeping nothing
+            self.gens.add(v)
+        elif max(below) < v:
+            self.gens.add(v)
+            self._sweep(2)
+
+    def do_expire(self, keep_from: int) -> None:
+        lk.expire_versions(self.path, keep_from)
+        if keep_from > self.oldest:
+            self.oldest = keep_from
+            self.gens = {g for g in self.gens if g >= keep_from}
+            self.damaged &= self.gens
+
+    def do_damage(self, g: int, part: int, truncate: bool) -> None:
+        parts = sorted(ck._ckpt_dir(self.path, g).glob("*.parquet"))
+        p = parts[part % len(parts)]
+        body = p.read_bytes()
+        p.write_bytes(body[: len(body) // 2] if truncate else b"not parquet")
+        self.damaged.add(g)
+
+    # -- the rules --
+
+    def _version(self, data) -> int:
+        return data.draw(st.integers(self.oldest, self.latest), label="version")
+
+    def _action(self, data) -> dict:
+        op = data.draw(st.sampled_from(
+            ["add", "add", "remove", "add_dv", "remove_dv", "set_meta", "copy_source"]
+        ))
+        if op == "set_meta":
+            return {"op": op, "meta": data.draw(st.sampled_from(_METAS))}
+        if op == "remove":
+            if not self.files:
+                return {"op": "set_meta", "meta": _METAS[0]}
+            return _rm(data.draw(st.sampled_from(sorted(self.files))))
+        pool = {"add": sorted(self.files), "add_dv": self.dv_files,
+                "remove_dv": self.dv_files, "copy_source": self.sources}[op]
+        if op == "remove_dv" and not pool:
+            op = "add_dv"
+        if pool and (op == "remove_dv" or data.draw(st.booleans())):
+            # a remove_dv, a RESTORE's re-add or a repeated copy
+            f = data.draw(st.sampled_from(pool))
+        else:
+            f = {"add": "data/f{}.parquet", "add_dv": "_deletes/dv{}.parquet",
+                 "copy_source": "/landing/s{}.csv"}[op].format(len(pool))
+        if op != "add":
+            return {"op": op, "file": f}
+        if f not in self.files:
+            lo = data.draw(st.integers(-5, 40))
+            self.files[f] = data.draw(st.none() | st.builds(
+                _st, st.just(lo), st.integers(lo, 45), st.integers(0, 10)
+            ))
+        return _add(f, self.files[f])
+
+    @initialize(data=st.data())
+    def first_commit(self, data):
+        self.commit(data)
+
+    @rule(data=st.data())
+    def commit(self, data):
+        actions = [self._action(data) for _ in range(data.draw(st.integers(1, 4)))]
+        txn = data.draw(st.none() | st.fixed_dictionaries(
+            {"app": st.sampled_from("st"), "version": st.integers(0, 5)}
+        ))
+        self.do_commit(actions, txn)
+
+    @rule(data=st.data())
+    def checkpoint(self, data):
+        self.do_checkpoint(self._version(data))
+
+    @rule(data=st.data())
+    def advance(self, data):
+        self.do_advance(self._version(data))
+
+    @rule(data=st.data())
+    def expire(self, data):
+        self.do_expire(self._version(data))
+
+    @rule(data=st.data())
+    def json_checkpoint(self, data):
+        v = self._version(data)
+        assert lk.write_checkpoint(self.path, v) == v
+
+    @precondition(lambda self: self.gens - self.damaged)
+    @rule(data=st.data())
+    def damage(self, data):
+        g = data.draw(st.sampled_from(sorted(self.gens - self.damaged)))
+        self.do_damage(g, data.draw(st.integers(0, 9)), data.draw(st.booleans()))
+
+    # -- the check --
+
+    def check_version(self, v: int) -> None:
+        m, path = self.states[v], self.path
+        live, dvs, meta = m["live"], m["dvs"], m["meta"]
+        rv, rlive, rdvs, rtxns, rmeta, rstats = lk._state_full(path, v)
+        assert (rv, rlive, rdvs, rtxns, rmeta) == (v, set(live), dvs, m["txns"], meta)
+        assert {f: rstats.get(f) for f in rlive} == live
+        assert lk.copy_sources(path, v) == m["copies"]
+        cm = lk._colmap(meta)
+        for pred in _PREDICATES:
+            conj = [(cm.get(c, c), op, val) for c, op, val in pred]
+            kept = sorted(f for f, s in live.items()
+                          if all(lk._stats_admit(s, *c) for c in conj))
+            assert ck.plan_scan(path, pred, v) == (
+                v, kept, sorted(dvs), meta, len(live)
+            ), pred
+        base = max((g for g in self.gens if g <= v), default=None)
+        if base is None or base in self.damaged:
+            err = ValueError if base is None else ck._Unreadable
+            for read in (ck.state_arrow, ck.meta_arrow):
+                with pytest.raises(err):
+                    read(path, v)
+            return
+        av, alive, advs, ameta = ck.state_arrow(path, v)
+        astats = {f: json.loads(s) if s else None for f, s in alive.items()}
+        assert (av, astats, advs, ameta) == (v, live, dvs, meta)
+        assert ck.meta_arrow(path, v) == (v, meta)
+
+    @invariant()
+    def reads_equal_the_model(self):
+        if self.latest == 0:
+            return
+        for v in range(self.oldest, self.latest + 1):
+            self.check_version(v)
+        if self.oldest > 1:
+            with pytest.raises(ValueError, match="expired"):
+                lk._state_full(self.path, self.oldest - 1)
+        assert not list(self.log.glob(".*tmp*"))
+
+
+_MODEL = dict(
+    deadline=None,
+    database=None,
+    suppress_health_check=[HealthCheck.too_slow, HealthCheck.filter_too_much],
+)
+
+
+def test_log_matches_the_model():
+    run_state_machine_as_test(
+        LogMachine, settings=settings(max_examples=25, stateful_step_count=12, **_MODEL)
+    )
+
+
+@pytest.mark.slow
+def test_log_matches_the_model_long():
+    run_state_machine_as_test(
+        LogMachine, settings=settings(max_examples=300, stateful_step_count=30, **_MODEL)
+    )
+
+
+def test_fixture_commits_as_an_explicit_model_run():
+    """The 10-commit fixture and its bootstrap-and-advance script, run
+    through the model check as one explicit example."""
+    m = LogMachine()
+    try:
+        for actions, txn in _COMMITS:
+            m.do_commit(actions, txn)
+            m.reads_equal_the_model()
+        m.do_checkpoint(3)
+        m.reads_equal_the_model()
+        for target in (6, 7, 9, len(_COMMITS)):
+            m.do_advance(target)
+            m.reads_equal_the_model()
+        assert m.gens == {9, len(_COMMITS)}
+        m.do_expire(9)
+        m.reads_equal_the_model()
+    finally:
+        m.teardown()
