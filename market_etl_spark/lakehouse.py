@@ -34,10 +34,12 @@ Model (Delta/Iceberg's core contract, minimally):
   their commit, readers subtract them, and :meth:`Transaction.
   compact` settles them (applies + removes) in one generation move —
   the OPTIMIZE contract, now transactional.
-- CHECKPOINTS (:func:`write_checkpoint`): the replayed live set
-  materialized every so often, so snapshot resolution is O(commits
-  since last checkpoint) — Delta's ``_last_checkpoint`` discipline,
-  which is what keeps a long-lived table's metadata reads bounded.
+- CHECKPOINTS (:mod:`.lakehouse_checkpoint`): the state at a version
+  landed as a parquet generation.  Every read of the log state is the
+  newest readable generation ≤ v (none = the empty base) plus the
+  JSON tail, folded by ONE function (:func:`_tail_net`), so snapshot
+  resolution is O(commits since last checkpoint) — Delta's checkpoint
+  discipline, which keeps a long-lived table's metadata reads bounded.
 - EXACTLY-ONCE WRITERS: commits may carry a ``(txn_app,
   txn_version)`` identity; duplicates skip (Delta txnAppId/
   txnVersion) — what a restarting foreachBatch stream needs.
@@ -142,15 +144,12 @@ import pathlib
 import re
 import shutil
 import uuid
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 _LOG_DIR = "_log"
-#: Parquet-checkpoint directory prefix under _log/ — owned here so
-#: retention (expire_versions) and the orphan sweep know the layout;
-#: the plane itself lives in :mod:`.lakehouse_checkpoint`.
-_PQ_CKPT_PREFIX = "ckptpq-"
 _DATA_DIR = "data"
 _DV_DIR = "_deletes"
 _CDC_DIR = "_cdc"
@@ -210,12 +209,110 @@ def _state(
     path: str, version: int | None = None
 ) -> tuple[int, set[str], set[str]]:
     """Replay the log to ``(version, live data files, live DV files)``.
-    Starts from the newest CHECKPOINT ≤ version when one exists, so
-    replay cost is O(commits since last checkpoint), not O(table
+    Starts from the newest parquet CHECKPOINT ≤ version when one exists,
+    so replay cost is O(commits since last checkpoint), not O(table
     lifetime) — the Delta `_last_checkpoint` discipline that keeps a
     100 TB table's snapshot resolution at metadata speed."""
     v, live, dvs, _txns, _meta, _stats = _state_full(path, version)
     return v, live, dvs
+
+
+class _Tail(NamedTuple):
+    """Net effect of a run of commits.  ``added`` maps file -> stats
+    dict or None; ``added``/``removed`` are disjoint, likewise the DV
+    pair; ``meta``, ``txns`` and ``copied`` (COPY INTO sources) are the
+    folded updates.  A generation at v0 is the net of commits (0, v0]."""
+
+    added: dict
+    removed: set
+    dv_added: set
+    dv_removed: set
+    meta: dict
+    txns: dict
+    copied: set
+
+    @property
+    def gone(self) -> set:
+        """Files whose BASE add/dv rows must drop: all the tail removed
+        or re-emits (a RESTORE's remove + re-add nets to ``added``; the
+        base row would duplicate the file, ADVICE r12)."""
+        return self.removed | set(self.added) | self.dv_removed | self.dv_added
+
+    def then(self, t: "_Tail") -> "_Tail":
+        """This net followed by the later net ``t``."""
+        txns = dict(self.txns)
+        for app, tv in t.txns.items():
+            txns[app] = max(txns.get(app, -1), tv)
+        added = {f: s for f, s in self.added.items() if f not in t.removed}
+        return _Tail(
+            {**added, **t.added}, (self.removed - set(t.added)) | t.removed,
+            (self.dv_added - t.dv_removed) | t.dv_added,
+            (self.dv_removed - t.dv_added) | t.dv_removed,
+            {**self.meta, **t.meta}, txns, self.copied | t.copied,
+        )
+
+
+def _net() -> _Tail:
+    """The net of no commits."""
+    return _Tail({}, set(), set(), set(), {}, {}, set())
+
+
+def _tail_net(path: str, v_from: int, v_to: int) -> _Tail:
+    """Net effect of commits (v_from, v_to] — THE fold of log actions,
+    in replay order.  Each op evicts the file from the opposite
+    bucket, and a remove always lands in ``removed`` so a base add row
+    can never outlive a final tail delete.  Raises ValueError when a
+    commit in the range was expired."""
+    t = _net()
+    for i in range(v_from + 1, v_to + 1):
+        try:
+            c = _read_commit(path, i)
+        except FileNotFoundError:
+            raise ValueError(
+                f"cannot reconstruct version {v_to} at {path}: commit {i} "
+                f"was expired by expire_versions — time travel reaches "
+                f"back only to the oldest retained version"
+            ) from None
+        txn = c.get("txn")
+        if txn:
+            t.txns[txn["app"]] = max(t.txns.get(txn["app"], -1), txn["version"])
+        for a in c["actions"]:
+            op = a["op"]
+            if op == "add":
+                t.removed.discard(a["file"])
+                t.added[a["file"]] = a.get("stats") or None
+            elif op == "remove":
+                # ALWAYS lands in `removed`, even cancelling a tail
+                # re-add: only `removed` evicts a base add row (ADVICE
+                # r13); for a base-absent file it is a no-op
+                t.added.pop(a["file"], None)
+                t.removed.add(a["file"])
+            elif op == "add_dv":
+                t.dv_removed.discard(a["file"])
+                t.dv_added.add(a["file"])
+            elif op == "remove_dv":
+                # as `remove`: only `dv_removed` evicts a base dv row
+                t.dv_added.discard(a["file"])
+                t.dv_removed.add(a["file"])
+            elif op == "set_meta":
+                t.meta.update(a["meta"])
+            elif op == "copy_source":
+                t.copied.add(a["file"])
+    return t
+
+
+def _net_at(path: str, v: int) -> tuple[int, _Tail]:
+    """``(v0, state at v as the net of commits (0, v])``: the newest
+    readable generation v0 ≤ v (0 = the empty base) plus the tail."""
+    from . import lakehouse_checkpoint as _ckpt  # lazy: circular import
+
+    v0, base = _ckpt._resolve_base(path, v)
+    tail = _tail_net(path, v0, v)
+    return v0, base.then(tail) if v0 else tail
+
+
+def _as_state(v: int, t: _Tail) -> tuple[int, set[str], set[str], dict, dict, dict]:
+    return v, set(t.added), t.dv_added, t.txns, t.meta, t.added
 
 
 def _state_full(
@@ -226,48 +323,18 @@ def _state_full(
     txnAppId/txnVersion bookkeeping), the table METADATA dict
     (schema fields, CHECK constraints, evolved flag) and the per-file
     COLUMN-STATISTICS map ``{live file: stats dict | None}`` carried
-    on ``add`` actions — all checkpoint-carried."""
+    on ``add`` actions — all checkpoint-carried (:func:`_net_at`)."""
     v = latest_commit(path) if version is None else version
-    live: set[str] = set()
-    dvs: set[str] = set()
-    txns: dict[str, int] = {}
-    meta: dict = {}
-    stats: dict[str, dict | None] = {}
-    start = 1
-    ck = _latest_checkpoint(path, v)
-    if ck is not None:
-        live = set(ck["files"])
-        dvs = set(ck["dvs"])
-        txns = dict(ck.get("txns", {}))
-        meta = dict(ck.get("meta", {}))
-        stats = dict(ck.get("stats", {}))
-        start = ck["version"] + 1
-    for i in range(start, v + 1):
-        try:
-            c = _read_commit(path, i)
-        except FileNotFoundError:
-            raise ValueError(
-                f"cannot reconstruct version {v} at {path}: commit {i} "
-                f"was expired by expire_versions — time travel reaches "
-                f"back only to the oldest retained version"
-            ) from None
-        t = c.get("txn")
-        if t:
-            txns[t["app"]] = max(txns.get(t["app"], -1), t["version"])
-        for a in c["actions"]:
-            if a["op"] == "add":
-                live.add(a["file"])
-                stats[a["file"]] = a.get("stats")
-            elif a["op"] == "remove":
-                live.discard(a["file"])
-                stats.pop(a["file"], None)
-            elif a["op"] == "add_dv":
-                dvs.add(a["file"])
-            elif a["op"] == "remove_dv":
-                dvs.discard(a["file"])
-            elif a["op"] == "set_meta":
-                meta.update(a["meta"])
-    return v, live, dvs, txns, meta, stats
+    return _as_state(v, _net_at(path, v)[1])
+
+
+def json_replay(
+    path: str, version: int | None = None
+) -> tuple[int, set[str], set[str], dict, dict, dict]:
+    """:func:`_state_full` from the empty base, no checkpoint read: the
+    reference of checkpoint-parity checks (raises once commit 1 expired)."""
+    v = latest_commit(path) if version is None else version
+    return _as_state(v, _tail_net(path, 0, v))
 
 
 def last_txn_version(path: str, app: str) -> int:
@@ -313,11 +380,11 @@ def expire_versions(path: str, keep_from: int) -> dict:
     """EXPIRE history before version ``keep_from`` — Iceberg's
     ``expire_snapshots`` / Delta's log retention as one retention
     operation: data/DV/CDC files referenced ONLY by versions <
-    ``keep_from`` are physically deleted, the replay state at
-    ``keep_from`` is pinned as a checkpoint (so every retained
-    version still reconstructs without the expired commits), and the
-    expired commit/checkpoint JSONs are removed.  Time travel and
-    change feeds reaching below ``keep_from`` subsequently raise;
+    ``keep_from`` are physically deleted, the state at ``keep_from``
+    is pinned as a checkpoint generation (the FLOOR: the only copy of
+    the expired prefix's state, which sweeps keep), and the expired
+    commit JSONs and generations below it are removed.  Time travel
+    and change feeds reaching below ``keep_from`` subsequently raise;
     reads at or after it are byte-identical to before.
 
     This is the bounded-storage contract a 100 TB table needs:
@@ -331,7 +398,7 @@ def expire_versions(path: str, keep_from: int) -> dict:
     against a quiesced table or behind the same coordination as
     vacuum (a reader mid-time-travel below ``keep_from`` sees its
     files vanish — Delta documents the identical constraint).  Crash
-    mid-delete is safe: the retention checkpoint lands FIRST, a retry
+    mid-delete is safe: the retention generation lands FIRST, a retry
     finishes the remaining unlinks, and any data file stranded after
     the last expired commit JSON went is unreferenced debris
     :func:`vacuum_orphans` sweeps.  Returns ``{"expired_through",
@@ -351,6 +418,11 @@ def expire_versions(path: str, keep_from: int) -> dict:
             "data_files_deleted": 0,
             "log_files_deleted": 0,
         }
+    from . import lakehouse_checkpoint as _ckpt  # lazy: circular import
+
+    # the generation FIRST: once it exists, retained versions read
+    # without the expired prefix even if we crash mid-delete
+    _ckpt.write_parquet_checkpoint(path, keep_from)
     # files every retained version can still reach: the state at
     # keep_from plus everything added after it
     _v, live, dvs, _txns, _meta, _stats = _state_full(path, keep_from)
@@ -361,9 +433,6 @@ def expire_versions(path: str, keep_from: int) -> dict:
         for a in _read_commit(path, v)["actions"]:
             if a["op"] in ("add", "add_dv", "add_cdc"):
                 retained.add(a["file"])
-    # checkpoint FIRST: once it exists, retained versions replay
-    # without the expired prefix even if we crash mid-delete
-    write_checkpoint(path, keep_from)
     doomed: set[str] = set()
     for v in expired:
         for a in _read_commit(path, v)["actions"]:
@@ -394,24 +463,12 @@ def expire_versions(path: str, keep_from: int) -> dict:
             log_deleted += 1
         except FileNotFoundError:
             pass
-    for p in log.glob("ckpt-*.json"):
-        try:
-            if int(p.stem.split("-")[1]) < keep_from:
-                p.unlink()
-                log_deleted += 1
-        except (IndexError, ValueError, FileNotFoundError):
-            continue
-    # parquet checkpoints below the boundary reference deleted files
-    # AND their replay tail's commit JSONs are gone — leaving one
-    # behind would send checkpoint-composed reads (plan_scan,
-    # state_arrow) into a FileNotFoundError mid-tail
-    for p in log.glob(f"{_PQ_CKPT_PREFIX}*"):
-        try:
-            if p.is_dir() and int(p.name[len(_PQ_CKPT_PREFIX):]) < keep_from:
-                shutil.rmtree(p, ignore_errors=True)
-                log_deleted += 1
-        except ValueError:
-            continue
+    # generations below the boundary reference deleted files AND
+    # their tail's commit JSONs are gone
+    for g in _ckpt._generations(path):
+        if g < keep_from:
+            shutil.rmtree(_ckpt._ckpt_dir(path, g), ignore_errors=True)
+            log_deleted += 1
     return {
         "expired_through": keep_from - 1,
         "data_files_deleted": data_deleted,
@@ -426,58 +483,6 @@ def snapshot(path: str, version: int | None = None) -> tuple[int, list[str]]:
     sidecar keys."""
     v, live, _dvs = _state(path, version)
     return v, sorted(live)
-
-
-def write_checkpoint(path: str, version: int | None = None) -> int:
-    """Materialize the replay state at ``version`` (default: latest)
-    as ``_log/ckpt-N.json`` so later :func:`snapshot` calls replay
-    only the commits after it.  A checkpoint is DERIVED data —
-    deterministic from the log prefix — so the plain-rename race (two
-    writers checkpointing the same version) is harmless: both write
-    identical bytes.  Returns the checkpointed version."""
-    v, live, dvs, txns, meta, stats = _state_full(path, version)
-    log = pathlib.Path(path) / _LOG_DIR
-    tmp = log / f".ckpt-tmp-{uuid.uuid4().hex[:8]}"
-    tmp.write_text(
-        json.dumps(
-            {
-                "version": v,
-                "files": sorted(live),
-                "dvs": sorted(dvs),
-                "txns": txns,
-                "meta": meta,
-                # per-file column stats survive checkpointing, or data
-                # skipping would silently degrade to full scans the
-                # moment replay starts from a checkpoint
-                "stats": {f: stats[f] for f in live if stats.get(f)},
-                # the COPY INTO skip ledger survives checkpointing (and
-                # therefore expire_versions' retention checkpoint), or
-                # retention would silently re-open the ingestion door
-                # for every already-loaded source file
-                "copy_sources": sorted(copy_sources(path, v)),
-            },
-            indent=1,
-        )
-    )
-    os.rename(tmp, log / f"ckpt-{v:08d}.json")
-    return v
-
-
-def _latest_checkpoint(path: str, max_version: int) -> dict | None:
-    log = pathlib.Path(path) / _LOG_DIR
-    if not log.exists():
-        return None
-    best = -1
-    for p in log.glob("ckpt-*.json"):
-        try:
-            v = int(p.stem.split("-")[1])
-        except (IndexError, ValueError):
-            continue
-        if v <= max_version:
-            best = max(best, v)
-    if best < 0:
-        return None
-    return json.loads((log / f"ckpt-{best:08d}.json").read_text())
 
 
 # -- file-level column statistics + data skipping ------------------------
@@ -3929,22 +3934,15 @@ def version_before_timestamp(path: str, ts: float) -> int:
 
 def copy_sources(path: str, version: int | None = None) -> set[str]:
     """The COPY INTO skip ledger: every source file an earlier
-    ``copy_into`` loaded, replayed from the retained log (checkpoint
-    ``copy_sources`` + ``copy_source`` actions after it).  Driver
-    JSON work is O(commits since checkpoint), like any state
-    replay."""
+    ``copy_into`` loaded — the ``copy`` rows of the newest checkpoint
+    generation ≤ version plus the ``copy_source`` actions after it,
+    so the ledger survives retention.  Driver JSON work is O(commits
+    since checkpoint), like any state read."""
+    from . import lakehouse_checkpoint as _ckpt  # lazy: circular import
+
     v = latest_commit(path) if version is None else version
-    loaded: set[str] = set()
-    start = 1
-    ck = _latest_checkpoint(path, v)
-    if ck is not None:
-        loaded = set(ck.get("copy_sources", ()))
-        start = ck["version"] + 1
-    for i in range(start, v + 1):
-        for a in _read_commit(path, i)["actions"]:
-            if a["op"] == "copy_source":
-                loaded.add(a["file"])
-    return loaded
+    v0, base = _ckpt._resolve_base(path, v, ("copy",))
+    return base.copied | _tail_net(path, v0, v).copied
 
 
 def copy_into(
@@ -3964,8 +3962,8 @@ def copy_into(
     ACTIONS in the same commit as the data adds (one atomic rename
     covers both — a crash before the commit re-loads cleanly, a crash
     after skips cleanly; no sidecar can desynchronize).  The ledger
-    survives checkpoints and retention (:func:`write_checkpoint`
-    carries it), and two CONCURRENT copies of overlapping sources
+    survives checkpoints and retention (checkpoint generations carry
+    it as ``copy`` rows), and two CONCURRENT copies of overlapping sources
     conflict at commit time (``_validate_against`` intersects their
     ``copy_source`` paths) instead of silently double-loading.
 
@@ -4060,27 +4058,27 @@ def vacuum_orphans(
     debris, so only files older than ``min_age_sec`` go (pass 0 only under a
     known-single-writer window).  ``dry_run`` counts what WOULD go
     without touching anything (Delta's ``VACUUM ... DRY RUN``).
-    Returns files removed (or would-be-removed)."""
+    Referenced = named by a retained commit or by an add/dv row of a
+    checkpoint generation (after :func:`expire_versions` the expired
+    prefix's survivors are named only by the floor generation); an
+    unreadable generation stops the sweep.  Returns files removed (or
+    would-be-removed)."""
     import time
 
+    from . import lakehouse_checkpoint as _ckpt  # lazy: circular import
+
     root = pathlib.Path(path)
+    # resolving the base converts a table expired under the former
+    # JSON checkpoint before its references are counted
+    _ckpt._resolve_base(path, latest_commit(path), ("meta",))
     referenced: set[str] = set()
     for v in _commit_versions(path):
         for a in _read_commit(path, v)["actions"]:
             if a["op"] in ("add", "add_dv", "add_cdc"):
                 referenced.add(a["file"])
-    # after expire_versions the surviving files of the expired prefix
-    # are referenced only via the retention checkpoint — a sweep that
-    # ignored it would delete live data
-    log_dir = root / _LOG_DIR
-    if log_dir.exists():
-        for p in log_dir.glob("ckpt-*.json"):
-            try:
-                ck = json.loads(p.read_text())
-            except (OSError, ValueError):
-                continue
-            referenced.update(ck.get("files", []))
-            referenced.update(ck.get("dvs", []))
+    for g in _ckpt._generations(path):
+        for b in _ckpt._base_batches(path, g, ["add", "dv"], columns=["file"]):
+            referenced.update(b.column("file").to_pylist())
     live_names = {pathlib.PurePosixPath(f).name for f in referenced}
     now = time.time()
     removed = 0
@@ -4113,20 +4111,18 @@ def vacuum_orphans(
             removed += 1
     log = root / _LOG_DIR
     if log.exists():
-        # commit bodies stranded between write_text and os.link, and
-        # checkpoint staging left between write_text and rename
-        for pat in (".tmp-*", ".ckpt-tmp-*"):
-            for p in log.glob(pat):
-                if _old(p):
-                    try:
-                        if not dry_run:
-                            p.unlink()
-                        removed += 1
-                    except OSError:
-                        pass
-        # parquet-checkpoint staging DIRS a crashed advance left
-        # between the Spark write and the atomic rename
-        for p in log.glob(f".{_PQ_CKPT_PREFIX}*-tmp-*"):
+        # commit bodies stranded between write_text and os.link
+        for p in log.glob(".tmp-*"):
+            if _old(p):
+                try:
+                    if not dry_run:
+                        p.unlink()
+                    removed += 1
+                except OSError:
+                    pass
+        # parquet-checkpoint staging DIRS a crashed write left between
+        # its part writes and the atomic rename
+        for p in log.glob(f".{_ckpt._CKPT_PREFIX}*-tmp-*"):
             if p.is_dir() and _old(p):
                 if not dry_run:
                     shutil.rmtree(p, ignore_errors=True)

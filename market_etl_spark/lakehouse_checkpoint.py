@@ -1,34 +1,36 @@
 """The log state as a PARQUET checkpoint, and the one scan planner.
 
 A 100 TB table at 128 MB/file carries ~800k live add actions; a
-driver that replays them from the JSON log, then loops
-``_stats_admit`` per file, becomes the planning bottleneck Delta
-solved by checkpointing the log AS PARQUET.  The checkpoint is
-strictly DERIVED: the JSON log stays the only source of truth, and
-every consumer falls back to JSON replay when no checkpoint exists
-or its parts cannot be read.
+driver that replays them from the JSON log becomes the planning
+bottleneck Delta solved by checkpointing the log AS PARQUET.  A
+generation is the ONLY checkpoint format: the log state at v is the
+newest readable generation ≤ v (none = the empty base) plus the JSON
+tail folded by :func:`lakehouse._tail_net`.  While commit 1 exists a
+generation is derived data (an unreadable one falls back to an older
+one or the empty base); after :func:`lakehouse.expire_versions` the
+FLOOR generation (the newest at or below the oldest commit present)
+is the only copy of the expired prefix's state, and no sweep drops it.
+A table expired under the former JSON checkpoint is converted once on
+first read (:func:`_convert_legacy`).
 
 Layout — ``_log/ckptpq-{version:08d}/`` is a parquet DATASET (parts
-of ~100k rows), one row per state element in Delta's checkpoint
-shape (add rows carry the footer stats as a JSON string):
+of ~100k rows, row groups of :data:`_BATCH_ROWS`), one row per state
+element in Delta's checkpoint shape:
 
-    kind:    'add' | 'dv' | 'meta' | 'txn'
-    file:    table-relative path ('' for meta/txn rows)
+    kind:    'add' | 'dv' | 'copy' | 'meta' | 'txn'
+    file:    table-relative path; the source path of a COPY INTO
+             ('copy'); '' for meta/txn rows
     stats:   JSON string of the add action's footer stats (may be '')
     payload: JSON string (table meta / txn app+version)
 
-Every read composes the Delta way — newest parquet checkpoint ≤ v
-plus the JSON tail (:func:`_base_and_tail`) — and every generation
-lands through :func:`_land`.  :func:`write_parquet_checkpoint`
-bootstraps from JSON replay; :func:`advance_parquet_checkpoint`
-streams the base through as Arrow batches minus what the tail
-supersedes.  :func:`plan_scan` is THE scan planner behind
-``read_table`` and the DataSource reader: :func:`prune_scan_arrow`
-decides each streamed batch with ``pyarrow.compute`` over stats
-parsed at read time (what it cannot decide exactly goes to
-:func:`lakehouse._stats_admit` row by row), else JSON replay.  Only
-:func:`stats_distributed` (staged-file footer stats as ONE Spark
-job) needs a SparkSession.
+Every generation lands through :func:`_land`.
+:func:`advance_parquet_checkpoint` streams the base through as Arrow
+batches minus what the tail supersedes.  :func:`plan_scan` is THE scan
+planner behind ``read_table`` and the DataSource reader:
+:func:`prune_scan_arrow` decides each streamed batch with
+``pyarrow.compute`` (what it cannot decide exactly goes to
+:func:`lakehouse._stats_admit` row by row).  Only
+:func:`stats_distributed` needs a SparkSession.
 
 Reference anchor: the reference's metadata plane is the Glue catalog
 + MSCK (sql/athena_repair_partitions.sql; re-crawled, not
@@ -42,18 +44,21 @@ import itertools
 import json
 import os
 import pathlib
+import shutil
 import uuid
-from typing import NamedTuple
 
 from pyspark.sql import SparkSession
 
 from . import lakehouse as lk
 
-_CKPT_PREFIX = lk._PQ_CKPT_PREFIX  # layout owned by the log module:
-# expire_versions and vacuum_orphans sweep these dirs by prefix
+_CKPT_PREFIX = "ckptpq-"
 
 _COLS = ["kind", "file", "stats", "payload"]
+_KINDS = ("add", "dv", "copy", "meta", "txn")
 _PART_ROWS = 100_000  # rows per part file
+#: rows per row group written and per batch scanned: a scan holds a few
+#: row groups, not a whole part
+_BATCH_ROWS = 16_384
 
 
 def _ckpt_dir(path: str, version: int) -> pathlib.Path:
@@ -89,62 +94,7 @@ def latest_parquet_checkpoint(
     )
 
 
-class _Tail(NamedTuple):
-    """Net effect of a run of commits.  ``added`` maps file -> stats
-    JSON string; ``added``/``removed`` are disjoint, likewise the DV
-    pair; ``meta`` and ``txns`` are the folded updates."""
-
-    added: dict
-    removed: set
-    dv_added: set
-    dv_removed: set
-    meta: dict
-    txns: dict
-
-    @property
-    def gone(self) -> set:
-        """Files whose BASE add/dv rows must drop: all the tail removed
-        or re-emits (a RESTORE's remove + re-add nets to ``added``; the
-        base row would duplicate the file, ADVICE r12)."""
-        return self.removed | set(self.added) | self.dv_removed | self.dv_added
-
-
-def _tail_net(path: str, v_from: int, v_to: int) -> _Tail:
-    """Net effect of commits (v_from, v_to] — delta-sized driver
-    work, in replay order.  Each op evicts the file from the opposite
-    bucket, and a remove always lands in ``removed`` so a base add row
-    can never outlive a final tail delete."""
-    t = _Tail({}, set(), set(), set(), {}, {})
-    for i in range(v_from + 1, v_to + 1):
-        c = lk._read_commit(path, i)
-        txn = c.get("txn")
-        if txn:
-            t.txns[txn["app"]] = max(t.txns.get(txn["app"], -1), txn["version"])
-        for a in c["actions"]:
-            if a["op"] == "add":
-                t.removed.discard(a["file"])
-                t.added[a["file"]] = (
-                    json.dumps(a["stats"]) if a.get("stats") else ""
-                )
-            elif a["op"] == "remove":
-                # ALWAYS lands in `removed`, even cancelling a tail
-                # re-add: only `removed` evicts a base add row (ADVICE
-                # r13); for a base-absent file it is a no-op
-                t.added.pop(a["file"], None)
-                t.removed.add(a["file"])
-            elif a["op"] == "add_dv":
-                t.dv_removed.discard(a["file"])
-                t.dv_added.add(a["file"])
-            elif a["op"] == "remove_dv":
-                # as `remove`: only `dv_removed` evicts a base dv row
-                t.dv_added.discard(a["file"])
-                t.dv_removed.add(a["file"])
-            elif a["op"] == "set_meta":
-                t.meta.update(a["meta"])
-    return t
-
-
-def _base_and_tail(path: str, version: int | None) -> tuple[int, int, _Tail]:
+def _base_and_tail(path: str, version: int | None) -> tuple[int, int, lk._Tail]:
     """``(v, v0, tail)``: the newest parquet checkpoint v0 ≤ ``version``
     (default latest) and the net JSON tail (v0, v] — the Delta read
     protocol every consumer here composes.  Raises when no parquet
@@ -154,12 +104,13 @@ def _base_and_tail(path: str, version: int | None) -> tuple[int, int, _Tail]:
     v0 = latest_parquet_checkpoint(path, v)
     if v0 is None:
         raise ValueError(f"no parquet checkpoint ≤ version {v} at {path}")
-    return v, v0, _tail_net(path, v0, v)
+    return v, v0, lk._tail_net(path, v0, v)
 
 
 class _Unreadable(Exception):
     """A checkpoint part could not be opened or scanned (truncated or
-    foreign bytes); planning falls back to JSON replay."""
+    foreign bytes); reads fall back to an older generation or the
+    empty base."""
 
 
 def _base_batches(path: str, v0: int, kinds, gone=(), columns=_COLS):
@@ -176,55 +127,95 @@ def _base_batches(path: str, v0: int, kinds, gone=(), columns=_COLS):
         filt = filt & ~pads.field("file").isin(list(gone))
     try:
         dset = pads.dataset(str(_ckpt_dir(path, v0)), format="parquet")
+        # one row group in flight: the consumer decides batch by batch
         yield from dset.scanner(
-            columns=list(columns), filter=filt, batch_size=16384
+            columns=list(columns), filter=filt, batch_size=_BATCH_ROWS,
+            batch_readahead=1, fragment_readahead=1,
         ).to_batches()
     except (OSError, pa.ArrowException) as e:
         raise _Unreadable(f"checkpoint {v0} at {path}: {e}") from e
 
 
-def _base_side(
-    path: str, v0: int, tail: _Tail, kinds=("meta", "dv", "txn")
-) -> tuple[dict, set, dict]:
-    """``(meta, live DV set, txn high-water map)`` at the tail's end:
-    the base checkpoint's small rows (one meta row, one txn row per
-    app, DVs bounded by the purge cadence) folded with the tail."""
-    meta: dict = {}
-    dvs: set = set()
-    txns: dict = {}
-    cols = ["kind", "file", "payload"] if "dv" in kinds else ["kind", "payload"]
-    for batch in _base_batches(path, v0, kinds, tail.gone, cols):
-        for row in batch.to_pylist():
-            if row["kind"] == "meta":
-                meta = json.loads(row["payload"]) if row["payload"] else {}
-            elif row["kind"] == "dv":
-                dvs.add(row["file"])
+def _generation(path: str, v0: int, kinds=_KINDS) -> lk._Tail:
+    """Generation ``v0``'s rows of ``kinds`` as the net of commits
+    (0, v0], stats decoded.  Raises :class:`_Unreadable`."""
+    t = lk._net()
+    for b in _base_batches(path, v0, kinds):
+        for kind, f, stats, payload in zip(*(b.column(c).to_pylist() for c in _COLS)):
+            if kind == "add":
+                t.added[f] = json.loads(stats) if stats else None
+            elif kind == "dv":
+                t.dv_added.add(f)
+            elif kind == "copy":
+                t.copied.add(f)
+            elif kind == "meta":
+                t.meta.update(json.loads(payload) if payload else {})
             else:
-                rec = json.loads(row["payload"])
-                txns[rec["app"]] = rec["version"]
-    meta.update(tail.meta)
-    for app, tv in tail.txns.items():
-        txns[app] = max(txns.get(app, -1), tv)
-    return meta, dvs | tail.dv_added, txns
+                rec = json.loads(payload)
+                t.txns[rec["app"]] = rec["version"]
+    return t
 
 
-def _live_adds(path: str, v0: int, tail: _Tail):
+def _resolve_base(path: str, v: int, kinds=_KINDS) -> tuple[int, lk._Tail]:
+    """``(v0, base)``: the newest READABLE generation v0 ≤ ``v`` as
+    :func:`_generation` reads it, trying older ones past an
+    unreadable one, else ``(0, empty net)``.  A table whose commit 1
+    is gone and that has no generation ≤ v is converted first
+    (:func:`_convert_legacy`)."""
+    gens = [g for g in _generations(path) if g <= v]
+    first = pathlib.Path(path) / lk._LOG_DIR / f"{1:08d}.json"
+    if not gens and v > 0 and not first.exists():
+        gens = _convert_legacy(path, v)
+    for g in reversed(gens):
+        try:
+            return g, _generation(path, g, kinds)
+        except _Unreadable:
+            continue
+    return 0, lk._net()
+
+
+def _convert_legacy(path: str, v: int) -> list[int]:
+    """Land the newest JSON checkpoint ``_log/ckpt-N.json`` with oldest
+    commit present ≤ N ≤ ``v`` as generation N, ``[N]``; ``[]`` when
+    there is none.  That file is the only copy of the state of a table
+    expired before parquet generations existed; once landed, the
+    generation serves every later read."""
+    log = pathlib.Path(path) / lk._LOG_DIR
+    oldest = min(lk._commit_versions(path), default=0)
+    found = [int(p.stem[5:]) for p in log.glob("ckpt-*.json") if p.stem[5:].isdigit()]
+    found = [n for n in found if oldest <= n <= v]
+    if not found:
+        return []
+    n = max(found)
+    old = json.loads((log / f"ckpt-{n:08d}.json").read_text())
+    stats = old.get("stats", {})
+    rows = _state_rows(
+        {f: stats.get(f) for f in old["files"]}, old["dvs"], old.get("meta", {}),
+        old.get("txns", {}), old.get("copy_sources", ()),
+    )
+    return [_land_rows(path, n, rows)]
+
+
+def _live_adds(path: str, v0: int, tail: lk._Tail):
     """Every live add at the tail's end as Arrow ``(file, stats JSON)``
     record batches: the base rows streamed, then the tail's."""
     import pyarrow as pa
 
     yield from _base_batches(path, v0, ["add"], tail.gone, ["file", "stats"])
+    stats = [json.dumps(st) if st else "" for st in tail.added.values()]
     yield pa.record_batch(
-        [pa.array(list(c), pa.string()) for c in (tail.added, tail.added.values())],
+        [pa.array(list(c), pa.string()) for c in (tail.added, stats)],
         names=["file", "stats"],
     )
 
 
-def _state_rows(adds: dict, dvs, meta: dict, txns: dict) -> list[tuple]:
-    """Checkpoint rows for ``{file: stats JSON}`` adds, DV files, the
-    table meta and the txn map, in the layout's order."""
-    rows = [("add", f, s, "") for f, s in sorted(adds.items())]
+def _state_rows(adds: dict, dvs, meta: dict, txns: dict, copies=()) -> list[tuple]:
+    """Checkpoint rows for ``{file: stats dict | None}`` adds, DV files,
+    the table meta, the txn map and the COPY INTO sources, in the
+    layout's order."""
+    rows = [("add", f, json.dumps(s) if s else "", "") for f, s in sorted(adds.items())]
     rows += [("dv", f, "", "") for f in sorted(dvs)]
+    rows += [("copy", f, "", "") for f in sorted(copies)]
     rows.append(("meta", "", "", json.dumps(meta)))
     rows += [
         ("txn", "", "", json.dumps({"app": a, "version": tv}))
@@ -251,11 +242,11 @@ def state_arrow(
     for the tail.  Raises when no parquet checkpoint ≤ version exists
     (callers fall back to :func:`lakehouse._state_full`)."""
     v, v0, tail = _base_and_tail(path, version)
-    meta, dvs, _txns = _base_side(path, v0, tail, ("meta", "dv"))
+    side = _generation(path, v0, ("meta", "dv")).then(tail)
     adds: dict = {}
     for b in _live_adds(path, v0, tail):
         adds.update(zip(b.column("file").to_pylist(), b.column("stats").to_pylist()))
-    return v, adds, dvs, meta
+    return v, adds, side.dv_added, side.meta
 
 
 def meta_arrow(path: str, version: int | None = None) -> tuple[int, dict]:
@@ -264,8 +255,7 @@ def meta_arrow(path: str, version: int | None = None) -> tuple[int, dict]:
     pyarrow read of the meta row, no session, no O(files) state
     build."""
     v, v0, tail = _base_and_tail(path, version)
-    meta, _dvs, _txns = _base_side(path, v0, tail, ("meta",))
-    return v, meta
+    return v, _generation(path, v0, ("meta",)).then(tail).meta
 
 
 #: committed column type -> Arrow type of its stats in the vectorised
@@ -419,7 +409,8 @@ def prune_scan_arrow(
     import pyarrow as pa
 
     v, v0, tail = _base_and_tail(path, version)
-    meta, dvs, _txns = _base_side(path, v0, tail, ("meta", "dv"))
+    side = _generation(path, v0, ("meta", "dv")).then(tail)
+    meta, dvs = side.meta, side.dv_added
     keep = _stats_pruner(meta, predicate)
     kept: list[str] = []
     total = 0
@@ -482,10 +473,10 @@ def table_state(
 def _land(path: str, v: int, batches, keep: int = 0) -> int:
     """Write ``batches`` as checkpoint generation ``v``: parts of
     ~:data:`_PART_ROWS` rows in a tmp dir renamed into place (if the
-    generation already landed, the first one stays), then sweep all
-    but the ``keep`` newest generations (0 = none).  Returns ``v``."""
-    import shutil
-
+    generation already landed, the first one stays), then sweep every
+    generation but the ``keep`` newest (0 = no sweep) and, once commit
+    1 is gone, the floor: the newest at or below the oldest commit, the
+    only copy of the expired prefix's state.  Returns ``v``."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -501,6 +492,7 @@ def _land(path: str, v: int, batches, keep: int = 0) -> int:
         pq.write_table(
             pa.Table.from_batches(buf, schema),
             str(tmp / f"part-{parts:05d}.parquet"),
+            row_group_size=_BATCH_ROWS,
         )
         buf, rows, parts = [], 0, parts + 1
 
@@ -516,23 +508,34 @@ def _land(path: str, v: int, batches, keep: int = 0) -> int:
     else:
         os.rename(tmp, dest)
     if keep > 0:
-        for old in _generations(path)[:-keep]:
-            shutil.rmtree(_ckpt_dir(path, old), ignore_errors=True)
+        gens = _generations(path)
+        oldest = min(lk._commit_versions(path), default=1)
+        floor = max((g for g in gens if 1 < oldest >= g), default=None)
+        for old in gens[:-keep]:
+            if old != floor:
+                shutil.rmtree(_ckpt_dir(path, old), ignore_errors=True)
     return v
 
 
+def _land_rows(path: str, v: int, rows: list[tuple]) -> int:
+    return _land(path, v, (
+        _rows_batch(rows[i:i + _PART_ROWS]) for i in range(0, len(rows), _PART_ROWS)
+    ))
+
+
 def write_parquet_checkpoint(path: str, version: int | None = None) -> int:
-    """Bootstrap checkpoint: JSON replay once on the driver (the last
-    time the full file list must live there), landed as a parquet
-    dataset.  Returns the checkpointed version."""
-    v, live, dvs, txns, meta, stats = lk._state_full(path, version)
-    adds = {f: json.dumps(stats[f]) if stats.get(f) else "" for f in live}
-    rows = _state_rows(adds, dvs, meta, txns)
-    batches = (
-        _rows_batch(rows[i:i + _PART_ROWS])
-        for i in range(0, len(rows), _PART_ROWS)
-    )
-    return _land(path, v, batches)
+    """Land the state at ``version`` (default latest) as a generation:
+    the newest readable generation below it plus the JSON tail, or
+    replay from the empty base — the last time the full file list must
+    live on the driver.  A readable generation at ``version`` is kept;
+    an unreadable one is replaced.  Returns the checkpointed version."""
+    v = lk.latest_commit(path) if version is None else version
+    v0, t = lk._net_at(path, v)
+    if v0 == v:
+        return v
+    shutil.rmtree(_ckpt_dir(path, v), ignore_errors=True)
+    rows = _state_rows(t.added, t.dv_added, t.meta, t.txns, t.copied)
+    return _land_rows(path, v, rows)
 
 
 def advance_parquet_checkpoint(
@@ -540,20 +543,21 @@ def advance_parquet_checkpoint(
 ) -> int:
     """Roll the newest parquet checkpoint forward to ``version``
     (default latest): the base's add/dv rows stream through minus what
-    the JSON tail supersedes, then the tail's and the folded meta/txn
-    rows — O(tail) JSON work, the O(files) base never on the heap.
-    Bootstraps when no checkpoint exists.  Only the ``keep`` newest
-    generations survive (default 2: the new one plus its predecessor,
-    so a reader racing the advance never loses its base)."""
+    the JSON tail supersedes, then the tail's and the folded
+    copy/meta/txn rows — O(tail) JSON work, the O(files) base never on
+    the heap.  Bootstraps when no checkpoint exists.  Only the
+    ``keep`` newest generations and the floor survive (default 2: the
+    new one plus its predecessor, so a reader racing the advance never
+    loses its base)."""
     v = lk.latest_commit(path) if version is None else version
     if latest_parquet_checkpoint(path, v) is None:
         return write_parquet_checkpoint(path, v)
     v, v0, tail = _base_and_tail(path, v)
     if v0 == v:
         return v
-    meta, _dvs, txns = _base_side(path, v0, tail, ("meta", "txn"))
+    side = _generation(path, v0, ("meta", "txn", "copy")).then(tail)
     base = _base_batches(path, v0, ["add", "dv"], tail.gone)
-    rows = _state_rows(tail.added, tail.dv_added, meta, txns)
+    rows = _state_rows(tail.added, tail.dv_added, side.meta, side.txns, side.copied)
     return _land(path, v, itertools.chain(base, [_rows_batch(rows)]), keep)
 
 

@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .. import lakehouse as lk
+from .. import lakehouse_checkpoint as ckpt
 from ..tables import SCRATCH, fresh_scratch, load, sf_tag
 from ._audit import micros, require
 from .registry import query
@@ -674,10 +675,10 @@ def q_lakehouse_mor_txn(spark: SparkSession, sf_dir: str) -> DataFrame:
        BOTH vectors into 4 clean files and removes the DV actions in
        the same commit v5 (``compaction_settled`` — the transactional
        OPTIMIZE: live DV set empty, exactly 4 files).
-    3. A CHECKPOINT of v5 is written and the replayed state must
-       equal the checkpoint-resolved state (``checkpoint_equivalent``
-       — Delta's `_last_checkpoint` discipline keeping metadata reads
-       O(commits since checkpoint)).
+    3. A parquet CHECKPOINT generation of v5 is written, and the
+       state read through it must equal the state read before it
+       (``checkpoint_equivalent`` — Delta's checkpoint discipline
+       keeping metadata reads O(commits since checkpoint)).
 
     The returned per-type aggregates read the FINAL table, so the
     whole DV → append → conflict → retry → compact → checkpoint chain
@@ -726,10 +727,10 @@ def q_lakehouse_mor_txn(spark: SparkSession, sf_dir: str) -> DataFrame:
     compaction_settled = dvs == set() and len(live) == 4
 
     pre = lk._state(path)
-    lk.write_checkpoint(path)
-    checkpoint_equivalent = lk._state(path) == pre and (
-        lk._latest_checkpoint(path, v) or {}
-    ).get("version") == v
+    ckpt.write_parquet_checkpoint(path)
+    checkpoint_equivalent = (
+        lk._state(path) == pre and ckpt.latest_parquet_checkpoint(path, v) == v
+    )
 
     return (
         lk.read_table(spark, path)
@@ -3318,8 +3319,8 @@ def q_lakehouse_parquet_checkpoint(
       AND at the time-traveled v4 (an older state must compose from
       the v3 checkpoint + a shorter tail);
     - ``prune_parity`` — checkpoint-planned prune decisions are
-      IDENTICAL (version, survivors, total) to
-      :func:`..lakehouse.prune_files` (JSON replay) for a range, an
+      IDENTICAL (version, survivors, DVs, meta, total) to the
+      planner's JSON-replay route (:func:`..lakehouse.json_replay`) for a range, an
       ``in``, and an everything-pruned predicate;
     - ``stats_distributed_parity`` — the one-job footer stats equal
       the serial per-file reads, dict-for-dict;
@@ -3332,8 +3333,6 @@ def q_lakehouse_parquet_checkpoint(
     The RESULT is the final table's status aggregate — value-hashed
     against the oracle's relational recompute, so the checkpoint
     plane is correctness-gated end to end."""
-    from .. import lakehouse_checkpoint as ckpt
-
     path = fresh_scratch(f"lakehouse_pq_ckpt_{sf_tag(sf_dir)}")
     orders = load(spark, sf_dir, "orders").select(
         F.col("o_orderkey").alias("k"),
@@ -3360,7 +3359,7 @@ def q_lakehouse_parquet_checkpoint(
         return v, set(kept), set(dvs)
 
     def json_sets(version=None):
-        v, live, dvs, _t, _m, _s = lk._state_full(path, version)
+        v, live, dvs, _t, _m, _s = lk.json_replay(path, version)
         return v, live, dvs
 
     state_parity = sets() == json_sets() and sets(4) == json_sets(4)
@@ -3371,11 +3370,11 @@ def q_lakehouse_parquet_checkpoint(
         [("k", "<", 0)],
     )
 
-    def planned(p):
-        v, kept, _dvs, _meta, total = ckpt.prune_scan_arrow(path, p)
-        return v, kept, total
-
-    prune_parity = all(planned(p) == lk.prune_files(path, p) for p in preds)
+    replay = lk.json_replay(path)
+    prune_parity = all(
+        ckpt.prune_scan_arrow(path, p) == ckpt.plan_scan(path, p, replay=replay)
+        for p in preds
+    )
 
     root = pathlib.Path(path)
     _v, live, _dvs, _t, _m, _s = lk._state_full(path)
@@ -3906,8 +3905,9 @@ def q_lakehouse_checkpoint_planning(
        dict.
     3. ``source_plan_parity`` — the registered source's PARTITION
        LIST under a pushed filter, planned from the checkpoint, equals
-       ``prune_files`` file-for-file, each file carrying the DV
-       sidecars that JSON replay's DV set targets at it.
+       the planner's JSON-replay route file-for-file, each file
+       carrying the DV sidecars that JSON replay's DV set targets at
+       it.
     4. ``routed_read_parity`` — ``read_table``, planned from the
        checkpoint, returns a digest identical to a read taken before
        the checkpoint existed (JSON replay) with the two deletes
@@ -3920,7 +3920,6 @@ def q_lakehouse_checkpoint_planning(
     Cites: sql/athena_repair_partitions.sql (the reference's whole
     metadata plane is MSCK re-crawl; checkpointed planning is the
     engine extension)."""
-    from .. import lakehouse_checkpoint as ckpt
     from ..lakehouse_datasource import (
         _dv_files_by_base,
         _LakehouseBatchReader,
@@ -3961,7 +3960,7 @@ def q_lakehouse_checkpoint_planning(
     import json as _json
 
     av, alive, advs, ameta = ckpt.state_arrow(path)
-    jv, jlive, jdvs, _txns, jmeta, jstats = lk._state_full(path)
+    jv, jlive, jdvs, _txns, jmeta, jstats = lk.json_replay(path)
     arrow_state_parity = (
         (av, set(alive), advs, ameta) == (jv, jlive, jdvs, jmeta)
         and all(
@@ -3977,7 +3976,7 @@ def q_lakehouse_checkpoint_planning(
     r._conj = list(pred)
     from_ckpt = r._replay is None  # resolved without replaying the log
     planned = [(p.file, p.dv_files) for p in r.partitions()]
-    _pv, kept, _total = lk.prune_files(path, pred)
+    kept = ckpt.plan_scan(path, pred, replay=lk.json_replay(path))[1]
     by_base = _dv_files_by_base(pathlib.Path(path), sorted(jdvs))
     source_plan_parity = from_ckpt and planned == [
         (f, tuple(by_base.get(pathlib.PurePosixPath(f).name, ())))

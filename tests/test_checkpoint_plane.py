@@ -112,7 +112,7 @@ def table(tmp_path) -> str:
 
 
 def _assert_composes_like_replay(path: str, v: int) -> None:
-    jv, jlive, jdvs, _txns, jmeta, jstats = lk._state_full(path, v)
+    jv, jlive, jdvs, _txns, jmeta, jstats = lk.json_replay(path, v)
     av, alive, advs, ameta = ck.state_arrow(path, v)
     assert (av, set(alive), advs, ameta) == (jv, jlive, jdvs, jmeta), v
     assert {f: json.loads(s) if s else None for f, s in alive.items()} == {
@@ -124,11 +124,11 @@ def _assert_composes_like_replay(path: str, v: int) -> None:
 
 
 def _assert_plans_like_replay(path: str, v: int | None, plan=ck.plan_scan) -> None:
-    _jv, _live, jdvs, _txns, jmeta, _stats = lk._state_full(path, v)
+    replay = lk.json_replay(path, v)
     for pred in _PREDICATES:
-        sv, kept, dvs, meta, total = plan(path, pred, v)
-        assert (sv, kept, total) == lk.prune_files(path, pred, v), (v, pred)
-        assert (dvs, meta) == (sorted(jdvs), jmeta), (v, pred)
+        # plan_scan over a given replay is the planner's JSON-replay route
+        want = ck.plan_scan(path, pred, v, replay=replay)
+        assert plan(path, pred, v) == want, (v, pred)
 
 
 def _generation_rows(path: str, v: int) -> list[tuple]:
@@ -137,9 +137,8 @@ def _generation_rows(path: str, v: int) -> list[tuple]:
 
 
 def _replay_rows(path: str, v: int) -> list[tuple]:
-    _v, live, dvs, txns, meta, stats = lk._state_full(path, v)
-    adds = {f: json.dumps(stats[f]) if stats.get(f) else "" for f in live}
-    return sorted(ck._state_rows(adds, dvs, meta, txns))
+    _v, live, dvs, txns, meta, stats = lk.json_replay(path, v)
+    return sorted(ck._state_rows(stats, dvs, meta, txns))
 
 
 def test_bootstrap_and_advance_compose_like_json_replay(table):
@@ -208,7 +207,7 @@ def test_unreadable_checkpoint_plans_from_json_replay(table, monkeypatch, damage
         with pytest.raises(ck._Unreadable):  # the checkpoint route itself
             ck.prune_scan_arrow(table, [], v)
         _assert_plans_like_replay(table, v)
-        jv, _live, _dvs, _txns, jmeta, _stats = lk._state_full(table, v)
+        jv, _live, _dvs, _txns, jmeta, _stats = lk.json_replay(table, v)
         assert ck.table_state(table, v)[:2] == (jv, jmeta)
 
 
@@ -284,7 +283,8 @@ class LogMachine(RuleBasedStateMachine):
     previous one.  The model also tracks which checkpoint generations
     exist and which were damaged, so it knows which reads must raise.
     Checkpoint parts hold 3 rows, so a generation has several parts to
-    damage."""
+    damage.  Once commit 1 is expired the floor generation is the only
+    copy of the expired prefix's state, so it is never damaged."""
 
     def __init__(self):
         super().__init__()
@@ -344,14 +344,23 @@ class LogMachine(RuleBasedStateMachine):
                     self.sources.append(f)
         self.states.append(s)
 
+    @property
+    def floor(self) -> int | None:
+        if self.oldest == 1:
+            return None
+        return max((g for g in self.gens if g <= self.oldest), default=None)
+
     def _sweep(self, keep: int) -> None:
+        floor = self.floor
         for g in sorted(self.gens)[:-keep]:
-            self.gens.discard(g)
-            self.damaged.discard(g)
+            if g != floor:
+                self.gens.discard(g)
+                self.damaged.discard(g)
 
     def do_checkpoint(self, v: int) -> None:
         assert ck.write_parquet_checkpoint(self.path, v) == v
-        self.gens.add(v)  # a generation already at v stays as it was
+        self.gens.add(v)  # an unreadable generation at v is replaced
+        self.damaged.discard(v)
 
     def do_advance(self, v: int) -> None:
         below = [g for g in self.gens if g <= v]
@@ -370,8 +379,31 @@ class LogMachine(RuleBasedStateMachine):
         lk.expire_versions(self.path, keep_from)
         if keep_from > self.oldest:
             self.oldest = keep_from
-            self.gens = {g for g in self.gens if g >= keep_from}
-            self.damaged &= self.gens
+            self.gens = {g for g in self.gens if g > keep_from} | {keep_from}
+            self.damaged &= self.gens - {keep_from}
+
+    def do_legacy(self, n: int) -> None:
+        """Leave the table as the former engine left one expired at
+        ``n``: a JSON checkpoint ``ckpt-n.json``, no commit before n
+        and no generation at or below n.  The first read lands it as
+        generation n."""
+        m = self.states[n]
+        (self.log / f"ckpt-{n:08d}.json").write_text(json.dumps({
+            "version": n, "files": sorted(m["live"]), "dvs": sorted(m["dvs"]),
+            "txns": m["txns"], "meta": m["meta"],
+            "stats": {f: s for f, s in m["live"].items() if s},
+            "copy_sources": sorted(m["copies"]),
+        }))
+        for v in range(self.oldest, n):
+            (self.log / f"{v:08d}.json").unlink()
+        for g in [g for g in self.gens if g <= n]:
+            shutil.rmtree(ck._ckpt_dir(self.path, g))
+            self.gens.discard(g)
+            self.damaged.discard(g)
+        self.oldest = n
+        assert lk._state_full(self.path, n)[0] == n
+        assert ck.latest_parquet_checkpoint(self.path, n) == n
+        self.gens.add(n)
 
     def do_damage(self, g: int, part: int, truncate: bool) -> None:
         parts = sorted(ck._ckpt_dir(self.path, g).glob("*.parquet"))
@@ -438,15 +470,29 @@ class LogMachine(RuleBasedStateMachine):
     def expire(self, data):
         self.do_expire(self._version(data))
 
+    @precondition(lambda self: self.latest > self.oldest)
     @rule(data=st.data())
-    def json_checkpoint(self, data):
-        v = self._version(data)
-        assert lk.write_checkpoint(self.path, v) == v
+    def expire_then_advance_twice(self, data):
+        """Two advances after an expiry must keep the floor generation."""
+        k = data.draw(st.integers(self.oldest + 1, self.latest))
+        self.do_expire(k)
+        for _ in range(2):
+            self.commit(data)
+            self.do_advance(self.latest)
+        self.check_version(k)
 
-    @precondition(lambda self: self.gens - self.damaged)
+    @precondition(lambda self: self.latest >= 2)
+    @rule(data=st.data())
+    def legacy_checkpoint(self, data):
+        self.do_legacy(data.draw(st.integers(max(2, self.oldest), self.latest)))
+
+    def _damageable(self) -> list[int]:
+        return sorted(self.gens - self.damaged - {self.floor})
+
+    @precondition(lambda self: self._damageable())
     @rule(data=st.data())
     def damage(self, data):
-        g = data.draw(st.sampled_from(sorted(self.gens - self.damaged)))
+        g = data.draw(st.sampled_from(self._damageable()))
         self.do_damage(g, data.draw(st.integers(0, 9)), data.draw(st.booleans()))
 
     # -- the check --

@@ -9,6 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from market_etl_spark import lakehouse as lk
+from market_etl_spark import lakehouse_checkpoint as lkc
 
 
 def _ranged_table(spark, tmp_path, n=400, files=8):
@@ -120,7 +121,7 @@ def test_timestamp_stats_prune(spark, tmp_path):
 
 def test_stats_survive_checkpoint_and_restore_and_clone(spark, tmp_path):
     path = _ranged_table(spark, tmp_path, n=100, files=4)
-    lk.write_checkpoint(path)
+    lkc.write_parquet_checkpoint(path)
     t = lk.Transaction(path)
     t.append(spark.createDataFrame([(1000, 1, 1.0, "x")], "id long, k int, v double, s string"))
     t.commit()  # v5, replayed from the checkpoint

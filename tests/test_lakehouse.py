@@ -9,6 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from market_etl_spark import lakehouse as lk
+from market_etl_spark import lakehouse_checkpoint as lkc
 
 
 def _init(spark, tmp_path, n=30, files=3):
@@ -262,8 +263,7 @@ def test_checkpoint_bounds_replay_and_preserves_time_travel(spark, tmp_path):
     t = lk.Transaction(path)
     t.delete_where_mor(spark, F.col("id") < 5)
     t.commit()  # v2
-    ck = lk.write_checkpoint(path)
-    assert ck == 2
+    assert lkc.write_parquet_checkpoint(path) == 2
     t2 = lk.Transaction(path)
     t2.delete_where(spark, F.col("id") >= 25)
     t2.commit()  # v3
@@ -272,13 +272,14 @@ def test_checkpoint_bounds_replay_and_preserves_time_travel(spark, tmp_path):
     # time travel BEFORE the checkpoint still replays from scratch
     assert lk.read_table(spark, path, version=1).count() == 30
     assert lk.read_table(spark, path, version=2).count() == 25
-    # checkpoint state == full-replay state
-    import json as _json
+    # the generation's rows == the reference replay's
+    import pyarrow.parquet as pq
 
-    ckf = pathlib.Path(path) / "_log" / "ckpt-00000002.json"
-    state = _json.loads(ckf.read_text())
-    v, live, dvs = lk._state(path, 2)
-    assert set(state["files"]) == live and set(state["dvs"]) == dvs
+    gen = pq.read_table(str(lkc._ckpt_dir(path, 2)))
+    _v, live, dvs, txns, meta, stats = lk.json_replay(path, 2)
+    assert sorted(zip(*(gen.column(c).to_pylist() for c in lkc._COLS))) == sorted(
+        lkc._state_rows(stats, dvs, meta, txns)
+    )
 
 
 def test_vacuum_sweeps_orphan_dv_files(spark, tmp_path):
@@ -325,7 +326,7 @@ def test_txn_high_water_survives_checkpoint(spark, tmp_path):
     t = lk.Transaction(path, txn_app="s", txn_version=7)
     t.append(spark.createDataFrame([(1,)], "id long"))
     t.commit()
-    lk.write_checkpoint(path)
+    lkc.write_parquet_checkpoint(path)
     # replay resolved THROUGH the checkpoint, not just the log tail
     assert lk.last_txn_version(path, "s") == 7
     r = lk.Transaction(path, txn_app="s", txn_version=7)
@@ -375,7 +376,7 @@ def test_vacuum_sweeps_all_crash_debris_classes(spark, tmp_path):
     root = pathlib.Path(path)
     (root / "data" / "_tmp_deadbeef").mkdir(parents=True)
     (root / "_log" / ".tmp-deadbeef").write_text("{}")
-    (root / "_log" / ".ckpt-tmp-dead").write_text("{}")
+    (root / "_log" / ".ckptpq-00000001-tmp-dead").mkdir()
     (root / ".stage-dead").mkdir()
     assert lk.vacuum_orphans(path, min_age_sec=0.0) == 4
     assert lk.read_table(spark, path).count() == 30

@@ -7,7 +7,6 @@ test_checkpoint_plane.py."""
 
 from __future__ import annotations
 
-import json
 import pathlib
 
 import pytest
@@ -58,7 +57,7 @@ def test_bootstrap_state_parity(spark, tmp_path):
     v = ck.write_parquet_checkpoint(path)
     assert v == lk.latest_commit(path)
     pv, live_pq, dv_pq, meta_pq = _state_sets(path)
-    _v, live, dvs, _txns, meta, _stats = lk._state_full(path)
+    _v, live, dvs, _txns, meta, _stats = lk.json_replay(path)
     assert (pv, live_pq, dv_pq, meta_pq) == (v, live, dvs, meta)
 
 
@@ -68,7 +67,7 @@ def test_json_tail_applied_over_checkpoint(spark, tmp_path):
     # the tail (3, 5] holds a MOR delete + a CoW rewrite; the planner
     # must fold them without a new checkpoint
     pv, live_pq, dv_pq, _meta = _state_sets(path)
-    _v, live, dvs, _txns, _m, _s = lk._state_full(path)
+    _v, live, dvs, _txns, _m, _s = lk.json_replay(path)
     assert pv == 5 and live_pq == live and dv_pq == dvs
     # add-then-remove INSIDE the tail cancels exactly
     t = lk.Transaction(path)
@@ -78,7 +77,7 @@ def test_json_tail_applied_over_checkpoint(spark, tmp_path):
     t.delete_where(spark, F.col("id") == 77)
     t.commit()
     pv, live_pq, dv_pq, _meta = _state_sets(path)
-    _v, live, dvs, _txns, _m, _s = lk._state_full(path)
+    _v, live, dvs, _txns, _m, _s = lk.json_replay(path)
     assert pv == 7 and live_pq == live and dv_pq == dvs
 
 
@@ -89,9 +88,8 @@ def test_advance_is_incremental_and_equal_to_bootstrap(spark, tmp_path):
     assert v == 5 and ck.latest_parquet_checkpoint(path) == 5
     # advanced state == a from-scratch bootstrap at the same version
     adv = spark.read.parquet(str(ck._ckpt_dir(path, 5)))
-    v2, live, dvs, txns, meta, stats = lk._state_full(path, 5)
-    adds = {f: json.dumps(stats[f]) if stats.get(f) else "" for f in live}
-    boot = ck._state_rows(adds, dvs, meta, txns)
+    v2, live, dvs, txns, meta, stats = lk.json_replay(path, 5)
+    boot = ck._state_rows(stats, dvs, meta, txns)
     assert sorted(map(tuple, adv.collect())) == sorted(boot)
     # idempotent when already at latest
     assert ck.advance_parquet_checkpoint(path) == 5
@@ -99,6 +97,13 @@ def test_advance_is_incremental_and_equal_to_bootstrap(spark, tmp_path):
 
 def _planned(path, pred):
     v, kept, _dvs, _meta, total = ck.prune_scan_arrow(path, pred)
+    return v, kept, total
+
+
+def _replayed(path, pred):
+    """The planner's JSON-replay route: the reference for checkpoint
+    planning (``prune_files`` plans from the checkpoint too)."""
+    v, kept, _dvs, _meta, total = ck.plan_scan(path, pred, replay=lk.json_replay(path))
     return v, kept, total
 
 
@@ -114,7 +119,7 @@ def test_checkpoint_prune_matches_json_prune(spark, tmp_path):
         [("id", "<", 0)],
         [("nope", "=", 1)],
     ):
-        assert _planned(path, pred) == lk.prune_files(path, pred), pred
+        assert _planned(path, pred) == _replayed(path, pred), pred
 
 
 def test_checkpoint_prune_respects_column_mapping(spark, tmp_path):
@@ -124,13 +129,13 @@ def test_checkpoint_prune_respects_column_mapping(spark, tmp_path):
     t.commit()
     ck.write_parquet_checkpoint(path)
     pred = [("ident", "<", 5)]
-    assert _planned(path, pred) == lk.prune_files(path, pred)
+    assert _planned(path, pred) == _replayed(path, pred)
 
 
 def test_distributed_stats_match_serial(spark, tmp_path):
     path = _busy_table(spark, tmp_path)
     root = pathlib.Path(path)
-    _v, live, _dvs, _t, _m, _s = lk._state_full(path)
+    _v, live, _dvs, _t, _m, _s = lk.json_replay(path)
     paths = [str(root / f) for f in sorted(live)]
     assert ck.stats_distributed(spark, paths) == {
         p: lk._file_stats(pathlib.Path(p)) for p in paths
@@ -157,7 +162,7 @@ def test_time_travel_uses_older_checkpoint(spark, tmp_path):
     ck.write_parquet_checkpoint(path, version=4)
     # version 3 must start from ckpt 2 + tail commit 3, not ckpt 4
     pv, live_pq, dv_pq, _meta = _state_sets(path, version=3)
-    _v, live, dvs, _txns, _m, _s = lk._state_full(path, 3)
+    _v, live, dvs, _txns, _m, _s = lk.json_replay(path, 3)
     assert pv == 3 and live_pq == live and dv_pq == dvs
 
 
@@ -200,27 +205,26 @@ def test_advance_retains_bounded_checkpoints(spark, tmp_path):
     assert left == ["ckptpq-00000004", "ckptpq-00000005"]
     # the survivor still reconstructs the exact state
     pv, live_pq, dv_pq, _meta = _state_sets(path)
-    _v, live, dvs, _t, _m, _s = lk._state_full(path)
+    _v, live, dvs, _t, _m, _s = lk.json_replay(path)
     assert pv == 5 and live_pq == live and dv_pq == dvs
 
 
 def test_expiry_drops_stale_parquet_checkpoints(spark, tmp_path):
     """A parquet checkpoint below the retention boundary references
-    deleted files and its replay tail's commit JSONs are gone —
-    expire_versions must remove it so checkpoint-composed reads
-    re-bootstrap cleanly instead of dying mid-tail."""
+    deleted files and its tail's commit JSONs are gone —
+    expire_versions removes it and pins the boundary as the generation
+    every retained read now starts from."""
     path = _busy_table(spark, tmp_path)  # 5 commits
+    want = {v: lk.json_replay(path, v) for v in (4, 5)}
     ck.write_parquet_checkpoint(path, version=2)
     lk.expire_versions(path, keep_from=4)
     log = pathlib.Path(path) / lk._LOG_DIR
-    assert not list(log.glob("ckptpq-*"))
-    with pytest.raises(ValueError, match="no parquet checkpoint"):
-        ck.state_arrow(path)
-    # re-bootstrap works and agrees with JSON replay
-    ck.write_parquet_checkpoint(path)
-    pv, live_pq, dv_pq, _m = _state_sets(path)
-    _v, live, dvs, _t, _m2, _s = lk._state_full(path)
-    assert pv == 5 and live_pq == live and dv_pq == dvs
+    assert sorted(p.name for p in log.glob("ckptpq-*")) == ["ckptpq-00000004"]
+    for v, (_jv, live, dvs, *_rest) in want.items():
+        assert _state_sets(path, v)[:3] == (v, live, dvs)
+        assert lk._state_full(path, v) == want[v]
+    with pytest.raises(ValueError, match="expired"):
+        lk.json_replay(path)  # the reference needs commit 1
     # ... and a checkpoint AT/above the boundary survives expiry
     path2 = _busy_table(spark, tmp_path.joinpath("b"))
     ck.write_parquet_checkpoint(path2, version=4)
@@ -252,7 +256,7 @@ def test_advance_across_rename_keeps_prune_parity(spark, tmp_path):
     t.commit()
     ck.advance_parquet_checkpoint(path)
     for pred in ([("ident", "<", 5)], [("ident", ">=", 25)]):
-        assert _planned(path, pred) == lk.prune_files(path, pred), pred
+        assert _planned(path, pred) == _replayed(path, pred), pred
     got = lk.read_table(spark, path, predicate=[("ident", "<", 5)])
     assert _rows(got) == exp
 
@@ -274,7 +278,7 @@ def test_format_writer_commits_feed_the_checkpoint_plane(spark, tmp_path):
     v = ck.advance_parquet_checkpoint(path)
     assert v == 2
     pv, live_pq, dv_pq, _m = _state_sets(path)
-    _v, live, dvs, _t, _m2, _s = lk._state_full(path)
+    _v, live, dvs, _t, _m2, _s = lk.json_replay(path)
     assert pv == 2 and live_pq == live and dv_pq == dvs
 
 
@@ -294,7 +298,7 @@ def test_restore_in_tail_keeps_add_rows_distinct(spark, tmp_path):
     _v, kept, dv_list, _meta, total = ck.prune_scan_arrow(path, [])
     # list-based parity (sets would HIDE the duplicate; counts can't)
     assert len(kept) == len(set(kept)) == total
-    _v2, live, dvs, _t, _m, _s = lk._state_full(path)
+    _v2, live, dvs, _t, _m, _s = lk.json_replay(path)
     assert set(kept) == live
     assert len(dv_list) == len(set(dv_list)) and set(dv_list) == dvs
     # the checkpoint-planned READ returns the restored rows
@@ -327,7 +331,7 @@ def test_state_arrow_and_meta_arrow_match_json_replay(spark, tmp_path):
     t.commit()
     for ver in (3, 4, None):
         av, alive, advs, ameta = ck.state_arrow(path, ver)
-        jv, jlive, jdvs, _txns, jmeta, jstats = lk._state_full(path, ver)
+        jv, jlive, jdvs, _txns, jmeta, jstats = lk.json_replay(path, ver)
         assert (av, set(alive), advs, ameta) == (jv, jlive, jdvs, jmeta)
         for f, s in alive.items():
             assert (_json.loads(s) if s else None) == jstats[f]
@@ -392,7 +396,7 @@ def test_datasource_plans_from_checkpoint_identically(spark, tmp_path):
     assert _rows(via_ckpt) == rows
     # partition-list equality with a pushed filter, DV sidecars included
     assert plan(schema) == planned
-    _v, kept, _total = lk.prune_files(path, pred)
+    _v, kept, _total = _replayed(path, pred)
     assert [f for f, _dv in planned] == kept
 
 
@@ -423,7 +427,7 @@ def test_commit_auto_advances_past_interval(spark, tmp_path):
         assert v_adv == lk.latest_commit(path)  # tail hit 2: advanced
         # advanced state equals JSON replay
         _pv, live_pq, dv_pq, meta_pq = _state_sets(path)
-        _v, live, dvs, _txns, meta, _stats = lk._state_full(path)
+        _v, live, dvs, _txns, meta, _stats = lk.json_replay(path)
         assert (live_pq, dv_pq, meta_pq) == (live, dvs, meta)
         spark.conf.set(ck.AUTO_ADVANCE_CONF, "0")
         bump(3)
@@ -474,7 +478,7 @@ def test_checkpoint_routes_respect_column_mapping_and_evolution(
     )
     # session-less route: prune decisions + kept set
     _v, kept, _dvs, _meta, total = ck.prune_scan_arrow(path, pred)
-    _jv, jkept, jtotal = lk.prune_files(path, pred)
+    _jv, jkept, jtotal = _replayed(path, pred)
     assert (kept, total) == (jkept, jtotal)
     # read_table planned from the checkpoint (rows + evolved alignment)
     got = lk.read_table(spark, path, predicate=pred)
@@ -529,7 +533,7 @@ def test_auto_advance_survives_concurrent_commits(spark, tmp_path):
     assert not errors
     ck.advance_parquet_checkpoint(path)  # settle to the tip
     _pv, live_pq, dv_pq, meta_pq = _state_sets(path)
-    _v, live, dvs, _txns, meta, _stats = lk._state_full(path)
+    _v, live, dvs, _txns, meta, _stats = lk.json_replay(path)
     assert (live_pq, dv_pq, meta_pq) == (live, dvs, meta)
     assert lk.read_table(spark, path).count() == 16
 
@@ -557,7 +561,7 @@ def test_format_writer_auto_advances_checkpoint(spark, tmp_path):
     assert v_adv is not None and v_adv > v0
     # advanced state equals JSON replay at its version
     pv, live_pq, dv_pq, meta_pq = _state_sets(path, v_adv)
-    _v, live, dvs, _txns, meta, _stats = lk._state_full(path, v_adv)
+    _v, live, dvs, _txns, meta, _stats = lk.json_replay(path, v_adv)
     assert (live_pq, dv_pq, meta_pq) == (live, dvs, meta)
 
 
@@ -588,7 +592,7 @@ def test_delete_of_restored_file_stays_deleted(spark, tmp_path):
     assert t.delete_where(spark, F.col("id") < 10) == 10
     t.commit()
     # JSON replay is ground truth: ids 0-9 are gone
-    _v, live, dvs, _t, _m, _s = lk._state_full(path)
+    _v, live, dvs, _t, _m, _s = lk.json_replay(path)
     # every composed route must agree — file sets AND read rows
     pv, live_pq, dv_pq, _meta = _state_sets(path)
     assert (pv, live_pq, dv_pq) == (lk.latest_commit(path), live, dvs)
@@ -633,7 +637,7 @@ def test_dv_removed_after_restore_readd_stays_removed(spark, tmp_path):
     t = lk.Transaction(path)
     t.delete_where(spark, F.col("id") == 6)  # removes the DV again
     t.commit()
-    _v, live, dvs, _t2, _m, _s = lk._state_full(path)
+    _v, live, dvs, _t2, _m, _s = lk.json_replay(path)
     pv, live_pq, dv_pq, _meta = _state_sets(path)
     assert (pv, live_pq, dv_pq) == (lk.latest_commit(path), live, dvs)
     av, alive, advs, _am = ck.state_arrow(path)
