@@ -35,7 +35,8 @@ Model (Delta/Iceberg's core contract, minimally):
   compact` settles them (applies + removes) in one generation move —
   the OPTIMIZE contract, now transactional.
 - CHECKPOINTS (:mod:`.lakehouse_checkpoint`): the state at a version
-  landed as a parquet generation.  Every read of the log state is the
+  landed as a parquet generation.  The log state at v is one value, a
+  :class:`Snapshot`, resolved by ONE function (:func:`snapshot`): the
   newest readable generation ≤ v (none = the empty base) plus the
   JSON tail, folded by ONE function (:func:`_tail_net`), so snapshot
   resolution is O(commits since last checkpoint) — Delta's checkpoint
@@ -205,18 +206,6 @@ def _read_commit(path: str, version: int) -> dict:
     return json.loads(p.read_text())
 
 
-def _state(
-    path: str, version: int | None = None
-) -> tuple[int, set[str], set[str]]:
-    """Replay the log to ``(version, live data files, live DV files)``.
-    Starts from the newest parquet CHECKPOINT ≤ version when one exists,
-    so replay cost is O(commits since last checkpoint), not O(table
-    lifetime) — the Delta `_last_checkpoint` discipline that keeps a
-    100 TB table's snapshot resolution at metadata speed."""
-    v, live, dvs, _txns, _meta, _stats = _state_full(path, version)
-    return v, live, dvs
-
-
 class _Tail(NamedTuple):
     """Net effect of a run of commits.  ``added`` maps file -> stats
     dict or None; ``added``/``removed`` are disjoint, likewise the DV
@@ -301,48 +290,64 @@ def _tail_net(path: str, v_from: int, v_to: int) -> _Tail:
     return t
 
 
-def _net_at(path: str, v: int) -> tuple[int, _Tail]:
-    """``(v0, state at v as the net of commits (0, v])``: the newest
-    readable generation v0 ≤ v (0 = the empty base) plus the tail."""
+class Snapshot(NamedTuple):
+    """The log state of the table at ``path`` at ``version``, as one
+    value.  ``base`` is the checkpoint generation it stands on (0 = the
+    empty base); that generation's ADD rows stay in parquet until
+    :meth:`adds` or :func:`.lakehouse_checkpoint.plan_scan` reads them.
+    ``state`` is the rest, folded over base and tail: the table
+    ``meta``, the live DV files (``dv_added``), the idempotent-writer
+    high-water marks ``{txn_app: max txn_version}`` (``txns``) and the
+    COPY INTO sources (``copied``); it holds no adds.  ``tail`` is the
+    net of commits (base, version], its adds' stats decoded."""
+
+    path: str
+    version: int
+    base: int
+    state: _Tail
+    tail: _Tail
+
+    def adds(self) -> dict:
+        """``{live file: stats dict | None}``: the base's add rows
+        decoded — the O(files) read — plus the tail's."""
+        from . import lakehouse_checkpoint as _ckpt  # lazy: circular import
+
+        return _ckpt._resolve_base(self.path, self.version, _ckpt._adds, self)
+
+
+def _snapshot_on(path: str, v: int, v0: int, side: _Tail) -> Snapshot:
+    """The Snapshot at ``v`` on generation ``v0``, whose non-add rows
+    are ``side``."""
+    tail = _tail_net(path, v0, v)
+    state = side.then(tail._replace(added={}, removed=set()))
+    return Snapshot(path, v, v0, state, tail)
+
+
+def snapshot(path: str, version: int | None = None) -> Snapshot:
+    """THE resolver of log state: the :class:`Snapshot` at ``version``
+    (default latest) on the newest readable checkpoint generation ≤ it
+    plus the JSON tail — O(commits since that generation) JSON, no add
+    row of the generation decoded.  Raises ValueError when a commit
+    it needs was expired."""
     from . import lakehouse_checkpoint as _ckpt  # lazy: circular import
 
-    v0, base = _ckpt._resolve_base(path, v)
-    tail = _tail_net(path, v0, v)
-    return v0, base.then(tail) if v0 else tail
-
-
-def _as_state(v: int, t: _Tail) -> tuple[int, set[str], set[str], dict, dict, dict]:
-    return v, set(t.added), t.dv_added, t.txns, t.meta, t.added
-
-
-def _state_full(
-    path: str, version: int | None = None
-) -> tuple[int, set[str], set[str], dict, dict, dict]:
-    """Like :func:`_state` plus the idempotent-writer high-water map
-    ``{txn_app: max committed txn_version}`` (Delta's
-    txnAppId/txnVersion bookkeeping), the table METADATA dict
-    (schema fields, CHECK constraints, evolved flag) and the per-file
-    COLUMN-STATISTICS map ``{live file: stats dict | None}`` carried
-    on ``add`` actions — all checkpoint-carried (:func:`_net_at`)."""
     v = latest_commit(path) if version is None else version
-    return _as_state(v, _net_at(path, v)[1])
+    return _ckpt._resolve_base(path, v)
 
 
-def json_replay(
-    path: str, version: int | None = None
-) -> tuple[int, set[str], set[str], dict, dict, dict]:
-    """:func:`_state_full` from the empty base, no checkpoint read: the
-    reference of checkpoint-parity checks (raises once commit 1 expired)."""
+def json_replay(path: str, version: int | None = None) -> Snapshot:
+    """The :class:`Snapshot` from the empty base, no checkpoint read:
+    the reference of checkpoint-parity checks (raises once commit 1
+    expired)."""
     v = latest_commit(path) if version is None else version
-    return _as_state(v, _tail_net(path, 0, v))
+    return _snapshot_on(path, v, 0, _net())
 
 
 def last_txn_version(path: str, app: str) -> int:
     """Highest committed ``txn_version`` for idempotent-writer ``app``
     (−1 = never committed) — what a restarting exactly-once stream
     consults implicitly via :meth:`Transaction.commit`'s dedupe."""
-    _v, _live, _dvs, txns, _meta, _stats = _state_full(path)
-    return txns.get(app, -1)
+    return snapshot(path).state.txns.get(app, -1)
 
 
 def version_at_timestamp(path: str, ts: float) -> int:
@@ -425,8 +430,8 @@ def expire_versions(path: str, keep_from: int) -> dict:
     _ckpt.write_parquet_checkpoint(path, keep_from)
     # files every retained version can still reach: the state at
     # keep_from plus everything added after it
-    _v, live, dvs, _txns, _meta, _stats = _state_full(path, keep_from)
-    retained: set[str] = set(live) | set(dvs)
+    snap = snapshot(path, keep_from)
+    retained: set[str] = set(snap.adds()) | snap.state.dv_added
     for v in avail:
         if v <= keep_from:
             continue
@@ -474,15 +479,6 @@ def expire_versions(path: str, keep_from: int) -> dict:
         "data_files_deleted": data_deleted,
         "log_files_deleted": log_deleted,
     }
-
-
-def snapshot(path: str, version: int | None = None) -> tuple[int, list[str]]:
-    """``(version, sorted live data file names)`` as of ``version``
-    (default: latest).  File names are table-relative
-    (``data/<name>``) so the table survives moves, same as the DV
-    sidecar keys."""
-    v, live, _dvs = _state(path, version)
-    return v, sorted(live)
 
 
 # -- file-level column statistics + data skipping ------------------------
@@ -755,16 +751,12 @@ def prune_files(
     total live files)``.  Pure metadata: no data file is opened.  A
     file survives unless SOME conjunct proves it empty.  Predicate
     columns are LOGICAL names; on a column-mapped table they are
-    translated to the physical names the footer stats carry."""
-    v, live, _dvs, _txns, meta, stats = _state_full(path, version)
-    cm = _colmap(meta)
-    conj = [(cm.get(c, c), op, val) for c, op, val in predicate]
-    kept = [
-        f
-        for f in sorted(live)
-        if all(_stats_admit(stats.get(f), c, op, val) for c, op, val in conj)
-    ]
-    return v, kept, len(live)
+    translated to the physical names the footer stats carry.  One
+    :func:`.lakehouse_checkpoint.plan_scan` call."""
+    from . import lakehouse_checkpoint as _ckpt  # lazy: circular import
+
+    snap = snapshot(path, version)
+    return (snap.version, *_ckpt.plan_scan(snap, predicate))
 
 
 def _predicate_column(conj) -> "F.Column":
@@ -928,12 +920,12 @@ def table_detail(path: str, version: int | None = None) -> dict:
     vector is live (``rows_exact``) — the Delta metadata-only
     ``COUNT(*)`` contract; with live DVs it is an upper bound (base
     positions still count until compaction settles them)."""
-    v, live, dvs, _txns, _meta, stats = _state_full(path, version)
-    have = [stats.get(f) for f in live]
-    all_stats = all(s is not None for s in have) and bool(live)
+    snap = snapshot(path, version)
+    have, dvs = list(snap.adds().values()), snap.state.dv_added
+    all_stats = all(s is not None for s in have) and bool(have)
     return {
-        "version": v,
-        "n_files": len(live),
+        "version": snap.version,
+        "n_files": len(have),
         "n_rows": sum(s["rows"] for s in have if s is not None),
         "n_bytes": sum(s.get("bytes", 0) for s in have if s is not None),
         "n_dvs": len(dvs),
@@ -1099,11 +1091,13 @@ def read_table(
     conj = list(predicate) if predicate is not None else []
     from . import lakehouse_checkpoint as _ckpt  # lazy: circular import
 
-    # one planner: the newest parquet checkpoint plus the JSON tail, or
-    # JSON replay; footer stats are keyed by PHYSICAL column names and
-    # plan_scan translates the logical predicate columns itself (the
-    # residual filter below runs on the logical frame untranslated)
-    v, scan, dvs, meta, total = _ckpt.plan_scan(path, conj, version)
+    # one planner over one snapshot; footer stats are keyed by PHYSICAL
+    # column names and plan_scan translates the logical predicate
+    # columns itself (the residual filter below runs on the logical
+    # frame untranslated)
+    snap = snapshot(path, version)
+    scan, total = _ckpt.plan_scan(snap, conj)
+    v, dvs, meta = snap.version, sorted(snap.state.dv_added), snap.state.meta
     if v == 0:
         raise ValueError(f"no commits at {path}")
     if not total:
@@ -1174,7 +1168,7 @@ def read_changes(
             f"latest commit is {latest_commit(path)}"
         )
     root = pathlib.Path(path)
-    _v, _live, _dvs, _txns, meta, _stats = _state_full(path, v_to)
+    meta = snapshot(path, v_to).state.meta
     cols = [n for n, _t in meta.get("schema", [])]
     if not cols:
         raise ValueError(f"table at {path} has no committed schema")
@@ -1255,7 +1249,7 @@ def read_changes(
             # the clone's v1 IS the source's logical snapshot: cloned
             # files' rows minus the cloned deletion vectors
             side = rows_of(adds("clone"), with_addr=True)
-            _cv, _clive, cdvs = _state(path, v)
+            cdvs = snapshot(path, v).state.dv_added
             if cdvs:
                 dv = spark.read.parquet(
                     *[str(root / f) for f in sorted(cdvs)]
@@ -1277,7 +1271,7 @@ def read_changes(
             targets = sorted(
                 {t for a in del_dvs for t in a.get("targets", ())}
             )
-            _pv, _plive, prior_dvs = _state(path, v - 1)
+            prior_dvs = snapshot(path, v - 1).state.dv_added
             pieces.append(
                 tag(
                     dv_preimages(
@@ -1313,8 +1307,9 @@ def read_changes(
             # a dropped DV are inserts, positions newly hidden by a
             # re-added DV are deletes.  Only changed files and
             # DV-targeted files are ever read — never the table.
-            _pv, plive, pdvs = _state(path, v - 1)
-            _nv, nlive, ndvs = _state(path, v)
+            prev, new = snapshot(path, v - 1), snapshot(path, v)
+            plive, pdvs = set(prev.adds()), prev.state.dv_added
+            nlive, ndvs = set(new.adds()), new.state.dv_added
             for files, dvs_side, change in (
                 (sorted(nlive - plive), ndvs, "insert"),
                 (sorted(plive - nlive), pdvs, "delete"),
@@ -1409,7 +1404,9 @@ def restore_table(spark: SparkSession, path: str, version: int) -> int:
         "dvs": set(t._dvs),
         "meta": dict(t._meta),
     }
-    _tv, tgt_live, tgt_dvs, _txns, tgt_meta, tgt_stats = _state_full(path, version)
+    tgt = snapshot(path, version)
+    tgt_stats, tgt_dvs, tgt_meta = tgt.adds(), tgt.state.dv_added, tgt.state.meta
+    tgt_live = set(tgt_stats)
     if not tgt_live:
         raise ValueError(f"cannot restore {path} to empty version {version}")
     t._ops.append("restore")
@@ -1477,7 +1474,9 @@ def clone_table(src_path: str, dst_path: str) -> int:
     same caveat Delta documents for shallow clones.  Expiring the
     CLONE never deletes source files (absolute references outside the
     clone's root are skipped).  Returns the clone's version (1)."""
-    v, live, dvs, _txns, meta, src_stats = _state_full(src_path)
+    src = snapshot(src_path)
+    src_stats, dvs, meta = src.adds(), src.state.dv_added, src.state.meta
+    live = set(src_stats)
     if not live:
         raise ValueError(f"cannot clone empty table at {src_path}")
     src_root = pathlib.Path(src_path).resolve()
@@ -1531,7 +1530,9 @@ def clone_table_deep(
     snapshot).  Returns the clone's version (1)."""
     import pyarrow.parquet as pq
 
-    v, live, dvs, _txns, meta, src_stats = _state_full(src_path)
+    src = snapshot(src_path)
+    src_stats, dvs, meta = src.adds(), src.state.dv_added, src.state.meta
+    live = set(src_stats)
     if not live:
         raise ValueError(f"cannot clone empty table at {src_path}")
     src_root = pathlib.Path(src_path).resolve()
@@ -1681,11 +1682,12 @@ class Transaction:
         clock; either way :meth:`commit` clamps it to strictly after
         the previous commit's timestamp (monotonic by construction)."""
         self.path = str(path)
-        self.read_version, live, dvs, txns, meta, stats = _state_full(path)
-        self._meta = meta
-        self._live = sorted(live)
-        self._dvs = sorted(dvs)
-        self._stats = stats
+        snap = snapshot(path)
+        self.read_version, txns = snap.version, snap.state.txns
+        self._meta = snap.state.meta
+        self._stats = snap.adds()
+        self._live = sorted(self._stats)
+        self._dvs = sorted(snap.state.dv_added)
         self.actions: list[dict] = []
         self.read_files: set[str] = set()
         #: set by whole-table-read operations (WHEN NOT MATCHED BY
@@ -3938,11 +3940,7 @@ def copy_sources(path: str, version: int | None = None) -> set[str]:
     generation ≤ version plus the ``copy_source`` actions after it,
     so the ledger survives retention.  Driver JSON work is O(commits
     since checkpoint), like any state read."""
-    from . import lakehouse_checkpoint as _ckpt  # lazy: circular import
-
-    v = latest_commit(path) if version is None else version
-    v0, base = _ckpt._resolve_base(path, v, ("copy",))
-    return base.copied | _tail_net(path, v0, v).copied
+    return snapshot(path, version).state.copied
 
 
 def copy_into(
@@ -4070,7 +4068,7 @@ def vacuum_orphans(
     root = pathlib.Path(path)
     # resolving the base converts a table expired under the former
     # JSON checkpoint before its references are counted
-    _ckpt._resolve_base(path, latest_commit(path), ("meta",))
+    snapshot(path)
     referenced: set[str] = set()
     for v in _commit_versions(path):
         for a in _read_commit(path, v)["actions"]:

@@ -3,15 +3,19 @@
 A 100 TB table at 128 MB/file carries ~800k live add actions; a
 driver that replays them from the JSON log becomes the planning
 bottleneck Delta solved by checkpointing the log AS PARQUET.  A
-generation is the ONLY checkpoint format: the log state at v is the
-newest readable generation ≤ v (none = the empty base) plus the JSON
-tail folded by :func:`lakehouse._tail_net`.  While commit 1 exists a
-generation is derived data (an unreadable one falls back to an older
-one or the empty base); after :func:`lakehouse.expire_versions` the
-FLOOR generation (the newest at or below the oldest commit present)
-is the only copy of the expired prefix's state, and no sweep drops it.
-A table expired under the former JSON checkpoint is converted once on
-first read (:func:`_convert_legacy`).
+generation is the ONLY checkpoint format: the log state at v — a
+:class:`lakehouse.Snapshot` — is the newest readable generation ≤ v
+(none = the empty base) plus the JSON tail folded by
+:func:`lakehouse._tail_net`.  :func:`_resolve_base` is the one loop
+that picks that generation, and it falls back past an unreadable one
+wherever the base is read: snapshot resolution, ``Snapshot.adds()``,
+:func:`plan_scan` and :func:`advance_parquet_checkpoint`.  While
+commit 1 exists a generation is derived data; after
+:func:`lakehouse.expire_versions` the FLOOR generation (the newest at
+or below the oldest commit present) is the only copy of the expired
+prefix's state, and no sweep drops it.  A table expired under the
+former JSON checkpoint is converted once on first read
+(:func:`_convert_legacy`).
 
 Layout — ``_log/ckptpq-{version:08d}/`` is a parquet DATASET (parts
 of ~100k rows, row groups of :data:`_BATCH_ROWS`), one row per state
@@ -23,13 +27,17 @@ element in Delta's checkpoint shape:
     stats:   JSON string of the add action's footer stats (may be '')
     payload: JSON string (table meta / txn app+version)
 
-Every generation lands through :func:`_land`.
-:func:`advance_parquet_checkpoint` streams the base through as Arrow
-batches minus what the tail supersedes.  :func:`plan_scan` is THE scan
-planner behind ``read_table`` and the DataSource reader:
-:func:`prune_scan_arrow` decides each streamed batch with
-``pyarrow.compute`` (what it cannot decide exactly goes to
-:func:`lakehouse._stats_admit` row by row).  Only
+A snapshot reads only the base's non-add rows; its add rows stay in
+parquet until a caller materialises them or plans over them.  Every
+generation lands through :func:`_land`;
+:func:`advance_parquet_checkpoint` streams the base's add/dv rows
+through as Arrow batches minus what the tail supersedes.
+:func:`plan_scan` is THE scan planner behind ``read_table``,
+:func:`lakehouse.prune_files` and the DataSource reader: base add
+rows are decided batch by batch with ``pyarrow.compute``
+(:func:`_stats_pruner`), the tail's decoded adds row by row with
+:func:`lakehouse._stats_admit`.  Over :func:`lakehouse.json_replay`
+it is the reference route parity checks compare against.  Only
 :func:`stats_distributed` needs a SparkSession.
 
 Reference anchor: the reference's metadata plane is the Glue catalog
@@ -94,34 +102,24 @@ def latest_parquet_checkpoint(
     )
 
 
-def _base_and_tail(path: str, version: int | None) -> tuple[int, int, lk._Tail]:
-    """``(v, v0, tail)``: the newest parquet checkpoint v0 ≤ ``version``
-    (default latest) and the net JSON tail (v0, v] — the Delta read
-    protocol every consumer here composes.  Raises when no parquet
-    checkpoint ≤ v exists (callers fall back to
-    :func:`lakehouse._state_full`)."""
-    v = lk.latest_commit(path) if version is None else version
-    v0 = latest_parquet_checkpoint(path, v)
-    if v0 is None:
-        raise ValueError(f"no parquet checkpoint ≤ version {v} at {path}")
-    return v, v0, lk._tail_net(path, v0, v)
-
-
 class _Unreadable(Exception):
     """A checkpoint part could not be opened or scanned (truncated or
-    foreign bytes); reads fall back to an older generation or the
-    empty base."""
+    foreign bytes, or swept under the reader); reads fall back to an
+    older generation or the empty base (:func:`_resolve_base`)."""
 
 
 def _base_batches(path: str, v0: int, kinds, gone=(), columns=_COLS):
-    """The base checkpoint's rows of ``kinds`` minus those whose file
-    is in ``gone``, STREAMED as Arrow record batches — peak memory is
-    a few batches, never the O(files) base table.  Open and scan
-    errors surface as :class:`_Unreadable`; errors in the consumer's
-    own work on a batch do not pass through here."""
+    """Generation ``v0``'s rows of ``kinds`` minus those whose file is
+    in ``gone``, STREAMED as Arrow record batches — peak memory is a
+    few batches, never the O(files) base table; none for ``v0 == 0``,
+    the empty base.  Open and scan errors surface as
+    :class:`_Unreadable`; errors in the consumer's own work on a batch
+    do not pass through here."""
     import pyarrow as pa
     import pyarrow.dataset as pads
 
+    if not v0:
+        return
     filt = pads.field("kind").isin(list(kinds))
     if gone:
         filt = filt & ~pads.field("file").isin(list(gone))
@@ -156,22 +154,29 @@ def _generation(path: str, v0: int, kinds=_KINDS) -> lk._Tail:
     return t
 
 
-def _resolve_base(path: str, v: int, kinds=_KINDS) -> tuple[int, lk._Tail]:
-    """``(v0, base)``: the newest READABLE generation v0 ≤ ``v`` as
-    :func:`_generation` reads it, trying older ones past an
-    unreadable one, else ``(0, empty net)``.  A table whose commit 1
+def _resolve_base(path: str, v: int, use=None, seen=None):
+    """``use(s)`` (default: ``s`` itself) for the Snapshot ``s`` at
+    ``v`` on the newest generation ≤ ``v`` whose rows read, else on the
+    empty base — THE loop over generations.  An :class:`_Unreadable`
+    raised while resolving ``s`` (its non-add rows) or inside ``use``
+    (its add rows) moves on to the next older generation.  With
+    ``seen``, a Snapshot at ``v`` already resolved, the search starts
+    at ``seen.base`` and reuses ``seen`` there.  A table whose commit 1
     is gone and that has no generation ≤ v is converted first
     (:func:`_convert_legacy`)."""
-    gens = [g for g in _generations(path) if g <= v]
+    gens = [g for g in _generations(path) if 0 < g <= v]
     first = pathlib.Path(path) / lk._LOG_DIR / f"{1:08d}.json"
     if not gens and v > 0 and not first.exists():
         gens = _convert_legacy(path, v)
-    for g in reversed(gens):
+    top = v if seen is None else seen.base
+    for g in [*(g for g in reversed(gens) if g <= top), 0]:  # 0 always reads
         try:
-            return g, _generation(path, g, kinds)
+            s = seen if seen is not None and seen.base == g else lk._snapshot_on(
+                path, v, g, _generation(path, g, ("dv", "copy", "meta", "txn"))
+            )
+            return s if use is None else use(s)
         except _Unreadable:
             continue
-    return 0, lk._net()
 
 
 def _convert_legacy(path: str, v: int) -> list[int]:
@@ -193,20 +198,13 @@ def _convert_legacy(path: str, v: int) -> list[int]:
         {f: stats.get(f) for f in old["files"]}, old["dvs"], old.get("meta", {}),
         old.get("txns", {}), old.get("copy_sources", ()),
     )
-    return [_land_rows(path, n, rows)]
+    return [_land(path, n, [_rows_batch(rows)])]
 
 
-def _live_adds(path: str, v0: int, tail: lk._Tail):
-    """Every live add at the tail's end as Arrow ``(file, stats JSON)``
-    record batches: the base rows streamed, then the tail's."""
-    import pyarrow as pa
-
-    yield from _base_batches(path, v0, ["add"], tail.gone, ["file", "stats"])
-    stats = [json.dumps(st) if st else "" for st in tail.added.values()]
-    yield pa.record_batch(
-        [pa.array(list(c), pa.string()) for c in (tail.added, stats)],
-        names=["file", "stats"],
-    )
+def _adds(s) -> dict:
+    """``{live file: stats dict | None}`` of Snapshot ``s``: its base's
+    add rows decoded, folded with its tail."""
+    return _generation(s.path, s.base, ("add",)).then(s.tail).added
 
 
 def _state_rows(adds: dict, dvs, meta: dict, txns: dict, copies=()) -> list[tuple]:
@@ -231,31 +229,6 @@ def _rows_batch(rows: list[tuple]):
     return pa.RecordBatch.from_arrays(
         [pa.array(c, pa.string()) for c in cols], names=_COLS
     )
-
-
-def state_arrow(
-    path: str, version: int | None = None
-) -> tuple[int, dict, set, dict]:
-    """``(version, {live file: stats JSON str}, live DV set, meta)``
-    composed from the newest parquet checkpoint ≤ ``version`` plus the
-    JSON tail: a COLUMNAR read of the O(files) base, JSON work only
-    for the tail.  Raises when no parquet checkpoint ≤ version exists
-    (callers fall back to :func:`lakehouse._state_full`)."""
-    v, v0, tail = _base_and_tail(path, version)
-    side = _generation(path, v0, ("meta", "dv")).then(tail)
-    adds: dict = {}
-    for b in _live_adds(path, v0, tail):
-        adds.update(zip(b.column("file").to_pylist(), b.column("stats").to_pylist()))
-    return v, adds, side.dv_added, side.meta
-
-
-def meta_arrow(path: str, version: int | None = None) -> tuple[int, dict]:
-    """``(version, table meta)`` from the newest parquet checkpoint ≤
-    ``version`` plus the tail's ``set_meta`` folds — a projected
-    pyarrow read of the meta row, no session, no O(files) state
-    build."""
-    v, v0, tail = _base_and_tail(path, version)
-    return v, _generation(path, v0, ("meta",)).then(tail).meta
 
 
 #: committed column type -> Arrow type of its stats in the vectorised
@@ -344,9 +317,10 @@ def _decide(tbl, c: str, t, op: str, keys):
     return ~zero & (absent | (~all_null & (unbounded | hit))), unsure & compared
 
 
-def _stats_pruner(meta: dict, predicate):
+def _stats_pruner(meta: dict, conj):
     """``keep(stats)`` -> numpy mask of _stats_admit's decisions under
-    the LOGICAL ``predicate`` for an Arrow array of stats JSON strings.
+    the PHYSICAL-name conjuncts ``conj`` for an Arrow array of stats
+    JSON strings.
     Under a :func:`_vector_plan`, a batch parses only ``rows`` and the
     predicate columns' bounds, typed from the committed schema, for
     :func:`_decide`; unsure rows, unparsable batches and unplanned
@@ -356,8 +330,6 @@ def _stats_pruner(meta: dict, predicate):
     import pyarrow.compute as pc
     import pyarrow.json as pj
 
-    cm = lk._colmap(meta)
-    conj = [(cm.get(c, c), op, val) for c, op, val in predicate]
     if not conj:
         return lambda stats: np.ones(len(stats), bool)
 
@@ -398,85 +370,43 @@ def _stats_pruner(meta: dict, predicate):
     return keep
 
 
-def prune_scan_arrow(
-    path: str, predicate, version: int | None = None
-) -> tuple[int, list[str], list[str], dict, int]:
-    """:func:`plan_scan` from the newest parquet checkpoint ≤
-    ``version`` plus the JSON tail.  Adds stream through as Arrow
-    batches, each decided whole by :func:`_stats_pruner`: peak memory
-    is O(survivors + tail + one batch), JSON work O(tail).  Raises
-    when no checkpoint ≤ version exists."""
+def plan_scan(snap, predicate) -> tuple[list[str], int]:
+    """THE scan planner behind ``read_table``, :func:`lakehouse.prune_files`
+    and the DataSource reader: ``(surviving live files sorted, total
+    live files)`` of the :class:`lakehouse.Snapshot` ``snap`` for
+    LOGICAL ``(column, op, value)`` conjuncts.  The base generation's
+    add rows stream through :func:`_stats_pruner` as Arrow batches
+    (peak memory O(survivors + one batch)); the tail's decoded adds go
+    through :func:`lakehouse._stats_admit` one by one.  Over
+    :func:`lakehouse.json_replay` this is the reference route.
+    Driver-side, session-less."""
     import pyarrow as pa
 
-    v, v0, tail = _base_and_tail(path, version)
-    side = _generation(path, v0, ("meta", "dv")).then(tail)
-    meta, dvs = side.meta, side.dv_added
-    keep = _stats_pruner(meta, predicate)
-    kept: list[str] = []
-    total = 0
-    for b in _live_adds(path, v0, tail):
-        total += b.num_rows
-        kept += b.column("file").filter(pa.array(keep(b.column("stats")))).to_pylist()
-    return v, sorted(kept), sorted(dvs), meta, total
-
-
-def _checkpointed(read, path: str, version: int | None, *args):
-    """``(v, read(path, *args, v))`` when a parquet checkpoint ≤ v
-    exists and its parts read, else ``(v, None)``: the caller replays
-    the log.  Only :class:`_Unreadable` falls back; any other error
-    (a defect in the decision code) propagates."""
-    v = lk.latest_commit(path) if version is None else version
-    if latest_parquet_checkpoint(path, v) is not None:
-        try:
-            return v, read(path, *args, v)
-        except _Unreadable:
-            pass
-    return v, None
-
-
-def plan_scan(
-    path: str, predicate, version: int | None = None, replay=None
-) -> tuple[int, list[str], list[str], dict, int]:
-    """THE scan planner behind ``read_table`` and the DataSource reader:
-    ``(version, surviving files sorted, DV files sorted, meta, total
-    live files)`` for LOGICAL ``(column, op, value)`` conjuncts (see
-    :func:`lakehouse.prune_files`) at ``version`` (default latest),
-    from the newest readable parquet checkpoint ≤ version plus the
-    JSON tail, else from JSON replay — or from ``replay``, the one
-    :func:`table_state` already took.  Driver-side, session-less."""
-    if replay is None:
-        v, planned = _checkpointed(prune_scan_arrow, path, version, predicate)
-        if planned is not None:
-            return planned
-        replay = lk._state_full(path, v)
-    v, live, dvs, _txns, meta, stats = replay
+    meta = snap.state.meta
     cm = lk._colmap(meta)
     conj = [(cm.get(c, c), op, val) for c, op, val in predicate]
-    kept = [f for f in sorted(live)
-            if all(lk._stats_admit(stats.get(f), *cj) for cj in conj)]
-    return v, kept, sorted(dvs), meta, len(live)
+    keep = _stats_pruner(meta, conj)
 
+    def plan(s) -> tuple[list[str], int]:
+        kept = [f for f, st in s.tail.added.items()
+                if all(lk._stats_admit(st, *c) for c in conj)]
+        total = len(s.tail.added)
+        for b in _base_batches(s.path, s.base, ["add"], s.tail.gone, ["file", "stats"]):
+            total += b.num_rows
+            kept += b.column("file").filter(pa.array(keep(b.column("stats")))).to_pylist()
+        return sorted(kept), total
 
-def table_state(
-    path: str, version: int | None = None
-) -> tuple[int, dict, tuple | None]:
-    """``(version, table meta, replay)``, resolved as :func:`plan_scan`
-    does; ``replay`` is the JSON replay taken when no checkpoint
-    serves (else None), for a :func:`plan_scan` at this version."""
-    v, read = _checkpointed(meta_arrow, path, version)
-    if read is not None:
-        return (*read, None)
-    replay = lk._state_full(path, v)
-    return replay[0], replay[4], replay
+    return _resolve_base(snap.path, snap.version, plan, snap)
 
 
 def _land(path: str, v: int, batches, keep: int = 0) -> int:
     """Write ``batches`` as checkpoint generation ``v``: parts of
     ~:data:`_PART_ROWS` rows in a tmp dir renamed into place (if the
-    generation already landed, the first one stays), then sweep every
-    generation but the ``keep`` newest (0 = no sweep) and, once commit
-    1 is gone, the floor: the newest at or below the oldest commit, the
-    only copy of the expired prefix's state.  Returns ``v``."""
+    generation already landed, the first one stays; a failed write
+    leaves no tmp dir), then sweep every generation but the ``keep``
+    newest (0 = no sweep) and, once commit 1 is gone, the floor: the
+    newest at or below the oldest commit, the only copy of the expired
+    prefix's state.  Returns ``v``."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -496,13 +426,19 @@ def _land(path: str, v: int, batches, keep: int = 0) -> int:
         )
         buf, rows, parts = [], 0, parts + 1
 
-    for b in batches:
-        buf.append(pa.RecordBatch.from_arrays(b.columns, schema=schema))
-        rows += b.num_rows
-        if rows >= _PART_ROWS:
+    try:
+        for b in batches:
+            for i in range(0, b.num_rows, _PART_ROWS):
+                part = b.slice(i, _PART_ROWS)
+                buf.append(pa.RecordBatch.from_arrays(part.columns, schema=schema))
+                rows += part.num_rows
+                if rows >= _PART_ROWS:
+                    flush()
+        if buf or not parts:
             flush()
-    if buf or not parts:
-        flush()
+    except BaseException:
+        shutil.rmtree(tmp, ignore_errors=True)
+        raise
     if dest.exists():
         shutil.rmtree(tmp)
     else:
@@ -517,48 +453,39 @@ def _land(path: str, v: int, batches, keep: int = 0) -> int:
     return v
 
 
-def _land_rows(path: str, v: int, rows: list[tuple]) -> int:
-    return _land(path, v, (
-        _rows_batch(rows[i:i + _PART_ROWS]) for i in range(0, len(rows), _PART_ROWS)
-    ))
-
-
 def write_parquet_checkpoint(path: str, version: int | None = None) -> int:
-    """Land the state at ``version`` (default latest) as a generation:
-    the newest readable generation below it plus the JSON tail, or
-    replay from the empty base — the last time the full file list must
-    live on the driver.  A readable generation at ``version`` is kept;
-    an unreadable one is replaced.  Returns the checkpointed version."""
-    v = lk.latest_commit(path) if version is None else version
-    v0, t = lk._net_at(path, v)
-    if v0 == v:
-        return v
-    shutil.rmtree(_ckpt_dir(path, v), ignore_errors=True)
-    rows = _state_rows(t.added, t.dv_added, t.meta, t.txns, t.copied)
-    return _land_rows(path, v, rows)
+    """Land the state at ``version`` (default latest) as a generation
+    and sweep none: :func:`advance_parquet_checkpoint` with ``keep=0``.
+    Returns the checkpointed version."""
+    return advance_parquet_checkpoint(path, version, keep=0)
 
 
 def advance_parquet_checkpoint(
     path: str, version: int | None = None, keep: int = 2
 ) -> int:
-    """Roll the newest parquet checkpoint forward to ``version``
-    (default latest): the base's add/dv rows stream through minus what
-    the JSON tail supersedes, then the tail's and the folded
-    copy/meta/txn rows — O(tail) JSON work, the O(files) base never on
-    the heap.  Bootstraps when no checkpoint exists.  Only the
-    ``keep`` newest generations and the floor survive (default 2: the
-    new one plus its predecessor, so a reader racing the advance never
-    loses its base)."""
+    """Land the state at ``version`` (default latest) as a generation:
+    the add/dv rows of the newest readable generation below it stream
+    through minus what the JSON tail supersedes, then the tail's and
+    the folded copy/meta/txn rows — O(tail) JSON work, the O(files)
+    base never on the heap.  With no readable generation below it,
+    this bootstraps from the empty base.  A readable generation at
+    ``version`` is kept; an unreadable one is replaced.  Only the
+    ``keep`` newest generations and the floor survive (0 = no sweep;
+    default 2: the new one plus its predecessor, so a reader racing
+    the advance never loses its base).  Returns the version."""
     v = lk.latest_commit(path) if version is None else version
-    if latest_parquet_checkpoint(path, v) is None:
-        return write_parquet_checkpoint(path, v)
-    v, v0, tail = _base_and_tail(path, v)
-    if v0 == v:
-        return v
-    side = _generation(path, v0, ("meta", "txn", "copy")).then(tail)
-    base = _base_batches(path, v0, ["add", "dv"], tail.gone)
-    rows = _state_rows(tail.added, tail.dv_added, side.meta, side.txns, side.copied)
-    return _land(path, v, itertools.chain(base, [_rows_batch(rows)]), keep)
+
+    def land(s) -> int:
+        if s.base == v:
+            return v
+        # the resolver passed over any generation at v: it is unreadable
+        shutil.rmtree(_ckpt_dir(path, v), ignore_errors=True)
+        t, st = s.tail, s.state
+        rows = _state_rows(t.added, t.dv_added, st.meta, st.txns, st.copied)
+        base = _base_batches(path, s.base, ["add", "dv"], t.gone)
+        return _land(path, v, itertools.chain(base, [_rows_batch(rows)]), keep)
+
+    return _resolve_base(path, v, land)
 
 
 def stats_distributed(

@@ -299,24 +299,23 @@ class _FileSlice(InputPartition):
 
 
 class _LakehouseBatchReader(DataSourceReader):
-    """Batch scan of one snapshot.  ``__init__`` resolves the version
-    and committed schema (:func:`..lakehouse_checkpoint.table_state`);
-    ``partitions()`` — which Spark runs in a SESSION-LESS planning
-    worker, so planning takes no Spark job — prunes through the one
-    planner, :func:`..lakehouse_checkpoint.plan_scan`, under the
-    pushed filters, and fans out one task per surviving file.  On a
-    table without a parquet checkpoint the JSON replay ``__init__``
-    took is handed to the planner, so the log is replayed once."""
+    """Batch scan of one snapshot.  ``__init__`` resolves the
+    :class:`..lakehouse.Snapshot` (version and committed schema, no
+    add row decoded); ``partitions()`` — which Spark runs in a
+    SESSION-LESS planning worker, so planning takes no Spark job —
+    hands that Snapshot to the one planner,
+    :func:`..lakehouse_checkpoint.plan_scan`, under the pushed
+    filters, and fans out one task per surviving file.  The log is
+    resolved once per reader."""
 
     def __init__(self, options, schema):
         self.path = _options_path(options)
         self.root = pathlib.Path(self.path)
-        v, meta, self._replay = _ckpt.table_state(
-            self.path, _resolve_version(options)
-        )
-        if v == 0:
+        self._snap = lk.snapshot(self.path, _resolve_version(options))
+        meta = self._snap.state.meta
+        if self._snap.version == 0:
             raise ValueError(f"no commits at {self.path}")
-        self.version = v
+        self.version = self._snap.version
         self.fields = list(meta.get("schema", []))
         self.colmap = lk._colmap(meta)
         self.pcols = list(meta.get("pcols") or [])
@@ -326,8 +325,8 @@ class _LakehouseBatchReader(DataSourceReader):
 
     def __getstate__(self):
         # Spark pickles the reader for the executors' read() before it
-        # calls partitions(): the O(files) replay stays on the driver
-        return {**self.__dict__, "_replay": None}
+        # calls partitions(): the snapshot's tail stays on the driver
+        return {**self.__dict__, "_snap": None}
 
     def pushFilters(self, filters):
         """Record every stats-answerable conjunct for partition
@@ -353,10 +352,9 @@ class _LakehouseBatchReader(DataSourceReader):
         self._planned = True
         # logical predicate names: plan_scan translates through the
         # column mapping itself
-        _v, scan, dvs, _meta, _total = _ckpt.plan_scan(
-            self.path, list(self._conj), self.version, self._replay
-        )
-        self._replay = None
+        scan, _total = _ckpt.plan_scan(self._snap, list(self._conj))
+        dvs = sorted(self._snap.state.dv_added)
+        self._snap = None
         by_base = _dv_files_by_base(self.root, dvs)
         return [
             _FileSlice(
@@ -432,7 +430,7 @@ class _CommitDeriver:
             str(options.get("skipChangeCommits", "")).lower() == "true"
         )
         self.arrow_schema = _arrow_schema(schema)
-        _v, _l, _d, _t, meta0, _s = lk._state_full(self.path)
+        meta0 = lk.snapshot(self.path).state.meta
         self.colmap = lk._colmap(meta0)
         self.fields = list(meta0.get("schema", []))
         self.pcols = list(meta0.get("pcols") or [])
@@ -450,15 +448,16 @@ class _CommitDeriver:
 
     def _meta_at(self, v: int, commit: dict) -> dict:
         """Table meta AS OF commit ``v`` — cached forward: a tail of N
-        commits costs ONE replay plus O(1) per metadata-free commit,
-        not N replays (the schema only moves on set_meta actions)."""
+        commits costs ONE snapshot resolution (no add row decoded)
+        plus O(1) per metadata-free commit, not N (the schema only
+        moves on set_meta actions)."""
         cached_v, cached_meta = getattr(self, "_meta_cache", (None, None))
         if cached_v == v - 1 and not any(
             a["op"] == "set_meta" for a in commit["actions"]
         ):
             self._meta_cache = (v, cached_meta)
             return cached_meta
-        _v, _l, _d, _t, meta, _s = lk._state_full(self.path, v)
+        meta = lk.snapshot(self.path, v).state.meta
         self._meta_cache = (v, meta)
         return meta
 
@@ -567,7 +566,7 @@ class _CommitDeriver:
             # row's death is derived ONCE) — the prior sidecar list is
             # delta-sized (purge cadence) and computed HERE so the
             # executor never replays the log
-            _pv, _plive, prior = lk._state(self.path, v - 1)
+            prior = lk.snapshot(self.path, v - 1).state.dv_added
             out += self._dv_slices(v, del_dvs, "delete", tuple(sorted(prior)))
         upd_dvs = by_role.get(("add_dv", "update"), [])
         if upd_dvs:
@@ -1017,7 +1016,7 @@ class LakehouseDataSource(DataSource):
 
     def schema(self) -> str:
         path = _options_path(self.options)
-        _v, meta, _replay = _ckpt.table_state(path, _resolve_version(self.options))
+        meta = lk.snapshot(path, _resolve_version(self.options)).state.meta
         ddl = _ddl_of(meta)
         if str(self.options.get("readChangeFeed", "")).lower() == "true":
             ddl += ", `_change_type` string, `_commit_version` int"

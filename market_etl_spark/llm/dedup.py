@@ -1019,7 +1019,7 @@ def probe_seen_files(table_path: str, digests) -> tuple[list[str], int, bool]:
 
     from .. import lakehouse as lk
 
-    _v, live, _dvs, _t, _m, _s = lk._state_full(table_path)
+    live = lk.snapshot(table_path).adds()
     covered: set[str] = set()
     hit: set[str] = set()
     d = pathlib.Path(table_path) / _BLOOM_DIR

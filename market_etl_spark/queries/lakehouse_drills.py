@@ -723,13 +723,16 @@ def q_lakehouse_mor_txn(spark: SparkSession, sf_dir: str) -> DataFrame:
     c2.compact(spark, n_files=4)
     final_version = c2.commit()
 
-    v, live, dvs = lk._state(path)
+    def files_and_dvs():
+        snap = lk.snapshot(path)
+        return snap.version, set(snap.adds()), snap.state.dv_added
+
+    pre = v, live, dvs = files_and_dvs()
     compaction_settled = dvs == set() and len(live) == 4
 
-    pre = lk._state(path)
     ckpt.write_parquet_checkpoint(path)
     checkpoint_equivalent = (
-        lk._state(path) == pre and ckpt.latest_parquet_checkpoint(path, v) == v
+        files_and_dvs() == pre and ckpt.latest_parquet_checkpoint(path, v) == v
     )
 
     return (
@@ -1241,7 +1244,7 @@ def q_lakehouse_update_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
     t0.append(e.repartition(8))
     t0.commit()
     n0 = lk.read_table(spark, path).count()
-    base_files = set(lk.snapshot(path)[1])
+    base_files = set(_live_files(path))
 
     a = lk.Transaction(path)  # both begin at v1
     b = lk.Transaction(path)
@@ -1265,7 +1268,7 @@ def q_lakehouse_update_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     final = lk.read_table(spark, path)
     cardinality_preserved = final.count() == n0
-    no_base_rewrite = base_files <= set(lk.snapshot(path)[1])
+    no_base_rewrite = base_files <= set(_live_files(path))
 
     return (
         final.groupBy("event_type")
@@ -1694,7 +1697,7 @@ def q_lakehouse_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = lk.Transaction(path)
     t.append(e.repartitionByRange(8, F.col("event_id")))
     t.commit()  # v1
-    total_files = len(lk.snapshot(path)[1])  # actual seeded file count
+    total_files = len(_live_files(path))  # actual seeded file count
     t = lk.Transaction(path)
     t.enable_cdf()
     t.commit()  # v2
@@ -2213,7 +2216,7 @@ def q_lakehouse_optimize_incremental(
         )
         t.commit()
     root = pathlib.Path(path)
-    _v, live = lk.snapshot(path)
+    live = _live_files(path)
     sizes = {f: (root / f).stat().st_size for f in live}
     big = sorted(sizes, key=sizes.get)[-2:]
     threshold = min(sizes[f] for f in big)
@@ -2233,7 +2236,7 @@ def q_lakehouse_optimize_incremental(
     except lk.CommitConflict:
         commuted = False
 
-    _v, live_after = lk.snapshot(path)
+    live_after = _live_files(path)
     big_files_untouched = set(big) <= set(live_after)
     return (
         lk.read_table(spark, path)
@@ -2521,11 +2524,11 @@ def q_lakehouse_rename_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     t.append(base.repartition(4))
     t.commit()  # v1
 
-    _v, files_before = lk.snapshot(path)
+    files_before = _live_files(path)
     t = lk.Transaction(path)
     t.rename_column("bal", "balance")
     t.commit()  # v2
-    rename_metadata_only = lk.snapshot(path)[1] == files_before
+    rename_metadata_only = _live_files(path) == files_before
 
     t = lk.Transaction(path)
     t.append(
@@ -3303,7 +3306,7 @@ def q_lakehouse_parquet_checkpoint(
     without a session (the old checkpoint streams through as Arrow
     batches beside the delta-sized JSON tail — the driver never holds
     the O(files) base after bootstrap); the one scan planner
-    (``plan_scan``) prunes its add rows in streamed Arrow batches,
+    (``plan_scan``) prunes its base add rows in streamed Arrow batches,
     vectorised, with ``_stats_admit``'s decisions, and staged-file
     footer stats come back from one ``mapPartitions`` job instead of
     a serial driver loop.
@@ -3318,10 +3321,10 @@ def q_lakehouse_parquet_checkpoint(
       (checkpoint parquet + tail) equal the driver JSON replay at v5
       AND at the time-traveled v4 (an older state must compose from
       the v3 checkpoint + a shorter tail);
-    - ``prune_parity`` — checkpoint-planned prune decisions are
-      IDENTICAL (version, survivors, DVs, meta, total) to the
-      planner's JSON-replay route (:func:`..lakehouse.json_replay`) for a range, an
-      ``in``, and an everything-pruned predicate;
+    - ``prune_parity`` — checkpoint-planned prune decisions
+      (survivors, total) are IDENTICAL to the reference route,
+      ``plan_scan(json_replay(...))``, for a range, an ``in``, and an
+      everything-pruned predicate;
     - ``stats_distributed_parity`` — the one-job footer stats equal
       the serial per-file reads, dict-for-dict;
     - ``pruned_read_parity`` — ``read_table``'s predicate read,
@@ -3354,15 +3357,12 @@ def q_lakehouse_parquet_checkpoint(
     t.commit()  # v5 — a rewrite in the tail
     ckpt.advance_parquet_checkpoint(path)  # v3 ckpt + tail -> v5
 
-    def sets(version=None):
-        v, kept, dvs, _meta, _total = ckpt.prune_scan_arrow(path, [], version)
-        return v, set(kept), set(dvs)
+    def sets(snap):
+        return snap.version, set(ckpt.plan_scan(snap, [])[0]), snap.state.dv_added
 
-    def json_sets(version=None):
-        v, live, dvs, _t, _m, _s = lk.json_replay(path, version)
-        return v, live, dvs
-
-    state_parity = sets() == json_sets() and sets(4) == json_sets(4)
+    state_parity = all(
+        sets(lk.snapshot(path, v)) == sets(lk.json_replay(path, v)) for v in (None, 4)
+    )
 
     preds = (
         [("k", "<", 1000)],
@@ -3370,15 +3370,13 @@ def q_lakehouse_parquet_checkpoint(
         [("k", "<", 0)],
     )
 
-    replay = lk.json_replay(path)
-    prune_parity = all(
-        ckpt.prune_scan_arrow(path, p) == ckpt.plan_scan(path, p, replay=replay)
-        for p in preds
+    snap, replay = lk.snapshot(path), lk.json_replay(path)
+    prune_parity = snap.base == 5 and all(
+        ckpt.plan_scan(snap, p) == ckpt.plan_scan(replay, p) for p in preds
     )
 
     root = pathlib.Path(path)
-    _v, live, _dvs, _t, _m, _s = lk._state_full(path)
-    paths = [str(root / f) for f in sorted(live)]
+    paths = [str(root / f) for f in _live_files(path)]
     stats_parity = ckpt.stats_distributed(spark, paths) == {
         p: lk._file_stats(pathlib.Path(p)) for p in paths
     }
@@ -3677,8 +3675,8 @@ def q_lakehouse_zorder_incremental(
         )
         t.commit()
 
-    _v, live_before, _dvs = lk._state(path)
-    _v2, _live2, _dv2, _txn, _meta, stats = lk._state_full(path)
+    stats = lk.snapshot(path).adds()
+    live_before = set(stats)
     clustered = {f for f in live_before if f.startswith("data/zo-")}
     debt = live_before - clustered
     target = min(stats[f]["bytes"] for f in clustered)
@@ -3689,7 +3687,7 @@ def q_lakehouse_zorder_incremental(
     )
     t.commit()
     v_after = lk.latest_commit(path)
-    _v3, live_after, _dv3 = lk._state(path)
+    live_after = set(_live_files(path))
 
     clustered_survive = clustered <= live_after
     debt_settled = (
@@ -3887,9 +3885,11 @@ def q_lakehouse_checkpoint_planning(
 
     Every scan — ``read_table`` and the registered source alike — plans
     through one driver-side planner
-    (:func:`..lakehouse_checkpoint.plan_scan`): the newest parquet
-    checkpoint plus the JSON tail when one exists, JSON replay
-    otherwise.  This drill proves the composition:
+    (:func:`..lakehouse_checkpoint.plan_scan`) over one
+    :class:`..lakehouse.Snapshot`: the newest parquet checkpoint plus
+    the JSON tail, or the tail alone from the empty base.  The
+    reference route is ``plan_scan(json_replay(...))``.  This drill
+    proves the composition:
 
     1. Seed the orders table (3 appends, 2 files each), bootstrap a
        parquet checkpoint, set the auto-advance interval to 2 and
@@ -3899,13 +3899,12 @@ def q_lakehouse_checkpoint_planning(
        session-less ``advance_parquet_checkpoint`` once the JSON tail
        reaches the interval, Delta's checkpoint cadence).
     2. ``arrow_state_parity`` — the SESSION-LESS state composition
-       (pyarrow columnar read of the checkpoint + delta-sized JSON
-       tail, :func:`..lakehouse_checkpoint.state_arrow`) equals the
-       JSON replay: live set, DV set, meta, and every per-file stats
-       dict.
+       (:func:`..lakehouse.snapshot`: pyarrow columnar read of the
+       checkpoint + delta-sized JSON tail) equals the JSON replay:
+       live set, DV set, meta, and every per-file stats dict.
     3. ``source_plan_parity`` — the registered source's PARTITION
        LIST under a pushed filter, planned from the checkpoint, equals
-       the planner's JSON-replay route file-for-file, each file
+       ``plan_scan(json_replay(...))`` file-for-file, each file
        carrying the DV sidecars that JSON replay's DV set targets at
        it.
     4. ``routed_read_parity`` — ``read_table``, planned from the
@@ -3957,16 +3956,11 @@ def q_lakehouse_checkpoint_planning(
         spark.conf.unset(ckpt.AUTO_ADVANCE_CONF)
 
     # --- 2: session-less (pyarrow) state == JSON replay
-    import json as _json
-
-    av, alive, advs, ameta = ckpt.state_arrow(path)
-    jv, jlive, jdvs, _txns, jmeta, jstats = lk.json_replay(path)
-    arrow_state_parity = (
-        (av, set(alive), advs, ameta) == (jv, jlive, jdvs, jmeta)
-        and all(
-            (_json.loads(s) if s else None) == jstats[f]
-            for f, s in alive.items()
-        )
+    snap, replay = lk.snapshot(path), lk.json_replay(path)
+    jdvs = replay.state.dv_added
+    arrow_state_parity = snap.base == 5 and (
+        (snap.version, snap.adds(), snap.state.dv_added, snap.state.meta)
+        == (replay.version, replay.adds(), jdvs, replay.state.meta)
     )
 
     # --- 3: the SOURCE's partition list == JSON replay's decisions
@@ -3974,9 +3968,9 @@ def q_lakehouse_checkpoint_planning(
     pred = [("k", "<", 1000)]
     r = _LakehouseBatchReader({"path": path}, schema)
     r._conj = list(pred)
-    from_ckpt = r._replay is None  # resolved without replaying the log
+    from_ckpt = r._snap.base == 5  # resolved on the advanced checkpoint
     planned = [(p.file, p.dv_files) for p in r.partitions()]
-    kept = ckpt.plan_scan(path, pred, replay=lk.json_replay(path))[1]
+    kept = ckpt.plan_scan(replay, pred)[0]
     by_base = _dv_files_by_base(pathlib.Path(path), sorted(jdvs))
     source_plan_parity = from_ckpt and planned == [
         (f, tuple(by_base.get(pathlib.PurePosixPath(f).name, ())))
@@ -4125,7 +4119,7 @@ def q_lakehouse_sql_ddl(spark: SparkSession, sf_dir: str) -> DataFrame:
         WHEN MATCHED AND s.bal > 0 THEN UPDATE SET seg = s.seg, bal = s.bal
         """,
     ).collect()[0]
-    pre_v, live_before = lk.latest_commit(path), len(lk.snapshot(path)[1])
+    pre_v, live_before = lk.latest_commit(path), len(_live_files(path))
     opt = run_sql(
         spark, "OPTIMIZE lakehouse.cust13 ZORDER BY (k) FULL"
     ).collect()[0]
@@ -4872,9 +4866,7 @@ def q_lakehouse_convert_partitioned(
 
 
 def _live_files(path: str) -> list[str]:
-
-    _v, live, _dvs, _t, _m, _s = lk._state_full(path)
-    return sorted(live)
+    return sorted(lk.snapshot(path).adds())
 
 
 @query(

@@ -33,6 +33,9 @@ def pytest_collection_modifyitems(config, items):
 @pytest.fixture(scope="session")
 def spark():
     os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
+    # get_spark's 12g default lets one test JVM take half a 15 GB host;
+    # the whole fast tier passes at 4g.  The env var still overrides it.
+    os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "4g")
     from market_etl_spark.session import get_spark
 
     spark = get_spark("tests")

@@ -14,8 +14,9 @@ restore sequences that once resurrected files through a checkpoint:
   the DV is removed again (the base DV row must go).
 
 The checkpoint is bootstrapped, then advanced; at every version the
-session-less compositions and the scan planner equal JSON replay, also
-when a checkpoint part cannot be read.
+snapshot and the scan planner over it equal JSON replay (the reference
+route, ``plan_scan(json_replay(...))``), also when a checkpoint part
+cannot be read.
 
 :class:`LogMachine` checks the same ground against a model: Hypothesis
 writes random commits and runs the driver-side log operations in random
@@ -111,24 +112,24 @@ def table(tmp_path) -> str:
     return str(tmp_path / "t")
 
 
+def _state_of(snap: lk.Snapshot) -> tuple:
+    """A snapshot as plain values: version, adds with their stats, DV
+    files, meta, txn high-water marks and COPY INTO sources."""
+    s = snap.state
+    return snap.version, snap.adds(), s.dv_added, s.meta, s.txns, s.copied
+
+
 def _assert_composes_like_replay(path: str, v: int) -> None:
-    jv, jlive, jdvs, _txns, jmeta, jstats = lk.json_replay(path, v)
-    av, alive, advs, ameta = ck.state_arrow(path, v)
-    assert (av, set(alive), advs, ameta) == (jv, jlive, jdvs, jmeta), v
-    assert {f: json.loads(s) if s else None for f, s in alive.items()} == {
-        f: jstats.get(f) for f in jlive
-    }, v
-    assert ck.meta_arrow(path, v) == (jv, jmeta), v
-    for plan in (ck.prune_scan_arrow, ck.plan_scan):
-        _assert_plans_like_replay(path, v, plan)
+    snap = lk.snapshot(path, v)
+    assert snap.base == ck.latest_parquet_checkpoint(path, v), v
+    assert _state_of(snap) == _state_of(lk.json_replay(path, v)), v
+    _assert_plans_like_replay(path, v)
 
 
-def _assert_plans_like_replay(path: str, v: int | None, plan=ck.plan_scan) -> None:
-    replay = lk.json_replay(path, v)
+def _assert_plans_like_replay(path: str, v: int | None) -> None:
+    snap, replay = lk.snapshot(path, v), lk.json_replay(path, v)
     for pred in _PREDICATES:
-        # plan_scan over a given replay is the planner's JSON-replay route
-        want = ck.plan_scan(path, pred, v, replay=replay)
-        assert plan(path, pred, v) == want, (v, pred)
+        assert ck.plan_scan(snap, pred) == ck.plan_scan(replay, pred), (v, pred)
 
 
 def _generation_rows(path: str, v: int) -> list[tuple]:
@@ -137,8 +138,8 @@ def _generation_rows(path: str, v: int) -> list[tuple]:
 
 
 def _replay_rows(path: str, v: int) -> list[tuple]:
-    _v, live, dvs, txns, meta, stats = lk.json_replay(path, v)
-    return sorted(ck._state_rows(stats, dvs, meta, txns))
+    _v, adds, dvs, meta, txns, copies = _state_of(lk.json_replay(path, v))
+    return sorted(ck._state_rows(adds, dvs, meta, txns, copies))
 
 
 def test_bootstrap_and_advance_compose_like_json_replay(table):
@@ -150,8 +151,7 @@ def test_bootstrap_and_advance_compose_like_json_replay(table):
     assert _generation_rows(path, 3) == _replay_rows(path, 3)
     for v in range(3, tip + 1):
         _assert_composes_like_replay(path, v)
-    with pytest.raises(ValueError, match="no parquet checkpoint"):
-        ck.state_arrow(path, 2)
+    assert lk.snapshot(path, 2).base == 0  # below every generation
 
     for target in (6, 7, 9, tip):
         assert ck.advance_parquet_checkpoint(path, version=target) == target
@@ -171,9 +171,9 @@ def test_bootstrap_and_advance_compose_like_json_replay(table):
     assert ck.advance_parquet_checkpoint(path) == tip
     assert ck.latest_parquet_checkpoint(path) == tip
     # the end state every restore sequence must reach
-    _v, live, dvs, _meta = ck.state_arrow(path)
-    assert set(live) == {"data/a3.parquet", "data/c.parquet", "data/d.parquet"}
-    assert dvs == set()
+    snap = lk.snapshot(path)
+    assert set(snap.adds()) == {"data/a3.parquet", "data/c.parquet", "data/d.parquet"}
+    assert snap.state.dv_added == set()
 
 
 def test_advance_without_a_checkpoint_bootstraps(table):
@@ -196,7 +196,8 @@ def test_large_states_split_into_parts(table, monkeypatch):
 @pytest.mark.parametrize("damage", ["truncate", "garbage"])
 def test_unreadable_checkpoint_plans_from_json_replay(table, monkeypatch, damage):
     """A checkpoint is derived data: when a part file is truncated or
-    is not parquet at all, planning replays the JSON log instead."""
+    is not parquet at all, the snapshot stands on the empty base and
+    planning replays the JSON log instead."""
     monkeypatch.setattr(ck, "_PART_ROWS", 2)
     for v in (3, len(_COMMITS)):
         ck.write_parquet_checkpoint(table, version=v)
@@ -204,11 +205,12 @@ def test_unreadable_checkpoint_plans_from_json_replay(table, monkeypatch, damage
         body = part.read_bytes()
         part.write_bytes(body[: len(body) // 2] if damage == "truncate" else b"not parquet")
     for v in (None, 5):  # the tip, and time travel onto the v3 checkpoint
-        with pytest.raises(ck._Unreadable):  # the checkpoint route itself
-            ck.prune_scan_arrow(table, [], v)
+        with pytest.raises(ck._Unreadable):  # the generation itself
+            ck._generation(table, ck.latest_parquet_checkpoint(table, v))
+        snap = lk.snapshot(table, v)
+        assert snap.base == 0
+        assert _state_of(snap) == _state_of(lk.json_replay(table, v))
         _assert_plans_like_replay(table, v)
-        jv, _live, _dvs, _txns, jmeta, _stats = lk.json_replay(table, v)
-        assert ck.table_state(table, v)[:2] == (jv, jmeta)
 
 
 def test_decision_errors_are_not_masked_by_the_fallback(table, monkeypatch):
@@ -216,7 +218,7 @@ def test_decision_errors_are_not_masked_by_the_fallback(table, monkeypatch):
     Arrow error from the decision code itself propagates."""
     import pyarrow as pa
 
-    def broken(meta, predicate):
+    def broken(meta, conj):
         def keep(stats):
             raise pa.ArrowNotImplementedError("no kernel")
         return keep
@@ -224,14 +226,14 @@ def test_decision_errors_are_not_masked_by_the_fallback(table, monkeypatch):
     ck.write_parquet_checkpoint(table)
     monkeypatch.setattr(ck, "_stats_pruner", broken)
     with pytest.raises(pa.ArrowNotImplementedError):
-        ck.plan_scan(table, [("id", "<", 5)])
+        ck.plan_scan(lk.snapshot(table), [("id", "<", 5)])
 
 
 @pytest.mark.parametrize("checkpointed", [False, True])
 def test_batch_reader_replays_the_log_at_most_once(table, monkeypatch, checkpointed):
-    """The registered source's reader resolves meta in ``__init__`` and
-    plans in ``partitions()``: without a checkpoint both come from one
-    JSON replay, with one from none, and the replay never rides in the
+    """The registered source's reader resolves its snapshot once, in
+    ``__init__``, and ``partitions()`` plans over that same snapshot,
+    with or without a checkpoint; the snapshot never rides in the
     reader Spark pickles for the executors."""
     import pickle
 
@@ -241,19 +243,20 @@ def test_batch_reader_replays_the_log_at_most_once(table, monkeypatch, checkpoin
 
     if checkpointed:
         ck.write_parquet_checkpoint(table)
-    replays = []
-    full = lk._state_full
+    resolved = []
+    on = lk._snapshot_on
     monkeypatch.setattr(
-        lk, "_state_full", lambda *a: replays.append(a) or full(*a)
+        lk, "_snapshot_on", lambda *a: resolved.append(a) or on(*a)
     )
     schema = StructType([StructField("id", LongType()), StructField("val", DoubleType())])
     reader = lds._LakehouseBatchReader({"path": table}, schema)
-    assert pickle.loads(pickle.dumps(reader))._replay is None
+    assert pickle.loads(pickle.dumps(reader))._snap is None
+    assert reader._snap.base == (len(_COMMITS) if checkpointed else 0)
     reader.pushFilters([])
     reader._conj = [("id", "<", 5)]
     files = [p.file for p in reader.partitions()]
-    assert len(replays) == (0 if checkpointed else 1)
-    monkeypatch.setattr(lk, "_state_full", full)
+    assert len(resolved) == 1
+    monkeypatch.setattr(lk, "_snapshot_on", on)
     assert (reader.version, files) == lk.prune_files(table, reader._conj)[:2]
 
 
@@ -363,17 +366,15 @@ class LogMachine(RuleBasedStateMachine):
         self.damaged.discard(v)
 
     def do_advance(self, v: int) -> None:
-        below = [g for g in self.gens if g <= v]
-        if below and max(below) < v and max(below) in self.damaged:
-            with pytest.raises(ck._Unreadable):
-                ck.advance_parquet_checkpoint(self.path, v)
-            return
+        """A readable generation at v stays.  Otherwise v lands from the
+        newest readable generation below it, past damaged ones, or from
+        the empty base, replacing a damaged generation at v."""
         assert ck.advance_parquet_checkpoint(self.path, v) == v
-        if not below:  # bootstraps, sweeping nothing
-            self.gens.add(v)
-        elif max(below) < v:
-            self.gens.add(v)
-            self._sweep(2)
+        if v in self.gens - self.damaged:
+            return
+        self.gens.add(v)
+        self.damaged.discard(v)
+        self._sweep(2)
 
     def do_expire(self, keep_from: int) -> None:
         lk.expire_versions(self.path, keep_from)
@@ -401,7 +402,7 @@ class LogMachine(RuleBasedStateMachine):
             self.gens.discard(g)
             self.damaged.discard(g)
         self.oldest = n
-        assert lk._state_full(self.path, n)[0] == n
+        assert lk.snapshot(self.path, n).base == n
         assert ck.latest_parquet_checkpoint(self.path, n) == n
         self.gens.add(n)
 
@@ -499,30 +500,21 @@ class LogMachine(RuleBasedStateMachine):
 
     def check_version(self, v: int) -> None:
         m, path = self.states[v], self.path
-        live, dvs, meta = m["live"], m["dvs"], m["meta"]
-        rv, rlive, rdvs, rtxns, rmeta, rstats = lk._state_full(path, v)
-        assert (rv, rlive, rdvs, rtxns, rmeta) == (v, set(live), dvs, m["txns"], meta)
-        assert {f: rstats.get(f) for f in rlive} == live
+        live = m["live"]
+        snap = lk.snapshot(path, v)
+        # the newest readable generation at or below v, else the empty base
+        assert snap.base == max((g for g in self.gens - self.damaged if g <= v), default=0)
+        assert _state_of(snap) == (v, live, m["dvs"], m["meta"], m["txns"], m["copies"])
         assert lk.copy_sources(path, v) == m["copies"]
-        cm = lk._colmap(meta)
+        # the reference route needs commit 1
+        routes = [snap, lk.json_replay(path, v)] if self.oldest == 1 else [snap]
+        cm = lk._colmap(m["meta"])
         for pred in _PREDICATES:
             conj = [(cm.get(c, c), op, val) for c, op, val in pred]
             kept = sorted(f for f, s in live.items()
                           if all(lk._stats_admit(s, *c) for c in conj))
-            assert ck.plan_scan(path, pred, v) == (
-                v, kept, sorted(dvs), meta, len(live)
-            ), pred
-        base = max((g for g in self.gens if g <= v), default=None)
-        if base is None or base in self.damaged:
-            err = ValueError if base is None else ck._Unreadable
-            for read in (ck.state_arrow, ck.meta_arrow):
-                with pytest.raises(err):
-                    read(path, v)
-            return
-        av, alive, advs, ameta = ck.state_arrow(path, v)
-        astats = {f: json.loads(s) if s else None for f, s in alive.items()}
-        assert (av, astats, advs, ameta) == (v, live, dvs, meta)
-        assert ck.meta_arrow(path, v) == (v, meta)
+            for s in routes:
+                assert ck.plan_scan(s, pred) == (kept, len(live)), pred
 
     @invariant()
     def reads_equal_the_model(self):
@@ -532,7 +524,7 @@ class LogMachine(RuleBasedStateMachine):
             self.check_version(v)
         if self.oldest > 1:
             with pytest.raises(ValueError, match="expired"):
-                lk._state_full(self.path, self.oldest - 1)
+                lk.snapshot(self.path, self.oldest - 1)
         assert not list(self.log.glob(".*tmp*"))
 
 

@@ -25,11 +25,11 @@ def _table(spark, tmp_path):
 
 def test_rename_is_metadata_only(spark, tmp_path):
     path = _table(spark, tmp_path)
-    _v, files_before = lk.snapshot(path)
+    files_before = lk.snapshot(path).adds().keys()
     t = lk.Transaction(path)
     t.rename_column("v", "val")
     t.commit()
-    assert lk.snapshot(path)[1] == files_before  # zero data movement
+    assert lk.snapshot(path).adds().keys() == files_before  # zero data movement
     df = lk.read_table(spark, path)
     assert df.columns == ["id", "k", "val"]
     assert df.agg(F.sum("val")).collect()[0][0] == 4950.0
@@ -74,7 +74,7 @@ def test_drop_then_readd_does_not_resurrect_old_bytes(spark, tmp_path):
     t.commit()
     vals = {r.k for r in lk.read_table(spark, path).select("k").distinct().collect()}
     assert vals == {None, "fresh"}
-    cm = lk._colmap(lk._state_full(path)[4])
+    cm = lk._colmap(lk.snapshot(path).state.meta)
     assert cm["k"].startswith("c-")
 
 
@@ -91,7 +91,7 @@ def test_rewrites_shed_dropped_columns_and_keep_physical_names(spark, tmp_path):
     t = lk.Transaction(path)
     t.compact(spark, n_files=1)
     t.commit()
-    _v, live = lk.snapshot(path)
+    live = sorted(lk.snapshot(path).adds())
     phys = pq.ParquetFile(f"{path}/{live[0]}").schema_arrow.names
     # renamed column keeps its ORIGINAL physical name; dropped bytes gone
     assert phys == ["id", "v"]

@@ -194,7 +194,7 @@ def test_zorder_applies_deletion_vectors_and_feed_silent(spark, tmp_path):
     t.optimize_zorder(spark, ["id", "k"], n_files=4)
     v = t.commit()
     assert lk.read_table(spark, path).count() == 90
-    assert lk._state(path)[2] == set()  # vectors settled
+    assert lk.snapshot(path).state.dv_added == set()  # vectors settled
     # dataChange=false: the feed emits nothing for the zorder commit
     assert lk.read_changes(spark, path, v - 1, v).count() == 0
 
@@ -284,7 +284,7 @@ def _clustered_plus_debt(spark, tmp_path):
 
 def test_incremental_zorder_spares_clustered_files(spark, tmp_path):
     path = _clustered_plus_debt(spark, tmp_path)
-    _v, live_before, _dvs = lk._state(path)
+    live_before = set(lk.snapshot(path).adds())
     big = {f for f in live_before if f.startswith("data/zo-")}
     small = live_before - big
     assert len(big) == 4 and len(small) == 3
@@ -294,7 +294,7 @@ def test_incremental_zorder_spares_clustered_files(spark, tmp_path):
     )
     t.commit()
     assert rewritten == 3 and added >= 1
-    _v2, live_after, _dvs2 = lk._state(path)
+    live_after = set(lk.snapshot(path).adds())
     assert big <= live_after            # clustered files SURVIVE BY NAME
     assert not (small & live_after)     # the debt is gone
     # the logical row set is unchanged

@@ -28,8 +28,8 @@ def _init(spark, tmp_path, n=30, files=3):
 def test_append_then_read_roundtrip(spark, tmp_path):
     path = _init(spark, tmp_path)
     assert lk.read_table(spark, path).count() == 30
-    v, live = lk.snapshot(path)
-    assert v == 1 and len(live) == 3
+    snap = lk.snapshot(path)
+    assert snap.version == 1 and len(snap.adds()) == 3
 
 
 def test_staged_files_invisible_until_commit(spark, tmp_path):
@@ -194,8 +194,8 @@ def test_mor_delete_under_log_is_metadata_only(spark, tmp_path):
     # no data file was removed or added — pure sidecar
     ops = {a["op"] for a in t.actions}
     assert ops == {"add_dv"}
-    v, live, dvs = lk._state(path)
-    assert len(live) == 3 and len(dvs) == 1
+    snap = lk.snapshot(path)
+    assert len(snap.adds()) == 3 and len(snap.state.dv_added) == 1
 
 
 def test_concurrent_mor_deletes_commute(spark, tmp_path):
@@ -252,8 +252,8 @@ def test_compact_applies_and_drops_vectors(spark, tmp_path):
     before, after = c.compact(spark, n_files=1)
     assert before == 3
     c.commit()
-    v, live, dvs = lk._state(path)
-    assert dvs == set() and len(live) == after
+    snap = lk.snapshot(path)
+    assert snap.state.dv_added == set() and len(snap.adds()) == after
     got = {r.id for r in lk.read_table(spark, path).collect()}
     assert got == set(range(10, 30))
 
@@ -276,9 +276,9 @@ def test_checkpoint_bounds_replay_and_preserves_time_travel(spark, tmp_path):
     import pyarrow.parquet as pq
 
     gen = pq.read_table(str(lkc._ckpt_dir(path, 2)))
-    _v, live, dvs, txns, meta, stats = lk.json_replay(path, 2)
+    r = lk.json_replay(path, 2)
     assert sorted(zip(*(gen.column(c).to_pylist() for c in lkc._COLS))) == sorted(
-        lkc._state_rows(stats, dvs, meta, txns)
+        lkc._state_rows(r.adds(), r.state.dv_added, r.state.meta, r.state.txns)
     )
 
 
@@ -688,8 +688,7 @@ def test_update_where_mor_rewrites_nothing_and_composes(spark, tmp_path):
         for i in range(30)
     )
     # no base data file rewritten: 3 original adds + 1 reinsert live
-    _v, live = lk.snapshot(path)
-    assert len(live) == 4
+    assert len(lk.snapshot(path).adds()) == 4
     # a later delete lands on the reinsert's fresh addresses
     t2 = lk.Transaction(path)
     assert t2.delete_where_mor(spark, F.col("v") == 100.0) == 1  # id 0

@@ -42,14 +42,27 @@ def _rows(df):
     return sorted(map(tuple, df.collect()))
 
 
+def _on_generation(path, version=None) -> lk.Snapshot:
+    """The snapshot at ``version``, which must stand on a generation,
+    so a bad checkpoint cannot pass as JSON replay."""
+    snap = lk.snapshot(path, version)
+    assert snap.base > 0
+    return snap
+
+
 def _state_sets(path, version=None):
     """``(version, live files, DV files, meta)`` as the checkpoint
-    route composes them (raises without a readable checkpoint, so a
-    bad checkpoint cannot pass as JSON replay); a duplicated add row
-    would show as a repeat."""
-    v, kept, dvs, meta, total = ck.prune_scan_arrow(path, [], version)
+    route composes them; a duplicated add row would show as a repeat."""
+    snap = _on_generation(path, version)
+    kept, total = ck.plan_scan(snap, [])
     assert len(kept) == len(set(kept)) == total
-    return v, set(kept), set(dvs), meta
+    return snap.version, set(kept), snap.state.dv_added, snap.state.meta
+
+
+def _replay_sets(path, version=None):
+    """The same four from JSON replay, the reference."""
+    r = lk.json_replay(path, version)
+    return r.version, set(r.adds()), r.state.dv_added, r.state.meta
 
 
 def test_bootstrap_state_parity(spark, tmp_path):
@@ -57,7 +70,7 @@ def test_bootstrap_state_parity(spark, tmp_path):
     v = ck.write_parquet_checkpoint(path)
     assert v == lk.latest_commit(path)
     pv, live_pq, dv_pq, meta_pq = _state_sets(path)
-    _v, live, dvs, _txns, meta, _stats = lk.json_replay(path)
+    _v, live, dvs, meta = _replay_sets(path)
     assert (pv, live_pq, dv_pq, meta_pq) == (v, live, dvs, meta)
 
 
@@ -67,7 +80,7 @@ def test_json_tail_applied_over_checkpoint(spark, tmp_path):
     # the tail (3, 5] holds a MOR delete + a CoW rewrite; the planner
     # must fold them without a new checkpoint
     pv, live_pq, dv_pq, _meta = _state_sets(path)
-    _v, live, dvs, _txns, _m, _s = lk.json_replay(path)
+    _v, live, dvs, _m = _replay_sets(path)
     assert pv == 5 and live_pq == live and dv_pq == dvs
     # add-then-remove INSIDE the tail cancels exactly
     t = lk.Transaction(path)
@@ -77,7 +90,7 @@ def test_json_tail_applied_over_checkpoint(spark, tmp_path):
     t.delete_where(spark, F.col("id") == 77)
     t.commit()
     pv, live_pq, dv_pq, _meta = _state_sets(path)
-    _v, live, dvs, _txns, _m, _s = lk.json_replay(path)
+    _v, live, dvs, _m = _replay_sets(path)
     assert pv == 7 and live_pq == live and dv_pq == dvs
 
 
@@ -88,23 +101,21 @@ def test_advance_is_incremental_and_equal_to_bootstrap(spark, tmp_path):
     assert v == 5 and ck.latest_parquet_checkpoint(path) == 5
     # advanced state == a from-scratch bootstrap at the same version
     adv = spark.read.parquet(str(ck._ckpt_dir(path, 5)))
-    v2, live, dvs, txns, meta, stats = lk.json_replay(path, 5)
-    boot = ck._state_rows(stats, dvs, meta, txns)
+    r = lk.json_replay(path, 5)
+    boot = ck._state_rows(r.adds(), r.state.dv_added, r.state.meta, r.state.txns)
     assert sorted(map(tuple, adv.collect())) == sorted(boot)
     # idempotent when already at latest
     assert ck.advance_parquet_checkpoint(path) == 5
 
 
 def _planned(path, pred):
-    v, kept, _dvs, _meta, total = ck.prune_scan_arrow(path, pred)
-    return v, kept, total
+    return ck.plan_scan(_on_generation(path), pred)
 
 
 def _replayed(path, pred):
-    """The planner's JSON-replay route: the reference for checkpoint
-    planning (``prune_files`` plans from the checkpoint too)."""
-    v, kept, _dvs, _meta, total = ck.plan_scan(path, pred, replay=lk.json_replay(path))
-    return v, kept, total
+    """The reference route, ``plan_scan(json_replay(...))``
+    (``prune_files`` plans from the checkpoint too)."""
+    return ck.plan_scan(lk.json_replay(path), pred)
 
 
 def test_checkpoint_prune_matches_json_prune(spark, tmp_path):
@@ -135,7 +146,7 @@ def test_checkpoint_prune_respects_column_mapping(spark, tmp_path):
 def test_distributed_stats_match_serial(spark, tmp_path):
     path = _busy_table(spark, tmp_path)
     root = pathlib.Path(path)
-    _v, live, _dvs, _t, _m, _s = lk.json_replay(path)
+    _v, live, _dvs, _m = _replay_sets(path)
     paths = [str(root / f) for f in sorted(live)]
     assert ck.stats_distributed(spark, paths) == {
         p: lk._file_stats(pathlib.Path(p)) for p in paths
@@ -162,7 +173,7 @@ def test_time_travel_uses_older_checkpoint(spark, tmp_path):
     ck.write_parquet_checkpoint(path, version=4)
     # version 3 must start from ckpt 2 + tail commit 3, not ckpt 4
     pv, live_pq, dv_pq, _meta = _state_sets(path, version=3)
-    _v, live, dvs, _txns, _m, _s = lk.json_replay(path, 3)
+    _v, live, dvs, _m = _replay_sets(path, 3)
     assert pv == 3 and live_pq == live and dv_pq == dvs
 
 
@@ -205,7 +216,7 @@ def test_advance_retains_bounded_checkpoints(spark, tmp_path):
     assert left == ["ckptpq-00000004", "ckptpq-00000005"]
     # the survivor still reconstructs the exact state
     pv, live_pq, dv_pq, _meta = _state_sets(path)
-    _v, live, dvs, _t, _m, _s = lk.json_replay(path)
+    _v, live, dvs, _m = _replay_sets(path)
     assert pv == 5 and live_pq == live and dv_pq == dvs
 
 
@@ -215,14 +226,13 @@ def test_expiry_drops_stale_parquet_checkpoints(spark, tmp_path):
     expire_versions removes it and pins the boundary as the generation
     every retained read now starts from."""
     path = _busy_table(spark, tmp_path)  # 5 commits
-    want = {v: lk.json_replay(path, v) for v in (4, 5)}
+    want = {v: _replay_sets(path, v) for v in (4, 5)}
     ck.write_parquet_checkpoint(path, version=2)
     lk.expire_versions(path, keep_from=4)
     log = pathlib.Path(path) / lk._LOG_DIR
     assert sorted(p.name for p in log.glob("ckptpq-*")) == ["ckptpq-00000004"]
-    for v, (_jv, live, dvs, *_rest) in want.items():
-        assert _state_sets(path, v)[:3] == (v, live, dvs)
-        assert lk._state_full(path, v) == want[v]
+    for v, (_jv, live, dvs, meta) in want.items():
+        assert _state_sets(path, v) == (v, live, dvs, meta)
     with pytest.raises(ValueError, match="expired"):
         lk.json_replay(path)  # the reference needs commit 1
     # ... and a checkpoint AT/above the boundary survives expiry
@@ -230,8 +240,7 @@ def test_expiry_drops_stale_parquet_checkpoints(spark, tmp_path):
     ck.write_parquet_checkpoint(path2, version=4)
     lk.expire_versions(path2, keep_from=4)
     assert ck.latest_parquet_checkpoint(path2) == 4
-    pv2 = ck.state_arrow(path2)[0]
-    assert pv2 == 5
+    assert _on_generation(path2).version == 5
 
 
 def test_orphan_sweep_removes_crashed_advance_staging(spark, tmp_path):
@@ -278,7 +287,7 @@ def test_format_writer_commits_feed_the_checkpoint_plane(spark, tmp_path):
     v = ck.advance_parquet_checkpoint(path)
     assert v == 2
     pv, live_pq, dv_pq, _m = _state_sets(path)
-    _v, live, dvs, _t, _m2, _s = lk.json_replay(path)
+    _v, live, dvs, _m2 = _replay_sets(path)
     assert pv == 2 and live_pq == live and dv_pq == dvs
 
 
@@ -295,10 +304,12 @@ def test_restore_in_tail_keeps_add_rows_distinct(spark, tmp_path):
     t.compact(spark, n_files=1)
     t.commit()
     lk.restore_table(spark, path, v0)  # tail removes + re-adds base files
-    _v, kept, dv_list, _meta, total = ck.prune_scan_arrow(path, [])
+    snap = _on_generation(path)
+    kept, total = ck.plan_scan(snap, [])
+    dv_list = sorted(snap.state.dv_added)
     # list-based parity (sets would HIDE the duplicate; counts can't)
     assert len(kept) == len(set(kept)) == total
-    _v2, live, dvs, _t, _m, _s = lk.json_replay(path)
+    _v2, live, dvs, _m = _replay_sets(path)
     assert set(kept) == live
     assert len(dv_list) == len(set(dv_list)) and set(dv_list) == dvs
     # the checkpoint-planned READ returns the restored rows
@@ -318,11 +329,9 @@ def test_restore_in_tail_keeps_add_rows_distinct(spark, tmp_path):
 
 
 def test_state_arrow_and_meta_arrow_match_json_replay(spark, tmp_path):
-    """The session-less (pyarrow) state composition the DataSource
-    planning process uses must equal JSON replay exactly — base from
-    checkpoint parquet, tail applied, at the tip AND time-traveled."""
-    import json as _json
-
+    """The session-less (pyarrow) snapshot the DataSource planning
+    process uses must equal JSON replay exactly — base from checkpoint
+    parquet, tail applied, at the tip AND time-traveled."""
     path = _busy_table(spark, tmp_path)
     ck.write_parquet_checkpoint(path, version=3)
     # rename AFTER the checkpoint: the tail carries a set_meta fold
@@ -330,15 +339,9 @@ def test_state_arrow_and_meta_arrow_match_json_replay(spark, tmp_path):
     t.rename_column("v", "val")
     t.commit()
     for ver in (3, 4, None):
-        av, alive, advs, ameta = ck.state_arrow(path, ver)
-        jv, jlive, jdvs, _txns, jmeta, jstats = lk.json_replay(path, ver)
-        assert (av, set(alive), advs, ameta) == (jv, jlive, jdvs, jmeta)
-        for f, s in alive.items():
-            assert (_json.loads(s) if s else None) == jstats[f]
-        mv, mmeta = ck.meta_arrow(path, ver)
-        assert (mv, mmeta) == (jv, jmeta)
-    with pytest.raises(ValueError, match="no parquet checkpoint"):
-        ck.state_arrow(path, 2)
+        snap, r = _on_generation(path, ver), lk.json_replay(path, ver)
+        assert (snap.version, snap.adds(), snap.state) == (r.version, r.adds(), r.state)
+    assert lk.snapshot(path, 2).base == 0  # below the generation
 
 
 def test_checkpoint_planned_read_table_parity(spark, tmp_path):
@@ -396,7 +399,7 @@ def test_datasource_plans_from_checkpoint_identically(spark, tmp_path):
     assert _rows(via_ckpt) == rows
     # partition-list equality with a pushed filter, DV sidecars included
     assert plan(schema) == planned
-    _v, kept, _total = _replayed(path, pred)
+    kept, _total = _replayed(path, pred)
     assert [f for f, _dv in planned] == kept
 
 
@@ -427,7 +430,7 @@ def test_commit_auto_advances_past_interval(spark, tmp_path):
         assert v_adv == lk.latest_commit(path)  # tail hit 2: advanced
         # advanced state equals JSON replay
         _pv, live_pq, dv_pq, meta_pq = _state_sets(path)
-        _v, live, dvs, _txns, meta, _stats = lk.json_replay(path)
+        _v, live, dvs, meta = _replay_sets(path)
         assert (live_pq, dv_pq, meta_pq) == (live, dvs, meta)
         spark.conf.set(ck.AUTO_ADVANCE_CONF, "0")
         bump(3)
@@ -477,9 +480,7 @@ def test_checkpoint_routes_respect_column_mapping_and_evolution(
         + [(100, 1.5, 7)]
     )
     # session-less route: prune decisions + kept set
-    _v, kept, _dvs, _meta, total = ck.prune_scan_arrow(path, pred)
-    _jv, jkept, jtotal = _replayed(path, pred)
-    assert (kept, total) == (jkept, jtotal)
+    assert _planned(path, pred) == _replayed(path, pred)
     # read_table planned from the checkpoint (rows + evolved alignment)
     got = lk.read_table(spark, path, predicate=pred)
     assert got.columns == ["id", "val", "extra"]
@@ -533,7 +534,7 @@ def test_auto_advance_survives_concurrent_commits(spark, tmp_path):
     assert not errors
     ck.advance_parquet_checkpoint(path)  # settle to the tip
     _pv, live_pq, dv_pq, meta_pq = _state_sets(path)
-    _v, live, dvs, _txns, meta, _stats = lk.json_replay(path)
+    _v, live, dvs, meta = _replay_sets(path)
     assert (live_pq, dv_pq, meta_pq) == (live, dvs, meta)
     assert lk.read_table(spark, path).count() == 16
 
@@ -561,7 +562,7 @@ def test_format_writer_auto_advances_checkpoint(spark, tmp_path):
     assert v_adv is not None and v_adv > v0
     # advanced state equals JSON replay at its version
     pv, live_pq, dv_pq, meta_pq = _state_sets(path, v_adv)
-    _v, live, dvs, _txns, meta, _stats = lk.json_replay(path, v_adv)
+    _v, live, dvs, meta = _replay_sets(path, v_adv)
     assert (live_pq, dv_pq, meta_pq) == (live, dvs, meta)
 
 
@@ -570,7 +571,7 @@ def test_delete_of_restored_file_stays_deleted(spark, tmp_path):
     The final remove cancels the tail's re-add in ``_tail_net``, but
     the BASE checkpoint still carries the file's add row — unless the
     remove also lands in ``removed``, the deleted file resurrects in
-    every checkpoint-composed read (state_arrow / plan_scan) and the
+    every checkpoint-composed read (snapshot / plan_scan) and the
     advance persists it permanently."""
     path = str(tmp_path / "t")
     for lo in (0, 10):
@@ -592,14 +593,13 @@ def test_delete_of_restored_file_stays_deleted(spark, tmp_path):
     assert t.delete_where(spark, F.col("id") < 10) == 10
     t.commit()
     # JSON replay is ground truth: ids 0-9 are gone
-    _v, live, dvs, _t, _m, _s = lk.json_replay(path)
+    _v, live, dvs, _m = _replay_sets(path)
     # every composed route must agree — file sets AND read rows
     pv, live_pq, dv_pq, _meta = _state_sets(path)
     assert (pv, live_pq, dv_pq) == (lk.latest_commit(path), live, dvs)
-    av, alive, advs, _am = ck.state_arrow(path)
-    assert (av, set(alive), advs) == (pv, live, dvs)
-    sv, kept, dvf, _m2, total = ck.prune_scan_arrow(path, [])
-    assert (sv, set(kept), set(dvf), total) == (pv, live, dvs, len(live))
+    snap = _on_generation(path)
+    assert (snap.version, set(snap.adds()), snap.state.dv_added) == (pv, live, dvs)
+    assert ck.plan_scan(snap, []) == (sorted(live), len(live))
     got = lk.read_table(spark, path, predicate=[("id", ">=", 0)])
     assert sorted(r.id for r in got.collect()) == list(range(10, 20))
     # the advance must not resurrect the file into the next generation
@@ -637,11 +637,11 @@ def test_dv_removed_after_restore_readd_stays_removed(spark, tmp_path):
     t = lk.Transaction(path)
     t.delete_where(spark, F.col("id") == 6)  # removes the DV again
     t.commit()
-    _v, live, dvs, _t2, _m, _s = lk.json_replay(path)
+    _v, live, dvs, _m = _replay_sets(path)
     pv, live_pq, dv_pq, _meta = _state_sets(path)
     assert (pv, live_pq, dv_pq) == (lk.latest_commit(path), live, dvs)
-    av, alive, advs, _am = ck.state_arrow(path)
-    assert (av, set(alive), advs) == (pv, live, dvs)
+    snap = _on_generation(path)
+    assert (snap.version, set(snap.adds()), snap.state.dv_added) == (pv, live, dvs)
     got = lk.read_table(spark, path, predicate=[("id", ">=", 0)])
     assert _rows(got) == want
     ck.advance_parquet_checkpoint(path)

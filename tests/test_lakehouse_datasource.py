@@ -402,7 +402,7 @@ def test_stream_sink_exactly_once_replication(spark, tmp_path):
     # no staging debris survived the deduped replay
     import pathlib as pl
 
-    _v, live, _dvs = lk._state(dst)
+    live = set(lk.snapshot(dst).adds())
     on_disk = {
         f"data/{p.name}" for p in (pl.Path(dst) / "data").glob("*.parquet")
     }

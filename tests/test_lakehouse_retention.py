@@ -45,14 +45,14 @@ def _mixed_table(spark, tmp_path):
 
 def test_compact_small_leaves_big_files_alone(spark, tmp_path):
     path = _mixed_table(spark, tmp_path)
-    _v, live_before = lk.snapshot(path)
+    live_before = lk.snapshot(path).adds()
     big = {f for f in live_before if (pathlib.Path(path) / f).stat().st_size > 10_000}
     assert len(big) == 2
     t = lk.Transaction(path)
     rewritten, added = t.compact_small(spark, target_bytes=10_000)
     assert (rewritten, added) == (4, 1)
     t.commit()
-    _v, live_after = lk.snapshot(path)
+    live_after = lk.snapshot(path).adds()
     # the two big files survive untouched, by name
     assert big <= set(live_after) and len(live_after) == 3
     assert lk.read_table(spark, path).count() == 10040
@@ -84,7 +84,7 @@ def test_compact_small_applies_dvs_but_keeps_them(spark, tmp_path):
     # logical rows unchanged; vectors still live (big-file rows remain
     # subject), moved rows escaped them without resurrecting deletes
     assert lk.read_table(spark, path).count() == n_before
-    assert len(lk._state(path)[2]) == 2
+    assert len(lk.snapshot(path).state.dv_added) == 2
 
 
 def test_compact_small_conflicts_with_concurrent_rewrite_of_candidate(

@@ -376,7 +376,7 @@ def test_optimize_zorder_full_rewrites_whole_table(spark, tmp_path):
             ).coalesce(1)
         )
         t.commit()
-    live_before = len(lk.snapshot(path)[1])
+    live_before = len(lk.snapshot(path).adds())
     out = run_sql(
         spark, f"OPTIMIZE lakehouse.`{path}` ZORDER BY (id, v) FULL"
     ).collect()[0]
@@ -772,8 +772,9 @@ def test_convert_then_checkpoint_then_source_composition(spark, tmp_path):
     assert sorted(map(tuple, via_ckpt.collect())) == want
     # prune decisions identical on converted (absolute-stat) files
     pred = [("id", "<", 20)]
-    _v, kept, dvs, _m, total = ck.prune_scan_arrow(plain, pred)
-    assert (kept, total) == (lk.prune_files(plain, pred)[1], 4)
+    snap = lk.snapshot(plain)
+    assert snap.base > 0
+    assert ck.plan_scan(snap, pred) == (lk.prune_files(plain, pred)[1], 4)
 
 
 def test_convert_handles_nested_plain_subdirs(spark, tmp_path):
@@ -890,7 +891,7 @@ def test_convert_partitioned_recovers_values_and_prunes(spark, tmp_path):
     ) == exp
     # basenames are unique after convert (Spark reuses one task's
     # name across partition dirs; _dv_file keys by basename)
-    _v, live, _d, _t, _m, _s = lk._state_full(hive)
+    live = lk.snapshot(hive).adds()
     names = [pathlib.PurePosixPath(f).name for f in live]
     assert len(names) == len(set(names))
     # partition predicate prunes to EXACTLY the matching directories
@@ -1272,7 +1273,7 @@ def test_set_tblproperties(spark, tmp_path):
         ALTER TABLE lakehouse.`{path}` SET TBLPROPERTIES
         ('delta.enableChangeDataFeed' = 'true', 'team' = 'etl')
     """)
-    _v, _l, _d, _t2, meta, _s = lk._state_full(path)
+    meta = lk.snapshot(path).state.meta
     assert meta.get("cdf") is True
     assert meta.get("properties") == {"team": "etl"}
     # ...and a CoW delete AFTER it records change data: the feed serves
@@ -1285,14 +1286,14 @@ def test_set_tblproperties(spark, tmp_path):
     run_sql(spark, f"""
         ALTER TABLE lakehouse.`{path}` UNSET TBLPROPERTIES ('team')
     """)
-    _v, _l, _d, _t2, meta, _s = lk._state_full(path)
+    meta = lk.snapshot(path).state.meta
     assert meta.get("properties") == {}
     # disabling flips the switch back off
     run_sql(spark, f"""
         ALTER TABLE lakehouse.`{path}` SET TBLPROPERTIES
         ('delta.enableChangeDataFeed' = 'false')
     """)
-    _v, _l, _d, _t2, meta, _s = lk._state_full(path)
+    meta = lk.snapshot(path).state.meta
     assert meta.get("cdf") is False
     with pytest.raises(ValueError, match="key.*value"):
         run_sql(

@@ -8,6 +8,9 @@
   run in the default one, whose time limit it was moved out of.
 - No tool names a fixed checkout path: run from a second checkout, it
   would import, check or measure the first one instead.
+- Only the commit log's own two modules name its private base readers
+  and fold; the rest of the engine and the tools read log state
+  through ``snapshot``, ``json_replay`` and ``plan_scan``.
 """
 
 from __future__ import annotations
@@ -52,5 +55,19 @@ def test_tools_name_no_fixed_checkout_path():
         str(path.relative_to(_REPO))
         for path in sorted((_REPO / "tools").iterdir())
         if path.is_file() and (str(_REPO) in path.read_text() or fixed.search(path.read_text()))
+    ]
+    assert not found, found
+
+
+def test_log_state_is_read_only_through_its_public_readers():
+    private = re.compile(r"\b(_tail_net|_resolve_base|_generation|_base_batches)\b")
+    own = {"market_etl_spark/lakehouse.py", "market_etl_spark/lakehouse_checkpoint.py"}
+    found = [
+        f"{rel}:{n}"
+        for top in ("market_etl_spark", "tools")
+        for path in sorted((_REPO / top).rglob("*.py"))
+        if (rel := path.relative_to(_REPO).as_posix()) not in own
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        if private.search(line)
     ]
     assert not found, found

@@ -50,7 +50,7 @@ _SCRIPT = textwrap.dedent(
             .coalesce(1)
         )
         t.commit()
-    _v, live, _dvs = lk._state(path)
+    live = lk.snapshot(path).adds()
     paths = [os.path.join(path, f) for f in sorted(live)]
     got = ck.stats_distributed(spark, paths)
     want = {p: lk._file_stats(pathlib.Path(p)) for p in paths}
