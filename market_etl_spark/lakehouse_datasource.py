@@ -300,10 +300,10 @@ class _FileSlice(InputPartition):
 
 class _LakehouseBatchReader(DataSourceReader):
     """Batch scan of one snapshot.  ``__init__`` resolves the
-    :class:`..lakehouse.Snapshot` (version and committed schema, no
-    add row decoded); ``partitions()`` — which Spark runs in a
-    SESSION-LESS planning worker, so planning takes no Spark job —
-    hands that Snapshot to the one planner,
+    :class:`..lakehouse.Snapshot` (version and committed schema; the
+    base's add rows stay in parquet); ``partitions()`` — which Spark
+    runs in a SESSION-LESS planning worker, so planning takes no Spark
+    job — hands that Snapshot to the one planner,
     :func:`..lakehouse_checkpoint.plan_scan`, under the pushed
     filters, and fans out one task per surviving file.  The log is
     resolved once per reader."""
@@ -448,9 +448,9 @@ class _CommitDeriver:
 
     def _meta_at(self, v: int, commit: dict) -> dict:
         """Table meta AS OF commit ``v`` — cached forward: a tail of N
-        commits costs ONE snapshot resolution (no add row decoded)
-        plus O(1) per metadata-free commit, not N (the schema only
-        moves on set_meta actions)."""
+        commits costs ONE snapshot resolution (no base add row
+        decoded) plus O(1) per metadata-free commit, not N (the schema
+        only moves on set_meta actions)."""
         cached_v, cached_meta = getattr(self, "_meta_cache", (None, None))
         if cached_v == v - 1 and not any(
             a["op"] == "set_meta" for a in commit["actions"]
